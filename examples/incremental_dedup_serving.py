@@ -9,17 +9,17 @@ the serving loop a production corpus runs every day.
    (band, bucket-shard), self-describing meta side table).
 2. Day N: a new shard arrives; probe the index for near-duplicates of
    what it carries WITHOUT rescanning history
-   (``minhash_dedup_incremental`` — the scan prunes to the shard's
+   (``index_probe(MINHASH, …)`` — the scan prunes to the shard's
    touched partitions), then append the shard's own signatures
-   idempotently (``minhash_index_append`` — a crash-retry adds
+   idempotently (``index_append(MINHASH, …)`` — a crash-retry adds
    nothing twice).
-3. The same loop as a stream: ``stream_dedup_incremental`` runs
+3. The same loop as a stream: ``stream_index_incremental`` runs
    probe → replay-idempotent pair output → append per micro-batch.
-4. The vector twin over embeddings: ``embedding_write_index`` /
-   ``embedding_dedup_incremental`` with exact per-cell pruning.
-5. The hamming twin over SimHash fingerprints:
-   ``simhash_write_index`` / ``simhash_dedup_incremental`` (48-bit
-   portable fingerprints, 4×12-bit bands — hamming ≤ 3 guaranteed).
+4. The same core over embeddings: ``embedding_write_index`` +
+   ``index_probe(EMBEDDING, …)`` with exact per-cell pruning.
+5. The same core over SimHash fingerprints: ``simhash_write_index`` +
+   ``index_probe(SIMHASH, …)`` (48-bit portable fingerprints,
+   4×12-bit bands — hamming ≤ 3 guaranteed).
 """
 
 from __future__ import annotations
@@ -35,14 +35,17 @@ from pyspark.sql import functions as F
 from tia_data_pipeline_spark import get_spark
 from tia_data_pipeline_spark.catalog import load_table
 from tia_data_pipeline_spark.operators.dedup import (
-    minhash_dedup_incremental,
-    minhash_index_append,
     minhash_write_index,
-    simhash_dedup_incremental,
     simhash_write_index,
 )
+from tia_data_pipeline_spark.operators.index import (
+    EMBEDDING,
+    MINHASH,
+    SIMHASH,
+    index_append,
+    index_probe,
+)
 from tia_data_pipeline_spark.operators.similarity import (
-    embedding_dedup_incremental,
     embedding_write_index,
     projection_bits_for,
     projection_matrix,
@@ -65,10 +68,10 @@ def main() -> None:
     print(f"index written: {idx}")
 
     # -- day N: probe today's shard, then absorb it ----------------------
-    pairs = minhash_dedup_incremental(shard, idx, threshold=0.5)
+    pairs = index_probe(MINHASH, shard, [idx], threshold=0.5)[0]
     print("near-duplicates of today's shard against history:")
     pairs.orderBy("new_id", "dup_id").show(10, truncate=False)
-    minhash_index_append(shard, idx)
+    index_append(MINHASH, shard, idx)
     print("shard appended (idempotent: re-running adds nothing)")
 
     # tomorrow's shard will now also dedupe against today's docs; the
@@ -77,11 +80,11 @@ def main() -> None:
     # probe (replay determinism — duplicates WITHIN one shard are the
     # streaming loop's explicit intra leg, see streaming/dedup_serve.py)
     print("re-probe after append (identical to the first probe):")
-    minhash_dedup_incremental(shard, idx, threshold=0.5).orderBy(
+    index_probe(MINHASH, shard, [idx], threshold=0.5)[0].orderBy(
         "new_id", "dup_id"
     ).show(5, truncate=False)
 
-    # -- the vector twin --------------------------------------------------
+    # -- the vector family -------------------------------------------------
     emb = load_table(spark, sf_dir, "embeddings")
     e_hist = emb.filter(F.col("vec_id") % 5 != 0)
     e_shard = emb.filter(F.col("vec_id") % 5 == 0)
@@ -89,15 +92,15 @@ def main() -> None:
     eidx = f"{index_root}/embeddings"
     embedding_write_index(e_hist, eidx, proj=projection_matrix(bits=bits))
     print("embedding near-duplicates of today's shard:")
-    embedding_dedup_incremental(e_shard, eidx, threshold=0.9).orderBy(
+    index_probe(EMBEDDING, e_shard, [eidx], threshold=0.9)[0].orderBy(
         "new_id", "dup_id"
     ).show(10, truncate=False)
 
-    # -- the hamming twin --------------------------------------------------
+    # -- the hamming family -------------------------------------------------
     sidx = f"{index_root}/simhash"
     simhash_write_index(history, "text", "doc_id", sidx)
     print("simhash near-duplicates (hamming <= 2) of today's shard:")
-    simhash_dedup_incremental(shard, sidx, max_hamming=2).orderBy(
+    index_probe(SIMHASH, shard, [sidx], max_hamming=2)[0].orderBy(
         "new_id", "dup_id"
     ).show(10, truncate=False)
 

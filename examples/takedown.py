@@ -7,13 +7,15 @@ corpus-retention flow a 100 TB training-data platform must support):
 
 1. Stand up the serving estate: the document store (lakehouse table)
    plus the derived indexes — MinHash signatures, SimHash
-   fingerprints, and the BM25 postings index (the embedding/IVF
-   twins follow the identical API; see examples/ann_index_serving.py).
+   fingerprints, and the BM25 postings index (the embedding index
+   takes the same ``index_*`` calls with ``EMBEDDING``; IVF has its
+   own ``ivf_index_*`` verbs, see examples/ann_index_serving.py).
 2. A takedown request arrives as IDS ONLY (a request never ships the
    content back). Each leg is independently idempotent, so the flow
    can run as separate at-least-once jobs in any order:
    - ``lakehouse.delete_keys``   → rows leave the store
-   - ``*_index_delete``          → tombstones mask every probe NOW
+   - ``index_delete`` / ``text_index_delete`` → tombstones mask
+     every probe NOW
 3. Prove invisibility: near-dup probes and BM25 serving no longer see
    the documents (scores/df/N all track the live membership).
 4. Compact in the maintenance window: tombstoned rows are removed
@@ -32,15 +34,16 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from tia_data_pipeline_spark import get_spark
 from tia_data_pipeline_spark.catalog import load_table
 from tia_data_pipeline_spark.operators.dedup import (
-    minhash_dedup_incremental,
-    minhash_index_compact,
-    minhash_index_delete,
-    minhash_index_stats,
     minhash_write_index,
-    simhash_dedup_incremental,
-    simhash_index_compact,
-    simhash_index_delete,
     simhash_write_index,
+)
+from tia_data_pipeline_spark.operators.index import (
+    MINHASH,
+    SIMHASH,
+    index_compact,
+    index_delete,
+    index_probe,
+    index_stats,
 )
 from tia_data_pipeline_spark.operators.text_index import (
     bm25_search_indexed,
@@ -75,7 +78,7 @@ def main() -> None:
     )
     hits = {
         r["dup_id"]
-        for r in minhash_dedup_incremental(probe, mh, threshold=0.9).collect()
+        for r in index_probe(MINHASH, probe, [mh], threshold=0.9)[0].collect()
     }
     assert victims[0] in hits
     terms = victim_text.split()[:4]
@@ -86,8 +89,8 @@ def main() -> None:
     doomed = spark.createDataFrame([(v,) for v in victims], "doc_id bigint")
     for _ in range(2):
         n = delete_keys(spark, doomed, store, ["doc_id"])
-        minhash_index_delete(doomed, mh)
-        simhash_index_delete(doomed, sh)
+        index_delete(MINHASH, doomed, mh)
+        index_delete(SIMHASH, doomed, sh)
         text_index_delete(doomed, tx)
     print(f"takedown of {victims}: store rows deleted (second pass deleted {n})")
 
@@ -97,24 +100,24 @@ def main() -> None:
     assert spark.read.parquet(store).filter(F.col("doc_id").isin(victims)).count() == 0
     assert not {
         r["dup_id"]
-        for r in minhash_dedup_incremental(probe, mh, threshold=0.9).collect()
+        for r in index_probe(MINHASH, probe, [mh], threshold=0.9)[0].collect()
     } & set(victims)
     assert not {
         r["dup_id"]
-        for r in simhash_dedup_incremental(probe, sh, max_hamming=3).collect()
+        for r in index_probe(SIMHASH, probe, [sh], max_hamming=3)[0].collect()
     } & set(victims)
     masked_top = [int(r["doc_id"]) for r in bm25_search_indexed(spark, tx, terms, k=5).collect()]
     assert not set(masked_top) & set(victims)
-    st = minhash_index_stats(spark, mh)
+    st = index_stats(MINHASH, spark, mh)
     print(f"masked: bm25 top-5 now {masked_top}; minhash tombstone "
           f"fraction {st['tombstone_fraction']}")
 
     # 4. physical removal in the maintenance window
-    minhash_index_compact(spark, mh)
-    simhash_index_compact(spark, sh)
+    index_compact(MINHASH, spark, mh)
+    index_compact(SIMHASH, spark, sh)
     text_index_compact(spark, tx)
     assert spark.read.parquet(mh).filter(F.col("_id").isin(victims)).count() == 0
-    assert minhash_index_stats(spark, mh)["tombstones"] == 0
+    assert index_stats(MINHASH, spark, mh)["tombstones"] == 0
     after_top = [int(r["doc_id"]) for r in bm25_search_indexed(spark, tx, terms, k=5).collect()]
     assert after_top == masked_top, "physical removal must be probe-invisible"
     print("compacted: rows physically gone from every index; serving unchanged")

@@ -214,14 +214,15 @@ class TestMinhashIncrementalIndex:
         )
 
     def test_probe_finds_history_dups_only(self, spark, index):
-        from tia_data_pipeline_spark.operators.dedup import minhash_dedup_incremental
+        from tia_data_pipeline_spark.operators.index import MINHASH, index_probe
 
         path, base, _ = index
         got = {
             (r["new_id"], r["dup_id"])
-            for r in minhash_dedup_incremental(
-                self._shard(spark, base), path, threshold=0.5
-            ).collect()
+            for r in index_probe(
+                MINHASH,
+                self._shard(spark, base), [path], threshold=0.5
+            )[0].collect()
         }
         # identical + near-copy both pair with indexed doc 1; the fresh
         # doc and the unrelated history doc 2 pair with nothing; shard-
@@ -235,10 +236,10 @@ class TestMinhashIncrementalIndex:
         import contextlib
         import io
 
-        from tia_data_pipeline_spark.operators.dedup import minhash_dedup_incremental
+        from tia_data_pipeline_spark.operators.index import MINHASH, index_probe
 
         path, base, _ = index
-        df = minhash_dedup_incremental(self._shard(spark, base), path, threshold=0.5)
+        df = index_probe(MINHASH, self._shard(spark, base), [path], threshold=0.5)[0]
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -253,29 +254,30 @@ class TestMinhashIncrementalIndex:
         ), f"no non-empty (band, bshard) partition filter: {scans}"
 
     def test_append_twice_equals_once(self, spark, index):
-        from tia_data_pipeline_spark.operators.dedup import (
-            minhash_dedup_incremental,
-            minhash_index_append,
-            minhash_index_meta,
-            _read_index,
+        from tia_data_pipeline_spark.operators.index import (
+            MINHASH,
+            index_append,
+            index_meta,
+            index_probe,
+            read_index,
         )
 
         path, base, _ = index
         shard = self._shard(spark, base)
-        meta = minhash_index_meta(spark, path)
-        minhash_index_append(shard, path)
-        n1 = _read_index(spark, path, meta).count()
-        minhash_index_append(shard, path)
-        n2 = _read_index(spark, path, meta).count()
+        meta = index_meta(MINHASH, spark, path)
+        index_append(MINHASH, shard, path)
+        n1 = read_index(spark, path, meta).count()
+        index_append(MINHASH, shard, path)
+        n2 = read_index(spark, path, meta).count()
         assert n1 == n2, "re-appending the same shard must be a no-op"
         # replay determinism: the probe excludes the shard's OWN ids
         # from the index side, so the pair set is IDENTICAL before and
         # after the shard's append — shard-internal dups are the
-        # streaming loop's explicit _intra_pairs leg, never a
+        # streaming loop's explicit intra leg, never a
         # crash-ordering accident
         got = {
             (r["new_id"], r["dup_id"])
-            for r in minhash_dedup_incremental(shard, path, threshold=0.5).collect()
+            for r in index_probe(MINHASH, shard, [path], threshold=0.5)[0].collect()
         }
         assert got == {(10, 1), (11, 1)}
 
@@ -291,31 +293,26 @@ class TestMinhashIncrementalIndex:
         append had been clean."""
         from pyspark.sql import functions as F
 
-        from tia_data_pipeline_spark.operators.dedup import (
-            _band_shard,
-            _read_index,
-            minhash_band_frame,
-            minhash_dedup_incremental,
-            minhash_index_append,
-            minhash_index_meta,
+        from tia_data_pipeline_spark.operators.index import (
+            MINHASH,
+            index_append,
+            index_meta,
+            index_probe,
+            read_index,
         )
 
         path, base, _ = index
         shard = self._shard(spark, base)
-        meta = minhash_index_meta(spark, path)
-        banded = minhash_band_frame(
-            shard, "text", "doc_id",
-            k=meta["k"], bands=meta["bands"], seed=meta["seed"],
-            shingle_n=meta["shingle_n"], portable=meta["portable"],
-        ).withColumn("bshard", _band_shard(meta["n_shards"]))
+        meta = index_meta(MINHASH, spark, path)
+        banded = MINHASH.band(shard, meta, {"text_col": "text", "id_col": "doc_id"})
         torn = banded.filter(F.col("band") < meta["bands"] // 2)
         assert 0 < torn.count() < banded.count()
         torn.repartition("band", "bshard").write.partitionBy(
             "band", "bshard"
         ).mode("append").parquet(path)
-        minhash_index_append(shard, path)  # the retry
+        index_append(MINHASH, shard, path)  # the retry
         per_doc = (
-            _read_index(spark, path, meta)
+            read_index(spark, path, meta)
             .join(
                 shard.select(F.col("doc_id").alias("_id")), "_id", "leftsemi"
             )
@@ -331,27 +328,27 @@ class TestMinhashIncrementalIndex:
         ), per_doc
         got = {
             (r["new_id"], r["dup_id"])
-            for r in minhash_dedup_incremental(shard, path, threshold=0.5).collect()
+            for r in index_probe(MINHASH, shard, [path], threshold=0.5)[0].collect()
         }
         assert got == {(10, 1), (11, 1)}
 
 
     def test_empty_index_and_empty_shard(self, spark, tmp_path):
         from tia_data_pipeline_spark.operators.dedup import (
-            minhash_dedup_incremental,
             minhash_write_index,
         )
+        from tia_data_pipeline_spark.operators.index import MINHASH, index_probe
 
         empty = spark.createDataFrame([], "doc_id bigint, text string")
         docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id bigint, text string")
         path = str(tmp_path / "idx0")
         # day-zero bootstrap: an index of zero documents is probeable
         minhash_write_index(empty, "text", "doc_id", path, n_shards=8)
-        assert minhash_dedup_incremental(docs, path).count() == 0
+        assert index_probe(MINHASH, docs, [path])[0].count() == 0
         # and an empty shard probes any index to zero rows
         path2 = str(tmp_path / "idx1")
         minhash_write_index(docs, "text", "doc_id", path2, n_shards=8)
-        assert minhash_dedup_incremental(empty, path2).count() == 0
+        assert index_probe(MINHASH, empty, [path2])[0].count() == 0
 
     def test_probe_uses_index_hash_family(self, spark, tmp_path):
         """Parameter drift between writer and prober is impossible:
@@ -359,9 +356,9 @@ class TestMinhashIncrementalIndex:
         the index meta, so an index written with a non-default family
         still matches a byte-identical shard doc at est 1.0."""
         from tia_data_pipeline_spark.operators.dedup import (
-            minhash_dedup_incremental,
             minhash_write_index,
         )
+        from tia_data_pipeline_spark.operators.index import MINHASH, index_probe
 
         text = " ".join(f"t{i}" for i in range(80))
         hist = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
@@ -370,10 +367,48 @@ class TestMinhashIncrementalIndex:
         minhash_write_index(
             hist, "text", "doc_id", path, k=16, bands=4, seed=99, n_shards=4
         )
-        rows = minhash_dedup_incremental(shard, path, threshold=0.9).collect()
+        rows = index_probe(MINHASH, shard, [path], threshold=0.9)[0].collect()
         assert [(r["new_id"], r["dup_id"], r["est_jaccard"]) for r in rows] == [
             (2, 1, 1.0)
         ]
+
+    def test_multi_probe_equals_single_probes(self, spark, index, tmp_path):
+        """The MinHash input of the multi ≡ single check (the SimHash
+        and embedding inputs live with their families): one shard probed
+        against a masked dir and its compacted sibling in ONE call must
+        emit exactly what per-dir single probes emit, and mismatched
+        hash families must raise."""
+        import shutil
+
+        from tia_data_pipeline_spark.operators.dedup import minhash_write_index
+        from tia_data_pipeline_spark.operators.index import (
+            MINHASH,
+            index_compact,
+            index_delete,
+            index_probe,
+        )
+
+        path, base, _ = index
+        shard = self._shard(spark, base)
+        path2 = str(tmp_path / "idx_compacted")
+        shutil.copytree(path, path2)
+        index_delete(MINHASH, spark.createDataFrame([(2,)], "doc_id bigint"), path2)
+        index_compact(MINHASH, spark, path2)
+
+        multi = index_probe(MINHASH, shard, [path, path2], threshold=0.5)
+        for p, got in zip([path, path2], multi):
+            want = {
+                (r["new_id"], r["dup_id"], r["est_jaccard"])
+                for r in index_probe(MINHASH, shard, [p], threshold=0.5)[0].collect()
+            }
+            assert {
+                (r["new_id"], r["dup_id"], r["est_jaccard"]) for r in got.collect()
+            } == want
+        path3 = str(tmp_path / "idx_other_family")
+        hist = spark.createDataFrame([(1, base)], "doc_id bigint, text string")
+        minhash_write_index(hist, "text", "doc_id", path3, k=16, bands=4, n_shards=8)
+        with pytest.raises(ValueError, match="hash family"):
+            index_probe(MINHASH, shard, [path, path3], threshold=0.5)
 
 
 class TestSimhashIncrementalIndex:
@@ -405,12 +440,13 @@ class TestSimhashIncrementalIndex:
         )
 
     def test_probe_finds_history_dups_only(self, spark, index):
-        from tia_data_pipeline_spark.operators.dedup import simhash_dedup_incremental
+        from tia_data_pipeline_spark.operators.index import SIMHASH, index_probe
 
         path, base = index
-        rows = simhash_dedup_incremental(
-            self._shard(spark, base), path, max_hamming=2
-        ).collect()
+        rows = index_probe(
+            SIMHASH,
+            self._shard(spark, base), [path], max_hamming=2
+        )[0].collect()
         got = {(r["new_id"], r["dup_id"], r["hamming"]) for r in rows}
         # the byte-identical copy pairs with indexed doc 1 at hamming 0
         # (identical token sets ⇒ identical votes); the fresh doc and
@@ -424,10 +460,10 @@ class TestSimhashIncrementalIndex:
         import contextlib
         import io
 
-        from tia_data_pipeline_spark.operators.dedup import simhash_dedup_incremental
+        from tia_data_pipeline_spark.operators.index import SIMHASH, index_probe
 
         path, base = index
-        df = simhash_dedup_incremental(self._shard(spark, base), path, max_hamming=2)
+        df = index_probe(SIMHASH, self._shard(spark, base), [path], max_hamming=2)[0]
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -442,27 +478,28 @@ class TestSimhashIncrementalIndex:
         ), f"no non-empty (band, bshard) partition filter: {scans}"
 
     def test_append_twice_equals_once(self, spark, index):
-        from tia_data_pipeline_spark.operators.dedup import (
-            _read_index,
-            simhash_dedup_incremental,
-            simhash_index_append,
-            simhash_index_meta,
+        from tia_data_pipeline_spark.operators.index import (
+            SIMHASH,
+            index_append,
+            index_meta,
+            index_probe,
+            read_index,
         )
 
         path, base = index
         shard = self._shard(spark, base)
-        meta = simhash_index_meta(spark, path)
-        simhash_index_append(shard, path)
-        n1 = _read_index(spark, path, meta).count()
-        simhash_index_append(shard, path)
-        n2 = _read_index(spark, path, meta).count()
+        meta = index_meta(SIMHASH, spark, path)
+        index_append(SIMHASH, shard, path)
+        n1 = read_index(spark, path, meta).count()
+        index_append(SIMHASH, shard, path)
+        n2 = read_index(spark, path, meta).count()
         assert n1 == n2, "re-appending the same shard must be a no-op"
         # replay determinism: the probe anti-joins the shard's own ids
         # off the index side, so the pair set is identical before and
         # after the append
         got = {
             (r["new_id"], r["dup_id"])
-            for r in simhash_dedup_incremental(shard, path, max_hamming=2).collect()
+            for r in index_probe(SIMHASH, shard, [path], max_hamming=2)[0].collect()
         }
         assert got == {(10, 1)}
 
@@ -473,18 +510,18 @@ class TestSimhashIncrementalIndex:
         exactly one row per (doc, band)."""
         from pyspark.sql import functions as F
 
-        from tia_data_pipeline_spark.operators.dedup import (
-            _band_shard,
-            _read_index,
-            simhash_band_frame,
-            simhash_dedup_incremental,
-            simhash_index_append,
-            simhash_index_meta,
+        from tia_data_pipeline_spark.operators.dedup import simhash_band_frame
+        from tia_data_pipeline_spark.operators.index import (
+            SIMHASH,
+            index_append,
+            index_meta,
+            index_probe,
+            read_index,
         )
 
         path, base = index
         shard = self._shard(spark, base)
-        meta = simhash_index_meta(spark, path)
+        meta = index_meta(SIMHASH, spark, path)
         banded = simhash_band_frame(
             shard, "text", "doc_id",
             bits=meta["bits"], bands=meta["bands"], n_shards=meta["n_shards"],
@@ -494,9 +531,9 @@ class TestSimhashIncrementalIndex:
         torn.repartition("band", "bshard").write.partitionBy(
             "band", "bshard"
         ).mode("append").parquet(path)
-        simhash_index_append(shard, path)
+        index_append(SIMHASH, shard, path)
         per_doc = (
-            _read_index(spark, path, meta)
+            read_index(spark, path, meta)
             .join(
                 shard.select(F.col("doc_id").alias("_id")), "_id", "leftsemi"
             )
@@ -512,46 +549,47 @@ class TestSimhashIncrementalIndex:
         ), per_doc
         got = {
             (r["new_id"], r["dup_id"])
-            for r in simhash_dedup_incremental(
-                shard, path, max_hamming=2
-            ).collect()
+            for r in index_probe(
+                SIMHASH,
+                shard, [path], max_hamming=2
+            )[0].collect()
         }
         assert got == {(10, 1)}
 
     def test_empty_index_and_empty_shard(self, spark, tmp_path):
         from tia_data_pipeline_spark.operators.dedup import (
-            simhash_dedup_incremental,
             simhash_write_index,
         )
+        from tia_data_pipeline_spark.operators.index import SIMHASH, index_probe
 
         empty = spark.createDataFrame([], "doc_id bigint, text string")
         docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id bigint, text string")
         path = str(tmp_path / "shidx0")
         simhash_write_index(empty, "text", "doc_id", path, n_shards=8)
-        assert simhash_dedup_incremental(docs, path).count() == 0
+        assert index_probe(SIMHASH, docs, [path])[0].count() == 0
         path2 = str(tmp_path / "shidx1")
         simhash_write_index(docs, "text", "doc_id", path2, n_shards=8)
-        assert simhash_dedup_incremental(empty, path2).count() == 0
+        assert index_probe(SIMHASH, empty, [path2])[0].count() == 0
 
     def test_probe_uses_index_meta_family(self, spark, tmp_path):
         """Writer/prober parameter drift is impossible: the probe takes
         (bits, bands, n_shards) from the index meta, so a non-default
         index still matches a byte-identical doc at hamming 0."""
         from tia_data_pipeline_spark.operators.dedup import (
-            simhash_dedup_incremental,
             simhash_write_index,
         )
+        from tia_data_pipeline_spark.operators.index import SIMHASH, index_probe
 
         text = " ".join(f"t{i}" for i in range(80))
         hist = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
         shard = spark.createDataFrame([(2, text)], "doc_id bigint, text string")
         path = str(tmp_path / "shidx32")
         simhash_write_index(hist, "text", "doc_id", path, bits=32, bands=4, n_shards=4)
-        rows = simhash_dedup_incremental(shard, path, max_hamming=0).collect()
+        rows = index_probe(SIMHASH, shard, [path], max_hamming=0)[0].collect()
         assert [(r["new_id"], r["dup_id"], r["hamming"]) for r in rows] == [(2, 1, 0)]
 
     def test_multi_probe_equals_single_probes(self, spark, index, tmp_path):
-        """simhash_dedup_incremental_multi (one shared shard frame,
+        """index_probe over several dirs (one shared shard frame,
         several index dirs — the takedown lifecycle's probe shape) must
         emit exactly what per-dir single probes emit, and refuse
         mismatched hash families (round 12: the shared scaffolding must
@@ -559,11 +597,13 @@ class TestSimhashIncrementalIndex:
         import shutil
 
         from tia_data_pipeline_spark.operators.dedup import (
-            simhash_dedup_incremental,
-            simhash_dedup_incremental_multi,
-            simhash_index_compact,
-            simhash_index_delete,
             simhash_write_index,
+        )
+        from tia_data_pipeline_spark.operators.index import (
+            SIMHASH,
+            index_compact,
+            index_delete,
+            index_probe,
         )
 
         path, base = index
@@ -573,16 +613,17 @@ class TestSimhashIncrementalIndex:
         path2 = str(tmp_path / "shidx_compacted")
         shutil.copytree(path, path2)
         doomed = spark.createDataFrame([(2,)], "doc_id bigint")
-        simhash_index_delete(doomed, path2)
-        simhash_index_compact(spark, path2)
+        index_delete(SIMHASH, doomed, path2)
+        index_compact(SIMHASH, spark, path2)
 
-        multi = simhash_dedup_incremental_multi(
+        multi = index_probe(
+            SIMHASH,
             shard, [path, path2], max_hamming=2
         )
         for p, got in zip([path, path2], multi):
             want = {
                 (r["new_id"], r["dup_id"], r["hamming"])
-                for r in simhash_dedup_incremental(shard, p, max_hamming=2).collect()
+                for r in index_probe(SIMHASH, shard, [p], max_hamming=2)[0].collect()
             }
             assert {
                 (r["new_id"], r["dup_id"], r["hamming"]) for r in got.collect()
@@ -592,21 +633,61 @@ class TestSimhashIncrementalIndex:
         hist = spark.createDataFrame([(1, base)], "doc_id bigint, text string")
         simhash_write_index(hist, "text", "doc_id", path3, bits=32, bands=4, n_shards=8)
         with pytest.raises(ValueError, match="hash family"):
-            simhash_dedup_incremental_multi(shard, [path, path3], max_hamming=2)
+            index_probe(SIMHASH, shard, [path, path3], max_hamming=2)
 
     def test_max_hamming_beyond_band_guarantee_raises(self, spark, tmp_path):
         """B bands only guarantee collision for hamming ≤ B-1; asking
         for more would silently miss pairs, so it must raise."""
         from tia_data_pipeline_spark.operators.dedup import (
-            simhash_dedup_incremental,
             simhash_write_index,
         )
+        from tia_data_pipeline_spark.operators.index import SIMHASH, index_probe
 
         docs = spark.createDataFrame([(1, "a b c")], "doc_id bigint, text string")
         path = str(tmp_path / "shidx_g")
         simhash_write_index(docs, "text", "doc_id", path, n_shards=4)
         with pytest.raises(ValueError, match="guarantee"):
-            simhash_dedup_incremental(docs, path, max_hamming=4)
+            index_probe(SIMHASH, docs, [path], max_hamming=4)[0]
+
+
+@pytest.mark.parametrize(
+    "build, n, bands",
+    [
+        ("minhash_band_frame", 32, 5),
+        ("minhash_write_index", 32, 5),
+        ("minhash_oracle_sql", 32, 5),
+        ("simhash_band_frame", 48, 5),
+        ("simhash_incremental_oracle_sql", 48, 7),
+    ],
+)
+def test_bands_must_divide_the_signature(spark, tmp_path, build, n, bands):
+    """n % bands != 0 would band only bands·(n // bands) positions and
+    lose recall without any error (k=32, bands=5 keys 30 of 32); the
+    band frames, the index writer and the oracle builders refuse it
+    with a ValueError, which ``python -O`` cannot strip."""
+    from tia_data_pipeline_spark.operators import dedup as DD
+
+    docs = spark.createDataFrame([(1, "a b c d e")], "doc_id bigint, text string")
+    call = {
+        "minhash_band_frame": lambda: DD.minhash_band_frame(
+            docs, "text", "doc_id", k=n, bands=bands
+        ),
+        "minhash_write_index": lambda: DD.minhash_write_index(
+            docs, "text", "doc_id", str(tmp_path / "idx"), k=n, bands=bands, n_shards=2
+        ),
+        "minhash_oracle_sql": lambda: DD.minhash_oracle_sql(
+            "documents", "shingles", "doc_id", k=n, bands=bands
+        ),
+        "simhash_band_frame": lambda: DD.simhash_band_frame(
+            docs, "text", "doc_id", bits=n, bands=bands
+        ),
+        "simhash_incremental_oracle_sql": lambda: DD.simhash_incremental_oracle_sql(
+            "documents", "toks", "doc_id", history_pred="true",
+            shard_pred="false", bits=n, bands=bands,
+        ),
+    }[build]
+    with pytest.raises(ValueError, match="equal bands"):
+        call()
 
 
 def test_band_divmod_fuzz_vs_duckdb(spark):

@@ -36,25 +36,28 @@ def docs(spark):
 
 def test_minhash_compact_preserves_content_and_probes(spark, docs, tmp_path):
     from tia_data_pipeline_spark.operators.dedup import (
-        minhash_dedup_incremental,
-        minhash_index_append,
-        minhash_index_compact,
         minhash_write_index,
+    )
+    from tia_data_pipeline_spark.operators.index import (
+        MINHASH,
+        index_append,
+        index_compact,
+        index_probe,
     )
 
     idx = str(tmp_path / "mh")
     minhash_write_index(docs.filter("doc_id <= 10"), "text", "doc_id", idx, n_shards=4)
-    minhash_index_append(docs.filter("doc_id > 10 AND doc_id <= 20"), idx)
-    minhash_index_append(docs.filter("doc_id > 20"), idx)
+    index_append(MINHASH, docs.filter("doc_id > 10 AND doc_id <= 20"), idx)
+    index_append(MINHASH, docs.filter("doc_id > 20"), idx)
 
     probe = docs.limit(5).withColumn("doc_id", F.col("doc_id") + 1000)
     before_rows = sorted(map(tuple, spark.read.parquet(idx).collect()))
     before_pairs = sorted(
-        map(tuple, minhash_dedup_incremental(probe, idx, threshold=0.5).collect())
+        map(tuple, index_probe(MINHASH, probe, [idx], threshold=0.5)[0].collect())
     )
     n_files_before = len(_data_files(idx))
 
-    stats = minhash_index_compact(spark, idx)
+    stats = index_compact(MINHASH, spark, idx)
     assert stats["rows"] == len(before_rows)
     assert stats["files_after"] <= stats["files_before"] == n_files_before
     # every (band, bshard) partition is now a single file
@@ -65,46 +68,52 @@ def test_minhash_compact_preserves_content_and_probes(spark, docs, tmp_path):
 
     assert sorted(map(tuple, spark.read.parquet(idx).collect())) == before_rows
     after_pairs = sorted(
-        map(tuple, minhash_dedup_incremental(probe, idx, threshold=0.5).collect())
+        map(tuple, index_probe(MINHASH, probe, [idx], threshold=0.5)[0].collect())
     )
     assert after_pairs == before_pairs
 
     # idempotent: compacting a compact index changes nothing
-    again = minhash_index_compact(spark, idx)
+    again = index_compact(MINHASH, spark, idx)
     assert again["rows"] == stats["rows"]
     assert again["files_after"] == stats["files_after"]
 
 
 def test_simhash_compact_preserves_content(spark, docs, tmp_path):
     from tia_data_pipeline_spark.operators.dedup import (
-        simhash_index_append,
-        simhash_index_compact,
         simhash_write_index,
+    )
+    from tia_data_pipeline_spark.operators.index import (
+        SIMHASH,
+        index_append,
+        index_compact,
     )
 
     idx = str(tmp_path / "sh")
     simhash_write_index(docs.filter("doc_id <= 15"), "text", "doc_id", idx, n_shards=4)
-    simhash_index_append(docs.filter("doc_id > 15"), idx)
+    index_append(SIMHASH, docs.filter("doc_id > 15"), idx)
     before = sorted(map(tuple, spark.read.parquet(idx).collect()))
-    stats = simhash_index_compact(spark, idx)
+    stats = index_compact(SIMHASH, spark, idx)
     assert stats["rows"] == len(before)
     assert sorted(map(tuple, spark.read.parquet(idx).collect())) == before
 
 
 def test_embedding_compact_preserves_content(spark, tmp_path):
     from tia_data_pipeline_spark.operators.similarity import (
-        embedding_index_append,
-        embedding_index_compact,
         embedding_write_index,
+    )
+    from tia_data_pipeline_spark.operators.index import (
+        EMBEDDING,
+        index_append,
+        index_compact,
     )
 
     rows = [(i, [float(i % 7), float(i % 3), 1.0, 0.5]) for i in range(1, 41)]
     spark_df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     idx = str(tmp_path / "emb")
     embedding_write_index(spark_df.filter("vec_id <= 20"), idx)
-    embedding_index_append(spark_df.filter("vec_id > 20"), idx)
+    index_append(EMBEDDING, spark_df.filter("vec_id > 20"), idx)
     before = sorted(map(tuple, spark.read.parquet(idx).collect()))
-    stats = embedding_index_compact(spark, idx)
+    stats = index_compact(EMBEDDING, spark, idx)
     assert stats["rows"] == len(before)
     assert sorted(map(tuple, spark.read.parquet(idx).collect())) == before
 
@@ -112,16 +121,19 @@ def test_embedding_compact_preserves_content(spark, tmp_path):
 @pytest.mark.slow
 def test_index_stats_track_appends_and_compaction(spark, docs, tmp_path):
     from tia_data_pipeline_spark.operators.dedup import (
-        minhash_index_append,
-        minhash_index_compact,
-        minhash_index_meta,
         minhash_write_index,
+    )
+    from tia_data_pipeline_spark.operators.index import (
+        MINHASH,
+        index_append,
+        index_compact,
+        index_meta,
     )
     from tia_data_pipeline_spark.operators.scale import partitioned_index_stats
 
     idx = str(tmp_path / "mh_stats")
     minhash_write_index(docs.filter("doc_id <= 10"), "text", "doc_id", idx, n_shards=4)
-    meta = minhash_index_meta(spark, idx)
+    meta = index_meta(MINHASH, spark, idx)
 
     def stats():
         return partitioned_index_stats(
@@ -130,12 +142,12 @@ def test_index_stats_track_appends_and_compaction(spark, docs, tmp_path):
         )
 
     s0 = stats()
-    minhash_index_append(docs.filter("doc_id > 10"), idx)
+    index_append(MINHASH, docs.filter("doc_id > 10"), idx)
     s1 = stats()
     # the append grew rows AND fragmented the layout
     assert s1["rows"] > s0["rows"]
     assert s1["files"] > s0["files"]
-    minhash_index_compact(spark, idx)
+    index_compact(MINHASH, spark, idx)
     s2 = stats()
     # compaction is layout-only: rows identical, fragmentation gone
     assert s2["rows"] == s1["rows"]
@@ -152,11 +164,14 @@ def test_full_lifecycle_compact_mid_serving_loop(spark, docs, tmp_path):
     same batch would emit against the uncompacted index, and day-1's
     appended docs stay probe-visible."""
     from tia_data_pipeline_spark.operators.dedup import (
-        simhash_dedup_incremental,
-        simhash_index_compact,
         simhash_write_index,
     )
-    from tia_data_pipeline_spark.streaming.dedup_serve import simhash_increment_batch
+    from tia_data_pipeline_spark.operators.index import (
+        SIMHASH,
+        index_compact,
+        index_probe,
+    )
+    from tia_data_pipeline_spark.streaming.dedup_serve import index_increment_batch
 
     import shutil
 
@@ -166,18 +181,18 @@ def test_full_lifecycle_compact_mid_serving_loop(spark, docs, tmp_path):
     out = str(tmp_path / "pairs")
     # day 1: a copy of doc 1 arrives and is appended
     day1 = spark.createDataFrame([(101, text1)], "doc_id bigint, text string")
-    simhash_increment_batch(day1, idx, out, 0, max_hamming=1)
+    index_increment_batch(SIMHASH, day1, idx, out, 0, max_hamming=1)
     # snapshot what day 2 WOULD see without compaction
     day2 = spark.createDataFrame([(202, text1)], "doc_id bigint, text string")
     uncompacted = str(tmp_path / "life_copy")
     shutil.copytree(idx, uncompacted)
     want = sorted(
-        map(tuple, simhash_dedup_incremental(day2, uncompacted, max_hamming=1).collect())
+        map(tuple, index_probe(SIMHASH, day2, [uncompacted], max_hamming=1)[0].collect())
     )
     # compact, then serve day 2 from the compacted index
-    simhash_index_compact(spark, idx)
+    index_compact(SIMHASH, spark, idx)
     got = sorted(
-        map(tuple, simhash_dedup_incremental(day2, idx, max_hamming=1).collect())
+        map(tuple, index_probe(SIMHASH, day2, [idx], max_hamming=1)[0].collect())
     )
     assert got == want
     # day-1's appended doc is among the matches (append survived compact)
@@ -186,16 +201,19 @@ def test_full_lifecycle_compact_mid_serving_loop(spark, docs, tmp_path):
 
 def test_empty_index_compacts_to_noop(spark, tmp_path):
     from tia_data_pipeline_spark.operators.dedup import (
-        minhash_dedup_incremental,
-        minhash_index_compact,
         minhash_write_index,
+    )
+    from tia_data_pipeline_spark.operators.index import (
+        MINHASH,
+        index_compact,
+        index_probe,
     )
 
     empty = spark.createDataFrame([], "doc_id bigint, text string")
     idx = str(tmp_path / "mh0")
     minhash_write_index(empty, "text", "doc_id", idx, n_shards=4)
-    stats = minhash_index_compact(spark, idx)
+    stats = index_compact(MINHASH, spark, idx)
     assert stats["rows"] == 0
     # the meta survived: the empty index is still probeable
     docs = spark.createDataFrame([(1, "a b c d e")], "doc_id bigint, text string")
-    assert minhash_dedup_incremental(docs, idx).count() == 0
+    assert index_probe(MINHASH, docs, [idx])[0].count() == 0

@@ -52,98 +52,102 @@ class TestMinhashDelete:
         return path
 
     def test_probe_masks_tombstoned_ids(self, spark, docs, tmp_path):
-        from tia_data_pipeline_spark.operators.dedup import (
-            minhash_dedup_incremental,
-            minhash_index_delete,
+        from tia_data_pipeline_spark.operators.index import (
+            MINHASH,
+            index_delete,
+            index_probe,
         )
 
         hist, shard = docs
         path = self._index(spark, hist, tmp_path)
         before = {
             (r["new_id"], r["dup_id"])
-            for r in minhash_dedup_incremental(shard, path, threshold=0.5).collect()
+            for r in index_probe(MINHASH, shard, [path], threshold=0.5)[0].collect()
         }
         assert {(11, 1), (12, 1), (13, 2)} <= before
-        minhash_index_delete(_ids(spark, 1), path)
+        index_delete(MINHASH, _ids(spark, 1), path)
         after = {
             (r["new_id"], r["dup_id"])
-            for r in minhash_dedup_incremental(shard, path, threshold=0.5).collect()
+            for r in index_probe(MINHASH, shard, [path], threshold=0.5)[0].collect()
         }
         # every pair to the deleted doc is gone; pairs to doc 2 survive
         assert after == {p for p in before if p[1] != 1}
         assert (13, 2) in after
 
     def test_delete_twice_equals_once(self, spark, docs, tmp_path):
-        from tia_data_pipeline_spark.operators.dedup import (
-            minhash_index_delete,
-            minhash_index_meta,
+        from tia_data_pipeline_spark.operators.index import (
+            MINHASH,
+            index_delete,
+            index_meta,
         )
         from tia_data_pipeline_spark.operators.scale import read_index_tombstones
 
         hist, _ = docs
         path = self._index(spark, hist, tmp_path)
-        minhash_index_delete(_ids(spark, 1, 2), path)
-        meta = minhash_index_meta(spark, path)
+        index_delete(MINHASH, _ids(spark, 1, 2), path)
+        meta = index_meta(MINHASH, spark, path)
         ts1 = read_index_tombstones(
             spark, path, index_schema_json=meta["schema_json"], id_col="_id"
         ).count()
         # retried batch + overlapping later batch: no duplicate rows
-        minhash_index_delete(_ids(spark, 1, 2), path)
-        minhash_index_delete(_ids(spark, 2, 999), path)
+        index_delete(MINHASH, _ids(spark, 1, 2), path)
+        index_delete(MINHASH, _ids(spark, 2, 999), path)
         ts2 = read_index_tombstones(
             spark, path, index_schema_json=meta["schema_json"], id_col="_id"
         ).count()
         assert (ts1, ts2) == (2, 3)
 
     def test_null_ids_are_excluded(self, spark, docs, tmp_path):
-        from tia_data_pipeline_spark.operators.dedup import (
-            minhash_index_delete,
-            minhash_index_stats,
+        from tia_data_pipeline_spark.operators.index import (
+            MINHASH,
+            index_delete,
+            index_stats,
         )
 
         hist, _ = docs
         path = self._index(spark, hist, tmp_path)
         ids = spark.createDataFrame([(None,), (1,)], "doc_id bigint")
-        minhash_index_delete(ids, path)
-        assert minhash_index_stats(spark, path)["tombstones"] == 1
+        index_delete(MINHASH, ids, path)
+        assert index_stats(MINHASH, spark, path)["tombstones"] == 1
 
     def test_compact_applies_tombstones(self, spark, docs, tmp_path):
-        from tia_data_pipeline_spark.operators.dedup import (
-            minhash_dedup_incremental,
-            minhash_index_compact,
-            minhash_index_delete,
-            minhash_index_meta,
-            minhash_index_stats,
-            _read_index,
+        from tia_data_pipeline_spark.operators.index import (
+            MINHASH,
+            index_compact,
+            index_delete,
+            index_meta,
+            index_probe,
+            index_stats,
+            read_index,
         )
 
         hist, shard = docs
         path = self._index(spark, hist, tmp_path)
-        meta = minhash_index_meta(spark, path)
+        meta = index_meta(MINHASH, spark, path)
         bands = meta["bands"]
-        total = _read_index(spark, path, meta).count()
-        minhash_index_delete(_ids(spark, 1), path)
+        total = read_index(spark, path, meta).count()
+        index_delete(MINHASH, _ids(spark, 1), path)
 
-        stats = minhash_index_stats(spark, path)
+        stats = index_stats(MINHASH, spark, path)
         assert stats["tombstones"] == 1
         # doc 1 masks `bands` of the physical rows
         assert stats["tombstone_fraction"] == round(bands / total, 6)
 
         before_pairs = sorted(
-            map(tuple, minhash_dedup_incremental(shard, path, threshold=0.5).collect())
+            map(tuple, index_probe(MINHASH, shard, [path], threshold=0.5)[0].collect())
         )
-        out = minhash_index_compact(spark, path)
+        out = index_compact(MINHASH, spark, path)
         # physical removal: the deleted doc's rows are gone...
         assert out["rows"] == total - bands
-        left = _read_index(spark, path, minhash_index_meta(spark, path))
+        left = read_index(spark, path, index_meta(MINHASH, spark, path))
         assert left.filter(F.col("_id") == 1).count() == 0
         # ...the applied tombstones are gone...
         assert not os.path.isdir(os.path.join(path, "_tombstones"))
-        post = minhash_index_stats(spark, path)
+        post = index_stats(MINHASH, spark, path)
         assert post["tombstones"] == 0 and post["tombstone_fraction"] == 0.0
         # ...and probes are byte-identical before/after the removal
         after_pairs = sorted(
-            map(tuple, minhash_dedup_incremental(shard, path, threshold=0.5).collect())
+            map(tuple, index_probe(MINHASH, shard, [path], threshold=0.5)[0].collect())
         )
         assert after_pairs == before_pairs
 
@@ -154,27 +158,28 @@ class TestMinhashDelete:
         the tombstone lives is probe-invisible; compaction drops the
         re-appended rows with the tombstone; a FRESH append after that
         re-indexes the doc."""
-        from tia_data_pipeline_spark.operators.dedup import (
-            minhash_dedup_incremental,
-            minhash_index_append,
-            minhash_index_compact,
-            minhash_index_delete,
+        from tia_data_pipeline_spark.operators.index import (
+            MINHASH,
+            index_append,
+            index_compact,
+            index_delete,
+            index_probe,
         )
 
         hist, shard = docs
         path = self._index(spark, hist, tmp_path)
-        minhash_index_delete(_ids(spark, 1), path)
-        minhash_index_append(hist.filter("doc_id = 1"), path)
+        index_delete(MINHASH, _ids(spark, 1), path)
+        index_append(MINHASH, hist.filter("doc_id = 1"), path)
         masked = {
             (r["new_id"], r["dup_id"])
-            for r in minhash_dedup_incremental(shard, path, threshold=0.5).collect()
+            for r in index_probe(MINHASH, shard, [path], threshold=0.5)[0].collect()
         }
         assert not any(d == 1 for _, d in masked)
-        minhash_index_compact(spark, path)
-        minhash_index_append(hist.filter("doc_id = 1"), path)
+        index_compact(MINHASH, spark, path)
+        index_append(MINHASH, hist.filter("doc_id = 1"), path)
         revived = {
             (r["new_id"], r["dup_id"])
-            for r in minhash_dedup_incremental(shard, path, threshold=0.5).collect()
+            for r in index_probe(MINHASH, shard, [path], threshold=0.5)[0].collect()
         }
         assert (12, 1) in revived
 
@@ -183,11 +188,14 @@ class TestSimhashDelete:
     @pytest.mark.slow
     def test_lifecycle(self, spark, docs, tmp_path):
         from tia_data_pipeline_spark.operators.dedup import (
-            simhash_dedup_incremental,
-            simhash_index_compact,
-            simhash_index_delete,
-            simhash_index_stats,
             simhash_write_index,
+        )
+        from tia_data_pipeline_spark.operators.index import (
+            SIMHASH,
+            index_compact,
+            index_delete,
+            index_probe,
+            index_stats,
         )
 
         hist, shard = docs
@@ -195,24 +203,24 @@ class TestSimhashDelete:
         simhash_write_index(hist, "text", "doc_id", path, n_shards=4)
         before = {
             (r["new_id"], r["dup_id"])
-            for r in simhash_dedup_incremental(shard, path, max_hamming=3).collect()
+            for r in index_probe(SIMHASH, shard, [path], max_hamming=3)[0].collect()
         }
         assert (12, 1) in before and (13, 2) in before
-        simhash_index_delete(_ids(spark, 1), path)
-        simhash_index_delete(_ids(spark, 1), path)  # idempotent
+        index_delete(SIMHASH, _ids(spark, 1), path)
+        index_delete(SIMHASH, _ids(spark, 1), path)  # idempotent
         masked = {
             (r["new_id"], r["dup_id"])
-            for r in simhash_dedup_incremental(shard, path, max_hamming=3).collect()
+            for r in index_probe(SIMHASH, shard, [path], max_hamming=3)[0].collect()
         }
         assert masked == {p for p in before if p[1] != 1}
-        st = simhash_index_stats(spark, path)
+        st = index_stats(SIMHASH, spark, path)
         assert st["tombstones"] == 1 and st["tombstone_fraction"] > 0
-        simhash_index_compact(spark, path)
-        post = simhash_index_stats(spark, path)
+        index_compact(SIMHASH, spark, path)
+        post = index_stats(SIMHASH, spark, path)
         assert post["tombstones"] == 0
         after = {
             (r["new_id"], r["dup_id"])
-            for r in simhash_dedup_incremental(shard, path, max_hamming=3).collect()
+            for r in index_probe(SIMHASH, shard, [path], max_hamming=3)[0].collect()
         }
         assert after == masked
 
@@ -240,11 +248,14 @@ class TestEmbeddingDelete:
     @pytest.mark.slow
     def test_lifecycle(self, spark, tmp_path):
         from tia_data_pipeline_spark.operators.similarity import (
-            embedding_dedup_incremental,
-            embedding_index_compact,
-            embedding_index_delete,
-            embedding_index_stats,
             embedding_write_index,
+        )
+        from tia_data_pipeline_spark.operators.index import (
+            EMBEDDING,
+            index_compact,
+            index_delete,
+            index_probe,
+            index_stats,
         )
 
         hist, shard = self._data(spark)
@@ -252,24 +263,24 @@ class TestEmbeddingDelete:
         embedding_write_index(hist, path, bits=2)
         before = {
             (r["new_id"], r["dup_id"])
-            for r in embedding_dedup_incremental(shard, path, threshold=0.9).collect()
+            for r in index_probe(EMBEDDING, shard, [path], threshold=0.9)[0].collect()
         }
         assert (12, 1) in before and (13, 2) in before
         ids = spark.createDataFrame([(1,)], "vec_id bigint")
-        embedding_index_delete(ids, path)
-        embedding_index_delete(ids, path)  # idempotent
+        index_delete(EMBEDDING, ids, path)
+        index_delete(EMBEDDING, ids, path)  # idempotent
         masked = {
             (r["new_id"], r["dup_id"])
-            for r in embedding_dedup_incremental(shard, path, threshold=0.9).collect()
+            for r in index_probe(EMBEDDING, shard, [path], threshold=0.9)[0].collect()
         }
         assert masked == {p for p in before if p[1] != 1}
-        st = embedding_index_stats(spark, path)
+        st = index_stats(EMBEDDING, spark, path)
         assert st["tombstones"] == 1 and st["tombstone_fraction"] > 0
-        embedding_index_compact(spark, path)
-        assert embedding_index_stats(spark, path)["tombstones"] == 0
+        index_compact(EMBEDDING, spark, path)
+        assert index_stats(EMBEDDING, spark, path)["tombstones"] == 0
         after = {
             (r["new_id"], r["dup_id"])
-            for r in embedding_dedup_incremental(shard, path, threshold=0.9).collect()
+            for r in index_probe(EMBEDDING, shard, [path], threshold=0.9)[0].collect()
         }
         assert after == masked
 
@@ -282,17 +293,20 @@ class TestGenericTombstoneLayer:
         import shutil
 
         from tia_data_pipeline_spark.operators.dedup import (
-            minhash_index_delete,
-            minhash_index_stats,
             minhash_write_index,
+        )
+        from tia_data_pipeline_spark.operators.index import (
+            MINHASH,
+            index_delete,
+            index_stats,
         )
 
         hist, _ = docs
         path = str(tmp_path / "old")
         minhash_write_index(hist, "text", "doc_id", path, n_shards=4)
-        minhash_index_delete(_ids(spark, 1), path)
+        index_delete(MINHASH, _ids(spark, 1), path)
         shutil.rmtree(os.path.join(path, "_tombstones"))
-        st = minhash_index_stats(spark, path)
+        st = index_stats(MINHASH, spark, path)
         assert st["tombstones"] == 0 and st["tombstone_fraction"] == 0.0
 
     def test_underscore_partition_dirs_are_data(self, spark, tmp_path):
@@ -335,9 +349,9 @@ class TestScopedProbeCacheRelease:
 
     def test_minhash_scoped_releases_cache(self, spark, docs, tmp_path):
         from tia_data_pipeline_spark.operators.dedup import (
-            minhash_dedup_incremental_scoped,
             minhash_write_index,
         )
+        from tia_data_pipeline_spark.operators.index import MINHASH, index_probe_scoped
 
         hist, shard = docs
         path = str(tmp_path / "mh")
@@ -345,7 +359,7 @@ class TestScopedProbeCacheRelease:
         spark.catalog.clearCache()  # isolate from session-lifetime caches
         jsc = spark.sparkContext._jsc.sc()
         before = len(jsc.getRDDStorageInfo())
-        with minhash_dedup_incremental_scoped(shard, path, threshold=0.5) as pairs:
+        with index_probe_scoped(MINHASH, shard, [path], threshold=0.5) as (pairs,):
             got = {(r["new_id"], r["dup_id"]) for r in pairs.collect()}
         assert (12, 1) in got
         from tests.conftest import assert_cache_settles_to
@@ -354,9 +368,9 @@ class TestScopedProbeCacheRelease:
 
     def test_simhash_scoped_releases_cache(self, spark, docs, tmp_path):
         from tia_data_pipeline_spark.operators.dedup import (
-            simhash_dedup_incremental_scoped,
             simhash_write_index,
         )
+        from tia_data_pipeline_spark.operators.index import SIMHASH, index_probe_scoped
 
         hist, shard = docs
         path = str(tmp_path / "sh")
@@ -364,7 +378,7 @@ class TestScopedProbeCacheRelease:
         spark.catalog.clearCache()  # isolate from session-lifetime caches
         jsc = spark.sparkContext._jsc.sc()
         before = len(jsc.getRDDStorageInfo())
-        with simhash_dedup_incremental_scoped(shard, path) as pairs:
+        with index_probe_scoped(SIMHASH, shard, [path]) as (pairs,):
             assert pairs.count() >= 1
         from tests.conftest import assert_cache_settles_to
 
@@ -372,8 +386,11 @@ class TestScopedProbeCacheRelease:
 
     def test_embedding_scoped_releases_cache(self, spark, tmp_path):
         from tia_data_pipeline_spark.operators.similarity import (
-            embedding_dedup_incremental_scoped,
             embedding_write_index,
+        )
+        from tia_data_pipeline_spark.operators.index import (
+            EMBEDDING,
+            index_probe_scoped,
         )
 
         hist, shard = TestEmbeddingDelete()._data(spark)
@@ -382,11 +399,34 @@ class TestScopedProbeCacheRelease:
         spark.catalog.clearCache()  # isolate from session-lifetime caches
         jsc = spark.sparkContext._jsc.sc()
         before = len(jsc.getRDDStorageInfo())
-        with embedding_dedup_incremental_scoped(shard, path, threshold=0.9) as pairs:
+        with index_probe_scoped(EMBEDDING, shard, [path], threshold=0.9) as (pairs,):
             assert pairs.count() >= 1
         from tests.conftest import assert_cache_settles_to
 
         assert_cache_settles_to(jsc, before, "shard cache")
+
+
+    def test_multi_path_scoped_releases_cache(self, spark, docs, tmp_path):
+        """The one scoped form over SEVERAL dirs persists the capped
+        probe side on top of the shard frame (every dir's leg consumes
+        it); scope exit must release both."""
+        import shutil
+
+        from tia_data_pipeline_spark.operators.dedup import simhash_write_index
+        from tia_data_pipeline_spark.operators.index import SIMHASH, index_probe_scoped
+
+        hist, shard = docs
+        path = str(tmp_path / "sh")
+        simhash_write_index(hist, "text", "doc_id", path, n_shards=4)
+        shutil.copytree(path, str(tmp_path / "sh2"))
+        spark.catalog.clearCache()  # isolate from session-lifetime caches
+        jsc = spark.sparkContext._jsc.sc()
+        before = len(jsc.getRDDStorageInfo())
+        with index_probe_scoped(SIMHASH, shard, [path, str(tmp_path / "sh2")]) as pairs:
+            assert len(pairs) == 2 and all(p.count() >= 1 for p in pairs)
+        from tests.conftest import assert_cache_settles_to
+
+        assert_cache_settles_to(jsc, before, "shard and probe-side caches")
 
 
 def test_stream_index_deletes_masks_and_replays_idempotently(spark, docs, tmp_path):
@@ -394,9 +434,12 @@ def test_stream_index_deletes_masks_and_replays_idempotently(spark, docs, tmp_pa
     index per micro-batch; a replay of the same files tombstones
     nothing new; probes mask immediately."""
     from tia_data_pipeline_spark.operators.dedup import (
-        minhash_dedup_incremental,
-        minhash_index_stats,
         minhash_write_index,
+    )
+    from tia_data_pipeline_spark.operators.index import (
+        MINHASH,
+        index_probe,
+        index_stats,
     )
     from tia_data_pipeline_spark.streaming.dedup_serve import stream_index_deletes
 
@@ -419,16 +462,16 @@ def test_stream_index_deletes_masks_and_replays_idempotently(spark, docs, tmp_pa
         id_stream,
         index_path=path,
         checkpoint=str(tmp_path / "ckpt"),
-        family="minhash",
     )
     q.awaitTermination()
-    st = minhash_index_stats(spark, path)
+    st = index_stats(MINHASH, spark, path)
     assert st["tombstones"] == 2  # overlapping requests collapse
-    assert minhash_dedup_incremental(shard, path, threshold=0.5).count() == 0
-    with pytest.raises(ValueError, match="unknown index family"):
+    assert index_probe(MINHASH, shard, [path], threshold=0.5)[0].count() == 0
+    bare = str(tmp_path / "not_an_index")
+    os.makedirs(bare)
+    with pytest.raises(ValueError, match="not_an_index holds no index meta"):
         stream_index_deletes(
-            id_stream, index_path=path,
-            checkpoint=str(tmp_path / "ckpt2"), family="nope",
+            id_stream, index_path=bare, checkpoint=str(tmp_path / "ckpt2"),
         )
 
 
@@ -441,25 +484,25 @@ class TestReviewHardenings:
         every probe off the never-deleted fast path) nor grow files on
         replay."""
         from tia_data_pipeline_spark.operators.dedup import (
-            minhash_index_delete,
             minhash_write_index,
         )
+        from tia_data_pipeline_spark.operators.index import MINHASH, index_delete
 
         hist, _ = docs
         path = str(tmp_path / "mh")
         minhash_write_index(hist, "text", "doc_id", path, n_shards=4)
         nulls = spark.createDataFrame([(None,)], "doc_id bigint")
-        minhash_index_delete(nulls, path)
+        index_delete(MINHASH, nulls, path)
         assert not os.path.isdir(os.path.join(path, "_tombstones"))
         # a real delete creates it; replaying adds NO file
-        minhash_index_delete(_ids(spark, 1), path)
+        index_delete(MINHASH, _ids(spark, 1), path)
         import glob
 
         files = lambda: len(  # noqa: E731
             glob.glob(os.path.join(path, "_tombstones", "*.parquet"))
         )
         n1 = files()
-        minhash_index_delete(_ids(spark, 1), path)
+        index_delete(MINHASH, _ids(spark, 1), path)
         assert files() == n1 == 1
 
     def test_stream_deletes_respect_family_id_defaults(self, spark, tmp_path):
@@ -467,9 +510,9 @@ class TestReviewHardenings:
         other embedding API defaults to (review r9: a hardcoded
         forwarded 'doc_id' raised UNRESOLVED_COLUMN in foreachBatch)."""
         from tia_data_pipeline_spark.operators.similarity import (
-            embedding_dedup_incremental,
             embedding_write_index,
         )
+        from tia_data_pipeline_spark.operators.index import EMBEDDING, index_probe
         from tia_data_pipeline_spark.streaming.dedup_serve import (
             stream_index_deletes,
         )
@@ -486,12 +529,11 @@ class TestReviewHardenings:
             id_stream,
             index_path=path,
             checkpoint=str(tmp_path / "ckpt"),
-            family="embedding",
         )
         q.awaitTermination()
         got = {
             (r["new_id"], r["dup_id"])
-            for r in embedding_dedup_incremental(shard, path, threshold=0.9).collect()
+            for r in index_probe(EMBEDDING, shard, [path], threshold=0.9)[0].collect()
         }
         assert not any(d == 1 for _, d in got)
 

@@ -245,10 +245,13 @@ def test_delete_composes_with_index_tombstones(spark, tmp_path):
     is unfindable via either path; after index compaction it is
     physically gone everywhere."""
     from tia_data_pipeline_spark.operators.dedup import (
-        minhash_dedup_incremental,
-        minhash_index_compact,
-        minhash_index_delete,
         minhash_write_index,
+    )
+    from tia_data_pipeline_spark.operators.index import (
+        MINHASH,
+        index_compact,
+        index_delete,
+        index_probe,
     )
     from tia_data_pipeline_spark.sources.lakehouse import delete_keys
 
@@ -263,12 +266,12 @@ def test_delete_composes_with_index_tombstones(spark, tmp_path):
     minhash_write_index(docs, "text", "doc_id", idx, n_shards=4)
     probe = spark.createDataFrame([(10, base)], "doc_id bigint, text string")
     assert {
-        r["dup_id"] for r in minhash_dedup_incremental(probe, idx).collect()
+        r["dup_id"] for r in index_probe(MINHASH, probe, [idx])[0].collect()
     } == {1}
     doomed = spark.createDataFrame([(1,)], "doc_id bigint")
     assert delete_keys(spark, doomed, store, ["doc_id"]) == 1
-    minhash_index_delete(doomed, idx)
+    index_delete(MINHASH, doomed, idx)
     assert spark.read.parquet(store).filter("doc_id = 1").count() == 0
-    assert minhash_dedup_incremental(probe, idx).count() == 0
-    minhash_index_compact(spark, idx)
+    assert index_probe(MINHASH, probe, [idx])[0].count() == 0
+    index_compact(MINHASH, spark, idx)
     assert spark.read.parquet(idx).filter("_id = 1").count() == 0

@@ -241,9 +241,7 @@ class TestEmbeddingIncrementalIndex:
         return path, base, far
 
     def test_probe_finds_history_dups_only(self, spark, index):
-        from tia_data_pipeline_spark.operators.similarity import (
-            embedding_dedup_incremental,
-        )
+        from tia_data_pipeline_spark.operators.index import EMBEDDING, index_probe
 
         path, base, far = index
         near = [v * 1.01 + 0.01 for v in base]  # cosine ~1 with base
@@ -251,13 +249,13 @@ class TestEmbeddingIncrementalIndex:
         shard = self._vecs(spark, [(10, near), (11, ortho)])
         got = {
             (r["new_id"], r["dup_id"]): r["score"]
-            for r in embedding_dedup_incremental(shard, path, threshold=0.95).collect()
+            for r in index_probe(EMBEDDING, shard, [path], threshold=0.95)[0].collect()
         }
         assert set(got) == {(10, 1)}
         assert got[(10, 1)] >= 0.99
 
     def test_multi_probe_equals_single_probes(self, spark, index, tmp_path):
-        """embedding_dedup_incremental_multi (one shared shard frame,
+        """index_probe over several dirs (one shared shard frame,
         several index dirs — the takedown lifecycle's probe shape) must
         emit exactly what per-dir single probes emit, and refuse
         mismatched projections (round 12: shared scaffolding is an
@@ -265,12 +263,14 @@ class TestEmbeddingIncrementalIndex:
         import shutil
 
         from tia_data_pipeline_spark.operators.similarity import (
-            embedding_dedup_incremental,
-            embedding_dedup_incremental_multi,
-            embedding_index_compact,
-            embedding_index_delete,
             embedding_write_index,
             projection_matrix,
+        )
+        from tia_data_pipeline_spark.operators.index import (
+            EMBEDDING,
+            index_compact,
+            index_delete,
+            index_probe,
         )
 
         path, base, far = index
@@ -279,16 +279,17 @@ class TestEmbeddingIncrementalIndex:
         path2 = str(tmp_path / "eidx_compacted")
         shutil.copytree(path, path2)
         doomed = spark.createDataFrame([(2,)], "vec_id bigint")
-        embedding_index_delete(doomed, path2)
-        embedding_index_compact(spark, path2)
+        index_delete(EMBEDDING, doomed, path2)
+        index_compact(EMBEDDING, spark, path2)
 
-        multi = embedding_dedup_incremental_multi(shard, [path, path2], threshold=0.95)
+        multi = index_probe(EMBEDDING, shard, [path, path2], threshold=0.95)
         for p, got in zip([path, path2], multi):
             want = {
                 (r["new_id"], r["dup_id"], r["score"])
-                for r in embedding_dedup_incremental(
-                    shard, p, threshold=0.95
-                ).collect()
+                for r in index_probe(
+                    EMBEDDING,
+                    shard, [p], threshold=0.95
+                )[0].collect()
             }
             assert {
                 (r["new_id"], r["dup_id"], r["score"]) for r in got.collect()
@@ -299,19 +300,17 @@ class TestEmbeddingIncrementalIndex:
         hist = self._vecs(spark, [(1, base)])
         embedding_write_index(hist, path3, proj=projection_matrix(bits=3, dim=4, seed=99))
         with pytest.raises(ValueError, match="projection"):
-            embedding_dedup_incremental_multi(shard, [path, path3], threshold=0.95)
+            index_probe(EMBEDDING, shard, [path, path3], threshold=0.95)
 
     def test_probe_prunes_index_partitions(self, spark, index):
         import contextlib
         import io
 
-        from tia_data_pipeline_spark.operators.similarity import (
-            embedding_dedup_incremental,
-        )
+        from tia_data_pipeline_spark.operators.index import EMBEDDING, index_probe
 
         path, base, _ = index
         shard = self._vecs(spark, [(10, base)])
-        df = embedding_dedup_incremental(shard, path, threshold=0.5)
+        df = index_probe(EMBEDDING, shard, [path], threshold=0.5)[0]
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
@@ -323,35 +322,36 @@ class TestEmbeddingIncrementalIndex:
         ), f"no non-empty bucket partition filter: {lines}"
 
     def test_append_twice_equals_once_and_self_noop(self, spark, index):
-        from tia_data_pipeline_spark.operators.similarity import (
-            embedding_dedup_incremental,
-            embedding_index_append,
-            embedding_index_meta,
-            _read_emb_index,
+        from tia_data_pipeline_spark.operators.index import (
+            EMBEDDING,
+            index_append,
+            index_meta,
+            index_probe,
+            read_index,
         )
 
         path, base, _ = index
         shard = self._vecs(spark, [(10, [v * 1.01 for v in base])])
-        meta = embedding_index_meta(spark, path)
-        embedding_index_append(shard, path)
-        n1 = _read_emb_index(spark, path, meta).count()
-        embedding_index_append(shard, path)
-        assert _read_emb_index(spark, path, meta).count() == n1
+        meta = index_meta(EMBEDDING, spark, path)
+        index_append(EMBEDDING, shard, path)
+        n1 = read_index(spark, path, meta).count()
+        index_append(EMBEDDING, shard, path)
+        assert read_index(spark, path, meta).count() == n1
         # self-pairs excluded after the shard becomes index-resident
         got = {
             (r["new_id"], r["dup_id"])
-            for r in embedding_dedup_incremental(shard, path, threshold=0.95).collect()
+            for r in index_probe(EMBEDDING, shard, [path], threshold=0.95)[0].collect()
         }
         assert got == {(10, 1)}
 
     def test_empty_index_and_null_rows(self, spark, tmp_path):
         from tia_data_pipeline_spark.operators.similarity import (
-            embedding_dedup_incremental,
             embedding_write_index,
         )
+        from tia_data_pipeline_spark.operators.index import EMBEDDING, index_probe
 
         empty = self._vecs(spark, [])
         path = str(tmp_path / "eidx0")
         embedding_write_index(empty, path, bits=3)
         shard = self._vecs(spark, [(1, [1.0, 0.0, 0.0, 0.0]), (2, None), (None, [1.0, 0.0, 0.0, 0.0])])
-        assert embedding_dedup_incremental(shard, path).count() == 0
+        assert index_probe(EMBEDDING, shard, [path])[0].count() == 0

@@ -10,12 +10,12 @@ import pytest
 
 from pyspark.sql import functions as F
 from tia_data_pipeline_spark.operators.dedup import (
-    minhash_dedup_incremental,
     minhash_write_index,
 )
+from tia_data_pipeline_spark.operators.index import MINHASH, index_probe
 from tia_data_pipeline_spark.streaming.dedup_serve import (
-    dedup_increment_batch,
-    stream_dedup_incremental,
+    index_increment_batch,
+    stream_index_incremental,
 )
 
 DOC_SCHEMA = "doc_id bigint, text string"
@@ -54,8 +54,8 @@ def test_stream_equals_batch_union(spark, corpus, tmp_path):
 
     # batch expectation: each shard probed against the history index
     expect = _pairs(
-        minhash_dedup_incremental(corpus["shard_a"], idx, threshold=0.5)
-    ) | _pairs(minhash_dedup_incremental(corpus["shard_b"], idx, threshold=0.5))
+        index_probe(MINHASH, corpus["shard_a"], [idx], threshold=0.5)[0]
+    ) | _pairs(index_probe(MINHASH, corpus["shard_b"], [idx], threshold=0.5)[0])
     assert expect == {(10, 1), (20, 2)}, "fixture lost its planted dups"
 
     # stream the two shards as one file each -> one micro-batch each
@@ -68,7 +68,8 @@ def test_stream_equals_batch_union(spark, corpus, tmp_path):
         .parquet(f"{stream_dir}/*")
     )
     out = str(tmp_path / "pairs_out")
-    q = stream_dedup_incremental(
+    q = stream_index_incremental(
+        MINHASH,
         doc_stream,
         index_path=idx,
         pairs_out=out,
@@ -90,9 +91,9 @@ def test_later_batch_sees_earlier_batch_signatures(spark, corpus, tmp_path):
     # history doc and batch 0's doc, proving the append made batch 0
     # index-visible
     text10 = corpus["shard_a"].filter(F.col("doc_id") == 10).collect()[0]["text"]
-    dedup_increment_batch(corpus["shard_a"], idx, out, 0, threshold=0.5)
+    index_increment_batch(MINHASH, corpus["shard_a"], idx, out, 0, threshold=0.5)
     b1 = spark.createDataFrame([(30, text10)], DOC_SCHEMA)
-    dedup_increment_batch(b1, idx, out, 1, threshold=0.5)
+    index_increment_batch(MINHASH, b1, idx, out, 1, threshold=0.5)
     got1 = _pairs(spark.read.parquet(f"{out}/batch_id=1"))
     assert got1 == {(30, 1), (30, 10)}
 
@@ -111,7 +112,7 @@ def test_batch_replay_is_idempotent(spark, corpus, tmp_path):
     batch = spark.createDataFrame(
         [(40, text10), (41, text10 + " tail")], DOC_SCHEMA
     )
-    dedup_increment_batch(batch, idx, out, 0, threshold=0.5)
+    index_increment_batch(MINHASH, batch, idx, out, 0, threshold=0.5)
     first = sorted(map(tuple, spark.read.parquet(f"{out}/batch_id=0").collect()))
     n_idx = spark.read.parquet(idx).count()
     # the intra-batch dup must surface in THIS batch (canonical order),
@@ -120,12 +121,13 @@ def test_batch_replay_is_idempotent(spark, corpus, tmp_path):
     # foreachBatch replays the batch after a crash: pairs must be
     # rewritten identically (overwrite of the batch dir) and the index
     # must not grow (anti-join append)
-    dedup_increment_batch(batch, idx, out, 0, threshold=0.5)
+    index_increment_batch(MINHASH, batch, idx, out, 0, threshold=0.5)
     again = sorted(map(tuple, spark.read.parquet(f"{out}/batch_id=0").collect()))
     assert again == first
     assert spark.read.parquet(idx).count() == n_idx
     # and a later batch does NOT re-emit the earlier batch's intra pair
-    dedup_increment_batch(
+    index_increment_batch(
+        MINHASH,
         spark.createDataFrame([(50, "unrelated words only here")], DOC_SCHEMA),
         idx, out, 1, threshold=0.5,
     )
@@ -147,7 +149,7 @@ def test_no_cache_leak_per_batch(spark, corpus, tmp_path):
     spark.catalog.clearCache()
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getRDDStorageInfo()
-    dedup_increment_batch(corpus["shard_a"], idx, out, 0, threshold=0.5)
+    index_increment_batch(MINHASH, corpus["shard_a"], idx, out, 0, threshold=0.5)
     from tests.conftest import assert_cache_settles_to
 
     assert_cache_settles_to(jsc, len(before), "per-batch cache")

@@ -11,12 +11,12 @@ from __future__ import annotations
 import pytest
 
 from tia_data_pipeline_spark.operators.similarity import (
-    embedding_dedup_incremental,
     embedding_write_index,
 )
+from tia_data_pipeline_spark.operators.index import EMBEDDING, index_probe
 from tia_data_pipeline_spark.streaming.dedup_serve import (
-    embed_increment_batch,
-    stream_embed_incremental,
+    index_increment_batch,
+    stream_index_incremental,
 )
 
 VEC_SCHEMA = "vec_id bigint, embedding array<float>"
@@ -52,8 +52,8 @@ def test_stream_equals_batch_union(spark, corpus, tmp_path):
     embedding_write_index(corpus["hist"], idx)
 
     expect = _pairs(
-        embedding_dedup_incremental(corpus["shard_a"], idx, threshold=0.9)
-    ) | _pairs(embedding_dedup_incremental(corpus["shard_b"], idx, threshold=0.9))
+        index_probe(EMBEDDING, corpus["shard_a"], [idx], threshold=0.9)[0]
+    ) | _pairs(index_probe(EMBEDDING, corpus["shard_b"], [idx], threshold=0.9)[0])
     assert expect == {(10, 1), (20, 2)}, "fixture lost its planted dups"
 
     stream_dir = tmp_path / "vecs_in"
@@ -65,7 +65,8 @@ def test_stream_equals_batch_union(spark, corpus, tmp_path):
         .parquet(f"{stream_dir}/*")
     )
     out = str(tmp_path / "pairs_out")
-    q = stream_embed_incremental(
+    q = stream_index_incremental(
+        EMBEDDING,
         vec_stream,
         index_path=idx,
         pairs_out=out,
@@ -85,9 +86,9 @@ def test_later_batch_sees_earlier_batch_vectors(spark, corpus, tmp_path):
     # batch 0 appends vec 10 (copy of history 1's axis); batch 1
     # carries another copy under id 30 — it must pair with BOTH,
     # proving the append made batch 0 index-visible
-    embed_increment_batch(corpus["shard_a"], idx, out, 0, threshold=0.9)
+    index_increment_batch(EMBEDDING, corpus["shard_a"], idx, out, 0, threshold=0.9)
     b1 = spark.createDataFrame([(30, _onehot(0))], VEC_SCHEMA)
-    embed_increment_batch(b1, idx, out, 1, threshold=0.9)
+    index_increment_batch(EMBEDDING, b1, idx, out, 1, threshold=0.9)
     got1 = _pairs(spark.read.parquet(f"{out}/batch_id=1"))
     assert got1 == {(30, 1), (30, 10)}
 
@@ -103,16 +104,17 @@ def test_batch_replay_is_idempotent(spark, corpus, tmp_path):
     # run — after the append they ARE indexed; without own-id
     # exclusion the replayed probe would emit different pairs
     batch = spark.createDataFrame([(40, _onehot(0)), (41, _onehot(0))], VEC_SCHEMA)
-    embed_increment_batch(batch, idx, out, 0, threshold=0.9)
+    index_increment_batch(EMBEDDING, batch, idx, out, 0, threshold=0.9)
     first = sorted(map(tuple, spark.read.parquet(f"{out}/batch_id=0").collect()))
     n_idx = spark.read.parquet(idx).count()
     assert {(a, b) for a, b, _ in first} == {(40, 1), (41, 1), (40, 41)}
-    embed_increment_batch(batch, idx, out, 0, threshold=0.9)
+    index_increment_batch(EMBEDDING, batch, idx, out, 0, threshold=0.9)
     again = sorted(map(tuple, spark.read.parquet(f"{out}/batch_id=0").collect()))
     assert again == first
     assert spark.read.parquet(idx).count() == n_idx
     # a later batch does NOT re-emit the earlier batch's intra pair
-    embed_increment_batch(
+    index_increment_batch(
+        EMBEDDING,
         spark.createDataFrame([(50, _onehot(5))], VEC_SCHEMA), idx, out, 1,
         threshold=0.9,
     )
@@ -127,7 +129,7 @@ def test_no_cache_leak_per_batch(spark, corpus, tmp_path):
     spark.catalog.clearCache()  # isolate from session-lifetime caches
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getRDDStorageInfo()
-    embed_increment_batch(corpus["shard_a"], idx, out, 0, threshold=0.9)
+    index_increment_batch(EMBEDDING, corpus["shard_a"], idx, out, 0, threshold=0.9)
     from tests.conftest import assert_cache_settles_to
 
     assert_cache_settles_to(jsc, len(before), "per-batch cache")

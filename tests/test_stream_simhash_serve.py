@@ -12,12 +12,12 @@ import pytest
 
 from pyspark.sql import functions as F
 from tia_data_pipeline_spark.operators.dedup import (
-    simhash_dedup_incremental,
     simhash_write_index,
 )
+from tia_data_pipeline_spark.operators.index import SIMHASH, index_probe
 from tia_data_pipeline_spark.streaming.dedup_serve import (
-    simhash_increment_batch,
-    stream_simhash_incremental,
+    index_increment_batch,
+    stream_index_incremental,
 )
 
 DOC_SCHEMA = "doc_id bigint, text string"
@@ -54,8 +54,8 @@ def test_stream_equals_batch_union(spark, corpus, tmp_path):
     simhash_write_index(corpus["hist"], "text", "doc_id", idx, n_shards=8)
 
     expect = _pairs(
-        simhash_dedup_incremental(corpus["shard_a"], idx, max_hamming=1)
-    ) | _pairs(simhash_dedup_incremental(corpus["shard_b"], idx, max_hamming=1))
+        index_probe(SIMHASH, corpus["shard_a"], [idx], max_hamming=1)[0]
+    ) | _pairs(index_probe(SIMHASH, corpus["shard_b"], [idx], max_hamming=1)[0])
     assert expect == {(10, 1), (20, 2)}, "fixture lost its planted dups"
 
     stream_dir = tmp_path / "docs_in"
@@ -67,7 +67,8 @@ def test_stream_equals_batch_union(spark, corpus, tmp_path):
         .parquet(f"{stream_dir}/*")
     )
     out = str(tmp_path / "pairs_out")
-    q = stream_simhash_incremental(
+    q = stream_index_incremental(
+        SIMHASH,
         doc_stream,
         index_path=idx,
         pairs_out=out,
@@ -88,9 +89,9 @@ def test_later_batch_sees_earlier_batch_fingerprints(spark, corpus, tmp_path):
     # batch 0 appends doc 10 (copy of history 1); batch 1 carries
     # another copy under id 30 — it must pair with BOTH, proving the
     # append made batch 0 index-visible
-    simhash_increment_batch(corpus["shard_a"], idx, out, 0, max_hamming=1)
+    index_increment_batch(SIMHASH, corpus["shard_a"], idx, out, 0, max_hamming=1)
     b1 = spark.createDataFrame([(30, corpus["h1"])], DOC_SCHEMA)
-    simhash_increment_batch(b1, idx, out, 1, max_hamming=1)
+    index_increment_batch(SIMHASH, b1, idx, out, 1, max_hamming=1)
     got1 = _pairs(spark.read.parquet(f"{out}/batch_id=1"))
     assert got1 == {(30, 1), (30, 10)}
 
@@ -109,16 +110,17 @@ def test_batch_replay_is_idempotent(spark, corpus, tmp_path):
     batch = spark.createDataFrame(
         [(40, corpus["h1"]), (41, corpus["h1"])], DOC_SCHEMA
     )
-    simhash_increment_batch(batch, idx, out, 0, max_hamming=1)
+    index_increment_batch(SIMHASH, batch, idx, out, 0, max_hamming=1)
     first = sorted(map(tuple, spark.read.parquet(f"{out}/batch_id=0").collect()))
     n_idx = spark.read.parquet(idx).count()
     assert {(a, b) for a, b, _ in first} == {(40, 1), (41, 1), (40, 41)}
-    simhash_increment_batch(batch, idx, out, 0, max_hamming=1)
+    index_increment_batch(SIMHASH, batch, idx, out, 0, max_hamming=1)
     again = sorted(map(tuple, spark.read.parquet(f"{out}/batch_id=0").collect()))
     assert again == first
     assert spark.read.parquet(idx).count() == n_idx
     # a later batch does NOT re-emit the earlier batch's intra pair
-    simhash_increment_batch(
+    index_increment_batch(
+        SIMHASH,
         spark.createDataFrame([(50, "unrelated words only here")], DOC_SCHEMA),
         idx, out, 1, max_hamming=1,
     )
@@ -138,7 +140,7 @@ def test_no_cache_leak_per_batch(spark, corpus, tmp_path):
     spark.catalog.clearCache()
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getRDDStorageInfo()
-    simhash_increment_batch(corpus["shard_a"], idx, out, 0, max_hamming=1)
+    index_increment_batch(SIMHASH, corpus["shard_a"], idx, out, 0, max_hamming=1)
     from tests.conftest import assert_cache_settles_to
 
     assert_cache_settles_to(jsc, len(before), "per-batch cache")
@@ -153,7 +155,8 @@ def test_over_guarantee_max_hamming_fails_fast(spark, corpus, tmp_path):
     (tmp_path / "in").mkdir()
     doc_stream = spark.readStream.schema(DOC_SCHEMA).parquet(str(tmp_path / "in"))
     with pytest.raises(ValueError, match="guarantee"):
-        stream_simhash_incremental(
+        stream_index_incremental(
+            SIMHASH,
             doc_stream,
             index_path=idx,
             pairs_out=str(tmp_path / "out"),

@@ -96,7 +96,6 @@ def test_takedown_stream_family_text(spark, tmp_path):
         id_stream,
         index_path=path,
         checkpoint=str(tmp_path / "ckpt"),
-        family="text",
     )
     q.awaitTermination()
     live = docs.filter("doc_id % 3 <> 0")

@@ -16,15 +16,14 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
-import json
 import random
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tia_data_pipeline_spark.functions.text import portable_round, tokens
-from tia_data_pipeline_spark.operators.scale import fan_out
+from tia_data_pipeline_spark.operators.index import MINHASH, SIMHASH, write_index_frame
+from tia_data_pipeline_spark.operators.scale import adaptive_index_shards, fan_out
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -203,6 +202,16 @@ def capped_bucket_members(
     )
 
 
+def band_width(n: int, bands: int, what: str) -> int:
+    """Rows per band when ``n`` signature positions split into ``bands``
+    equal bands. A remainder raises: r = n // bands would silently band
+    only bands·r of the n positions and lose recall with no error (a
+    check ``python -O`` cannot strip)."""
+    if bands < 1 or n % bands:
+        raise ValueError(f"{what}={n} does not divide into {bands} equal bands")
+    return n // bands
+
+
 def minhash_signature(col: Column, k: int = 32, seed: int = 42, shingle_n: int = 3) -> Column:
     """k-component MinHash signature (array<bigint>) of a text column.
 
@@ -284,7 +293,7 @@ def minhash_band_frame(
     per (document, band) — the shared candidate-keying frame of both
     the batch LSH dedup (:func:`minhash_near_duplicates`) and the
     persisted signature index (:func:`minhash_write_index` /
-    :func:`minhash_dedup_incremental`). Two frames built with equal
+    :func:`…operators.index.index_probe`). Two frames built with equal
     (k, bands, seed, shingle_n, portable) collide on exactly the same
     (band, bucket) keys, which is what makes an index written yesterday
     probeable by today's shard.
@@ -292,8 +301,7 @@ def minhash_band_frame(
     ``portable=True`` keys buckets by the raw band slice (array of r
     signature components — DuckDB-reproducible); default keys by
     xxhash64 of the slice (8-byte keys, JVM-only)."""
-    assert k % bands == 0, "k must divide into equal bands"
-    r = k // bands
+    r = band_width(k, bands, "k")
     sig = minhash_signature_frame(
         df, text_col, id_col, k, seed, shingle_n=shingle_n, portable=portable
     )
@@ -400,8 +408,7 @@ def _minhash_sql_fragments(
     matching-component fraction between signature aliases
     ``a_alias``/``b_alias``. Returns (mins, sig_list, band_structs,
     match_frac)."""
-    assert k % bands == 0
-    r = k // bands
+    r = band_width(k, bands, "k")
     fam = _hash_family(k, seed)
     mins = ", ".join(
         f"min(({a} * x + {b}) % {_MINHASH_P}) AS m{i}" for i, (a, b) in enumerate(fam)
@@ -461,26 +468,8 @@ def minhash_oracle_sql(
 # ---------------------------------------------------------------------------
 # Incremental fuzzy dedup against a persisted MinHash signature index
 # ---------------------------------------------------------------------------
-#
-# The production shape of daily-increment near-dup (the fuzzy twin of
-# antijoin-incr / comments_pipeline.py:33's "yesterday's posts"
-# semantics): dedupe TODAY'S SHARD against an index of signatures
-# persisted yesterday, without rescanning history. Mirrors the IVF
-# persisted-index pattern (operators/similarity.py::ivf_write_index):
-# the collision key is a write-time partition column so a shard's probe
-# prunes the scan to touched partitions, and a tiny side table makes
-# the index self-describing (the probe derives its hash family from the
-# index, so a parameter drift between writer and prober is impossible).
-
-_MINHASH_META_DIR = "_minhash_meta"
-
-
-def _band_shard(n_shards: int) -> Column:
-    # bucket values are high-cardinality (xxhash64 or raw band slices),
-    # far too many for one partition dir each; a stable shard of the
-    # bucket makes (band, bshard) a bounded partition key that still
-    # prunes: a probe touches only the shards its own buckets hash to.
-    return F.pmod(F.xxhash64("bucket"), F.lit(n_shards)).alias("bshard")
+# Today's shard dedupes against signatures persisted yesterday without a
+# history rescan; serving is operators/index.py over ``index.MINHASH``.
 
 
 def minhash_write_index(
@@ -496,441 +485,22 @@ def minhash_write_index(
     portable: bool = False,
     n_shards: int | None = None,
 ) -> None:
-    """Materialize the MinHash signature index: banded signature rows
-    partitioned by ``band=…/bshard=…`` (the 100 TB serving shape — a
-    daily shard's probe reads only the partitions its own buckets hash
-    to, never the whole index), plus a one-row parquet meta table so
-    :func:`minhash_dedup_incremental` reproduces the exact hash family.
-
-    Index rows are (``_id``, ``_sig``, ``bucket``): k·8 bytes of
-    signature per document per band — the same signature table the
-    batch path materializes per run (minhash_near_duplicates persists
-    it in-memory), made durable and reusable across runs."""
+    """Materialize the MinHash signature index: banded ``(_id, _sig,
+    bucket)`` rows partitioned by ``band=…/bshard=…`` (a shard's probe
+    reads only the partitions its own buckets hash to), plus the meta
+    side table from which the probe reproduces the exact hash family.
+    k·8 bytes of signature per document per band — the signature table
+    the batch path materializes per run, made durable. ``n_shards``
+    defaults to a size from the source relation's bytes."""
     if n_shards is None:
-        # default: size the layout from the source relation's bytes
-        # (guide §6 — round 11); explicit callers keep full control
-        from tia_data_pipeline_spark.operators.scale import adaptive_index_shards
-
         n_shards = adaptive_index_shards(df, bands=bands)
-    banded = minhash_band_frame(
-        df, text_col, id_col, k=k, bands=bands, seed=seed,
-        shingle_n=shingle_n, portable=portable,
-    ).withColumn("bshard", _band_shard(n_shards))
-    # one shuffle keyed by the partition columns: each task then owns
-    # whole (band, bshard) groups and writes one file per dir instead
-    # of every task writing a sliver into every dir (file-count blowup)
-    banded.repartition("band", "bshard").write.partitionBy(
-        "band", "bshard"
-    ).mode("overwrite").parquet(path)
-    spark = df.sparkSession
-    # schema_json makes the index readable even when EMPTY (a valid
-    # state: day-zero bootstrap, or a fully-filtered corpus) — a
-    # partitioned write of zero rows leaves no data files, and a bare
-    # read would fail schema inference; probes read with this schema.
-    meta = [
-        (
-            int(k), int(bands), int(seed), int(shingle_n), bool(portable),
-            int(n_shards), banded.schema.json(),
-        )
-    ]
-    spark.createDataFrame(
-        meta,
-        "k int, bands int, seed int, shingle_n int, portable boolean, "
-        "n_shards int, schema_json string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{_MINHASH_META_DIR}")
-
-
-def minhash_index_meta(spark, path: str) -> dict:
-    """Index meta side table → dict (one row on the driver — control
-    plane, not a data collect)."""
-    row = spark.read.parquet(f"{path}/{_MINHASH_META_DIR}").collect()[0]
-    return {
-        "k": int(row["k"]),
-        "bands": int(row["bands"]),
-        "seed": int(row["seed"]),
-        "shingle_n": int(row["shingle_n"]),
-        "portable": bool(row["portable"]),
-        "n_shards": int(row["n_shards"]),
-        "schema_json": row["schema_json"],
+    meta = {
+        "k": int(k), "bands": int(bands), "seed": int(seed),
+        "shingle_n": int(shingle_n), "portable": bool(portable),
+        "n_shards": int(n_shards),
     }
-
-
-def _read_index(spark, path: str, meta: dict) -> DataFrame:
-    # explicit schema from the meta table: an EMPTY index (day-zero
-    # bootstrap, fully-filtered corpus) has no data files to infer
-    # from, and inference is a driver-side footer read we can skip on
-    # a 100 TB index anyway
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(meta["schema_json"]))
-    return spark.read.schema(schema).parquet(path)
-
-
-def _touched_partition_filter(new_banded: DataFrame, n_shards: int):
-    """Partition predicate for the index scan: the distinct
-    (band, bshard) combinations the shard's own buckets hash to.
-    Collected to the driver — bounded by bands × n_shards (hundreds),
-    the same control-plane shape as IVF's driver-side cell pick — and
-    stated as literals so the parquet scan plans PartitionFilters and
-    never opens untouched partitions.
-
-    The predicate is ONE flat ``isin`` over the encoded combo
-    ``band · n_shards + bshard`` (injective: 0 ≤ bshard < n_shards),
-    which references only partition columns so the file index still
-    prunes — an OR-of-conjunctions chain is NOT equivalent in practice:
-    Spark's column-node converter recurses per node and a full
-    bands×n_shards chain (512 terms at the defaults) overflows the JVM
-    stack before analysis even starts (found by the 8× stress)."""
-    combos = sorted(
-        (int(r["band"]), int(r["bshard"]))
-        for r in new_banded.select("band", "bshard").distinct().collect()
-    )
-    if not combos:
-        return F.lit(False)
-    codes = [b * n_shards + s for b, s in combos]
-    return (F.col("band") * F.lit(n_shards) + F.col("bshard")).isin(codes)
-
-
-def minhash_dedup_incremental(
-    new_docs: DataFrame,
-    index_path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Near-duplicate pairs of a NEW SHARD against the persisted index —
-    no history rescan. Returns ``(new_id, dup_id, est_jaccard)`` with
-    ``dup_id`` an indexed document, est ≥ ``threshold``.
-
-    Plan: band the shard with the index's own hash family (from the
-    meta table), prune the index scan to the shard's touched
-    (band, bshard) partitions, hot-bucket-cap BOTH sides two-pass
-    (count → semi-join: a corpus-stop bucket on either side never
-    reaches the join), then equi-join on (band, bucket) and estimate
-    Jaccard from the signatures. A pair colliding in several bands
-    appears once (dropDuplicates — genuinely needed here, unlike the
-    one-cell-per-vector cosine path). The index side excludes the
-    shard's OWN ids entirely, so the output is identical whether or
-    not the shard was already appended (replay-deterministic);
-    duplicates WITHIN the shard are a deliberate non-goal here — the
-    streaming loop computes them as an explicit leg, and a one-off
-    batch uses :func:`minhash_near_duplicates` on the shard.
-
-    At 100 TB: the index scan reads |touched partitions| /
-    (bands × n_shards) of the index; the join shuffles signatures
-    (k·8 B/row), never text; the shard side is a day's increment, so
-    the whole probe is sized by the shard, not by history.
-
-    Cache lifecycle: the shard's signature frame persists (consumed
-    three times — touched-partition collect, hot-bucket count, probe
-    join) and the CacheManager holds it until unpersist/clearCache/
-    session end. A long-lived DAILY loop must therefore use
-    :func:`minhash_dedup_incremental_scoped` (releases the cache on
-    exit) or the streaming loop — calling THIS form per day
-    accumulates one shard cache per probe in storage memory."""
-    pairs, _ = _incremental_probe_parts(
-        new_docs, index_path,
-        text_col=text_col, id_col=id_col,
-        threshold=threshold, max_bucket=max_bucket,
-    )
-    return pairs
-
-
-def _incremental_probe_parts(
-    new_docs: DataFrame,
-    index_path: str,
-    *,
-    text_col: str,
-    id_col: str,
-    threshold: float,
-    max_bucket: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(pairs, persisted shard frame) — the shared core of the lazy
-    and scoped probe forms, so the cache handle exists in exactly one
-    place."""
-    spark = new_docs.sparkSession
-    meta = minhash_index_meta(spark, index_path)
-    new_banded = (
-        minhash_band_frame(
-            new_docs, text_col, id_col,
-            k=meta["k"], bands=meta["bands"], seed=meta["seed"],
-            shingle_n=meta["shingle_n"], portable=meta["portable"],
-        )
-        .withColumn("bshard", _band_shard(meta["n_shards"]))
-        # the shard frame is consumed three times (touched-partition
-        # collect, its own hot-bucket count, the probe join) and its
-        # signature aggregate is the CPU-heavy leg — persist the narrow
-        # keyed frame (the two-pass-cap discipline).
-        .persist()
-    )
-    pairs = _probe_pairs(
-        new_banded, spark, index_path, meta,
-        threshold=threshold, max_bucket=max_bucket,
-    )
-    return pairs, new_banded
-
-
-@contextmanager
-def minhash_dedup_incremental_scoped(
-    new_docs: DataFrame,
-    index_path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    max_bucket: int = 1000,
-):
-    """:func:`minhash_dedup_incremental` with an EXACT cache lifecycle
-    — the form a daily serving loop should call (review r8: the lazy
-    form leaks one shard cache per probe in precisely that scenario):
-
-        with minhash_dedup_incremental_scoped(shard, path) as pairs:
-            pairs.write.parquet(out)   # consume INSIDE the scope
-
-    The shard's persisted signature frame is released on scope exit
-    (every exit path, matching the streaming loop's discipline);
-    consuming ``pairs`` after exit recomputes signatures uncached."""
-    pairs, new_banded = _incremental_probe_parts(
-        new_docs, index_path,
-        text_col=text_col, id_col=id_col,
-        threshold=threshold, max_bucket=max_bucket,
-    )
-    try:
-        yield pairs
-    finally:
-        new_banded.unpersist()
-
-
-def _bucket_capped(df: DataFrame, max_bucket: int) -> DataFrame:
-    """Two-pass hot-bucket cap over a banded frame: keep only rows
-    whose (band, bucket) group holds ≤ ``max_bucket`` rows — count
-    first, semi-join survivors, so a boilerplate bucket never reaches
-    a join. The single cap implementation for every incremental-index
-    probe/intra leg (MinHash and SimHash): cap-semantics changes land
-    in one place."""
-    ok = (
-        df.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") <= max_bucket)
-        .select("band", "bucket")
-    )
-    return df.join(ok, ["band", "bucket"], "left_semi")
-
-
-def _probe_pairs(
-    new_banded: DataFrame,
-    spark,
-    index_path: str,
-    meta: dict,
-    *,
-    threshold: float,
-    max_bucket: int,
-) -> DataFrame:
-    """Probe core shared by the batch operator and the streaming
-    micro-batch loop: banded shard frame → pruned index scan →
-    per-side two-pass hot-bucket caps → signature-estimate pairs.
-
-    The index side EXCLUDES the shard's own ids (anti-join, not just a
-    self-pair filter): the probe's output is then a pure function of
-    (shard, index-minus-shard), so re-probing a shard that was already
-    appended — including a foreachBatch replay that crashed between
-    append and checkpoint commit — produces byte-identical pairs
-    instead of crash-dependent extras (review r8, confirmed by repro).
-    Intra-shard duplicates are a separate, explicitly-computed leg
-    (:func:`_intra_pairs`), not an accident of replay ordering.
-
-    Tombstoned ids (:func:`minhash_index_delete`) are masked off the
-    index side BEFORE the hot-bucket caps — a deleted document neither
-    pairs nor counts toward a bucket's population, exactly as if
-    compaction had already removed its rows."""
-    from tia_data_pipeline_spark.operators.scale import anti_join_index_tombstones
-
-    pred = _touched_partition_filter(new_banded, meta["n_shards"])
-    idx = anti_join_index_tombstones(
-        _read_index(spark, index_path, meta).filter(pred),
-        index_path,
-        index_schema_json=meta["schema_json"],
-        id_col="_id",
-    ).join(new_banded.select("_id").distinct(), on="_id", how="left_anti")
-
-    # two-pass hot-bucket caps, each side against its own count: an
-    # index bucket over the cap is boilerplate history (skip it); a
-    # shard bucket over the cap is boilerplate arriving today.
-    probe = _bucket_capped(new_banded, max_bucket).select(
-        "band", "bucket", F.col("_id").alias("new_id"), F.col("_sig").alias("sig_new")
-    )
-    hist = _bucket_capped(idx, max_bucket).select(
-        "band", "bucket", F.col("_id").alias("dup_id"), F.col("_sig").alias("sig_old")
-    )
-    k = meta["k"]
-    est = (
-        F.size(
-            F.filter(F.zip_with("sig_new", "sig_old", lambda x, y: x == y), lambda m: m)
-        )
-        / F.lit(float(k))
-    )
-    return (
-        probe.join(hist, ["band", "bucket"])
-        .select("new_id", "dup_id", portable_round(est, 6).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
-        .dropDuplicates(["new_id", "dup_id"])
-    )
-
-
-def _intra_pairs(
-    new_banded: DataFrame, meta: dict, *, threshold: float, max_bucket: int
-) -> DataFrame:
-    """Duplicate pairs WITHIN one shard, canonical ``new_id < dup_id``
-    — the explicit leg for duplicates that arrive together (same day,
-    same batch): the index probe can never see them (the shard's own
-    ids are excluded from its index side), so without this leg a
-    same-shard duplicate would be lost forever (review r8, confirmed
-    by repro). Depends only on the shard itself, so it is
-    replay-deterministic by construction."""
-    capped = _bucket_capped(new_banded, max_bucket)
-    a = capped.select(
-        "band", "bucket", F.col("_id").alias("new_id"), F.col("_sig").alias("sig_new")
-    )
-    b = capped.select(
-        "band", "bucket", F.col("_id").alias("dup_id"), F.col("_sig").alias("sig_old")
-    )
-    est = (
-        F.size(
-            F.filter(F.zip_with("sig_new", "sig_old", lambda x, y: x == y), lambda m: m)
-        )
-        / F.lit(float(meta["k"]))
-    )
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("new_id") < F.col("dup_id"))
-        .select("new_id", "dup_id", portable_round(est, 6).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
-        .dropDuplicates(["new_id", "dup_id"])
-    )
-
-
-def _append_delta(new_banded: DataFrame, spark, index_path: str, meta: dict) -> None:
-    """Append core shared by the MinHash/SimHash appends and their
-    streaming loops: anti-join already-indexed rows over the pruned
-    scan (idempotent), write delta partitions.
-
-    The anti-join keys on ``(_id, band)`` — the banded row key — not
-    ``_id`` alone (round 11, the text-index partial-commit lesson): a
-    doc's band rows span many ``(band, bshard)`` partitions, and a
-    write job hard-killed INSIDE its commit can land a subset of them.
-    An id-level anti-join would then skip the whole doc on retry,
-    leaving it permanently short of band rows (silent recall loss at
-    probe time); the row-level key makes the retry append exactly the
-    missing rows. ``band`` is a partition column, so the wider key
-    reads from directory metadata — the existing pruned scan, no extra
-    I/O."""
-    pred = _touched_partition_filter(new_banded, meta["n_shards"])
-    existing = (
-        _read_index(spark, index_path, meta)
-        .filter(pred)
-        .select("_id", "band")
-        .distinct()
-    )
-    delta = new_banded.join(existing, on=["_id", "band"], how="left_anti")
-    delta.repartition("band", "bshard").write.partitionBy("band", "bshard").mode(
-        "append"
-    ).parquet(index_path)
-
-
-def minhash_index_append(
-    new_docs: DataFrame,
-    index_path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Append a shard's signature rows to the index — idempotent
-    (twice ≡ once): already-present ``(_id, band)`` rows are skipped
-    via an anti-join against the touched partitions only (a doc's rows
-    can live nowhere else — its (band, bshard) keys are a pure
-    function of its text), so the retry cost is sized by the shard.
-    Row-level, so a retry after a hard kill inside the write commit
-    appends exactly the missing band rows (see :func:`_append_delta`).
-    ``_id`` is non-null by the signature frame's own precondition, so
-    plain-equality anti-join semantics are exact here."""
-    spark = new_docs.sparkSession
-    meta = minhash_index_meta(spark, index_path)
-    new_banded = minhash_band_frame(
-        new_docs, text_col, id_col,
-        k=meta["k"], bands=meta["bands"], seed=meta["seed"],
-        shingle_n=meta["shingle_n"], portable=meta["portable"],
-    ).withColumn("bshard", _band_shard(meta["n_shards"]))
-    # persist: the frame is consumed twice (touched-partition collect +
-    # the append write) and the signature aggregate is the CPU-heavy
-    # leg. Unlike the probe, append is EAGER (the write completes
-    # inside this call), so the cache lifecycle can be exact — released
-    # on every exit path.
-    new_banded = new_banded.persist()
-    try:
-        _append_delta(new_banded, spark, index_path, meta)
-    finally:
-        new_banded.unpersist()
-
-
-def minhash_index_delete(
-    ids: DataFrame, index_path: str, *, id_col: str = "doc_id"
-) -> None:
-    """Tombstone documents out of the MinHash index (takedown /
-    right-to-be-forgotten / corpus TTL — the deletion leg of the index
-    lifecycle): masked immediately from every probe
-    (:func:`minhash_dedup_incremental` anti-joins the tombstones off
-    its index side), physically removed at the next
-    :func:`minhash_index_compact`. Idempotent (twice ≡ once); deletion
-    needs only the ids, never the original text — a takedown request
-    doesn't ship the document back.
-
-    At 100 TB the tombstone table is request-sized (≪ corpus), so the
-    probe-side masking broadcasts and this append is a tiny delta
-    write."""
-    from tia_data_pipeline_spark.operators.scale import append_index_tombstones
-
-    meta = minhash_index_meta(ids.sparkSession, index_path)
-    append_index_tombstones(
-        ids.select(F.col(id_col).alias("_id")),
-        index_path,
-        index_schema_json=meta["schema_json"],
-        id_col="_id",
-    )
-
-
-def minhash_index_compact(spark, path: str) -> dict:
-    """One file per (band, bshard) partition — run after a season of
-    daily appends (see :func:`…operators.scale.compact_partitioned_index`
-    for the swap semantics and object-store caveat). Applies pending
-    tombstones: deleted documents' rows are dropped from the rewrite
-    and the now-applied tombstone table goes with them."""
-    from tia_data_pipeline_spark.operators.scale import compact_partitioned_index
-
-    meta = minhash_index_meta(spark, path)
-    return compact_partitioned_index(
-        spark, path,
-        partition_cols=("band", "bshard"),
-        schema_json=meta["schema_json"],
-        side_dirs=(_MINHASH_META_DIR,),
-        tombstones_id_col="_id",
-    )
-
-
-def minhash_index_stats(spark, path: str) -> dict:
-    """Health census of the MinHash index — fragmentation (compact
-    due?), partition skew (caps earning their keep?), and the pending-
-    tombstone fraction (deletion debt compaction will reclaim)."""
-    from tia_data_pipeline_spark.operators.scale import partitioned_index_stats
-
-    meta = minhash_index_meta(spark, path)
-    return partitioned_index_stats(
-        spark, path,
-        partition_cols=("band", "bshard"),
-        schema_json=meta["schema_json"],
-        tombstones_id_col="_id",
-    )
+    cols = {"text_col": text_col, "id_col": id_col}
+    write_index_frame(MINHASH, MINHASH.band(df, meta, cols), path, meta)
 
 
 def minhash_incremental_oracle_sql(
@@ -946,7 +516,7 @@ def minhash_incremental_oracle_sql(
     seed: int = 42,
     max_bucket: int = 1000,
 ) -> str:
-    """DuckDB SQL reproducing :func:`minhash_dedup_incremental` over a
+    """DuckDB SQL reproducing the MinHash ``index_probe`` over a
     portable-path index built from ``table WHERE history_pred`` and a
     shard ``table WHERE shard_pred`` — same md5-digit shingle hash,
     same affine family, same band slices as collision keys, same
@@ -1164,30 +734,44 @@ def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         F.col(id_col).alias("_id"),
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
     )
+    return _simhash_votes(toked, SIMHASH_BITS).select(
+        F.col("_id").alias(id_col), F.col("_fp").alias("simhash")
+    )
+
+
+def _simhash_votes(toked: DataFrame, bits: int) -> DataFrame:
+    """(_id, _fp) from (_id, tok) rows: every token votes ±1 on each of
+    ``bits`` md5-derived bits; bit j is 1 iff its vote sum is positive."""
     votes = [
         F.expr(f"sum(2 * {_md5_bit_expr('tok', j)} - 1)").alias(f"v{j}")
-        for j in range(SIMHASH_BITS)
+        for j in range(bits)
     ]
-    scored = toked.groupBy("_id").agg(*votes)
     fp = None
-    for j in range(SIMHASH_BITS):
+    for j in range(bits):
         term = F.when(F.col(f"v{j}") > 0, F.lit(1 << j).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
         fp = term if fp is None else fp + term
-    return scored.select(F.col("_id").alias(id_col), fp.alias("simhash"))
+    return toked.groupBy("_id").agg(*votes).select("_id", fp.alias("_fp"))
+
+
+def _simhash_sql_votes(bits: int) -> tuple[str, str]:
+    """DuckDB twin of :func:`_simhash_votes`: the per-bit vote sums
+    ``v0..v{bits-1}`` and the fingerprint expression over them."""
+    votes = ", ".join(
+        f"sum(2 * {_md5_bit_expr('tok', j)} - 1) AS v{j}" for j in range(bits)
+    )
+    fp = " + ".join(
+        f"(CASE WHEN v{j} > 0 THEN {1 << j}::BIGINT ELSE 0::BIGINT END)"
+        for j in range(bits)
+    )
+    return votes, fp
 
 
 def simhash_oracle_sql(table: str, text_tokens_sql: str, id_col: str) -> str:
     """DuckDB SQL mirroring :func:`simhash` (same md5 bit construction,
     same tie rule score>0)."""
-    votes = ", ".join(
-        f"sum(2 * {_md5_bit_expr('tok', j)} - 1) AS v{j}" for j in range(SIMHASH_BITS)
-    )
-    fp = " + ".join(
-        f"(CASE WHEN v{j} > 0 THEN {1 << j}::BIGINT ELSE 0::BIGINT END)"
-        for j in range(SIMHASH_BITS)
-    )
+    votes, fp = _simhash_sql_votes(SIMHASH_BITS)
     return (
         f"SELECT _id AS {id_col}, {fp} AS simhash FROM ("
         f"  SELECT _id, {votes} FROM ("
@@ -1199,11 +783,9 @@ def simhash_oracle_sql(table: str, text_tokens_sql: str, id_col: str) -> str:
 # ---------------------------------------------------------------------------
 # SimHash persisted index (incremental hamming-distance dedup serving)
 # ---------------------------------------------------------------------------
-# Completes the incremental-serving trio (MinHash: minhash_write_index
-# above; embeddings: similarity.embedding_write_index): dedupe today's
-# shard against a PERSISTED fingerprint index without rescanning
-# history — the daily-increment semantics of the reference's
-# comments_pipeline.py:33 applied to the SimHash tier.
+# The hamming member of the banded index families (operators/index.py):
+# dedupe today's shard against a PERSISTED fingerprint index without
+# rescanning history.
 
 # Wider fingerprint than the 32-bit q_simhash default: 48 bits splits
 # into 4 × 12-bit bands, which GUARANTEES any pair within hamming
@@ -1215,7 +797,6 @@ def simhash_oracle_sql(table: str, text_tokens_sql: str, id_col: str) -> str:
 # band) is what keeps collision groups sub-quadratic.
 SIMHASH_INDEX_BITS = 48
 SIMHASH_INDEX_BANDS = 4
-_SIMHASH_META_DIR = "_simhash_meta"
 
 
 def _simhash_fp_frame(df: DataFrame, text_col: str, id_col: str, bits: int) -> DataFrame:
@@ -1234,18 +815,7 @@ def _simhash_fp_frame(df: DataFrame, text_col: str, id_col: str, bits: int) -> D
         F.col(id_col).alias("_id"),
         F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
     )
-    votes = [
-        F.expr(f"sum(2 * {_md5_bit_expr('tok', j)} - 1)").alias(f"v{j}")
-        for j in range(bits)
-    ]
-    scored = toked.groupBy("_id").agg(*votes)
-    fp = None
-    for j in range(bits):
-        term = F.when(F.col(f"v{j}") > 0, F.lit(1 << j).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        fp = term if fp is None else fp + term
-    return scored.select("_id", fp.alias("_fp"))
+    return _simhash_votes(toked, bits)
 
 
 def simhash_band_frame(
@@ -1263,8 +833,7 @@ def simhash_band_frame(
     a bounded shard of the bucket so (band, bshard) is a stable
     partition key. Equal (bits, bands, n_shards) ⇒ identical collision
     keys, which is what makes yesterday's index probeable today."""
-    assert bits % bands == 0, "bits must divide into equal bands"
-    r = bits // bands
+    r = band_width(bits, bands, "bits")
     sig = _simhash_fp_frame(df, text_col, id_col, bits)
     return sig.select(
         "_id",
@@ -1297,362 +866,14 @@ def simhash_write_index(
     n_shards: int | None = None,
 ) -> None:
     """Materialize the SimHash fingerprint index, ``band=…/bshard=…``
-    partitioned (the persisted-index serving pattern shared with
-    :func:`minhash_write_index`): a shard's probe reads only the
-    partitions its own buckets shard to. Rows are (_id, _fp, bucket) —
-    8 bytes of fingerprint per (document, band), far lighter than the
-    MinHash index's k·8-byte signatures. The one-row meta side table
-    carries the hash family and ``schema_json`` so probes can read an
-    EMPTY index (day-zero bootstrap) with an explicit schema."""
+    partitioned like :func:`minhash_write_index`; rows are (_id, _fp,
+    bucket) — 8 bytes of fingerprint per (document, band). Serving is
+    the operators/index.py core over ``index.SIMHASH``."""
     if n_shards is None:
-        # default: size the layout from the source relation's bytes
-        # (guide §6 — round 11); explicit callers keep full control
-        from tia_data_pipeline_spark.operators.scale import adaptive_index_shards
-
         n_shards = adaptive_index_shards(df, bands=bands)
-    banded = simhash_band_frame(
-        df, text_col, id_col, bits=bits, bands=bands, n_shards=n_shards
-    )
-    # one shuffle keyed by the partition columns: each task owns whole
-    # (band, bshard) groups — one file per dir, not a sliver per task
-    banded.repartition("band", "bshard").write.partitionBy("band", "bshard").mode(
-        "overwrite"
-    ).parquet(path)
-    spark = df.sparkSession
-    meta = [(int(bits), int(bands), int(n_shards), banded.schema.json())]
-    spark.createDataFrame(
-        meta, "bits int, bands int, n_shards int, schema_json string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{_SIMHASH_META_DIR}")
-
-
-def simhash_index_meta(spark, path: str) -> dict:
-    """Meta side table → dict (one row on the driver — control plane)."""
-    row = spark.read.parquet(f"{path}/{_SIMHASH_META_DIR}").collect()[0]
-    return {
-        "bits": int(row["bits"]),
-        "bands": int(row["bands"]),
-        "n_shards": int(row["n_shards"]),
-        "schema_json": row["schema_json"],
-    }
-
-
-def _check_band_guarantee(meta: dict, max_hamming: int) -> None:
-    """Recall contract shared by the batch operator and the streaming
-    loop: B bands guarantee collision only for pairs with hamming ≤
-    B-1 (pigeonhole: B differing bits can occupy all B bands); a
-    larger ``max_hamming`` would silently miss pairs — rebuild the
-    index with more bands instead."""
-    if max_hamming > meta["bands"] - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the {meta['bands']}-band "
-            f"guarantee (hamming <= {meta['bands'] - 1})"
-        )
-
-
-def simhash_dedup_incremental(
-    new_docs: DataFrame,
-    index_path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Near-duplicate pairs of a NEW SHARD against the persisted SimHash
-    index — no history rescan. Returns ``(new_id, dup_id, hamming)``
-    with ``dup_id`` an indexed document and hamming ≤ ``max_hamming``.
-
-    Plan: band the shard with the index's own (bits, bands, n_shards)
-    family, prune the index scan to the shard's touched (band, bshard)
-    partitions (ONE flat ``isin`` over the encoded combo — the shared
-    :func:`_touched_partition_filter`), two-pass hot-bucket caps on
-    BOTH sides, equi-join on (band, bucket), then the hamming verify
-    ``bit_count(xor)`` on the two 8-byte fingerprints. A pair within
-    the band guarantee can collide in SEVERAL bands, so the final
-    dropDuplicates is genuinely load-bearing here (unlike the
-    one-cell-per-vector cosine path). The index side anti-joins the
-    shard's OWN ids, so the probe is replay-deterministic: identical
-    output whether or not the shard was already appended.
-
-    At 100 TB: the index scan reads only touched partitions; the join
-    shuffles 8-byte fingerprints, never text; cost is sized by the
-    shard, not by history.
-
-    Cache lifecycle matches :func:`minhash_dedup_incremental` (held by
-    the CacheManager): a DAILY loop uses
-    :func:`simhash_dedup_incremental_scoped` or the streaming loop."""
-    pairs, _ = _simhash_probe_parts(
-        new_docs, index_path,
-        text_col=text_col, id_col=id_col,
-        max_hamming=max_hamming, max_bucket=max_bucket,
-    )
-    return pairs
-
-
-def _simhash_probe_parts(
-    new_docs: DataFrame,
-    index_path: str,
-    *,
-    text_col: str,
-    id_col: str,
-    max_hamming: int,
-    max_bucket: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(pairs, persisted shard frame) — shared core of the lazy and
-    scoped forms (the :func:`_incremental_probe_parts` twin)."""
-    spark = new_docs.sparkSession
-    meta = simhash_index_meta(spark, index_path)
-    _check_band_guarantee(meta, max_hamming)
-    # persist: consumed 3× (touched-partition collect, hot count, probe
-    # join)
-    new_banded = simhash_band_frame(
-        new_docs, text_col, id_col,
-        bits=meta["bits"], bands=meta["bands"], n_shards=meta["n_shards"],
-    ).persist()
-    pairs = _simhash_probe_pairs(
-        new_banded, spark, index_path, meta,
-        max_hamming=max_hamming, max_bucket=max_bucket,
-    )
-    return pairs, new_banded
-
-
-@contextmanager
-def simhash_dedup_incremental_scoped(
-    new_docs: DataFrame,
-    index_path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket: int = 1000,
-):
-    """:func:`simhash_dedup_incremental` with an EXACT cache lifecycle
-    — consume the yielded pairs inside the scope; the shard's persisted
-    fingerprint frame is released on every exit path (the
-    :func:`minhash_dedup_incremental_scoped` twin)."""
-    pairs, new_banded = _simhash_probe_parts(
-        new_docs, index_path,
-        text_col=text_col, id_col=id_col,
-        max_hamming=max_hamming, max_bucket=max_bucket,
-    )
-    try:
-        yield pairs
-    finally:
-        new_banded.unpersist()
-
-
-def _simhash_probe_shared(
-    new_banded: DataFrame, meta: dict, *, max_bucket: int
-) -> tuple:
-    """Shard-side probe artifacts that depend ONLY on the shard and
-    the hash family — shareable across every same-family index dir the
-    shard probes (the takedown lifecycle probes two: masked and
-    compacted): the touched-partition predicate (one driver collect),
-    the shard's distinct ids, and the capped probe side."""
-    return (
-        _touched_partition_filter(new_banded, meta["n_shards"]),
-        new_banded.select("_id").distinct(),
-        _bucket_capped(new_banded, max_bucket).select(
-            "band", "bucket", F.col("_id").alias("new_id"), F.col("_fp").alias("fp_new")
-        ),
-    )
-
-
-def _simhash_probe_pairs(
-    new_banded: DataFrame,
-    spark,
-    index_path: str,
-    meta: dict,
-    *,
-    max_hamming: int,
-    max_bucket: int,
-    shared: tuple | None = None,
-) -> DataFrame:
-    """Probe core shared by the batch operator and the streaming
-    micro-batch loop (the SimHash twin of :func:`_probe_pairs`): banded
-    shard frame → pruned index scan → per-side two-pass hot-bucket caps
-    → ``bit_count(xor)`` hamming verify. The index side EXCLUDES the
-    shard's own ids (anti-join), so re-probing an already-appended
-    shard — including a foreachBatch replay that crashed between append
-    and checkpoint commit — emits byte-identical pairs. Tombstoned ids
-    (:func:`simhash_index_delete`) are masked off the index side
-    BEFORE the caps, exactly as if compaction had already removed
-    their rows. ``shared`` carries precomputed shard-side artifacts
-    (:func:`_simhash_probe_shared`) when one shard probes several
-    same-family dirs."""
-    from tia_data_pipeline_spark.operators.scale import anti_join_index_tombstones
-
-    pred, shard_ids, probe = shared or _simhash_probe_shared(
-        new_banded, meta, max_bucket=max_bucket
-    )
-    idx = anti_join_index_tombstones(
-        _read_index(spark, index_path, meta).filter(pred),
-        index_path,
-        index_schema_json=meta["schema_json"],
-        id_col="_id",
-    ).join(shard_ids, on="_id", how="left_anti")
-    # two-pass hot-bucket caps, each side against its own count (a hot
-    # bucket is boilerplate — history's on the index side, today's on
-    # the shard side; it never reaches the join)
-    hist = _bucket_capped(idx, max_bucket).select(
-        "band", "bucket", F.col("_id").alias("dup_id"), F.col("_fp").alias("fp_old")
-    )
-    hamming = F.bit_count(F.col("fp_new").bitwiseXOR(F.col("fp_old"))).cast("int")
-    return (
-        probe.join(hist, ["band", "bucket"])
-        .select("new_id", "dup_id", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["new_id", "dup_id"])
-    )
-
-
-def simhash_dedup_incremental_multi(
-    new_docs: DataFrame,
-    index_paths: list[str],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket: int = 1000,
-) -> list[DataFrame]:
-    """One shard probed against SEVERAL same-family index dirs (the
-    takedown lifecycle: a masked dir and its physically-compacted
-    sibling must yield identical pairs) — the shard's fingerprint frame
-    (the CPU-heavy leg), its capped probe side, its distinct-id frame,
-    and the touched-partition driver collect are computed ONCE and
-    shared by every probe, instead of once per dir (guide §2.4: two
-    operations keyed the same way share one derivation). Returns one
-    pairs frame per path, same order. All dirs must share the hash
-    family — the banded frame is family-keyed, so a mismatch would
-    probe with wrong buckets; it raises instead.
-
-    Cache lifecycle matches :func:`simhash_dedup_incremental` (held by
-    the CacheManager until unpersist/clearCache/session end)."""
-    spark = new_docs.sparkSession
-    metas = [simhash_index_meta(spark, p) for p in index_paths]
-    fams = {(m["bits"], m["bands"], m["n_shards"]) for m in metas}
-    if len(fams) != 1:
-        raise ValueError(f"index dirs disagree on the hash family: {sorted(fams)}")
-    meta = metas[0]
-    _check_band_guarantee(meta, max_hamming)
-    new_banded = simhash_band_frame(
-        new_docs, text_col, id_col,
-        bits=meta["bits"], bands=meta["bands"], n_shards=meta["n_shards"],
-    ).persist()
-    pred, shard_ids, probe = _simhash_probe_shared(
-        new_banded, meta, max_bucket=max_bucket
-    )
-    # the capped probe side persists too: every probe leg consumes it,
-    # and caching it keeps the cap's count-exchange out of every run
-    probe = probe.persist()
-    return [
-        _simhash_probe_pairs(
-            new_banded, spark, p, m,
-            max_hamming=max_hamming, max_bucket=max_bucket,
-            shared=(pred, shard_ids, probe),
-        )
-        for p, m in zip(index_paths, metas)
-    ]
-
-
-def _simhash_intra_pairs(
-    new_banded: DataFrame, *, max_hamming: int, max_bucket: int
-) -> DataFrame:
-    """Duplicate pairs WITHIN one shard, canonical ``new_id < dup_id``
-    — the explicit same-batch leg of the streaming loop (the SimHash
-    twin of :func:`_intra_pairs`): the index probe can never see these
-    (the shard's own ids are excluded from its index side), so without
-    this leg a same-shard duplicate is lost forever. Depends only on
-    the shard itself ⇒ replay-deterministic by construction."""
-    capped = _bucket_capped(new_banded, max_bucket)
-    a = capped.select(
-        "band", "bucket", F.col("_id").alias("new_id"), F.col("_fp").alias("fp_new")
-    )
-    b = capped.select(
-        "band", "bucket", F.col("_id").alias("dup_id"), F.col("_fp").alias("fp_old")
-    )
-    hamming = F.bit_count(F.col("fp_new").bitwiseXOR(F.col("fp_old"))).cast("int")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("new_id") < F.col("dup_id"))
-        .select("new_id", "dup_id", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["new_id", "dup_id"])
-    )
-
-
-def simhash_index_append(
-    new_docs: DataFrame,
-    index_path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Append a shard's fingerprint rows — idempotent (twice ≡ once):
-    already-present ``(_id, band)`` rows are skipped via an anti-join
-    against the touched partitions only (a doc's rows live nowhere
-    else — its (band, bshard) keys are a pure function of its text);
-    row-level, so a retry after a hard kill inside the write commit
-    appends exactly the missing band rows (see :func:`_append_delta`).
-    ``_id`` is non-null by the fingerprint frame's precondition, so
-    plain-equality anti-join semantics are exact."""
-    spark = new_docs.sparkSession
-    meta = simhash_index_meta(spark, index_path)
-    new_banded = simhash_band_frame(
-        new_docs, text_col, id_col,
-        bits=meta["bits"], bands=meta["bands"], n_shards=meta["n_shards"],
-    ).persist()  # consumed 2×; append is EAGER, so the lifecycle is exact
-    try:
-        _append_delta(new_banded, spark, index_path, meta)
-    finally:
-        new_banded.unpersist()
-
-
-def simhash_index_delete(
-    ids: DataFrame, index_path: str, *, id_col: str = "doc_id"
-) -> None:
-    """Tombstone documents out of the SimHash index — the SimHash twin
-    of :func:`minhash_index_delete` (same semantics: masked from every
-    probe immediately, physically removed at the next compact,
-    idempotent, ids-only)."""
-    from tia_data_pipeline_spark.operators.scale import append_index_tombstones
-
-    meta = simhash_index_meta(ids.sparkSession, index_path)
-    append_index_tombstones(
-        ids.select(F.col(id_col).alias("_id")),
-        index_path,
-        index_schema_json=meta["schema_json"],
-        id_col="_id",
-    )
-
-
-def simhash_index_compact(spark, path: str) -> dict:
-    """One file per (band, bshard) partition — the SimHash twin of
-    :func:`minhash_index_compact`. Applies pending tombstones."""
-    from tia_data_pipeline_spark.operators.scale import compact_partitioned_index
-
-    meta = simhash_index_meta(spark, path)
-    return compact_partitioned_index(
-        spark, path,
-        partition_cols=("band", "bshard"),
-        schema_json=meta["schema_json"],
-        side_dirs=(_SIMHASH_META_DIR,),
-        tombstones_id_col="_id",
-    )
-
-
-def simhash_index_stats(spark, path: str) -> dict:
-    """Health census of the SimHash index — the SimHash twin of
-    :func:`minhash_index_stats`."""
-    from tia_data_pipeline_spark.operators.scale import partitioned_index_stats
-
-    meta = simhash_index_meta(spark, path)
-    return partitioned_index_stats(
-        spark, path,
-        partition_cols=("band", "bshard"),
-        schema_json=meta["schema_json"],
-        tombstones_id_col="_id",
-    )
+    meta = {"bits": int(bits), "bands": int(bands), "n_shards": int(n_shards)}
+    cols = {"text_col": text_col, "id_col": id_col}
+    write_index_frame(SIMHASH, SIMHASH.band(df, meta, cols), path, meta)
 
 
 def simhash_incremental_oracle_sql(
@@ -1667,7 +888,7 @@ def simhash_incremental_oracle_sql(
     max_hamming: int = 3,
     max_bucket: int = 1000,
 ) -> str:
-    """DuckDB SQL reproducing :func:`simhash_dedup_incremental` over an
+    """DuckDB SQL reproducing the SimHash ``index_probe`` over an
     index built from ``table WHERE history_pred`` and a shard ``table
     WHERE shard_pred`` — same md5-bit votes, same div/mod band slices,
     same per-side hot-bucket caps, same ``bit_count(xor)`` verify. The
@@ -1685,15 +906,8 @@ def simhash_incremental_oracle_sql(
     and the forms agreed only for disjoint predicates (ADVICE r8).
     Both predicates must be deterministic row predicates on
     ``table``."""
-    assert bits % bands == 0
-    r = bits // bands
-    votes = ", ".join(
-        f"sum(2 * {_md5_bit_expr('tok', j)} - 1) AS v{j}" for j in range(bits)
-    )
-    fp = " + ".join(
-        f"(CASE WHEN v{j} > 0 THEN {1 << j}::BIGINT ELSE 0::BIGINT END)"
-        for j in range(bits)
-    )
+    r = band_width(bits, bands, "bits")
+    votes, fp = _simhash_sql_votes(bits)
     divisors = ", ".join(f"({b}, {1 << (r * b)}::BIGINT)" for b in range(bands))
 
     def side(alias: str, pred: str) -> str:

@@ -1,0 +1,474 @@
+"""One core for the banded near-duplicate index families.
+
+MinHash signatures (Jaccard), SimHash fingerprints (hamming) and
+embedding sign-buckets (cosine) persist and serve the same way and
+differ only in how a row is keyed and how a candidate pair is checked.
+:class:`IndexFamily` holds those differences, one instance per family;
+the write tail, meta side table, schema-pinned read, touched-partition
+pruning, two-pass hot-bucket caps, probe legs, idempotent append,
+delete, compact and stats are written once below (REPOSE, ICDE 2021:
+one partition-local layout pruned by a key, parameterized by the
+function that computes the key).
+
+Layout: banded rows partitioned by ``family.partition_cols``, plus a
+one-row meta side table (``family.meta_dir``) holding the hash family
+AND ``schema_json`` — probes read with an explicit schema, so an EMPTY
+index (day-zero bootstrap) stays probeable.
+
+A probe has two legs, both replay-deterministic:
+
+* cross — shard vs index-minus-shard. The scan prunes to the shard's
+  touched partitions via ONE flat ``isin`` over an encoded partition
+  code (an OR-chain of hundreds of conjunctions overflows the JVM stack
+  in Spark's column-node converter), masks tombstones BEFORE the caps,
+  then anti-joins the shard's OWN ids, so re-probing an appended shard
+  (a foreachBatch replay that crashed between append and checkpoint)
+  emits byte-identical pairs.
+* intra — pairs WITHIN the shard, canonical ``new_id < dup_id``, which
+  the cross leg can never see.
+
+Each side is capped against its own count, two-pass (count → semi-join
+survivors), so a boilerplate bucket never reaches a join. Every cost is
+sized by the shard, not by history: the scan reads touched partitions
+only and the join shuffles signatures or vectors, never text.
+"""
+
+from __future__ import annotations
+
+import json
+from contextlib import contextmanager
+from dataclasses import dataclass
+from typing import Callable, Mapping
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+from tia_data_pipeline_spark.functions.text import portable_round
+from tia_data_pipeline_spark.functions.vectors import dot, l2_norm
+from tia_data_pipeline_spark.operators.scale import (
+    anti_join_index_tombstones,
+    append_index_tombstones,
+    compact_partitioned_index,
+    fan_out,
+    partitioned_index_stats,
+)
+
+
+@dataclass(frozen=True)
+class IndexFamily:
+    """What makes one banded index family differ from another.
+
+    ``band(df, meta, opts)`` keys source rows into ``_id``, ``payload``,
+    the ``key_cols`` collision key and ``partition_cols`` (the writer's
+    frame IS the prober's, so their keys cannot drift). ``code(meta)``
+    encodes the partition columns into one injective int, the pruning
+    key. ``check(meta, opts)`` validates the options and returns
+    ``(score, keep)`` over the ``<payload>_n`` (shard) and
+    ``<payload>_o`` (index) columns. ``row_key`` is the append's
+    anti-join key, ``defaults`` the options (source columns,
+    ``max_bucket``, threshold); ``fan_probe`` widens the shard side
+    before the join, where vector payloads make pairs the costly leg."""
+
+    name: str
+    meta_dir: str
+    meta_ddl: str
+    partition_cols: tuple[str, ...]
+    key_cols: tuple[str, ...]
+    row_key: tuple[str, ...]
+    payload: tuple[str, ...]
+    band: Callable[[DataFrame, dict, dict], DataFrame]
+    code: Callable[[dict], Column]
+    check: Callable[[dict, dict], tuple[Column, Column]]
+    defaults: Mapping[str, object]
+    fan_probe: bool
+
+
+def _minhash_band(df: DataFrame, meta: dict, o: dict) -> DataFrame:
+    from tia_data_pipeline_spark.operators.dedup import minhash_band_frame
+
+    # bucket values are unbounded (xxhash64 or raw band slices); a
+    # stable shard of the bucket makes (band, bshard) a bounded
+    # partition key that still prunes
+    return minhash_band_frame(
+        df, o["text_col"], o["id_col"],
+        k=meta["k"], bands=meta["bands"], seed=meta["seed"],
+        shingle_n=meta["shingle_n"], portable=meta["portable"],
+    ).withColumn("bshard", F.pmod(F.xxhash64("bucket"), F.lit(meta["n_shards"])))
+
+
+def _simhash_band(df: DataFrame, meta: dict, o: dict) -> DataFrame:
+    from tia_data_pipeline_spark.operators.dedup import simhash_band_frame
+
+    return simhash_band_frame(
+        df, o["text_col"], o["id_col"],
+        bits=meta["bits"], bands=meta["bands"], n_shards=meta["n_shards"],
+    )
+
+
+def _embedding_band(df: DataFrame, meta: dict, o: dict) -> DataFrame:
+    from tia_data_pipeline_spark.operators.similarity import _sign_bits
+
+    vec, id_col = F.col(o["vec_col"]), F.col(o["id_col"])
+    # the sign bucket is BOUNDED (2^bits values), so the cell itself is
+    # the partition column and pruning is exact per cell
+    return df.filter(vec.isNotNull() & id_col.isNotNull()).select(
+        id_col.alias("_id"),
+        vec.cast("array<double>").alias("_vec"),
+        l2_norm(vec).alias("_norm"),
+        _sign_bits(vec, json.loads(meta["proj_json"])).alias("bucket"),
+    )
+
+
+def _band_code(meta: dict) -> Column:
+    # injective because 0 <= bshard < n_shards
+    return F.col("band") * F.lit(meta["n_shards"]) + F.col("bshard")
+
+
+def _jaccard(meta: dict, o: dict) -> tuple[Column, Column]:
+    est = F.size(
+        F.filter(F.zip_with("_sig_n", "_sig_o", lambda x, y: x == y), lambda m: m)
+    ) / F.lit(float(meta["k"]))
+    return portable_round(est, 6).alias("est_jaccard"), F.col("est_jaccard") >= o["threshold"]
+
+
+def _hamming(meta: dict, o: dict) -> tuple[Column, Column]:
+    # B bands guarantee a collision only for hamming <= B-1 (pigeonhole:
+    # B differing bits can occupy all B bands); more would silently
+    # miss pairs — rebuild the index with more bands instead
+    if o["max_hamming"] > meta["bands"] - 1:
+        raise ValueError(
+            f"max_hamming={o['max_hamming']} exceeds the {meta['bands']}-band "
+            f"guarantee (hamming <= {meta['bands'] - 1})"
+        )
+    ham = F.bit_count(F.col("_fp_n").bitwiseXOR(F.col("_fp_o"))).cast("int")
+    return ham.alias("hamming"), F.col("hamming") <= o["max_hamming"]
+
+
+def _cosine(meta: dict, o: dict) -> tuple[Column, Column]:
+    denom = F.col("_norm_n") * F.col("_norm_o")
+    score = F.when(denom > 0, dot(F.col("_vec_n"), F.col("_vec_o")) / denom)
+    return portable_round(score, 6).alias("score"), F.col("score") >= o["threshold"]
+
+
+MINHASH = IndexFamily(
+    name="minhash",
+    meta_dir="_minhash_meta",
+    meta_ddl=(
+        "k int, bands int, seed int, shingle_n int, portable boolean, "
+        "n_shards int, schema_json string"
+    ),
+    partition_cols=("band", "bshard"),
+    key_cols=("band", "bucket"),
+    # (_id, band), not _id: a write hard-killed inside its commit can
+    # land a subset of a doc's band rows, and an id-level anti-join
+    # would leave it short of bands forever; the retry appends exactly
+    # the missing rows (band is a partition column — no extra I/O)
+    row_key=("_id", "band"),
+    payload=("_sig",),
+    band=_minhash_band,
+    code=_band_code,
+    check=_jaccard,
+    defaults={"text_col": "text", "id_col": "doc_id", "threshold": 0.5, "max_bucket": 1000},
+    fan_probe=False,
+)
+
+SIMHASH = IndexFamily(
+    name="simhash",
+    meta_dir="_simhash_meta",
+    meta_ddl="bits int, bands int, n_shards int, schema_json string",
+    partition_cols=("band", "bshard"),
+    key_cols=("band", "bucket"),
+    row_key=("_id", "band"),
+    payload=("_fp",),
+    band=_simhash_band,
+    code=_band_code,
+    check=_hamming,
+    defaults={"text_col": "text", "id_col": "doc_id", "max_hamming": 3, "max_bucket": 1000},
+    fan_probe=False,
+)
+
+EMBEDDING = IndexFamily(
+    name="embedding",
+    meta_dir="_emb_index_meta",
+    meta_ddl="proj_json string, schema_json string",
+    partition_cols=("bucket",),
+    key_cols=("bucket",),
+    row_key=("_id",),
+    payload=("_vec", "_norm"),
+    band=_embedding_band,
+    code=lambda meta: F.col("bucket"),
+    check=_cosine,
+    defaults={"vec_col": "embedding", "id_col": "vec_id", "threshold": 0.9, "max_bucket": 2000},
+    fan_probe=True,
+)
+
+FAMILIES = (MINHASH, SIMHASH, EMBEDDING)
+
+
+# ---------------------------------------------------------------------------
+# Write, meta, read
+# ---------------------------------------------------------------------------
+
+
+def write_index_frame(family: IndexFamily, banded: DataFrame, path: str, meta: dict) -> None:
+    """The write tail every family writer ends in: ``banded`` (the
+    family's band frame) partitioned by ``family.partition_cols``, plus
+    the one-row meta side table — ``meta`` and the row schema."""
+    parts = list(family.partition_cols)
+    # one shuffle keyed by the partition columns: each task owns whole
+    # partition dirs and writes one file per dir, not a sliver per task
+    banded.repartition(*parts).write.partitionBy(*parts).mode("overwrite").parquet(path)
+    row = {**meta, "schema_json": banded.schema.json()}
+    names = [c.split()[0] for c in family.meta_ddl.split(",")]
+    banded.sparkSession.createDataFrame(
+        [tuple(row[n] for n in names)], family.meta_ddl
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{family.meta_dir}")
+
+
+def read_meta_row(spark, path: str, meta_dir: str):
+    """The one row of an index's meta side table (control plane, not a
+    data collect); a ``ValueError`` naming the path when it is missing."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(f"{path}/{meta_dir}").collect()[0]
+    except AnalysisException:
+        raise ValueError(f"{path} holds no {meta_dir} index meta table") from None
+
+
+def index_meta(family: IndexFamily, spark, path: str) -> dict:
+    """The family's meta side table as a dict."""
+    return read_meta_row(spark, path, family.meta_dir).asDict()
+
+
+def read_index(spark, path: str, meta: dict) -> DataFrame:
+    """Index scan with the meta's explicit schema: an EMPTY index has
+    no data files to infer from, and inference is a driver-side footer
+    read a 100 TB index can skip."""
+    from pyspark.sql.types import StructType
+
+    return spark.read.schema(StructType.fromJson(json.loads(meta["schema_json"]))).parquet(path)
+
+
+# ---------------------------------------------------------------------------
+# Probe core
+# ---------------------------------------------------------------------------
+
+
+def _opts(family: IndexFamily, given: dict) -> dict:
+    unknown = sorted(set(given) - set(family.defaults))
+    if unknown:
+        raise TypeError(f"the {family.name} index takes no option {unknown}")
+    return {**family.defaults, **given}
+
+
+def _touched(family: IndexFamily, banded: DataFrame, meta: dict) -> Column:
+    """Partition predicate: the distinct partition codes the shard's own
+    rows land in, collected to the driver (bounded by the partition
+    count) and stated as literals, so the scan plans PartitionFilters."""
+    code = family.code(meta)
+    codes = sorted(int(r[0]) for r in banded.select(code).distinct().collect())
+    return code.isin(codes) if codes else F.lit(False)
+
+
+def _capped(family: IndexFamily, df: DataFrame, max_bucket: int) -> DataFrame:
+    keys = list(family.key_cols)
+    ok = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") <= max_bucket)
+        .select(*keys)
+    )
+    return df.join(ok, keys, "left_semi")
+
+
+def _side(family: IndexFamily, df: DataFrame, id_as: str) -> DataFrame:
+    sfx = "_n" if id_as == "new_id" else "_o"
+    return df.select(
+        *family.key_cols,
+        F.col("_id").alias(id_as),
+        *[F.col(c).alias(c + sfx) for c in family.payload],
+    )
+
+
+def _pairs(family: IndexFamily, joined: DataFrame, check: tuple) -> DataFrame:
+    score, keep = check
+    out = joined.select("new_id", "dup_id", score).filter(keep)
+    # a pair can collide in several bands; a one-key family assigns
+    # each row ONE cell, so its pairs meet once and a dedup would be a
+    # no-op shuffle over the widest relation in the plan
+    return out.dropDuplicates(["new_id", "dup_id"]) if len(family.key_cols) > 1 else out
+
+
+def _shard_side(family: IndexFamily, banded: DataFrame, meta: dict, max_bucket: int):
+    """Shard-side artifacts that depend only on the shard and the hash
+    family, so one shard probing several dirs derives them once: the
+    touched-partition predicate, the shard's ids, the capped probe side."""
+    probe = _side(family, _capped(family, banded, max_bucket), "new_id")
+    return (
+        _touched(family, banded, meta),
+        banded.select("_id").distinct(),
+        fan_out(probe) if family.fan_probe else probe,
+    )
+
+
+def _cross(
+    family: IndexFamily, shard: tuple, spark, path: str, meta: dict, check, max_bucket: int
+) -> DataFrame:
+    pred, shard_ids, probe = shard
+    idx = anti_join_index_tombstones(
+        read_index(spark, path, meta).filter(pred),
+        path,
+        index_schema_json=meta["schema_json"],
+        id_col="_id",
+    ).join(shard_ids, on="_id", how="left_anti")
+    hist = _side(family, _capped(family, idx, max_bucket), "dup_id")
+    return _pairs(family, probe.join(hist, list(family.key_cols)), check)
+
+
+def _intra(family: IndexFamily, banded: DataFrame, check, max_bucket: int) -> DataFrame:
+    capped = _capped(family, banded, max_bucket)
+    a = _side(family, capped, "new_id")
+    b = _side(family, capped, "dup_id")
+    joined = (fan_out(a) if family.fan_probe else a).join(b, list(family.key_cols))
+    return _pairs(family, joined.filter(F.col("new_id") < F.col("dup_id")), check)
+
+
+def _probe(family: IndexFamily, new: DataFrame, index_paths: list[str], given: dict):
+    o = _opts(family, given)
+    spark = new.sparkSession
+    metas = [index_meta(family, spark, p) for p in index_paths]
+    fams = {json.dumps({k: v for k, v in m.items() if k != "schema_json"}) for m in metas}
+    if len(fams) != 1:
+        raise ValueError(
+            "index dirs must share one hash family (the projection and "
+            f"banding parameters a probe derives its keys from); got {len(fams)}"
+        )
+    meta = metas[0]
+    check = family.check(meta, o)  # validate before anything persists
+    # the shard frame feeds the touched collect, its cap count and every
+    # join, and its hash aggregate is the CPU-heavy leg: persist it
+    banded = family.band(new, meta, o).persist()
+    pred, ids, probe = _shard_side(family, banded, meta, o["max_bucket"])
+    cached = [banded]
+    if len(index_paths) > 1:
+        # every dir's leg consumes the capped probe side; caching keeps
+        # the cap's count exchange out of each of them
+        probe = probe.persist()
+        cached.append(probe)
+    pairs = [
+        _cross(family, (pred, ids, probe), spark, p, m, check, o["max_bucket"])
+        for p, m in zip(index_paths, metas)
+    ]
+    return pairs, cached
+
+
+def index_probe(
+    family: IndexFamily, new: DataFrame, index_paths: list[str], **opts
+) -> list[DataFrame]:
+    """Near-duplicate pairs ``(new_id, dup_id, <score>)`` of a NEW SHARD
+    against each index in ``index_paths`` (one frame per path, same
+    order) — the cross leg, no history rescan; ``opts`` override
+    ``family.defaults``. Several paths (a masked dir and its compacted
+    sibling, say) must share the hash family and share one shard
+    derivation. Lazy: the shard frame (and, for several paths, the
+    capped probe side) stays cached until unpersist/clearCache/session
+    end — a long-lived daily loop uses :func:`index_probe_scoped`."""
+    return _probe(family, new, index_paths, opts)[0]
+
+
+@contextmanager
+def index_probe_scoped(
+    family: IndexFamily, new: DataFrame, index_paths: list[str], **opts
+):
+    """:func:`index_probe` with an exact cache lifecycle — consume the
+    yielded frames INSIDE the scope; everything the probe persisted is
+    released on every exit path::
+
+        with index_probe_scoped(MINHASH, shard, [path]) as (pairs,):
+            pairs.write.parquet(out)"""
+    pairs, cached = _probe(family, new, index_paths, opts)
+    try:
+        yield pairs
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# Lifecycle: append, delete, compact, stats
+# ---------------------------------------------------------------------------
+
+
+def _append_delta(family: IndexFamily, banded: DataFrame, spark, path: str, meta: dict) -> None:
+    # a row can live nowhere but its own partition (its key is a pure
+    # function of its content), so the anti-join reads touched
+    # partitions only and the retry cost is sized by the shard
+    existing = (
+        read_index(spark, path, meta)
+        .filter(_touched(family, banded, meta))
+        .select(*family.row_key)
+        .distinct()
+    )
+    parts = list(family.partition_cols)
+    banded.join(existing, on=list(family.row_key), how="left_anti").repartition(
+        *parts
+    ).write.partitionBy(*parts).mode("append").parquet(path)
+
+
+def index_append(family: IndexFamily, new: DataFrame, index_path: str, **opts) -> None:
+    """Append a shard's rows — idempotent (twice ≡ once): rows already
+    present under ``family.row_key`` are anti-joined away over the
+    touched partitions. ``_id`` is non-null by every band frame's
+    precondition, so plain-equality anti-join semantics are exact."""
+    spark = new.sparkSession
+    meta = index_meta(family, spark, index_path)
+    # consumed twice (touched collect + write); the append is EAGER,
+    # so the cache lifecycle is exact
+    banded = family.band(new, meta, _opts(family, opts)).persist()
+    try:
+        _append_delta(family, banded, spark, index_path, meta)
+    finally:
+        banded.unpersist()
+
+
+def index_delete(
+    family: IndexFamily, ids: DataFrame, index_path: str, *, id_col: str | None = None
+) -> None:
+    """Tombstone documents out of the index (takedown, right to be
+    forgotten, TTL): masked from every probe at once, physically
+    removed by the next :func:`index_compact`. Idempotent, and ids-only
+    — a takedown request never ships the document back. ``id_col``
+    defaults to the family's source id column."""
+    meta = index_meta(family, ids.sparkSession, index_path)
+    append_index_tombstones(
+        ids.select(F.col(id_col or family.defaults["id_col"]).alias("_id")),
+        index_path,
+        index_schema_json=meta["schema_json"],
+        id_col="_id",
+    )
+
+
+def index_compact(family: IndexFamily, spark, path: str) -> dict:
+    """One file per partition, pending tombstones applied (see
+    :func:`…operators.scale.compact_partitioned_index` for the swap)."""
+    meta = index_meta(family, spark, path)
+    return compact_partitioned_index(
+        spark, path,
+        partition_cols=family.partition_cols,
+        schema_json=meta["schema_json"],
+        side_dirs=(family.meta_dir,),
+        tombstones_id_col="_id",
+    )
+
+
+def index_stats(family: IndexFamily, spark, path: str) -> dict:
+    """Health census: fragmentation (compact due?), partition skew
+    (caps earning their keep?) and the pending-tombstone fraction."""
+    meta = index_meta(family, spark, path)
+    return partitioned_index_stats(
+        spark, path,
+        partition_cols=family.partition_cols,
+        schema_json=meta["schema_json"],
+        tombstones_id_col="_id",
+    )

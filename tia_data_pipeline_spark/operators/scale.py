@@ -389,7 +389,7 @@ def compact_partitioned_index(
 ) -> dict:
     """Rewrite an append-accumulated partitioned index to one file per
     partition dir — the maintenance op every incremental index needs:
-    each `*_index_append` adds a file per touched partition, and after
+    each index append adds a file per touched partition, and after
     months of daily shards a probe's pruned scan pays file-listing and
     footer overhead per tiny file instead of per partition.
 
@@ -781,7 +781,7 @@ def anti_join_index_tombstones(
     broadcast_max_bytes: int | None = None,
 ) -> DataFrame:
     """Mask tombstoned ids out of an index-side frame — the probe-side
-    leg every `*_dedup_incremental` / IVF search applies after its
+    leg every `index_probe` / IVF search applies after its
     pruned scan. Request-sized tombstone tables broadcast; a mass-
     deletion sweep past the broadcast budget routes through the Bloom
     membership split instead (see :func:`tombstone_mask_join`); an

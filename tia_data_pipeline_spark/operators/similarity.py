@@ -15,7 +15,6 @@ tuned by the number of projection bits (fewer bits → bigger buckets).
 from __future__ import annotations
 
 import json
-from contextlib import contextmanager
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -23,7 +22,13 @@ from pyspark.sql import functions as F
 
 from tia_data_pipeline_spark.functions.text import portable_round
 from tia_data_pipeline_spark.functions.vectors import cosine_similarity, dot, l2_norm
-from tia_data_pipeline_spark.operators.scale import fan_out
+from tia_data_pipeline_spark.operators.index import (
+    EMBEDDING,
+    read_index,
+    read_meta_row,
+    write_index_frame,
+)
+from tia_data_pipeline_spark.operators.scale import anti_join_index_tombstones, fan_out
 
 # Deterministic projection matrix shared with the DuckDB oracle
 # (plans/llm.py embeds the same literals in the generated SQL).
@@ -526,10 +531,8 @@ def ivf_write_index(
     and the scan never opens the other ``n_lists - n_probe`` cells'
     files.
 
-    Two side tables make the index self-describing (the persisted-index
-    meta discipline shared with the MinHash/SimHash/embedding indexes —
-    ADVICE r8 closed the gap where IVF alone relied on schema
-    inference):
+    Two side tables make the index self-describing (the meta discipline
+    of every persisted index, operators/index.py):
 
     - ``_ivf_centers``: one row per cell — the center vector PLUS the
       training distance baseline (n, mean d², p95 d² of the build
@@ -598,46 +601,15 @@ def ivf_read_centers(spark, path: str) -> list[list[float]]:
     return [by_cell[i] for i in range(len(by_cell))]
 
 
-def ivf_index_meta(spark, path: str) -> dict | None:
-    """Meta side table → dict (one driver row — control plane); None
-    for an index written before the meta table existed (probes then
-    fall back to schema inference)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = spark.read.parquet(f"{path}/{_IVF_META_DIR}").collect()[0]
-    except AnalysisException:
-        return None
-    return {
-        "n_lists": int(row["n_lists"]),
-        "dim": int(row["dim"]),
-        "id_col": row["id_col"],
-        "vec_col": row["vec_col"],
-        "schema_json": row["schema_json"],
-    }
+def ivf_index_meta(spark, path: str) -> dict:
+    """Meta side table → ``{n_lists, dim, id_col, vec_col,
+    schema_json}`` (one driver row — control plane); a ``ValueError``
+    naming the path when the table is missing."""
+    return read_meta_row(spark, path, _IVF_META_DIR).asDict()
 
 
-def _read_ivf_index(spark, path: str, meta: dict | None) -> DataFrame:
-    """Index scan with the meta's explicit schema (an EMPTY or fully
-    tombstone-compacted index has no data files to infer from) —
-    inference only for pre-meta indexes."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    if meta is None:
-        return spark.read.parquet(path)
-    schema = StructType.fromJson(_json.loads(meta["schema_json"]))
-    return spark.read.schema(schema).parquet(path)
-
-
-def _mask_ivf_tombstones(df: DataFrame, path: str, meta: dict | None) -> DataFrame:
-    """Anti-join tombstoned ids off an IVF index scan (no-op for
-    pre-meta indexes, which predate the deletion layer)."""
-    from tia_data_pipeline_spark.operators.scale import anti_join_index_tombstones
-
-    if meta is None:
-        return df
+def _mask_ivf_tombstones(df: DataFrame, path: str, meta: dict) -> DataFrame:
+    """Anti-join tombstoned ids off an IVF index scan."""
     return anti_join_index_tombstones(
         df, path, index_schema_json=meta["schema_json"], id_col=meta["id_col"]
     )
@@ -669,7 +641,7 @@ def ivf_search_indexed(
     cells = sorted(range(len(cs)), key=lambda i: (_d2(cs[i]), i))[:n_probe]
     meta = ivf_index_meta(spark, path)
     corpus = _mask_ivf_tombstones(
-        _read_ivf_index(spark, path, meta).filter(
+        read_index(spark, path, meta).filter(
             F.col("_cell").isin([int(c) for c in cells])
         ),
         path,
@@ -716,11 +688,14 @@ def ivf_search_batch(
         _ivf_probe_frame(probes, cs, vec_col, probe_id_col, n_probe)
         # persist: consumed twice (touched-cell collect + the join).
         # Lifecycle = CacheManager until clearCache/session end, the
-        # minhash_dedup_incremental rule; the streaming loop builds the
+        # index_probe rule; the streaming loop builds the
         # frame itself and releases it on every exit path.
         .persist()
     )
-    return _ivf_batch_topk(pb, spark, index_path, vec_col, id_col, probe_id_col, k)
+    return _ivf_batch_topk(
+        pb, spark, index_path, vec_col, id_col, probe_id_col, k,
+        ivf_index_meta(spark, index_path),
+    )
 
 
 def _nearest_cells_expr(
@@ -731,16 +706,7 @@ def _nearest_cells_expr(
     implementation of cell assignment shared by the single-probe
     (:func:`ivf_top_k`) and batch (:func:`_ivf_probe_frame`) paths, so
     tie handling and the distance formula can never diverge."""
-
-    def _dist2(center: list[float]) -> Column:
-        c = F.array(*[F.lit(v) for v in center])
-        return F.aggregate(
-            F.zip_with(vec.cast("array<double>"), c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    dists = F.array(*[_dist2(c) for c in centers])
+    dists = F.array(*[_center_d2(vec.cast("array<double>"), c) for c in centers])
     order = F.array_sort(
         F.transform(dists, lambda d, i: F.struct(d.alias("d"), i.alias("cell")))
     )
@@ -793,7 +759,7 @@ def _ivf_batch_topk(
     id_col: str,
     probe_id_col: str,
     k: int,
-    meta: dict | None = None,
+    meta: dict,
 ) -> DataFrame:
     """Search core shared by the batch operator and the streaming
     loop: pruned index scan (PartitionFilters from the probes' touched
@@ -801,12 +767,10 @@ def _ivf_batch_topk(
     tombstone mask → broadcast probe equi-join on the cell → exact
     cosine → per-probe rank-limited window. The streaming loop passes
     the once-read ``meta`` through (immutable after write — the
-    read-once-per-stream rule); batch callers may omit it."""
-    if meta is None:
-        meta = ivf_index_meta(spark, index_path)
+    read-once-per-stream rule)."""
     touched = sorted(int(r["_cell"]) for r in pb.select("_cell").distinct().collect())
     idx = _mask_ivf_tombstones(
-        _read_ivf_index(spark, index_path, meta).filter(
+        read_index(spark, index_path, meta).filter(
             F.col("_cell").isin(touched) if touched else F.lit(False)
         ),
         index_path,
@@ -842,13 +806,11 @@ def ivf_index_append(
     new_vecs: DataFrame, index_path: str, *, full_id_check: bool = False
 ) -> dict:
     """Append a vector shard to the written IVF index — the write-side
-    increment that completes the IVF lifecycle (the other three index
-    families had write/append/stream from round 8; VERDICT r8 missing
-    #4). Each new vector is assigned to its nearest PINNED centroid
-    (the index's own centers — appending never moves a center), the
-    delta anti-joins already-indexed ids over the touched ``_cell``
-    partitions only (idempotent: twice ≡ once), and the write appends
-    one file per touched cell.
+    increment of the IVF lifecycle. Each new vector is assigned to its
+    nearest PINNED centroid (the index's own centers — appending never
+    moves a center), the delta anti-joins already-indexed ids over the
+    touched ``_cell`` partitions only (idempotent: twice ≡ once), and
+    the write appends one file per touched cell.
 
     Ids are IMMUTABLE once indexed (ADVICE r9 #3): the idempotency
     anti-join is scoped to the batch's touched cells — the 100 TB
@@ -876,19 +838,12 @@ def ivf_index_append(
     At 100 TB: assignment is one expression over the shard (n_lists
     center literals — control plane), the anti-join reads only touched
     partitions, and nothing about the append scales with history."""
-    import json as _json
-
     from pyspark.sql.types import StructType
 
     from tia_data_pipeline_spark.functions.vectors import valid_vector
 
     spark = new_vecs.sparkSession
     meta = ivf_index_meta(spark, index_path)
-    if meta is None:
-        raise ValueError(
-            "ivf_index_append needs the _ivf_meta side table; rebuild the "
-            "index with ivf_write_index to upgrade a pre-meta index"
-        )
     centers = ivf_read_centers(spark, index_path)
     vec_col, id_col = meta["vec_col"], meta["id_col"]
     vec = F.col(vec_col).cast("array<double>")
@@ -910,7 +865,7 @@ def ivf_index_append(
         touched = sorted(
             int(r["_cell"]) for r in assigned.select("_cell").distinct().collect()
         )
-        idx_scan = _read_ivf_index(spark, index_path, meta)
+        idx_scan = read_index(spark, index_path, meta)
         if not full_id_check:
             # touched-cells-only scope: exact under the ids-immutable
             # contract (an unchanged embedding re-lands in its own cell)
@@ -919,7 +874,7 @@ def ivf_index_append(
             )
         existing = idx_scan.select(id_col).distinct()
         delta = assigned.join(existing, on=id_col, how="left_anti")
-        schema = StructType.fromJson(_json.loads(meta["schema_json"]))
+        schema = StructType.fromJson(json.loads(meta["schema_json"]))
         data_fields = [f for f in schema.fields if f.name != "_cell"]
         missing = [f.name for f in data_fields if f.name not in delta.columns]
         if missing:
@@ -947,21 +902,9 @@ def ivf_index_append(
         drift = assigned.agg(
             F.count(F.lit(1)).alias("n"), F.avg("_d2").alias("mean_d2")
         ).collect()[0]
-        base = (
-            spark.read.parquet(f"{index_path}/{_IVF_CENTERS_DIR}")
-            .agg(
-                (
-                    F.sum(F.col("train_n") * F.col("train_mean_d2"))
-                    / F.sum(F.when(F.col("train_mean_d2").isNotNull(), F.col("train_n")))
-                ).alias("train_mean_d2")
-            )
-            .collect()[0]
-        )
         batch_n = int(drift["n"])
-        batch_mean = float(drift["mean_d2"]) if drift["mean_d2"] is not None else None
-        train_mean = (
-            float(base["train_mean_d2"]) if base["train_mean_d2"] is not None else None
-        )
+        batch_mean = _float_or_none(drift["mean_d2"])
+        train_mean = _float_or_none(_train_baseline(spark, index_path)["train_mean_d2"])
         ratio = (
             round(batch_mean / train_mean, 6)
             if batch_mean is not None and train_mean
@@ -988,15 +931,11 @@ def ivf_drift_stats(spark, index_path: str) -> DataFrame:
     re-train trigger (the aggregate form is returned by every
     :func:`ivf_index_append`). One aggregate job over the index."""
     meta = ivf_index_meta(spark, index_path)
-    if meta is None:
-        raise ValueError("ivf_drift_stats needs the _ivf_meta side table")
     centers = ivf_read_centers(spark, index_path)
     vec = F.col(meta["vec_col"]).cast("array<double>")
     dists = F.array(*[_center_d2(vec, c) for c in centers])
     cur = (
-        _mask_ivf_tombstones(
-            _read_ivf_index(spark, index_path, meta), index_path, meta
-        )
+        _mask_ivf_tombstones(read_index(spark, index_path, meta), index_path, meta)
         .select(
             F.col("_cell").alias("cell"),
             F.element_at(dists, F.col("_cell") + 1).alias("_d2"),
@@ -1079,14 +1018,10 @@ def ivf_retrain(
 
     _require_local_path(index_path)
     meta = ivf_index_meta(spark, index_path)
-    if meta is None:
-        raise ValueError("ivf_retrain needs the _ivf_meta side table")
     k = n_lists if n_lists is not None else meta["n_lists"]
     vec_col, id_col = meta["vec_col"], meta["id_col"]
     live = (
-        _mask_ivf_tombstones(
-            _read_ivf_index(spark, index_path, meta), index_path, meta
-        )
+        _mask_ivf_tombstones(read_index(spark, index_path, meta), index_path, meta)
         .drop("_cell")
         .persist()  # consumed twice: the guard count and the fit/assign
     )
@@ -1119,26 +1054,32 @@ def ivf_retrain(
         os.rename(old, index_path)  # never leave the path empty
         raise
     shutil.rmtree(old)
-    base = (
-        spark.read.parquet(f"{index_path}/{_IVF_CENTERS_DIR}")
-        .agg(
-            F.coalesce(F.sum("train_n"), F.lit(0)).alias("rows"),
-            (
-                F.sum(F.col("train_n") * F.col("train_mean_d2"))
-                / F.sum(F.when(F.col("train_mean_d2").isNotNull(), F.col("train_n")))
-            ).alias("train_mean_d2"),
-        )
-        .collect()[0]
+    base = _train_baseline(
+        spark, index_path, F.coalesce(F.sum("train_n"), F.lit(0)).alias("rows")
     )
     return {
         "rows": int(base["rows"]),
         "n_lists": k,
-        "train_mean_d2": (
-            float(base["train_mean_d2"])
-            if base["train_mean_d2"] is not None
-            else None
-        ),
+        "train_mean_d2": _float_or_none(base["train_mean_d2"]),
     }
+
+
+def _float_or_none(v) -> float | None:
+    return float(v) if v is not None else None
+
+
+def _train_baseline(spark, index_path: str, *aggs: Column):
+    """One-row aggregate over the per-cell training baselines: ``aggs``
+    plus ``train_mean_d2``, the build corpus's mean squared distance to
+    its centers (n-weighted over the populated cells)."""
+    mean = F.sum(F.col("train_n") * F.col("train_mean_d2")) / F.sum(
+        F.when(F.col("train_mean_d2").isNotNull(), F.col("train_n"))
+    )
+    return (
+        spark.read.parquet(f"{index_path}/{_IVF_CENTERS_DIR}")
+        .agg(*aggs, mean.alias("train_mean_d2"))
+        .collect()[0]
+    )
 
 
 def ivf_index_delete(ids: DataFrame, index_path: str, *, id_col: str | None = None) -> None:
@@ -1148,8 +1089,6 @@ def ivf_index_delete(ids: DataFrame, index_path: str, *, id_col: str | None = No
     from tia_data_pipeline_spark.operators.scale import append_index_tombstones
 
     meta = ivf_index_meta(ids.sparkSession, index_path)
-    if meta is None:
-        raise ValueError("ivf_index_delete needs the _ivf_meta side table")
     src = id_col or meta["id_col"]
     append_index_tombstones(
         ids.select(F.col(src).alias(meta["id_col"])),
@@ -1165,8 +1104,6 @@ def ivf_index_compact(spark, path: str) -> dict:
     from tia_data_pipeline_spark.operators.scale import compact_partitioned_index
 
     meta = ivf_index_meta(spark, path)
-    if meta is None:
-        raise ValueError("ivf_index_compact needs the _ivf_meta side table")
     return compact_partitioned_index(
         spark, path,
         partition_cols=("_cell",),
@@ -1182,8 +1119,6 @@ def ivf_index_stats(spark, path: str) -> dict:
     from tia_data_pipeline_spark.operators.scale import partitioned_index_stats
 
     meta = ivf_index_meta(spark, path)
-    if meta is None:
-        raise ValueError("ivf_index_stats needs the _ivf_meta side table")
     return partitioned_index_stats(
         spark, path,
         partition_cols=("_cell",),
@@ -1329,17 +1264,7 @@ def knn_join(
 # ---------------------------------------------------------------------------
 # Incremental embedding near-dup against a persisted sign-bucket index
 # ---------------------------------------------------------------------------
-#
-# The vector twin of the MinHash signature index
-# (operators/dedup.py::minhash_write_index family): history's
-# embeddings persist bucketed by their sign-projection cell, today's
-# shard probes ONLY the cells its own vectors land in, and appends
-# itself idempotently. Unlike MinHash buckets (unbounded hash values
-# needing a shard sub-key), the sign bucket is already BOUNDED (2^bits
-# values), so the cell itself is the write-time partition column and
-# pruning is exact per cell.
-
-_EMB_META_DIR = "_emb_index_meta"
+# The vector member of the banded index families (operators/index.py).
 
 
 def embedding_write_index(
@@ -1353,17 +1278,12 @@ def embedding_write_index(
     seed: int = LSH_SEED,
 ) -> None:
     """Materialize the embedding near-dup index: (id, vec, norm) rows
-    partitioned by sign-projection ``bucket=K`` dirs. The projection
-    matrix persists in a one-row meta side table (with the row schema),
-    so the prober reproduces the exact cells — writer/prober drift is
-    impossible, and an EMPTY index (day-zero bootstrap) stays readable.
-
-    2^bits partition dirs: size ``bits`` with
+    partitioned by sign-projection ``bucket=K`` dirs, the projection
+    matrix in the meta side table so the prober reproduces the exact
+    cells. 2^bits partition dirs: size ``bits`` with
     :func:`projection_bits_for` so expected bucket population stays
-    ~10³ — pruning granularity and pair-expansion cost both follow the
-    bit count."""
-    import json as _json
-
+    ~10³ — pruning granularity and pair-expansion cost both follow it.
+    Serving is the operators/index.py core over ``index.EMBEDDING``."""
     if proj is None:
         # dim from the first NON-NULL vector (review r8): size(NULL) is
         # NULL, and a wrong-width projection would NULL every dot
@@ -1375,381 +1295,6 @@ def embedding_write_index(
         )
         dim = int(row["d"]) if row is not None else EMBED_DIM
         proj = projection_matrix(bits=bits, dim=dim, seed=seed)
-    # the write-side frame IS the prober's frame (_emb_banded) — one
-    # implementation site, so writer/prober cell assignment can't drift
-    frame = _emb_banded(corpus, {"proj": proj}, vec_col, id_col)
-    frame.repartition("bucket").write.partitionBy("bucket").mode("overwrite").parquet(
-        path
-    )
-    spark = corpus.sparkSession
-    meta = [(_json.dumps(proj), frame.schema.json())]
-    spark.createDataFrame(
-        meta, "proj_json string, schema_json string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{_EMB_META_DIR}")
-
-
-def embedding_index_meta(spark, path: str) -> dict:
-    """Meta side table → dict (one driver row — control plane)."""
-    import json as _json
-
-    row = spark.read.parquet(f"{path}/{_EMB_META_DIR}").collect()[0]
-    return {
-        "proj": _json.loads(row["proj_json"]),
-        "schema_json": row["schema_json"],
-    }
-
-
-def _read_emb_index(spark, path: str, meta: dict) -> DataFrame:
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(_json.loads(meta["schema_json"]))
-    return spark.read.schema(schema).parquet(path)
-
-
-def _emb_banded(new_vecs: DataFrame, meta: dict, vec_col: str, id_col: str) -> DataFrame:
-    return new_vecs.filter(
-        F.col(vec_col).isNotNull() & F.col(id_col).isNotNull()
-    ).select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_vec"),
-        l2_norm(F.col(vec_col)).alias("_norm"),
-        _sign_bits(F.col(vec_col), meta["proj"]).alias("bucket"),
-    )
-
-
-def embedding_dedup_incremental(
-    new_vecs: DataFrame,
-    index_path: str,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    max_bucket: int = 2000,
-) -> DataFrame:
-    """Near-duplicate pairs of a new vector shard against the persisted
-    index — no history rescan. Returns ``(new_id, dup_id, score)``,
-    exact cosine ≥ ``threshold``, ``dup_id`` an indexed vector.
-
-    Plan: bucket the shard with the index's own projection, prune the
-    index scan to the shard's touched ``bucket`` partitions (a literal
-    ``isin`` over ≤ 2^bits values — exact partition pruning), two-pass
-    hot-cell caps on BOTH sides, then a cell-equi join carrying
-    (id, vec, norm) rows — the vector-payload discipline: pairs form in
-    the join, never inside member arrays (two full vectors per pair
-    struct is quadratic in vector bytes). The index side excludes the
-    shard's OWN ids entirely (the :func:`…operators.dedup._probe_pairs`
-    replay-determinism rule): output is identical whether or not the
-    shard was already appended; intra-shard dups are a one-off
-    :func:`embedding_near_duplicates` on the shard, not this probe.
-
-    Cache lifecycle = CacheManager (the minhash_dedup_incremental
-    pattern): a DAILY loop uses
-    :func:`embedding_dedup_incremental_scoped` or the streaming
-    loop."""
-    pairs, _ = _emb_probe_parts(
-        new_vecs, index_path,
-        vec_col=vec_col, id_col=id_col,
-        threshold=threshold, max_bucket=max_bucket,
-    )
-    return pairs
-
-
-def _emb_probe_parts(
-    new_vecs: DataFrame,
-    index_path: str,
-    *,
-    vec_col: str,
-    id_col: str,
-    threshold: float,
-    max_bucket: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(pairs, persisted shard frame) — shared core of the lazy and
-    scoped forms (the dedup._incremental_probe_parts twin)."""
-    spark = new_vecs.sparkSession
-    meta = embedding_index_meta(spark, index_path)
-    # persisted: consumed by the touched-cell collect, the shard-side
-    # cap count, and the probe join.
-    shard = _emb_banded(new_vecs, meta, vec_col, id_col).persist()
-    pairs = _emb_probe_pairs(
-        shard, spark, index_path, meta, threshold=threshold, max_bucket=max_bucket
-    )
-    return pairs, shard
-
-
-@contextmanager
-def embedding_dedup_incremental_scoped(
-    new_vecs: DataFrame,
-    index_path: str,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    max_bucket: int = 2000,
-):
-    """:func:`embedding_dedup_incremental` with an EXACT cache
-    lifecycle — consume the yielded pairs inside the scope; the
-    shard's persisted frame is released on every exit path (the
-    minhash/simhash scoped twins' discipline)."""
-    pairs, shard = _emb_probe_parts(
-        new_vecs, index_path,
-        vec_col=vec_col, id_col=id_col,
-        threshold=threshold, max_bucket=max_bucket,
-    )
-    try:
-        yield pairs
-    finally:
-        shard.unpersist()
-
-
-def embedding_dedup_incremental_multi(
-    new_vecs: DataFrame,
-    index_paths: list[str],
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    max_bucket: int = 2000,
-) -> list[DataFrame]:
-    """One vector shard probed against SEVERAL same-projection index
-    dirs (the takedown lifecycle: a masked dir and its physically-
-    compacted sibling must yield identical pairs) — the shard's
-    projected frame, its capped+fanned probe side, its distinct-id
-    frame, and the touched-cell driver collect are computed ONCE and
-    shared by every probe (guide §2.4; the
-    :func:`…operators.dedup.simhash_dedup_incremental_multi` twin).
-    Returns one pairs frame per path, same order. All dirs must share
-    the projection — the cell assignment is projection-keyed, so a
-    mismatch would probe wrong cells; it raises instead.
-
-    Cache lifecycle matches :func:`embedding_dedup_incremental` (held
-    by the CacheManager until unpersist/clearCache/session end)."""
-    spark = new_vecs.sparkSession
-    metas = [embedding_index_meta(spark, p) for p in index_paths]
-    projs = {json.dumps(m["proj"]) for m in metas}
-    if len(projs) != 1:
-        raise ValueError(
-            f"index dirs disagree on the projection family: {len(projs)} distinct"
-        )
-    shard = _emb_banded(new_vecs, metas[0], vec_col, id_col).persist()
-    touched, shard_ids, probe = _emb_probe_shared(shard, max_bucket=max_bucket)
-    # the capped+fanned probe side persists too: every probe leg
-    # consumes it, and caching keeps the cap's count-exchange out of
-    # every run
-    probe = probe.persist()
-    return [
-        _emb_probe_pairs(
-            shard, spark, p, m,
-            threshold=threshold, max_bucket=max_bucket,
-            shared=(touched, shard_ids, probe),
-        )
-        for p, m in zip(index_paths, metas)
-    ]
-
-
-def _cell_capped(df: DataFrame, max_bucket: int) -> DataFrame:
-    """Two-pass hot-cell cap: keep only rows whose ``bucket`` cell
-    holds ≤ ``max_bucket`` rows (count → semi-join survivors) — the
-    single-key form of :func:`…operators.dedup._bucket_capped`."""
-    ok = (
-        df.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") <= max_bucket)
-        .select("bucket")
-    )
-    return df.join(ok, "bucket", "left_semi")
-
-
-def _emb_probe_shared(shard: DataFrame, *, max_bucket: int) -> tuple:
-    """Shard-side probe artifacts that depend ONLY on the shard and
-    the index's projection — shareable across every same-family index
-    dir the shard probes (the takedown lifecycle probes two: masked
-    and compacted): the touched-cell list (one driver collect), the
-    shard's distinct ids, and the capped + fanned probe side."""
-    touched = sorted(
-        int(r["bucket"]) for r in shard.select("bucket").distinct().collect()
-    )
-    probe = fan_out(
-        _cell_capped(shard, max_bucket).select(
-            "bucket",
-            F.col("_id").alias("new_id"),
-            F.col("_vec").alias("_vec_n"),
-            F.col("_norm").alias("_norm_n"),
-        )
-    )
-    return touched, shard.select("_id").distinct(), probe
-
-
-def _emb_probe_pairs(
-    shard: DataFrame,
-    spark,
-    index_path: str,
-    meta: dict,
-    *,
-    threshold: float,
-    max_bucket: int,
-    shared: tuple | None = None,
-) -> DataFrame:
-    """Probe core shared by the batch operator and the streaming
-    micro-batch loop: banded shard → pruned index scan → per-side
-    two-pass hot-cell caps → cell-equi exact-cosine pairs. The index
-    side EXCLUDES the shard's own ids (anti-join), so re-probing an
-    already-appended shard emits byte-identical pairs
-    (replay-deterministic); same-batch duplicates are the explicit
-    :func:`_emb_intra_pairs` leg. Tombstoned ids
-    (:func:`embedding_index_delete`) are masked off the index side
-    BEFORE the hot-cell caps, exactly as if compaction had already
-    removed their rows. ``shared`` carries precomputed shard-side
-    artifacts (:func:`_emb_probe_shared`) when one shard probes
-    several same-family dirs."""
-    from tia_data_pipeline_spark.operators.scale import anti_join_index_tombstones
-
-    touched, shard_ids, probe = shared or _emb_probe_shared(
-        shard, max_bucket=max_bucket
-    )
-    idx = anti_join_index_tombstones(
-        _read_emb_index(spark, index_path, meta).filter(
-            F.col("bucket").isin(touched) if touched else F.lit(False)
-        ),
-        index_path,
-        index_schema_json=meta["schema_json"],
-        id_col="_id",
-    ).join(shard_ids, on="_id", how="left_anti")
-    hist = _cell_capped(idx, max_bucket).select(
-        "bucket",
-        F.col("_id").alias("dup_id"),
-        F.col("_vec").alias("_vec_o"),
-        F.col("_norm").alias("_norm_o"),
-    )
-    denom = F.col("_norm_n") * F.col("_norm_o")
-    score = F.when(denom > 0, dot(F.col("_vec_n"), F.col("_vec_o")) / denom)
-    # no pair-level dedup: one cell per vector on both sides, so a pair
-    # can co-occur in at most one cell (the _cell_equi_cosine_pairs
-    # rule)
-    return (
-        probe.join(hist, "bucket")
-        .select("new_id", "dup_id", portable_round(score, 6).alias("score"))
-        .filter(F.col("score") >= threshold)
-    )
-
-
-def _emb_intra_pairs(
-    shard: DataFrame, *, threshold: float, max_bucket: int
-) -> DataFrame:
-    """Duplicate pairs WITHIN one vector shard, canonical
-    ``new_id < dup_id`` — the explicit same-batch leg of the streaming
-    loop (the vector twin of :func:`…operators.dedup._intra_pairs`):
-    the index probe excludes the shard's own ids, so same-batch
-    duplicates can only surface here. One cell per vector ⇒ a pair
-    forms in at most one cell, no pair-level dedup needed."""
-    capped = _cell_capped(shard, max_bucket)
-    a = fan_out(
-        capped.select(
-            "bucket",
-            F.col("_id").alias("new_id"),
-            F.col("_vec").alias("_vec_n"),
-            F.col("_norm").alias("_norm_n"),
-        )
-    )
-    b = capped.select(
-        "bucket",
-        F.col("_id").alias("dup_id"),
-        F.col("_vec").alias("_vec_o"),
-        F.col("_norm").alias("_norm_o"),
-    )
-    denom = F.col("_norm_n") * F.col("_norm_o")
-    score = F.when(denom > 0, dot(F.col("_vec_n"), F.col("_vec_o")) / denom)
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("new_id") < F.col("dup_id"))
-        .select("new_id", "dup_id", portable_round(score, 6).alias("score"))
-        .filter(F.col("score") >= threshold)
-    )
-
-
-def embedding_index_append(
-    new_vecs: DataFrame,
-    index_path: str,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Append a shard's rows to the embedding index — idempotent
-    (twice ≡ once) via an anti-join on ``_id`` over the shard's touched
-    cells only (a vector's cell is a pure function of itself)."""
-    spark = new_vecs.sparkSession
-    meta = embedding_index_meta(spark, index_path)
-    shard = _emb_banded(new_vecs, meta, vec_col, id_col).persist()
-    try:
-        _emb_append_delta(shard, spark, index_path, meta)
-    finally:
-        shard.unpersist()
-
-
-def embedding_index_delete(
-    ids: DataFrame, index_path: str, *, id_col: str = "vec_id"
-) -> None:
-    """Tombstone vectors out of the embedding index — the vector twin
-    of :func:`…operators.dedup.minhash_index_delete` (same semantics:
-    masked from every probe immediately, physically removed at the
-    next compact, idempotent, ids-only)."""
-    from tia_data_pipeline_spark.operators.scale import append_index_tombstones
-
-    meta = embedding_index_meta(ids.sparkSession, index_path)
-    append_index_tombstones(
-        ids.select(F.col(id_col).alias("_id")),
-        index_path,
-        index_schema_json=meta["schema_json"],
-        id_col="_id",
-    )
-
-
-def embedding_index_compact(spark, path: str) -> dict:
-    """One file per ``bucket`` cell partition — the vector twin of
-    :func:`…operators.dedup.minhash_index_compact` (same swap
-    semantics; see scale.compact_partitioned_index). Applies pending
-    tombstones."""
-    from tia_data_pipeline_spark.operators.scale import compact_partitioned_index
-
-    meta = embedding_index_meta(spark, path)
-    return compact_partitioned_index(
-        spark, path,
-        partition_cols=("bucket",),
-        schema_json=meta["schema_json"],
-        side_dirs=(_EMB_META_DIR,),
-        tombstones_id_col="_id",
-    )
-
-
-def embedding_index_stats(spark, path: str) -> dict:
-    """Health census of the embedding index — the vector twin of
-    :func:`…operators.dedup.minhash_index_stats`."""
-    from tia_data_pipeline_spark.operators.scale import partitioned_index_stats
-
-    meta = embedding_index_meta(spark, path)
-    return partitioned_index_stats(
-        spark, path,
-        partition_cols=("bucket",),
-        schema_json=meta["schema_json"],
-        tombstones_id_col="_id",
-    )
-
-
-def _emb_append_delta(shard: DataFrame, spark, index_path: str, meta: dict) -> None:
-    """Append core shared by :func:`embedding_index_append` and the
-    streaming loop: anti-join already-indexed ids over the shard's
-    touched cells only (idempotent), write delta partitions."""
-    touched = sorted(
-        int(r["bucket"]) for r in shard.select("bucket").distinct().collect()
-    )
-    existing = (
-        _read_emb_index(spark, index_path, meta)
-        .filter(F.col("bucket").isin(touched) if touched else F.lit(False))
-        .select("_id")
-        .distinct()
-    )
-    delta = shard.join(existing, on="_id", how="left_anti")
-    delta.repartition("bucket").write.partitionBy("bucket").mode("append").parquet(
-        index_path
-    )
+    meta = {"proj_json": json.dumps(proj)}
+    cols = {"vec_col": vec_col, "id_col": id_col}
+    write_index_frame(EMBEDDING, EMBEDDING.band(corpus, meta, cols), path, meta)

@@ -589,7 +589,7 @@ def text_index_compact(spark: SparkSession, path: str) -> dict:
 
 def text_index_stats(spark: SparkSession, path: str) -> dict:
     """Health census of the text index — fragmentation / bucket skew /
-    pending-tombstone fraction, the `*_index_stats` family member."""
+    pending-tombstone fraction, the text member of the stats family."""
     from tia_data_pipeline_spark.operators.scale import partitioned_index_stats
 
     stats_row = read_corpus_stats(spark, path)

@@ -19,6 +19,7 @@ from tia_data_pipeline_spark.functions.vectors import (
     valid_embeddings,
 )
 from tia_data_pipeline_spark.operators import dedup as DD
+from tia_data_pipeline_spark.operators import index as IX
 from tia_data_pipeline_spark.operators import sampling as SMP
 from tia_data_pipeline_spark.operators import similarity as SIM
 from tia_data_pipeline_spark.operators.scale import fan_out
@@ -449,12 +450,13 @@ def q_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIM.embedding_write_index(
         emb.filter(F.col("vec_id") % 5 != 0), f"{tmp}/idx", proj=_PROJ4
     )
-    return SIM.embedding_dedup_incremental(
+    return IX.index_probe(
+        IX.EMBEDDING,
         emb.filter(F.col("vec_id") % 5 == 0),
-        f"{tmp}/idx",
+        [f"{tmp}/idx"],
         threshold=_EMBED_DEDUP_TAU,
         max_bucket=2000,
-    )
+    )[0]
 
 
 # ---------------------------------------------------------------------------
@@ -946,13 +948,14 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # each at sf0.1, walking up toward 256 shards as the corpus
         # grows)
     )
-    return DD.minhash_dedup_incremental(
+    return IX.index_probe(
+        IX.MINHASH,
         docs.filter(F.col("doc_id") % 5 == 0),
-        f"{tmp}/idx",
+        [f"{tmp}/idx"],
         text_col="text",
         id_col="doc_id",
         threshold=0.5,
-    )
+    )[0]
 
 
 # -- q_simhash_incremental parameters: 48-bit fingerprints in 4 × 12-bit
@@ -1008,14 +1011,15 @@ def q_simhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the intended bands×shards target for the 4-band simhash index)
         docs.filter(F.col("doc_id") % 5 != 0), "text", "doc_id", f"{tmp}/idx",
     )
-    return DD.simhash_dedup_incremental(
+    return IX.index_probe(
+        IX.SIMHASH,
         docs.filter(F.col("doc_id") % 5 == 0),
-        f"{tmp}/idx",
+        [f"{tmp}/idx"],
         text_col="text",
         id_col="doc_id",
         max_hamming=_SHI_HAMMING,
         max_bucket=_SHI_CAP,
-    )
+    )[0]
 
 
 @contract_query(
@@ -1040,7 +1044,7 @@ def q_simhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index deletion driven end-to-end: write the MinHash index over
     history (80% of the corpus), tombstone a third of it by ID ALONE
-    (minhash_index_delete — a takedown request never ships the text
+    (``index_delete`` — a takedown request never ships the text
     back), then probe today's shard. Tombstoned documents must behave
     exactly as if compaction had already removed their rows: they
     neither pair nor count toward any bucket's hot-cap population —
@@ -1048,7 +1052,7 @@ def q_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deletes are idempotent (twice ≡ once) and the tombstone table is
     request-sized, so the probe-side mask broadcasts (the 100 TB
     posture; physical removal is the q-independent
-    minhash_index_compact, pinned in tests/test_index_delete.py)."""
+    ``index_compact``, pinned in tests/test_index_delete.py)."""
     import atexit
     import shutil
     import tempfile
@@ -1069,15 +1073,16 @@ def q_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     doomed = docs.filter(
         (F.col("doc_id") % 5 != 0) & (F.col("doc_id") % 3 == 0)
     ).select("doc_id")
-    DD.minhash_index_delete(doomed, f"{tmp}/idx")
-    DD.minhash_index_delete(doomed, f"{tmp}/idx")  # idempotent by contract
-    return DD.minhash_dedup_incremental(
+    IX.index_delete(IX.MINHASH, doomed, f"{tmp}/idx")
+    IX.index_delete(IX.MINHASH, doomed, f"{tmp}/idx")  # idempotent by contract
+    return IX.index_probe(
+        IX.MINHASH,
         docs.filter(F.col("doc_id") % 5 == 0),
-        f"{tmp}/idx",
+        [f"{tmp}/idx"],
         text_col="text",
         id_col="doc_id",
         threshold=0.5,
-    )
+    )[0]
 
 
 def _takedown_oracle_sql() -> str:
@@ -1176,20 +1181,20 @@ def q_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     # any probe plan is constructed below.
     # shard count sized adaptively by the writer itself (ADVICE r12)
     DD.simhash_write_index(hist_docs, "text", "doc_id", f"{tmp}/sh_masked")
-    DD.simhash_index_delete(doomed_docs, f"{tmp}/sh_masked")
-    DD.simhash_index_delete(doomed_docs, f"{tmp}/sh_masked")  # idempotent
+    IX.index_delete(IX.SIMHASH, doomed_docs, f"{tmp}/sh_masked")
+    IX.index_delete(IX.SIMHASH, doomed_docs, f"{tmp}/sh_masked")  # idempotent
     shutil.copytree(f"{tmp}/sh_masked", f"{tmp}/sh_compacted")
-    DD.simhash_index_compact(spark, f"{tmp}/sh_compacted")
+    IX.index_compact(IX.SIMHASH, spark, f"{tmp}/sh_compacted")
 
     SIM.embedding_write_index(hist_emb, f"{tmp}/em_masked", proj=_PROJ4)
-    SIM.embedding_index_delete(doomed_emb, f"{tmp}/em_masked")
-    SIM.embedding_index_delete(doomed_emb, f"{tmp}/em_masked")  # idempotent
+    IX.index_delete(IX.EMBEDDING, doomed_emb, f"{tmp}/em_masked")
+    IX.index_delete(IX.EMBEDDING, doomed_emb, f"{tmp}/em_masked")  # idempotent
     shutil.copytree(f"{tmp}/em_masked", f"{tmp}/em_compacted")
-    SIM.embedding_index_compact(spark, f"{tmp}/em_compacted")
+    IX.index_compact(IX.EMBEDDING, spark, f"{tmp}/em_compacted")
 
     # Both phase probes of a family share one shard-side scaffolding
     # (fingerprint/projection frame, capped probe side, touched-
-    # partition collect) via the _multi probe forms — the masked and
+    # partition collect) via one multi-path probe — the masked and
     # compacted probes differ ONLY in the index dir they scan (guide
     # §2.4; round 12: the per-phase re-derivation was ~half the
     # query's stage waves).
@@ -1197,8 +1202,8 @@ def q_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames = []
     for phase, pairs in zip(
         phases,
-        DD.simhash_dedup_incremental_multi(
-            shard_docs, [f"{tmp}/sh_{p}" for p in phases],
+        IX.index_probe(
+            IX.SIMHASH, shard_docs, [f"{tmp}/sh_{p}" for p in phases],
             text_col="text", id_col="doc_id",
             max_hamming=_SHI_HAMMING, max_bucket=_SHI_CAP,
         ),
@@ -1213,8 +1218,8 @@ def q_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     for phase, pairs in zip(
         phases,
-        SIM.embedding_dedup_incremental_multi(
-            shard_emb, [f"{tmp}/em_{p}" for p in phases],
+        IX.index_probe(
+            IX.EMBEDDING, shard_emb, [f"{tmp}/em_{p}" for p in phases],
             threshold=_EMBED_DEDUP_TAU, max_bucket=2000,
         ),
     ):
@@ -1298,7 +1303,7 @@ def q_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIM.ivf_write_index(assigned, _SEM_CENTERS, f"{tmp}/idx")
     SIM.ivf_index_append(emb.filter(F.col("vec_id") % 5 == 0), f"{tmp}/idx")
     meta = SIM.ivf_index_meta(spark, f"{tmp}/idx")
-    idx = SIM._read_ivf_index(spark, f"{tmp}/idx", meta)
+    idx = IX.read_index(spark, f"{tmp}/idx", meta)
     d2 = F.least(
         SIM.nearest_centroid_struct(F.col("embedding"), _SEM_CENTERS)["d"],
         F.lit(_IVF_D2_CAP),

@@ -7,13 +7,9 @@ from tia_data_pipeline_spark.streaming.ann_serve import (
     stream_ann_topk,
 )
 from tia_data_pipeline_spark.streaming.dedup_serve import (
+    index_increment_batch,
     stream_index_deletes,
-    dedup_increment_batch,
-    embed_increment_batch,
-    simhash_increment_batch,
-    stream_dedup_incremental,
-    stream_embed_incremental,
-    stream_simhash_incremental,
+    stream_index_incremental,
 )
 from tia_data_pipeline_spark.streaming.joins import (
     interval_join_batch,
@@ -45,12 +41,8 @@ __all__ = [
     "stream_bm25_topk",
     "interval_join_batch",
     "stream_interval_join",
-    "dedup_increment_batch",
-    "stream_dedup_incremental",
-    "simhash_increment_batch",
-    "stream_simhash_incremental",
-    "embed_increment_batch",
-    "stream_embed_incremental",
+    "index_increment_batch",
+    "stream_index_incremental",
     "ann_search_batch",
     "ivf_append_batch",
     "stream_ann_topk",

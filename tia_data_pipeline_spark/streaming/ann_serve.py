@@ -26,6 +26,7 @@ from tia_data_pipeline_spark.operators.similarity import (
     ivf_index_meta,
     ivf_read_centers,
 )
+from tia_data_pipeline_spark.streaming.sinks import start_foreach_batch
 
 
 def ann_search_batch(
@@ -54,7 +55,8 @@ def ann_search_batch(
     pb = _ivf_probe_frame(batch_probes, cs, vec_col, probe_id_col, n_probe).persist()
     try:
         _ivf_batch_topk(
-            pb, spark, index_path, vec_col, id_col, probe_id_col, k, meta=meta
+            pb, spark, index_path, vec_col, id_col, probe_id_col, k,
+            meta if meta is not None else ivf_index_meta(spark, index_path),
         ).write.mode("overwrite").parquet(f"{topk_out}/batch_id={batch_id}")
     finally:
         pb.unpersist()
@@ -88,12 +90,7 @@ def stream_ann_topk(
             k=k, n_probe=n_probe, centers=centers, meta=meta,
         )
 
-    writer = probe_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(probe_stream, write_batch, checkpoint, available_now)
 
 
 def ivf_append_batch(
@@ -210,9 +207,4 @@ def stream_ivf_append(
 
             ivf_retrain(spark, index_path)
 
-    writer = vec_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(vec_stream, write_batch, checkpoint, available_now)

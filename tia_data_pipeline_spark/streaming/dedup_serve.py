@@ -1,311 +1,107 @@
-"""Streaming incremental dedup — the serving loops over the persisted
-near-dup indexes: MinHash signatures (Jaccard), SimHash fingerprints
-(hamming), and embedding sign-buckets (cosine). All three share the
-same replay discipline, documented below for the MinHash form.
+"""Streaming incremental dedup — the serving loop over a persisted
+banded near-dup index (any ``operators.index.IndexFamily``: MinHash,
+SimHash or embedding sign-buckets), plus the deletion-request loop over
+every index kind.
 
-The batch operator (:func:`…operators.dedup.minhash_dedup_incremental`)
-dedupes ONE shard; this runs the production loop: documents arrive as a
-stream, every micro-batch probes the index for near-duplicates of what
-it carries, emits the pairs, and (optionally) appends its own
-signatures so later batches dedupe against it — the streaming form of
-``comments_pipeline.py:33``'s daily-increment semantics, like
-streaming/windows.py is for inc-window.
+Every micro-batch probes the index for near-duplicates of what it
+carries, emits the pairs and (optionally) appends its own rows so later
+batches dedupe against it — the streaming form of
+``comments_pipeline.py:33``'s daily-increment semantics. Its pairs are
+the index core's cross and intra legs, both replay-deterministic.
 
-A batch's pair output has TWO legs, both replay-deterministic:
-
-* cross: batch vs index-minus-batch (:func:`_probe_pairs` anti-joins
-  the batch's own ids off the index side, so a replay that crashed
-  between append and checkpoint commit reproduces byte-identical
-  pairs — without the exclusion, the replayed probe would see the
-  batch's own half-appended signatures and emit crash-dependent
-  extras);
-* intra: duplicates WITHIN the batch (:func:`_intra_pairs`,
-  canonical ``new_id < dup_id``) — the probe can never see these (own
-  ids excluded), so they are computed explicitly; a serving loop that
-  silently drops same-day duplicates has a recall hole.
-
-Exactly-once contents under Structured Streaming's at-least-once
-``foreachBatch`` replay: each batch OVERWRITES its own ``batch_id=N``
-parquet subdirectory (a replayed batch rewrites identical content),
-and the index append anti-joins already-indexed ids (twice ≡ once).
-
-Inside one batch the banded signature frame is persisted ONCE and
-shared by both pair legs and the append (the signature aggregate is
-the CPU-heavy leg), with the cache released on every exit path: a
-foreachBatch loop that leaks one cache per trigger runs its executors
-out of storage memory by the hundredth batch. The immutable index
-meta is read once per stream, not per trigger.
+Exactly-once contents under ``foreachBatch``'s at-least-once replay:
+each batch OVERWRITES its own ``batch_id=N`` subdirectory and the
+append anti-joins already-indexed rows (twice ≡ once). The banded frame
+is persisted once per batch, shared by both legs and the append, and
+released on every exit path (one leaked cache per trigger exhausts
+executor storage memory); the immutable meta is read once per stream.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from tia_data_pipeline_spark.operators.dedup import (
+from tia_data_pipeline_spark.operators.index import (
+    FAMILIES,
+    IndexFamily,
     _append_delta,
-    _band_shard,
-    _check_band_guarantee,
-    _intra_pairs,
-    _probe_pairs,
-    _simhash_intra_pairs,
-    _simhash_probe_pairs,
-    minhash_band_frame,
-    minhash_index_meta,
-    simhash_band_frame,
-    simhash_index_meta,
+    _cross,
+    _intra,
+    _opts,
+    _shard_side,
+    index_delete,
+    index_meta,
 )
-from tia_data_pipeline_spark.operators.similarity import (
-    _emb_append_delta,
-    _emb_banded,
-    _emb_intra_pairs,
-    _emb_probe_pairs,
-    embedding_index_meta,
-)
+from tia_data_pipeline_spark.streaming.sinks import start_foreach_batch
 
 
-def dedup_increment_batch(
-    batch_docs: DataFrame,
+def index_increment_batch(
+    family: IndexFamily,
+    batch: DataFrame,
     index_path: str,
     pairs_out: str,
     batch_id: int,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    max_bucket: int = 1000,
     update_index: bool = True,
     meta: dict | None = None,
+    **opts,
 ) -> None:
     """One micro-batch of the serving loop: (cross ∪ intra) pairs →
     ``pairs_out/batch_id=N`` (overwrite: replay-idempotent) → append
-    the batch's own signatures (idempotent). Callable directly for a
-    scheduled daily job; :func:`stream_dedup_incremental` wires it to
-    ``foreachBatch`` and passes the once-read ``meta`` through."""
-    spark = batch_docs.sparkSession
+    the batch's own rows (idempotent). ``opts`` override
+    ``family.defaults``. Callable directly for a scheduled daily job;
+    :func:`stream_index_incremental` wires it to ``foreachBatch`` and
+    passes the once-read ``meta`` through."""
+    o = _opts(family, opts)
+    spark = batch.sparkSession
     if meta is None:
-        meta = minhash_index_meta(spark, index_path)
-    banded = (
-        minhash_band_frame(
-            batch_docs, text_col, id_col,
-            k=meta["k"], bands=meta["bands"], seed=meta["seed"],
-            shingle_n=meta["shingle_n"], portable=meta["portable"],
-        )
-        .withColumn("bshard", _band_shard(meta["n_shards"]))
-        .persist()
-    )
+        meta = index_meta(family, spark, index_path)
+    check = family.check(meta, o)
+    cap = o["max_bucket"]
+    banded = family.band(batch, meta, o).persist()
     try:
-        cross = _probe_pairs(
-            banded, spark, index_path, meta,
-            threshold=threshold, max_bucket=max_bucket,
-        )
-        intra = _intra_pairs(banded, meta, threshold=threshold, max_bucket=max_bucket)
-        cross.unionByName(intra).write.mode("overwrite").parquet(
-            f"{pairs_out}/batch_id={batch_id}"
-        )
+        shard = _shard_side(family, banded, meta, cap)
+        cross = _cross(family, shard, spark, index_path, meta, check, cap)
+        cross.unionByName(_intra(family, banded, check, cap)).write.mode(
+            "overwrite"
+        ).parquet(f"{pairs_out}/batch_id={batch_id}")
         if update_index:
-            _append_delta(banded, spark, index_path, meta)
+            _append_delta(family, banded, spark, index_path, meta)
     finally:
         banded.unpersist()
 
 
-def stream_dedup_incremental(
-    doc_stream: DataFrame,
+def stream_index_incremental(
+    family: IndexFamily,
+    stream: DataFrame,
     *,
     index_path: str,
     pairs_out: str,
     checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    max_bucket: int = 1000,
     update_index: bool = True,
     available_now: bool = True,
+    **opts,
 ) -> StreamingQuery:
-    """Run a document stream through the incremental dedup loop.
-
-    ``available_now=True`` drains what exists and stops (the scheduled
-    daily-shard mode, same trigger discipline as
-    streaming/sinks.py::stream_upsert_jdbc); ``False`` runs
-    continuously. The index must already exist
-    (:func:`…operators.dedup.minhash_write_index` — day-zero bootstrap
+    """Run a document or vector stream through the incremental dedup
+    loop. ``available_now=False`` runs continuously. The index must
+    already exist (the family's ``*_write_index`` — day-zero bootstrap
     may write an EMPTY corpus; the meta table keeps it probeable)."""
     # the meta side table is immutable after write: read it ONCE here,
-    # not per trigger (a continuous stream would otherwise pay a
-    # driver-side parquet listing + collect on every micro-batch)
-    meta = minhash_index_meta(doc_stream.sparkSession, index_path)
+    # not per trigger, and fail fast on bad options (a mid-stream
+    # per-batch failure would poison the checkpoint instead)
+    meta = index_meta(family, stream.sparkSession, index_path)
+    family.check(meta, _opts(family, opts))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_increment_batch(
-            batch_df, index_path, pairs_out, batch_id,
-            text_col=text_col, id_col=id_col,
-            threshold=threshold, max_bucket=max_bucket,
-            update_index=update_index, meta=meta,
+        index_increment_batch(
+            family, batch_df, index_path, pairs_out, batch_id,
+            update_index=update_index, meta=meta, **opts,
         )
 
-    writer = doc_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def embed_increment_batch(
-    batch_vecs: DataFrame,
-    index_path: str,
-    pairs_out: str,
-    batch_id: int,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    max_bucket: int = 2000,
-    update_index: bool = True,
-    meta: dict | None = None,
-) -> None:
-    """One micro-batch of the embedding serving loop — the vector twin
-    of :func:`dedup_increment_batch`, same replay discipline: (cross ∪
-    intra) exact-cosine pairs → ``pairs_out/batch_id=N`` (overwrite),
-    then the idempotent index append; the banded (id, vec, norm, cell)
-    frame is persisted once per batch and released on every exit
-    path."""
-    spark = batch_vecs.sparkSession
-    if meta is None:
-        meta = embedding_index_meta(spark, index_path)
-    banded = _emb_banded(batch_vecs, meta, vec_col, id_col).persist()
-    try:
-        cross = _emb_probe_pairs(
-            banded, spark, index_path, meta,
-            threshold=threshold, max_bucket=max_bucket,
-        )
-        intra = _emb_intra_pairs(banded, threshold=threshold, max_bucket=max_bucket)
-        cross.unionByName(intra).write.mode("overwrite").parquet(
-            f"{pairs_out}/batch_id={batch_id}"
-        )
-        if update_index:
-            _emb_append_delta(banded, spark, index_path, meta)
-    finally:
-        banded.unpersist()
-
-
-def stream_embed_incremental(
-    vec_stream: DataFrame,
-    *,
-    index_path: str,
-    pairs_out: str,
-    checkpoint: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    max_bucket: int = 2000,
-    update_index: bool = True,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Run a vector stream through the embedding incremental dedup
-    loop (same trigger discipline as :func:`stream_dedup_incremental`;
-    the index must already exist via
-    :func:`…operators.similarity.embedding_write_index`)."""
-    # meta (projection matrix + row schema) is immutable after write:
-    # read once per stream, not per trigger
-    meta = embedding_index_meta(vec_stream.sparkSession, index_path)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        embed_increment_batch(
-            batch_df, index_path, pairs_out, batch_id,
-            vec_col=vec_col, id_col=id_col,
-            threshold=threshold, max_bucket=max_bucket,
-            update_index=update_index, meta=meta,
-        )
-
-    writer = vec_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def simhash_increment_batch(
-    batch_docs: DataFrame,
-    index_path: str,
-    pairs_out: str,
-    batch_id: int,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket: int = 1000,
-    update_index: bool = True,
-    meta: dict | None = None,
-) -> None:
-    """One micro-batch of the SimHash serving loop — the hamming-
-    distance twin of :func:`dedup_increment_batch`, with identical
-    replay discipline: (cross ∪ intra) pairs → ``pairs_out/batch_id=N``
-    (overwrite), then the idempotent index append; the banded frame is
-    persisted once per batch and released on every exit path."""
-    spark = batch_docs.sparkSession
-    if meta is None:
-        meta = simhash_index_meta(spark, index_path)
-    _check_band_guarantee(meta, max_hamming)
-    banded = simhash_band_frame(
-        batch_docs, text_col, id_col,
-        bits=meta["bits"], bands=meta["bands"], n_shards=meta["n_shards"],
-    ).persist()
-    try:
-        cross = _simhash_probe_pairs(
-            banded, spark, index_path, meta,
-            max_hamming=max_hamming, max_bucket=max_bucket,
-        )
-        intra = _simhash_intra_pairs(
-            banded, max_hamming=max_hamming, max_bucket=max_bucket
-        )
-        cross.unionByName(intra).write.mode("overwrite").parquet(
-            f"{pairs_out}/batch_id={batch_id}"
-        )
-        if update_index:
-            _append_delta(banded, spark, index_path, meta)
-    finally:
-        banded.unpersist()
-
-
-def stream_simhash_incremental(
-    doc_stream: DataFrame,
-    *,
-    index_path: str,
-    pairs_out: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket: int = 1000,
-    update_index: bool = True,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Run a document stream through the SimHash incremental dedup
-    loop (same trigger discipline as :func:`stream_dedup_incremental`;
-    the index must already exist via
-    :func:`…operators.dedup.simhash_write_index`)."""
-    # meta is immutable after write: read once per stream, not per
-    # trigger (and fail fast on an over-guarantee max_hamming — a
-    # mid-stream per-batch failure would poison the checkpoint instead)
-    meta = simhash_index_meta(doc_stream.sparkSession, index_path)
-    _check_band_guarantee(meta, max_hamming)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        simhash_increment_batch(
-            batch_df, index_path, pairs_out, batch_id,
-            text_col=text_col, id_col=id_col,
-            max_hamming=max_hamming, max_bucket=max_bucket,
-            update_index=update_index, meta=meta,
-        )
-
-    writer = doc_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, write_batch, checkpoint, available_now)
 
 
 def stream_index_deletes(
@@ -313,48 +109,36 @@ def stream_index_deletes(
     *,
     index_path: str,
     checkpoint: str,
-    family: str,
     id_col: str | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
     """Run a DELETION-REQUEST stream (takedown ids) against a persisted
-    index — the write-side mirror of the append loops, completing the
-    streaming lifecycle: documents arrive via `stream_*_incremental`,
-    leave via this. ``family`` picks the index kind ("minhash",
-    "simhash", "embedding", "ivf"); each micro-batch appends its ids as
-    tombstones (idempotent — a foreachBatch replay re-tombstones
+    index of any kind — the write-side mirror of the append loops:
+    documents arrive via :func:`stream_index_incremental` (or the IVF
+    and text loops) and leave via this. Each micro-batch appends its
+    ids as tombstones (idempotent — a foreachBatch replay re-tombstones
     already-tombstoned ids into nothing, so at-least-once delivery is
     exactly-once in effect). Physical removal stays the scheduled
-    `*_index_compact` maintenance op; probes mask immediately.
+    compact; probes mask immediately.
 
-    ``id_col=None`` keeps each family's OWN default ("doc_id" for the
+    ``id_col=None`` keeps the index's OWN default ("doc_id" for the
     text-hash families and the BM25 text index, "vec_id" for
-    embedding, the meta-recorded column for IVF — review r9:
-    forwarding one hardcoded name broke every non-document family);
-    pass it only to override."""
-    from tia_data_pipeline_spark.operators.dedup import (
-        minhash_index_delete,
-        simhash_index_delete,
-    )
-    from tia_data_pipeline_spark.operators.similarity import (
-        embedding_index_delete,
-        ivf_index_delete,
-    )
+    embedding, the meta-recorded column for IVF); pass it only to
+    override."""
+    from tia_data_pipeline_spark.operators.scale import hadoop_fs_path
+    from tia_data_pipeline_spark.operators.similarity import _IVF_META_DIR, ivf_index_delete
     from tia_data_pipeline_spark.operators.text_index import text_index_delete
 
-    deleters = {
-        "minhash": minhash_index_delete,
-        "simhash": simhash_index_delete,
-        "embedding": embedding_index_delete,
-        "ivf": ivf_index_delete,
-        "text": text_index_delete,
-    }
-    try:
-        delete = deleters[family]
-    except KeyError:
-        raise ValueError(
-            f"unknown index family {family!r}; one of {sorted(deleters)}"
-        ) from None
+    def holds(meta_dir: str) -> bool:
+        fs, p = hadoop_fs_path(id_stream.sparkSession, f"{index_path}/{meta_dir}")
+        return bool(fs.exists(p))
+
+    # the index kind is read from the meta side table the dir carries
+    verbs = [(f.meta_dir, partial(index_delete, f)) for f in FAMILIES]
+    verbs += [(_IVF_META_DIR, ivf_index_delete), ("_corpus_stats", text_index_delete)]
+    delete = next((verb for meta_dir, verb in verbs if holds(meta_dir)), None)
+    if delete is None:
+        raise ValueError(f"{index_path} holds no index meta table; write the index first")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if id_col is None:
@@ -362,9 +146,4 @@ def stream_index_deletes(
         else:
             delete(batch_df, index_path, id_col=id_col)
 
-    writer = id_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(id_stream, write_batch, checkpoint, available_now)

@@ -28,6 +28,21 @@ from pyspark.sql.streaming import StreamingQuery
 from tia_data_pipeline_spark.sources.jdbc import jdbc_ensure_table, jdbc_merge_upsert
 
 
+def start_foreach_batch(
+    stream: DataFrame, write_batch, checkpoint: str, available_now: bool
+) -> StreamingQuery:
+    """Start ``stream`` through ``write_batch`` under ``checkpoint`` —
+    the one trigger discipline of every foreachBatch loop:
+    ``available_now=True`` drains what exists and stops (the scheduled
+    batch mode), ``False`` runs continuously."""
+    writer = stream.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_upsert_jdbc(
     stream_df: DataFrame,
     *,
@@ -55,9 +70,4 @@ def stream_upsert_jdbc(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         jdbc_merge_upsert(batch_df, url, table, keys)
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, write_batch, checkpoint, available_now)

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from tia_data_pipeline_spark.streaming.sinks import start_foreach_batch
+
 
 def text_index_append_batch(
     batch_docs: DataFrame,
@@ -134,12 +136,7 @@ def stream_bm25_topk(
             query_id_col=query_id_col, terms_col=terms_col, k=k,
         )
 
-    writer = query_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(query_stream, write_batch, checkpoint, available_now)
 
 
 def stream_text_index_append(
@@ -166,9 +163,4 @@ def stream_text_index_append(
             batch_df, index_path, id_col=id_col, text_col=text_col
         )
 
-    writer = doc_stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(doc_stream, write_batch, checkpoint, available_now)
