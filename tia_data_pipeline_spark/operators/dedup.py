@@ -202,7 +202,7 @@ def capped_bucket_members(
     )
 
 
-def band_width(n: int, bands: int, what: str) -> int:
+def _band_width(n: int, bands: int, what: str) -> int:
     """Rows per band when ``n`` signature positions split into ``bands``
     equal bands. A remainder raises: r = n // bands would silently band
     only bands·r of the n positions and lose recall with no error (a
@@ -301,7 +301,7 @@ def minhash_band_frame(
     ``portable=True`` keys buckets by the raw band slice (array of r
     signature components — DuckDB-reproducible); default keys by
     xxhash64 of the slice (8-byte keys, JVM-only)."""
-    r = band_width(k, bands, "k")
+    r = _band_width(k, bands, "k")
     sig = minhash_signature_frame(
         df, text_col, id_col, k, seed, shingle_n=shingle_n, portable=portable
     )
@@ -408,7 +408,7 @@ def _minhash_sql_fragments(
     matching-component fraction between signature aliases
     ``a_alias``/``b_alias``. Returns (mins, sig_list, band_structs,
     match_frac)."""
-    r = band_width(k, bands, "k")
+    r = _band_width(k, bands, "k")
     fam = _hash_family(k, seed)
     mins = ", ".join(
         f"min(({a} * x + {b}) % {_MINHASH_P}) AS m{i}" for i, (a, b) in enumerate(fam)
@@ -833,7 +833,7 @@ def simhash_band_frame(
     a bounded shard of the bucket so (band, bshard) is a stable
     partition key. Equal (bits, bands, n_shards) ⇒ identical collision
     keys, which is what makes yesterday's index probeable today."""
-    r = band_width(bits, bands, "bits")
+    r = _band_width(bits, bands, "bits")
     sig = _simhash_fp_frame(df, text_col, id_col, bits)
     return sig.select(
         "_id",
@@ -906,7 +906,7 @@ def simhash_incremental_oracle_sql(
     and the forms agreed only for disjoint predicates (ADVICE r8).
     Both predicates must be deterministic row predicates on
     ``table``."""
-    r = band_width(bits, bands, "bits")
+    r = _band_width(bits, bands, "bits")
     votes, fp = _simhash_sql_votes(bits)
     divisors = ", ".join(f"({b}, {1 << (r * b)}::BIGINT)" for b in range(bands))
 
