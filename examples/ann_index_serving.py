@@ -8,12 +8,14 @@ serving shape at corpus scale.
    cell id (``…/_cell=K/``) — the layout IS the index: a probe's
    ``_cell IN (nearest n_probe)`` predicate prunes at the partition
    level, so serving scans n_probe/n_lists of the data.
-2. Serve a probe from the written index and compare against the exact
-   brute-force top-k to show what the recall trade bought.
-3. Serve a BATCH of probes through the same index
-   (``ivf_search_batch`` — each probe ranks the centers
-   in-expression; one pruned scan serves the whole batch); the
-   streaming form is ``streaming/ann_serve.py::stream_ann_topk``.
+2. Serve a probe from the written index — a one-row probe frame
+   through ``ivf_search_batch``, the one IVF serve path — and compare
+   against the exact brute-force top-k to show what the recall trade
+   bought.
+3. Serve a BATCH of probes through the same call (each probe ranks
+   the centers in-expression; one pruned scan serves the whole
+   batch); the streaming form is
+   ``streaming/ann_serve.py::stream_ann_topk``.
 4. Run the REST of the index lifecycle: append a new-vector shard to
    the pinned centroids (idempotent) and read its centroid-drift
    ratio — the re-train signal; tombstone a vector by id (masked from
@@ -40,7 +42,6 @@ from tia_data_pipeline_spark.operators.similarity import (
     ivf_index_delete,
     ivf_index_stats,
     ivf_search_batch,
-    ivf_search_indexed,
     ivf_write_index,
     projection_bits_for,
 )
@@ -65,9 +66,11 @@ def main() -> None:
     # (both sides use the SAME collected probe row — a second limit(1)
     # could re-plan onto a different row and make recall meaningless)
     probe_row = emb.limit(1).collect()[0]
-    probe = list(probe_row["embedding"])
-    probe_df = spark.createDataFrame([(probe_row["vec_id"], probe)], "vec_id bigint, embedding array<double>")
-    approx = ivf_search_indexed(spark, index_dir, probe, k=10, n_probe=4)
+    probe_df = spark.createDataFrame(
+        [(probe_row["vec_id"], list(probe_row["embedding"]))],
+        "probe_id bigint, embedding array<double>",
+    )
+    approx = ivf_search_batch(probe_df, index_dir, k=10, n_probe=4).orderBy("rnk")
     exact = brute_force_top_k(emb, probe_df, k=10)
 
     approx_ids = [r["vec_id"] for r in approx.collect()]
@@ -121,7 +124,7 @@ def main() -> None:
     # every probe NOW), then compact to remove physically
     doomed = spark.createDataFrame([(int(exact_ids[0]),)], "vec_id bigint")
     ivf_index_delete(doomed, index_dir)
-    post = ivf_search_indexed(spark, index_dir, probe, k=10, n_probe=16)
+    post = ivf_search_batch(probe_df, index_dir, k=10, n_probe=16)
     assert exact_ids[0] not in [r["vec_id"] for r in post.collect()]
     print(f"vec_id={exact_ids[0]} tombstoned: gone from a full-cell search")
     print("health census before compact:", ivf_index_stats(spark, index_dir))

@@ -16,8 +16,9 @@ corpus-retention flow a 100 TB training-data platform must support):
    - ``lakehouse.delete_keys``   → rows leave the store
    - ``index_delete`` / ``text_index_delete`` → tombstones mask
      every probe NOW
-3. Prove invisibility: near-dup probes and BM25 serving no longer see
-   the documents (scores/df/N all track the live membership).
+3. Prove invisibility: near-dup probes and BM25 serving (a one-query
+   ``bm25_search_batch``) no longer see the documents (scores/df/N
+   all track the live membership).
 4. Compact in the maintenance window: tombstoned rows are removed
    PHYSICALLY and the applied tombstones go with them; probes read
    byte-identical results before/after the removal.
@@ -46,7 +47,7 @@ from tia_data_pipeline_spark.operators.index import (
     index_stats,
 )
 from tia_data_pipeline_spark.operators.text_index import (
-    bm25_search_indexed,
+    bm25_search_batch,
     build_text_index,
     text_index_compact,
     text_index_delete,
@@ -81,8 +82,17 @@ def main() -> None:
         for r in index_probe(MINHASH, probe, [mh], threshold=0.9)[0].collect()
     }
     assert victims[0] in hits
-    terms = victim_text.split()[:4]
-    top_before = [int(r["doc_id"]) for r in bm25_search_indexed(spark, tx, terms, k=5).collect()]
+    query = spark.createDataFrame(
+        [(1, victim_text.split()[:4])], "query_id bigint, terms array<string>"
+    )
+
+    def bm25_top5() -> list[int]:
+        return [
+            int(r["doc_id"])
+            for r in bm25_search_batch(query, tx, k=5).orderBy("rnk").collect()
+        ]
+
+    top_before = bm25_top5()
     print(f"before: near-dup probe finds {sorted(hits)}; bm25 top-5 {top_before}")
 
     # 2. the request: ids only, each leg idempotent — run twice to prove it
@@ -106,7 +116,7 @@ def main() -> None:
         r["dup_id"]
         for r in index_probe(SIMHASH, probe, [sh], max_hamming=3)[0].collect()
     } & set(victims)
-    masked_top = [int(r["doc_id"]) for r in bm25_search_indexed(spark, tx, terms, k=5).collect()]
+    masked_top = bm25_top5()
     assert not set(masked_top) & set(victims)
     st = index_stats(MINHASH, spark, mh)
     print(f"masked: bm25 top-5 now {masked_top}; minhash tombstone "
@@ -118,7 +128,7 @@ def main() -> None:
     text_index_compact(spark, tx)
     assert spark.read.parquet(mh).filter(F.col("_id").isin(victims)).count() == 0
     assert index_stats(MINHASH, spark, mh)["tombstones"] == 0
-    after_top = [int(r["doc_id"]) for r in bm25_search_indexed(spark, tx, terms, k=5).collect()]
+    after_top = bm25_top5()
     assert after_top == masked_top, "physical removal must be probe-invisible"
     print("compacted: rows physically gone from every index; serving unchanged")
 

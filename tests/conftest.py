@@ -69,3 +69,18 @@ def assert_cache_settles_to(jsc, want: int, what: str = "cache", timeout: float 
         _time.sleep(0.2)
         n = len(jsc.getRDDStorageInfo())
     assert n <= want, f"{what} leaked: {n} cached RDDs, expected <= {want}"
+
+
+def bm25_serve_one(spark, path: str, terms, k: int = 20) -> list[tuple]:
+    """One BM25 query served from a text index as a one-row batch:
+    ``(doc_id, n_terms, score)`` tuples in rank order — q_bm25's row
+    shape."""
+    from tia_data_pipeline_spark.operators.text_index import bm25_search_batch
+
+    query = spark.createDataFrame(
+        [(1, list(terms))], "query_id bigint, terms array<string>"
+    )
+    return [
+        (r["doc_id"], r["n_terms"], r["score"])
+        for r in bm25_search_batch(query, path, k=k).orderBy("rnk").collect()
+    ]

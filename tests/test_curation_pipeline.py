@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SMOKE_SF
+from tests.conftest import SMOKE_SF, bm25_serve_one
 from tia_data_pipeline_spark.catalog import load_table
 from tia_data_pipeline_spark.functions.text import word_count
 from tia_data_pipeline_spark.operators.dedup import exact_dedup, word_shingles
@@ -101,10 +101,7 @@ def test_release_gate_statistics_on_shards(spark, tmp_path):
     retrieval index built ON the artifact that serves sane results."""
     from pyspark.sql.window import Window
 
-    from tia_data_pipeline_spark.operators.text_index import (
-        bm25_search_indexed,
-        build_text_index,
-    )
+    from tia_data_pipeline_spark.operators.text_index import build_text_index
     from tia_data_pipeline_spark.sources.shards import write_training_shards
 
     docs = load_table(spark, SMOKE_SF, "documents").select("doc_id", "text")
@@ -153,5 +150,5 @@ def test_release_gate_statistics_on_shards(spark, tmp_path):
     # retrieval index on the artifact serves plausible results
     idx = str(tmp_path / "idx")
     build_text_index(back.select("doc_id", "text"), idx)
-    hits = bm25_search_indexed(spark, idx, ["spark", "join"], k=5).collect()
-    assert len(hits) == 5 and all(h["score"] is not None for h in hits)
+    hits = bm25_serve_one(spark, idx, ["spark", "join"], k=5)
+    assert len(hits) == 5 and all(score is not None for _, _, score in hits)

@@ -11,7 +11,9 @@ from pyspark.sql import functions as F
 
 from tia_data_pipeline_spark.operators.similarity import (
     brute_force_top_k,
-    ivf_top_k,
+    ivf_build_index,
+    ivf_search_batch,
+    ivf_write_index,
     lsh_top_k,
     projection_matrix,
 )
@@ -31,15 +33,23 @@ def _clustered_corpus(spark, n_clusters=8, per_cluster=40, dim=16, seed=5):
     return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
 
 
-def test_ivf_matches_brute_force_on_clusters(spark):
+def _ivf_serve_one(path, probe, **kw):
+    """(vec_id, score) rows of one probe served as a one-row batch."""
+    pb = probe.select(F.lit(0).alias("probe_id"), "embedding")
+    return [
+        (r["vec_id"], r["score"])
+        for r in ivf_search_batch(pb, path, **kw).orderBy("rnk").collect()
+    ]
+
+
+def test_ivf_matches_brute_force_on_clusters(spark, tmp_path):
     corpus = _clustered_corpus(spark)
     probe = corpus.filter(F.col("vec_id") == 0)
     rest = corpus.filter(F.col("vec_id") != 0)
     exact = [r["vec_id"] for r in brute_force_top_k(rest, probe, k=10).collect()]
-    approx = [
-        r["vec_id"]
-        for r in ivf_top_k(rest, probe, k=10, n_lists=8, n_probe=2).collect()
-    ]
+    path = str(tmp_path / "ivf")
+    ivf_write_index(*ivf_build_index(rest, n_lists=8), path)
+    approx = [v for v, _ in _ivf_serve_one(path, probe, k=10, n_probe=2)]
     recall = len(set(exact) & set(approx)) / 10
     assert recall >= 0.9, f"IVF recall {recall} on clustered data (exact={exact}, ivf={approx})"
 
@@ -49,12 +59,7 @@ def test_ivf_fit_sample_is_bounded_and_serving_exact(spark, tmp_path):
     id-hash sample while ASSIGNMENT stays full-corpus — the build still
     assigns every vector a cell, and full-probe serving over the
     sampled-fit index is still exactly brute force."""
-    from tia_data_pipeline_spark.operators.similarity import (
-        _kmeans_fit_input,
-        ivf_build_index,
-        ivf_search_indexed,
-        ivf_write_index,
-    )
+    from tia_data_pipeline_spark.operators.similarity import _kmeans_fit_input
 
     corpus = _clustered_corpus(spark, n_clusters=6, per_cluster=30)
     n = corpus.count()
@@ -72,13 +77,10 @@ def test_ivf_fit_sample_is_bounded_and_serving_exact(spark, tmp_path):
     assert assigned.count() == n, "assignment must stay full-corpus"
     path = str(tmp_path / "ivf_sampled")
     ivf_write_index(assigned, centers, path)
-    probe_vec = [float(x) for x in corpus.filter(F.col("vec_id") == 0).first()["embedding"]]
-    full = ivf_search_indexed(spark, path, probe_vec, k=5, n_probe=6, centers=centers)
     probe_df = corpus.filter(F.col("vec_id") == 0).select("embedding")
+    full = _ivf_serve_one(path, probe_df, k=5, n_probe=6, centers=centers)
     exact = brute_force_top_k(spark.read.parquet(path), probe_df, k=5)
-    assert [(r["vec_id"], r["score"]) for r in full.collect()] == [
-        (r["vec_id"], r["score"]) for r in exact.collect()
-    ]
+    assert full == [(r["vec_id"], r["score"]) for r in exact.collect()]
 
 
 def test_multiprobe_recall_dominates_single_probe(spark):
@@ -98,18 +100,11 @@ def test_multiprobe_recall_dominates_single_probe(spark):
 
 def test_ivf_partitioned_index_prunes_and_serves(spark, tmp_path):
     """The persisted IVF index must (1) lay the corpus out partitioned
-    by cell, (2) plan a PartitionFilter from the literal n_probe cell
-    predicate so the scan opens only the probed cells' files, and
-    (3) with n_probe = n_lists reproduce exact brute force."""
-    import contextlib
-    import io
-
-    from tia_data_pipeline_spark.operators.similarity import (
-        ivf_build_index,
-        ivf_read_centers,
-        ivf_search_indexed,
-        ivf_write_index,
-    )
+    by cell so a cell predicate opens only that cell's files, and
+    (2) with n_probe = n_lists reproduce exact brute force, scores
+    included. The serve's PartitionFilter is pinned in
+    tests/test_ann_serve.py::test_probe_scan_prunes_index_partitions."""
+    from tia_data_pipeline_spark.operators.similarity import ivf_read_centers
 
     corpus = _clustered_corpus(spark, n_clusters=6, per_cluster=30)
     assigned, centers = ivf_build_index(corpus, n_lists=6, seed=7)
@@ -117,23 +112,12 @@ def test_ivf_partitioned_index_prunes_and_serves(spark, tmp_path):
     ivf_write_index(assigned, centers, path)
     assert ivf_read_centers(spark, path) == centers
 
-    probe_vec = [float(x) for x in corpus.filter(F.col("vec_id") == 0).first()["embedding"]]
-
     # full probe == exact brute force over the same table
-    full = ivf_search_indexed(spark, path, probe_vec, k=5, n_probe=6, centers=centers)
     probe_df = corpus.filter(F.col("vec_id") == 0).select("embedding")
+    full = _ivf_serve_one(path, probe_df, k=5, n_probe=6, centers=centers)
     exact = brute_force_top_k(spark.read.parquet(path), probe_df, k=5)
-    assert [(r["vec_id"], r["score"]) for r in full.collect()] == [
-        (r["vec_id"], r["score"]) for r in exact.collect()
-    ]
+    assert full == [(r["vec_id"], r["score"]) for r in exact.collect()]
 
-    # pruned probe: partition filter in the plan, subset of files read
-    pruned = ivf_search_indexed(spark, path, probe_vec, k=5, n_probe=2, centers=centers)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "_cell" in plan
     # input_file_name() reflects files actually opened post-pruning
     # (inputFiles() is relation-level and ignores the filter)
     read_files = {
@@ -150,7 +134,8 @@ def test_ivf_partitioned_index_prunes_and_serves(spark, tmp_path):
 
     # the pruned search still finds the probe's own cluster (vec_id 0's
     # nearest cell contains its 29 blob siblings)
-    top = [r["vec_id"] for r in pruned.collect()]
+    pruned = _ivf_serve_one(path, probe_df, k=5, n_probe=2, centers=centers)
+    top = [v for v, _ in pruned]
     assert top[0] == 0 and len(top) == 5
 
 

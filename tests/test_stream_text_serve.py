@@ -9,12 +9,9 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SMOKE_SF
+from tests.conftest import SMOKE_SF, bm25_serve_one
 from tia_data_pipeline_spark.catalog import load_table
-from tia_data_pipeline_spark.operators.text_index import (
-    bm25_search_indexed,
-    build_text_index,
-)
+from tia_data_pipeline_spark.operators.text_index import build_text_index
 from tia_data_pipeline_spark.streaming.text_serve import (
     stream_text_index_append,
     text_index_append_batch,
@@ -26,10 +23,7 @@ DOC_SCHEMA = "doc_id bigint, text string"
 def _serve(spark, path, k=20):
     from tia_data_pipeline_spark.plans.llm import _BM25_TERMS
 
-    return [
-        tuple(r)
-        for r in bm25_search_indexed(spark, path, list(_BM25_TERMS), k=k).collect()
-    ]
+    return bm25_serve_one(spark, path, _BM25_TERMS, k=k)
 
 
 def _fresh(spark, docs, tmp_path, tag):

@@ -9,11 +9,12 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SMOKE_SF
+from tests.conftest import SMOKE_SF, bm25_serve_one
+from tests.oracle import assert_parity
 from tia_data_pipeline_spark.catalog import load_table
 from tia_data_pipeline_spark.operators.text_index import (
     _INDEX_SEED,
-    bm25_search_indexed,
+    bm25_search_batch,
     build_text_index,
 )
 
@@ -26,6 +27,23 @@ def index_path(spark, tmp_path_factory):
     return path
 
 
+def _queries(spark, rows, qid_type="bigint"):
+    return spark.createDataFrame(rows, f"query_id {qid_type}, terms array<string>")
+
+
+def _assert_query_matches_oracle(duck, served, qid, terms, k):
+    """One query's rows of a batch serve against q_bm25's DuckDB oracle
+    for the same terms, ranked like the serve."""
+    from tia_data_pipeline_spark.plans.llm import _bm25_oracle_select
+
+    oracle = duck.sql(
+        "SELECT *, (row_number() OVER (ORDER BY score DESC, doc_id ASC))::INT "
+        f"AS rnk FROM ({_bm25_oracle_select(tuple(terms), k)})"
+    )
+    mine = served.filter(F.col("query_id") == qid).drop("query_id")
+    assert_parity(mine, oracle, f"query {qid} {terms}")
+
+
 def test_indexed_serving_equals_full_scan_query(spark, index_path):
     """The strongest possible check: the index serve path must
     reproduce q_bm25's top-20 EXACTLY (same terms, same integer
@@ -34,17 +52,14 @@ def test_indexed_serving_equals_full_scan_query(spark, index_path):
     from tia_data_pipeline_spark.plans.llm import _BM25_TERMS, q_bm25
 
     expect = [tuple(r) for r in q_bm25(spark, SMOKE_SF).collect()]
-    got = [
-        tuple(r)
-        for r in bm25_search_indexed(spark, index_path, list(_BM25_TERMS), k=20).collect()
-    ]
+    got = bm25_serve_one(spark, index_path, _BM25_TERMS, k=20)
     assert got == expect and len(got) == 20
 
 
 def test_serve_scan_is_partition_pruned(spark, index_path):
     """The _bucket IN predicate must reach the scan as a
     PartitionFilter, and only the query buckets' files open."""
-    df = bm25_search_indexed(spark, index_path, ["spark"], k=5)
+    df = bm25_search_batch(_queries(spark, [(1, ["spark"])]), index_path, k=5)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -87,10 +102,7 @@ def test_bucket_modulus_persists_with_index(spark, tmp_path):
     path = str(tmp_path / "idx8")
     docs = load_table(spark, SMOKE_SF, "documents").select("doc_id", "text")
     build_text_index(docs, path, n_buckets=8)
-    got = [
-        tuple(r)
-        for r in bm25_search_indexed(spark, path, list(_BM25_TERMS), k=20).collect()
-    ]
+    got = bm25_serve_one(spark, path, _BM25_TERMS, k=20)
     expect = [tuple(r) for r in q_bm25(spark, SMOKE_SF).collect()]
     assert got == expect
 
@@ -100,20 +112,25 @@ def test_serve_df_is_two_phase_aggregate(spark, index_path):
     aggregate joined back onto the candidates, never a window — a
     window aggregate needs ALL of a term's postings in ONE task, so a
     stop-word-frequency query term becomes a single-task straggler/OOM
-    at 100×. The df map is at most query-terms-sized and broadcasts."""
-    df = bm25_search_indexed(spark, index_path, ["spark", "data"], k=5)
+    at 100×. The df map is at most query-terms-sized and broadcasts.
+    The serve's one window is the per-query rank limit, keyed by the
+    query id — never by the term."""
+    df = bm25_search_batch(
+        _queries(spark, [(1, ["spark", "data"])]), index_path, k=5
+    )
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     p = buf.getvalue()
-    assert "Window" not in p, "per-term df regressed to a single-task window"
+    specs = [ln for ln in p.splitlines() if "windowspecdefinition(" in ln]
+    assert specs and all(
+        ln.split("windowspecdefinition(")[1].startswith("_qid") for ln in specs
+    ), "per-term df regressed to a single-task window"
     assert p.count("HashAggregate") >= 2  # partial+final df aggregate
     assert "BroadcastHashJoin" in p  # the tiny df map broadcasts back
 
 
 def test_bad_args(spark, index_path):
-    with pytest.raises(ValueError):
-        bm25_search_indexed(spark, index_path, [])
     with pytest.raises(ValueError):
         build_text_index(
             load_table(spark, SMOKE_SF, "documents").select("doc_id", "text"),
@@ -133,10 +150,7 @@ class TestTextIndexLifecycle:
     def _serve(self, spark, path, k=20):
         from tia_data_pipeline_spark.plans.llm import _BM25_TERMS
 
-        return [
-            tuple(r)
-            for r in bm25_search_indexed(spark, path, list(_BM25_TERMS), k=k).collect()
-        ]
+        return bm25_serve_one(spark, path, _BM25_TERMS, k=k)
 
     def _fresh(self, spark, docs, tmp, tag):
         p = str(tmp / f"fresh_{tag}")
@@ -258,37 +272,23 @@ class TestTextIndexLifecycle:
 
 
 class TestBm25Batch:
-    """bm25_search_batch: each query's rows must EQUAL the single-probe
-    serve of the same terms (the strongest oracle — the batch form is
-    an execution strategy, not a semantics change)."""
+    """bm25_search_batch: each query's rows must EQUAL q_bm25's DuckDB
+    oracle over the same terms (the strongest oracle — the index and
+    the batch are execution strategies, not semantics changes)."""
 
-    def test_batch_equals_per_query_single_serves(self, spark, index_path):
-        from tia_data_pipeline_spark.operators.text_index import bm25_search_batch
-
+    def test_batch_equals_per_query_single_serves(self, spark, duck, index_path):
         qsets = {1: ["spark", "join", "stream"], 2: ["data", "table"], 3: ["spark"]}
-        queries = spark.createDataFrame(
-            list(qsets.items()), "query_id bigint, terms array<string>"
+        served = bm25_search_batch(
+            _queries(spark, list(qsets.items())), index_path, k=7
         )
-        got = {}
-        for r in bm25_search_batch(queries, index_path, k=7).collect():
-            got.setdefault(r["query_id"], []).append(
-                (r["rnk"], r["doc_id"], r["n_terms"], r["score"])
-            )
         for qid, terms in qsets.items():
-            single = [
-                (i + 1, r["doc_id"], r["n_terms"], r["score"])
-                for i, r in enumerate(
-                    bm25_search_indexed(spark, index_path, terms, k=7).collect()
-                )
-            ]
-            assert sorted(got.get(qid, [])) == single, f"query {qid} diverged"
+            _assert_query_matches_oracle(duck, served, qid, terms, 7)
 
     def test_duplicate_terms_count_once_and_hostile_rows_excluded(
-        self, spark, index_path
+        self, spark, duck, index_path
     ):
-        from tia_data_pipeline_spark.operators.text_index import bm25_search_batch
-
-        queries = spark.createDataFrame(
+        queries = _queries(
+            spark,
             [
                 (1, ["spark", "spark", "spark"]),  # set semantics
                 (None, ["spark"]),  # NULL id: no rankable identity
@@ -296,34 +296,14 @@ class TestBm25Batch:
                 (3, []),  # empty terms
                 (4, [None, "spark"]),  # NULL element counts for nothing
             ],
-            "query_id bigint, terms array<string>",
         )
-        rows = bm25_search_batch(queries, index_path, k=5).collect()
-        by_q = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], []).append(r)
-        assert set(by_q) == {1, 4}
-        single = [
-            (r["doc_id"], r["n_terms"], r["score"])
-            for r in bm25_search_indexed(spark, index_path, ["spark"], k=5).collect()
-        ]
+        served = bm25_search_batch(queries, index_path, k=5)
+        assert {r["query_id"] for r in served.collect()} == {1, 4}
         for qid in (1, 4):
-            got = [
-                (r["doc_id"], r["n_terms"], r["score"])
-                for r in sorted(by_q[qid], key=lambda r: r["rnk"])
-            ]
-            assert got == single
+            _assert_query_matches_oracle(duck, served, qid, ["spark"], 5)
 
     def test_batch_plan_prunes_and_rank_limits(self, spark, index_path):
-        import contextlib
-        import io
-
-        from tia_data_pipeline_spark.operators.text_index import bm25_search_batch
-
-        queries = spark.createDataFrame(
-            [(1, ["spark"]), (2, ["data", "join"])],
-            "query_id bigint, terms array<string>",
-        )
+        queries = _queries(spark, [(1, ["spark"]), (2, ["data", "join"])])
         df = bm25_search_batch(queries, index_path, k=3)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
@@ -333,39 +313,40 @@ class TestBm25Batch:
         assert "WindowGroupLimit" in p  # map-side per-query top-k
         assert p.count("HashAggregate") >= 2  # two-phase df intact
 
-    def test_empty_batch_raises(self, spark, index_path):
-        from tia_data_pipeline_spark.operators.text_index import bm25_search_batch
+    @pytest.mark.parametrize(
+        "rows",
+        [[], [(None, ["spark"]), (None, ["data"])], [(1, [None])]],
+        ids=["empty", "null_ids", "null_terms"],
+    )
+    def test_unservable_batch_returns_typed_empty(self, spark, index_path, rows):
+        """A batch with no servable query returns the typed empty frame
+        (query_id typed as the input, doc_id as the index's postings)
+        instead of raising, so a serving loop degrades on it."""
+        from tia_data_pipeline_spark.operators.text_index import (
+            read_postings_schema,
+        )
 
-        queries = spark.createDataFrame([], "query_id bigint, terms array<string>")
-        with pytest.raises(ValueError, match="no non-empty queries"):
-            bm25_search_batch(queries, index_path)
+        doc_id = read_postings_schema(spark, index_path)["doc_id"].dataType
+        out = bm25_search_batch(_queries(spark, rows, "int"), index_path)
+        assert out.count() == 0
+        assert out.dtypes == [
+            ("query_id", "int"),
+            ("doc_id", doc_id.simpleString()),
+            ("n_terms", "bigint"),
+            ("score", "double"),
+            ("rnk", "int"),
+        ]
 
-
-    def test_same_query_id_across_rows_keeps_set_semantics(self, spark, index_path):
+    def test_same_query_id_across_rows_keeps_set_semantics(
+        self, spark, duck, index_path
+    ):
         """Review r10: a query_id arriving on SEVERAL input rows must
         still count each term once for the whole batch — array_distinct
         alone only dedups within one row, and the shared term would
         otherwise score once per row."""
-        from tia_data_pipeline_spark.operators.text_index import bm25_search_batch
-
-        split = spark.createDataFrame(
-            [(1, ["spark"]), (1, ["spark", "data"])],
-            "query_id bigint, terms array<string>",
-        )
-        got = [
-            (r["doc_id"], r["n_terms"], r["score"])
-            for r in sorted(
-                bm25_search_batch(split, index_path, k=7).collect(),
-                key=lambda r: r["rnk"],
-            )
-        ]
-        single = [
-            (r["doc_id"], r["n_terms"], r["score"])
-            for r in bm25_search_indexed(
-                spark, index_path, ["spark", "data"], k=7
-            ).collect()
-        ]
-        assert got == single
+        split = _queries(spark, [(1, ["spark"]), (1, ["spark", "data"])])
+        served = bm25_search_batch(split, index_path, k=7)
+        _assert_query_matches_oracle(duck, served, 1, ["spark", "data"], 7)
 
 
 def test_corpus_stats_swap_window_heals_on_read(spark, tmp_path):
@@ -379,7 +360,6 @@ def test_corpus_stats_swap_window_heals_on_read(spark, tmp_path):
     from tests.conftest import SMOKE_SF
     from tia_data_pipeline_spark.catalog import load_table
     from tia_data_pipeline_spark.operators.text_index import (
-        bm25_search_indexed,
         build_text_index,
         read_corpus_stats,
     )
@@ -397,4 +377,4 @@ def test_corpus_stats_swap_window_heals_on_read(spark, tmp_path):
     assert os.path.exists(f"{path}/_corpus_stats")
     assert not os.path.exists(f"{path}/_corpus_stats__old")
     # the healed index serves
-    assert bm25_search_indexed(spark, path, ["data", "spark"], k=3).count() > 0
+    assert bm25_serve_one(spark, path, ["data", "spark"], k=3)

@@ -75,18 +75,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(sf_dir, name))
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All corpus tables, keyed by name."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` can address
-    them by the same names the DuckDB oracle uses."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def ensure_table(spark: SparkSession, name: str, path: str, schema=None):
     """`snk-ddl` (reference ``init_db_tables.sh:5-59``): declared-first,
     idempotent table creation — ``CREATE TABLE IF NOT EXISTS`` over a

@@ -214,12 +214,6 @@ def parse_iso_timestamp(col: Column) -> Column:
     )
 
 
-def format_timestamp_sql_pair(expr: str) -> tuple[str, str]:
-    """(spark_format, duckdb_format) second-precision render of a
-    timestamp — the string form the reference stores."""
-    return ("yyyy-MM-dd HH:mm:ss", f"strftime({expr}, '%Y-%m-%d %H:%M:%S')")
-
-
 def json_serialize_nested(df_schema: T.StructType, colname: str) -> Column:
     """``json.dumps`` of nested values — reference
     ``posts_pipeline.py:36-37``. Schema-driven: nested (struct/array/map)

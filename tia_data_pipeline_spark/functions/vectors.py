@@ -33,10 +33,16 @@ def l2_norm(a: Column) -> Column:
     )
 
 
+def cosine_from_norms(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
+    """Cosine similarity over norms the caller already has (per-row
+    precomputed columns); NULL when either norm is zero."""
+    denom = norm_a * norm_b
+    return F.when(denom > 0, dot(a, b) / denom)
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine similarity; NULL when either vector has zero norm."""
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom > 0, dot(a, b) / denom)
+    return cosine_from_norms(a, b, l2_norm(a), l2_norm(b))
 
 
 def valid_vector(vec: Column) -> Column:
@@ -72,11 +78,6 @@ def valid_embeddings(spark, sf_dir: str):
     return load_table(spark, sf_dir, "embeddings").filter(
         valid_vector(F.col("embedding"))
     )
-
-
-def dot_sql(a: str, b: str) -> str:
-    """DuckDB fragment matching :func:`dot` (same summation order)."""
-    return f"list_dot_product(({a})::DOUBLE[], ({b})::DOUBLE[])"
 
 
 def cosine_sql(a: str, b: str) -> str:

@@ -212,24 +212,6 @@ def _band_width(n: int, bands: int, what: str) -> int:
     return n // bands
 
 
-def minhash_signature(col: Column, k: int = 32, seed: int = 42, shingle_n: int = 3) -> Column:
-    """k-component MinHash signature (array<bigint>) of a text column.
-
-    Column-expression form for ad-hoc use; the *operator* path uses
-    :func:`minhash_signature_frame` — this inline form duplicates the
-    shingle pipeline k times in the plan (no CSE through higher-order
-    functions), which is k× the work.
-    """
-    xs = F.transform(
-        word_shingles(col, shingle_n), lambda s: F.pmod(F.xxhash64(s), F.lit(_X_MOD))
-    )
-    comps = [
-        F.array_min(F.transform(xs, lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(_MINHASH_P)))
-        for a, b in _hash_family(k, seed)
-    ]
-    return F.array(*comps)
-
-
 def minhash_signature_frame(
     df: DataFrame,
     text_col: str,

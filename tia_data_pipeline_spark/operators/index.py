@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tia_data_pipeline_spark.functions.text import portable_round
-from tia_data_pipeline_spark.functions.vectors import dot, l2_norm
+from tia_data_pipeline_spark.functions.vectors import cosine_from_norms, l2_norm
 from tia_data_pipeline_spark.operators.scale import (
     anti_join_index_tombstones,
     append_index_tombstones,
@@ -145,8 +145,9 @@ def _hamming(meta: dict, o: dict) -> tuple[Column, Column]:
 
 
 def _cosine(meta: dict, o: dict) -> tuple[Column, Column]:
-    denom = F.col("_norm_n") * F.col("_norm_o")
-    score = F.when(denom > 0, dot(F.col("_vec_n"), F.col("_vec_o")) / denom)
+    score = cosine_from_norms(
+        F.col("_vec_n"), F.col("_vec_o"), F.col("_norm_n"), F.col("_norm_o")
+    )
     return portable_round(score, 6).alias("score"), F.col("score") >= o["threshold"]
 
 

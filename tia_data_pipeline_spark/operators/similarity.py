@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tia_data_pipeline_spark.functions.text import portable_round
-from tia_data_pipeline_spark.functions.vectors import cosine_similarity, dot, l2_norm
+from tia_data_pipeline_spark.functions.vectors import cosine_from_norms, dot, l2_norm
 from tia_data_pipeline_spark.operators.index import (
     EMBEDDING,
     read_index,
@@ -102,8 +102,9 @@ def brute_force_top_k(
         )
     )
     c = corpus.select(F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("_c_norm"))
-    denom = F.col("_c_norm") * F.col("_p_norm")
-    score = F.when(denom > 0, dot(F.col(vec_col), F.col("_probe_vec")) / denom)
+    score = cosine_from_norms(
+        F.col(vec_col), F.col("_probe_vec"), F.col("_c_norm"), F.col("_p_norm")
+    )
     scored = c.crossJoin(p).select(
         F.col(id_col),
         portable_round(score, 6).alias("score"),
@@ -211,8 +212,9 @@ def _cell_equi_cosine_pairs(
         b_side,
         on=[a_side["_bucket"] == b_side["_bucket"], F.col("id_a") < F.col("id_b")],
     )
-    denom = F.col("_norm_a") * F.col("_norm_b")
-    score = F.when(denom > 0, dot(F.col("_vec_a"), F.col("_vec_b")) / denom)
+    score = cosine_from_norms(
+        F.col("_vec_a"), F.col("_vec_b"), F.col("_norm_a"), F.col("_norm_b")
+    )
     # No pair-level dedup: each vector is assigned exactly ONE cell
     # (sign_bits / nearest_centroid), so a pair can co-occur in at most
     # one cell and a dropDuplicates here would be a pure no-op shuffle
@@ -359,8 +361,9 @@ def lsh_top_k(
         ]
         cond = F.col("_bucket").isin(*probed)
     cand = bucketed.join(probe_b, cond)
-    denom = F.col("_c_norm") * F.col("_p_norm")
-    score = F.when(denom > 0, dot(F.col(vec_col), F.col("_probe_vec")) / denom)
+    score = cosine_from_norms(
+        F.col(vec_col), F.col("_probe_vec"), F.col("_c_norm"), F.col("_p_norm")
+    )
     scored = cand.select(
         F.col(id_col),
         portable_round(score, 6).alias("score"),
@@ -402,66 +405,6 @@ def _kmeans_fit_input(
     return with_vec.filter(
         F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(denom)) < F.lit(keep)
     )
-
-
-def ivf_top_k(
-    corpus: DataFrame,
-    probe: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    fit_sample_max: int | None = _FIT_SAMPLE_MAX_DEFAULT,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: a coarse k-means quantizer partitions
-    the corpus into ``n_lists`` cells; a probe searches only its
-    ``n_probe`` nearest cells with exact cosine.
-
-    The quantizer trains once (spark.ml KMeans, fixed seed) and the
-    assignment becomes a plain integer column — at 100 TB the cell id
-    is a *write-time partition column*, so a query touches n_probe/n_lists
-    of the data before any exact scoring. Training cost is amortized
-    across all queries; no oracle (k-means isn't cross-engine
-    reproducible), so this is a rows-only / structurally-tested path.
-    """
-    # same one-row contract as brute_force_top_k / lsh_top_k: a
-    # multi-row probe would interleave scores in the global limit
-    if probe.limit(2).count() > 1:
-        raise ValueError("ivf_top_k takes a ONE-row probe")
-    # one fit/assign implementation: ivf_build_index (which also drops
-    # the heavy _mlvec column — previously leaked through the join here)
-    assigned, centers = ivf_build_index(
-        corpus,
-        vec_col=vec_col,
-        id_col=id_col,
-        n_lists=n_lists,
-        seed=seed,
-        fit_sample_max=fit_sample_max,
-    )
-
-    # probe's n_probe nearest cells — the shared cell-assignment
-    # expression (one implementation site with the batch path)
-    probe_cells = _nearest_cells_expr(F.col(vec_col), centers, n_probe)
-    probe_b = F.broadcast(
-        probe.select(
-            F.col(vec_col).alias("_probe_vec"),
-            l2_norm(F.col(vec_col)).alias("_p_norm"),
-            probe_cells.alias("_probe_cells"),
-        )
-    )
-    cand = assigned.withColumn("_c_norm", l2_norm(F.col(vec_col))).join(
-        probe_b, F.array_contains(F.col("_probe_cells"), F.col("_cell"))
-    )
-    denom = F.col("_c_norm") * F.col("_p_norm")
-    score = F.when(denom > 0, dot(F.col(vec_col), F.col("_probe_vec")) / denom)
-    scored = cand.select(
-        F.col(id_col),
-        portable_round(score, 6).alias("score"),
-    )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
 
 
 def ivf_build_index(
@@ -615,46 +558,6 @@ def _mask_ivf_tombstones(df: DataFrame, path: str, meta: dict) -> DataFrame:
     )
 
 
-def ivf_search_indexed(
-    spark,
-    path: str,
-    probe_vec: list[float],
-    *,
-    k: int = 10,
-    n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centers: list[list[float]] | None = None,
-) -> DataFrame:
-    """Serve a probe from the written IVF index: pick the ``n_probe``
-    nearest cells DRIVER-SIDE (a few-float comparison against n_lists
-    centers — pure control plane), then scan ONLY those partitions with
-    exact cosine re-ranking. The cell predicate is a literal ``IN``, so
-    the parquet scan plans PartitionFilters (pinned in
-    tests/test_similarity.py) — at 100 TB the query reads
-    n_probe/n_lists of the index, before any row-level work."""
-    cs = centers if centers is not None else ivf_read_centers(spark, path)
-
-    def _d2(c: list[float]) -> float:
-        return sum((float(a) - float(b)) ** 2 for a, b in zip(probe_vec, c))
-
-    cells = sorted(range(len(cs)), key=lambda i: (_d2(cs[i]), i))[:n_probe]
-    meta = ivf_index_meta(spark, path)
-    corpus = _mask_ivf_tombstones(
-        read_index(spark, path, meta).filter(
-            F.col("_cell").isin([int(c) for c in cells])
-        ),
-        path,
-        meta,
-    )
-    probe = F.array(*[F.lit(float(v)) for v in probe_vec])
-    scored = corpus.select(
-        F.col(id_col),
-        portable_round(cosine_similarity(F.col(vec_col), probe), 6).alias("score"),
-    )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-
-
 def ivf_search_batch(
     probes: DataFrame,
     index_path: str,
@@ -666,12 +569,14 @@ def ivf_search_batch(
     n_probe: int = 4,
     centers: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Serve a BATCH of probes from the written IVF index — the
-    many-query form of :func:`ivf_search_indexed` (which takes one
-    driver-side vector): each probe ranks the ``n_lists`` centers
-    in-expression and explodes to its ``n_probe`` nearest cells; the
-    index scan prunes to the UNION of touched cells (a literal ``IN``
-    over ≤ n_lists values — control plane, PartitionFilters planned);
+    """Serve a batch of probes from the written IVF index — the one
+    IVF serve path (a single probe is a one-row ``probes`` frame; a
+    one-shot in-memory search is :func:`ivf_build_index` →
+    :func:`ivf_write_index` → this): each probe ranks the ``n_lists``
+    centers in-expression and explodes to its ``n_probe`` nearest
+    cells; the index scan prunes to the UNION of touched cells (a
+    literal ``IN`` over ≤ n_lists values — control plane,
+    PartitionFilters planned);
     the exploded probe frame BROADCASTS onto the pruned scan for an
     equi-join on the cell id; exact cosine re-ranks and a per-probe
     rank-limited window (map-side WindowGroupLimit) keeps the top k.
@@ -702,10 +607,10 @@ def _nearest_cells_expr(
     vec: Column, centers: list[list[float]], n_probe: int
 ) -> Column:
     """The ``n_probe`` nearest center ids of a vector, ranked by
-    (squared distance, cell id) in one expression — the single
-    implementation of cell assignment shared by the single-probe
-    (:func:`ivf_top_k`) and batch (:func:`_ivf_probe_frame`) paths, so
-    tie handling and the distance formula can never diverge."""
+    (squared distance, cell id) in one expression — the probe side of
+    :func:`_ivf_probe_frame`, built on :func:`_center_d2` so probe
+    routing and the index's distance stats share one distance
+    formula."""
     dists = F.array(*[_center_d2(vec.cast("array<double>"), c) for c in centers])
     order = F.array_sort(
         F.transform(dists, lambda d, i: F.struct(d.alias("d"), i.alias("cell")))
@@ -781,14 +686,15 @@ def _ivf_batch_topk(
     )
     from tia_data_pipeline_spark.functions.text import finite_value
 
-    denom = F.col("_c_norm") * F.col("_p_norm")
     # finite_value nullifies NaN/Inf scores (an INDEX vector with a
     # non-finite component — the probe side is valid_vector-filtered —
     # would otherwise floor to 0.0 in portable_round and outrank
     # genuine negative-cosine candidates); the isNotNull filter then
     # drops the garbage candidate instead of ranking it
     score = finite_value(
-        F.when(denom > 0, dot(F.col(vec_col), F.col("_p_vec")) / denom)
+        cosine_from_norms(
+            F.col(vec_col), F.col("_p_vec"), F.col("_c_norm"), F.col("_p_norm")
+        )
     )
     w = Window.partitionBy("_pid").orderBy(F.col("score").desc(), F.col(id_col).asc())
     return (
@@ -1191,8 +1097,9 @@ def knn_join_bucketed(
         )
     p = pb.select("_probe_id", "_probe_vec", "_p_norm", F.explode(probed).alias("_bucket"))
     cand = c.join(p.hint("SHUFFLE_HASH"), "_bucket")
-    denom = F.col("_c_norm") * F.col("_p_norm")
-    score = F.when(denom > 0, dot(F.col("_corpus_vec"), F.col("_probe_vec")) / denom)
+    score = cosine_from_norms(
+        F.col("_corpus_vec"), F.col("_probe_vec"), F.col("_c_norm"), F.col("_p_norm")
+    )
     scored = cand.select(
         F.col("_probe_id").alias(probe_id_col),
         F.col(id_col),
@@ -1246,8 +1153,9 @@ def knn_join(
     c = corpus.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("_c_norm")
     )
-    denom = F.col("_c_norm") * F.col("_p_norm")
-    score = F.when(denom > 0, dot(F.col(vec_col), F.col("_probe_vec")) / denom)
+    score = cosine_from_norms(
+        F.col(vec_col), F.col("_probe_vec"), F.col("_c_norm"), F.col("_p_norm")
+    )
     scored = c.crossJoin(p).select(
         F.col("_probe_id").alias(probe_id_col),
         F.col(id_col),

@@ -49,9 +49,10 @@ contributions before scoring).
 
 Scale: the build is explode → one (term, doc) aggregate → partitioned
 write. Serving scans |query-bucket| / n_buckets of the postings before
-any row work, joins doc lengths only for candidate docs, and top-k is
-a TakeOrderedAndProject. Appends are delta-sized (membership anti-join
-against ``_doc_stats``); deletes are request-sized tombstone appends;
+any row work, joins doc lengths only for candidate docs, and each
+query's top-k is a rank-limited window (map-side WindowGroupLimit).
+Appends are delta-sized (membership anti-join against
+``_doc_stats``); deletes are request-sized tombstone appends;
 compaction applies deletes and restores one file per bucket.
 """
 
@@ -153,9 +154,8 @@ def _write_corpus_stats(
 def read_corpus_stats(spark: SparkSession, path: str):
     """The one-row ``_corpus_stats`` read every lifecycle verb starts
     from — single-sources the side-table contract (column names, the
-    bucket modulus, the postings-schema JSON) so no consumer, inside
-    this module or out (the streaming empty-batch schema), can drift
-    from it (review r10). Heals the swap window: live dir missing but
+    bucket modulus, the postings-schema JSON) so no consumer, the
+    empty-batch schemas included, can drift from it (review r10). Heals the swap window: live dir missing but
     ``_corpus_stats__old`` present means a crash landed between the
     two swap renames — the previous generation renames back (the
     scalars it carries are at most one append stale, and the retried
@@ -182,46 +182,15 @@ def read_postings_schema(spark: SparkSession, path: str):
     )
 
 
-def bm25_search_indexed(
-    spark: SparkSession,
-    path: str,
-    terms: list[str],
-    *,
-    k: int = 10,
-) -> DataFrame:
-    """Serve a BM25 top-k from the written index: the query terms'
-    buckets are computed DRIVER-SIDE (a few xxhash64 calls via one tiny
-    local expression — control plane), the postings scan carries both a
-    ``_bucket IN`` partition filter and the ``tok IN`` row filter, and
-    only candidate docs join the length table. Scores are the q_bm25
-    integer arithmetic, so the result equals the full-scan query."""
-    sc = _bm25_term_doc_scores(spark, path, terms)
-    agg = sc.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_terms"),
-        F.sum("sc_n").cast("bigint").alias("score_n"),
-    )
-    # Projection/order mirror q_bm25 exactly (bit-for-bit equivalence
-    # is test-pinned): the raw nano-nat score_n stays OFF the output —
-    # ln() is 1-ulp divergent cross-engine — and the top-k orders on
-    # the 6-dp rounded score with doc_id tiebreak.
-    out = agg.select(
-        "doc_id",
-        "n_terms",
-        portable_round(F.col("score_n") / F.lit(1_000_000_000.0), 6).alias("score"),
-    )
-    return out.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
 def _bm25_term_doc_scores(
     spark: SparkSession, path: str, terms: list[str]
 ) -> DataFrame:
-    """The query-independent BM25 scoring core shared by the single-
-    probe and batch serves: per-(term, doc) nano-integer scores over
-    the LIVE index membership — pruned scan, tombstone masks, crash-
-    retry dedup, two-phase df. Returns (tok, doc_id, sc_n); callers
-    select the terms a query needs and sum."""
-    if not terms:
-        raise ValueError("terms must be non-empty")
+    """The query-independent BM25 scoring core of
+    :func:`bm25_search_batch`: per-(term, doc) nano-integer scores over
+    the LIVE index membership for a non-empty ``terms`` list — pruned
+    scan, tombstone masks, crash-retry dedup, two-phase df. Returns
+    (tok, doc_id, sc_n); the caller selects the terms a query needs
+    and sums."""
     # the bucket modulus and postings schema come from the index
     # itself (one 1-row read)
     stats_row = read_corpus_stats(spark, path)
@@ -330,9 +299,9 @@ def bm25_search_batch(
     terms_col: str = "terms",
     k: int = 10,
 ) -> DataFrame:
-    """Serve a BATCH of BM25 queries from the written index — the
-    many-query form of :func:`bm25_search_indexed` (the text twin of
-    ``ivf_search_batch``): ``queries`` carries (query_id,
+    """Serve a batch of BM25 queries from the written index — the one
+    BM25 serve path (a single query is a one-row ``queries`` frame; the
+    text twin of ``ivf_search_batch``): ``queries`` carries (query_id,
     array<string> terms) rows. BM25's per-(term, doc) score is
     query-independent given the corpus scalars, so the batch computes
     the scoring core ONCE over the UNION of all queries' terms (one
@@ -346,10 +315,12 @@ def bm25_search_batch(
     The term universe collects driver-side (a deletion-request-sized
     batch of queries × a handful of terms each — control plane, the
     same scale class as the IVF probe's touched-cell collect). NULL
-    query ids and NULL/empty term arrays are excluded at the source
-    (no rankable identity / nothing to match); duplicate terms within
-    one query count once (set semantics, matching the single form
-    where ``terms`` is a set).
+    query ids, NULL/empty term arrays and NULL terms are excluded at
+    the source (no rankable identity / nothing to match); duplicate
+    terms within one query count once (set semantics). A batch left
+    with no servable query returns the typed empty frame — query_id
+    typed as the input column, doc_id as the index's postings — so a
+    serving loop degrades on hostile rows instead of aborting.
 
     Returns ``(query_id, doc_id, n_terms, score, rnk)``."""
     spark = queries.sparkSession
@@ -372,8 +343,25 @@ def bm25_search_batch(
     )
     all_terms = sorted({r["tok"] for r in qmap.select("tok").distinct().collect()})
     if not all_terms:
-        raise ValueError("no non-empty queries to serve")
+        from pyspark.sql import types as T
+
+        return spark.createDataFrame(
+            [],
+            T.StructType(
+                [
+                    T.StructField(query_id_col, queries.schema[query_id_col].dataType),
+                    read_postings_schema(spark, path)["doc_id"],
+                    T.StructField("n_terms", T.LongType()),
+                    T.StructField("score", T.DoubleType()),
+                    T.StructField("rnk", T.IntegerType()),
+                ]
+            ),
+        )
     sc = _bm25_term_doc_scores(spark, path, all_terms)
+    # projection/order mirror q_bm25 (bit-for-bit equivalence is
+    # test-pinned): the raw nano-nat score_n stays OFF the output —
+    # ln() is 1-ulp divergent cross-engine — and the rank orders on the
+    # 6-dp rounded score with doc_id tiebreak
     per_q = (
         sc.join(F.broadcast(qmap), "tok")
         .groupBy("_qid", "doc_id")

@@ -2045,13 +2045,14 @@ _BM25_INDEX_CACHE: dict[str, str] = {}
     ),
 )
 def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_bm25 served from the persisted inverted index
-    (operators/text_index.py): postings partitioned by term-hash
-    bucket, df a SERVE-TIME two-phase aggregate over the pruned scan
-    (round 10 — never a stored column, never a window), doc-length
-    and corpus-stats side tables — the query-time scan carries a
-    ``_bucket IN`` partition filter from a driver-side hash of the
-    terms plus the ``tok IN`` row filter, so serving reads
+    """q_bm25 served from the persisted inverted index as a one-query
+    batch (operators/text_index.py::bm25_search_batch, projected back
+    to q_bm25's columns in rank order): postings partitioned by
+    term-hash bucket, df a SERVE-TIME two-phase aggregate over the
+    pruned scan (round 10 — never a stored column, never a window),
+    doc-length and corpus-stats side tables — the query-time scan
+    carries a ``_bucket IN`` partition filter from a driver-side hash
+    of the terms plus the ``tok IN`` row filter, so serving reads
     |query buckets| / n_buckets of the index and never re-tokenizes
     the corpus. The oracle is BYTE-IDENTICAL to q_bm25's (shared
     template): this row hash-checks that the persisted layout +
@@ -2068,7 +2069,7 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from tia_data_pipeline_spark.operators.text_index import (
-        bm25_search_indexed,
+        bm25_search_batch,
         build_text_index,
     )
 
@@ -2085,7 +2086,14 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         atexit.register(shutil.rmtree, tmp, True)
         build_text_index(load_table(spark, sf_dir, "documents"), f"{tmp}/tidx")
         _BM25_INDEX_CACHE[sf_dir] = tmp
-    return bm25_search_indexed(spark, f"{tmp}/tidx", list(_BM25_TERMS), k=_BM25_K)
+    query = spark.createDataFrame(
+        [(1, list(_BM25_TERMS))], "query_id bigint, terms array<string>"
+    )
+    return (
+        bm25_search_batch(query, f"{tmp}/tidx", k=_BM25_K)
+        .orderBy("rnk")
+        .select("doc_id", "n_terms", "score")
+    )
 
 
 # the batch serve's fixed query set: the q_bm25 terms plus two more

@@ -40,7 +40,6 @@ from __future__ import annotations
 import json
 import urllib.parse
 import urllib.request
-from collections.abc import Sequence
 
 from pyspark.sql import types as T
 
@@ -55,9 +54,6 @@ DEFAULT_HEADERS = {"Content-Type": "application/json", "User-Agent": "tia-data-p
 
 #: The reference fetches 30 posts per page (``posts_pipeline.py:26``).
 DEFAULT_PER_PAGE = 30
-
-_POSTS_TS_COLS = ("date_gmt", "modified_gmt")
-_COMMENTS_TS_COLS = ("date_gmt", "editable_until")
 
 # init_db_tables.sh:5-39 — public.posts, in DDL column order.
 # word_count (the 33rd DDL column) is derived by normalize_records.
@@ -120,16 +116,6 @@ COMMENTS_SCHEMA = T.StructType(
         T.StructField("children", T.StringType(), nullable=True),  # JSON
     ]
 )
-
-
-def posts_ts_cols() -> Sequence[str]:
-    """``ts_string_cols`` for posts (the two DDL TIMESTAMP columns)."""
-    return _POSTS_TS_COLS
-
-
-def comments_ts_cols() -> Sequence[str]:
-    """``ts_string_cols`` for comments (the two DDL TIMESTAMP columns)."""
-    return _COMMENTS_TS_COLS
 
 
 def _http_get_json(url: str, headers: dict[str, str], timeout: float) -> dict:

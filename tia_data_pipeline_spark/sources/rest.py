@@ -18,7 +18,7 @@ JSON strings and are parsed against an explicit schema
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -120,9 +120,3 @@ def keyed_fanout_source(
         # named columns and break every downstream reference
         return parsed.select("rec.*")
     return parsed.select(key_col, "rec.*")
-
-
-def pages_for_latest() -> Sequence[int]:
-    """The reference fetches exactly page 1 of the default page size
-    (``posts_pipeline.py:26``); kept as an explicit contract."""
-    return (1,)

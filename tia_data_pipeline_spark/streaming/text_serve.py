@@ -59,11 +59,9 @@ def bm25_topk_batch(
     A batch with no servable queries (all NULL ids / NULL or empty
     term arrays / arrays whose every element is NULL) writes an EMPTY
     batch dir with the output schema rather than killing the stream —
-    hostile rows degrade, never abort. The servable predicate must be
-    at least as strong as ``bm25_search_batch``'s own qmap filter
-    (which also drops NULL array ELEMENTS post-explode): a terms=[NULL]
-    row passing here would make the search collect zero tokens and
-    raise, contradicting this contract (ADVICE r10 #1)."""
+    hostile rows degrade, never abort. The servable predicate mirrors
+    ``bm25_search_batch``'s own qmap filter (which also drops NULL
+    array ELEMENTS post-explode, ADVICE r10 #1)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -153,10 +151,11 @@ def stream_text_index_append(
     trigger discipline: ``availableNow`` drains the backlog and stops,
     the scheduled-backfill form; ``available_now=False`` runs the
     continuous service form). Serving stays
-    :func:`…operators.text_index.bm25_search_indexed` over the same
-    dir — df is computed at serve time, so appended documents are
-    searchable with exact document frequencies the moment their batch
-    commits, no repair step."""
+    :func:`…operators.text_index.bm25_search_batch` (or
+    :func:`stream_bm25_topk`) over the same dir — df is computed at
+    serve time, so appended documents are searchable with exact
+    document frequencies the moment their batch commits, no repair
+    step."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         text_index_append_batch(
