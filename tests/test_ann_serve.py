@@ -252,7 +252,7 @@ def test_stream_ivf_append_updates_index_and_records_drift(spark, index, tmp_pat
 def test_stream_ivf_append_auto_retrain_policy(spark, index, tmp_path):
     """VERDICT r10 #4: the drift signal must gate something. A shifted
     shard crossing ``retrain_above`` fires ivf_retrain inline (default
-    policy): membership is preserved, the `.pre-retrain` dir is gone,
+    policy): membership is preserved, the publish leftovers are gone,
     and a FURTHER shifted batch reads drift < threshold against the new
     generation — the ratio actually reset. A shard under
     ``retrain_min_batch_n`` never fires even when its ratio crosses."""
@@ -292,8 +292,8 @@ def test_stream_ivf_append_auto_retrain_policy(spark, index, tmp_path):
     q.awaitTermination()
     import os
 
-    assert not os.path.exists(index + ".pre-retrain")
-    assert not os.path.exists(index + ".retraining")
+    assert not os.path.exists(index + "__old")
+    assert not os.path.exists(index + "__new")
     assert spark.read.parquet(index).count() == 18  # 12 build + 6 streamed
     # drift has reset: ANOTHER shifted batch reads ~1 on the new
     # generation (it covers the shifted region now)

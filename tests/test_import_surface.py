@@ -64,3 +64,46 @@ def test_example_imports_resolve(path):
                 if alias.name.startswith(PKG):
                     importlib.import_module(alias.name)
     assert not missing, f"{os.path.basename(path)} imports names that do not resolve: {missing}"
+
+
+def _rename_calls(tree) -> list[tuple[int, str | None]]:
+    """(line, enclosing top-level function) of every directory move in
+    ``tree``: ``os.rename``, ``shutil.move``, any ``*.rename(`` call,
+    and a bare call of a ``rename``/``move`` imported from os/shutil."""
+    imported = {
+        a.asname or a.name
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom) and n.module in ("os", "shutil")
+        for a in n.names
+        if a.name in ("rename", "move", "replace")
+    }
+    found = []
+    for top in tree.body:
+        owner = top.name if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)) else None
+        for n in ast.walk(top):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            if (
+                (isinstance(f, ast.Attribute) and f.attr == "rename")
+                or (isinstance(f, ast.Attribute) and f.attr in ("move", "replace")
+                    and isinstance(f.value, ast.Name) and f.value.id in ("os", "shutil"))
+                or (isinstance(f, ast.Name) and f.id in imported)
+            ):
+                found.append((n.lineno, owner))
+    return found
+
+
+def test_directory_moves_only_in_replace_dir():
+    """Every staged rewrite publishes through
+    ``operators.scale.replace_dir``; a hand-rolled rename swap anywhere
+    else in the package fails here."""
+    allowed = {("operators/scale.py", "replace_dir"), ("operators/scale.py", "heal_replaced_dir")}
+    pkg = os.path.join(ROOT, PKG)
+    bad = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        for line, owner in _rename_calls(ast.parse(open(path).read())):
+            if (rel, owner) not in allowed:
+                bad.append(f"{rel}:{line} ({owner or 'module level'})")
+    assert not bad, f"directory moves outside replace_dir: {bad}"

@@ -118,19 +118,19 @@ def test_compact_table_sorted_layout(spark, tmp_path):
 
 
 def test_swap_failure_never_leaves_live_path_empty(spark, tmp_path):
-    """The compact/merge swap must rename the live table ASIDE first
-    (ADVICE r03): if the staging->live rename fails, the previous table
-    is restored, never deleted with data only in staging."""
+    """The compact/merge publish (``replace_dir``) must rename the live
+    table ASIDE first (ADVICE r03): if the staging->live rename fails,
+    the previous table is restored, never deleted with data only in
+    staging."""
     import pytest
 
-    from tia_data_pipeline_spark.sources.lakehouse import _hadoop_fs, _swap_table
+    from tia_data_pipeline_spark.operators.scale import replace_dir
 
     path = str(tmp_path / "t")
     spark.range(10).write.parquet(path)
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    missing_staging = str(tmp_path / "does_not_exist")
-    with pytest.raises(IOError):
-        _swap_table(fs, jvm, missing_staging, path)
+    with pytest.raises(OSError, match="previous copy at"):
+        with replace_dir(spark, path):
+            pass  # nothing staged: the publish rename fails
     # live table survived the failed swap
     assert spark.read.parquet(path).count() == 10
 

@@ -396,3 +396,119 @@ def test_fan_out_widens_unsplittable_gzip(spark, tmp_path):
     assert est == 1  # one unsplittable file = one split, whatever its size
     wide = fan_out(df)
     assert wide.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
+def _put(d, text: str) -> None:
+    """Make dir ``d`` holding one file ``part`` with ``text``."""
+    d.mkdir(parents=True, exist_ok=True)
+    (d / "part").write_text(text)
+
+
+def _got(d) -> str:
+    return (d / "part").read_text()
+
+
+class _RenameFailsFor:
+    """A FileSystem proxy whose ``rename`` of a source named ``name``
+    fails — by returning False or by raising, the two ways Hadoop
+    FileSystems report it; every other call goes to the real one."""
+
+    def __init__(self, fs, name: str, raises: bool):
+        self._fs, self._name, self._raises = fs, name, raises
+
+    def rename(self, src, dst):
+        if src.getName() == self._name:
+            if self._raises:
+                raise RuntimeError("injected rename failure")
+            return False
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, attr):
+        return getattr(self._fs, attr)
+
+
+def test_replace_dir_publish_leaves_no_side_dirs(spark, tmp_path):
+    import warnings
+
+    from tia_data_pipeline_spark.operators.scale import replace_dir
+
+    live = tmp_path / "t"
+    _put(live, "old")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # a clean publish warns about nothing
+        with replace_dir(spark, str(live)) as staging:
+            _put(tmp_path / "t__new", "new")
+            assert staging == str(live) + "__new"
+        # first publish: no live copy to move aside
+        with replace_dir(spark, str(tmp_path / "fresh")):
+            _put(tmp_path / "fresh__new", "first")
+    assert _got(live) == "new" and _got(tmp_path / "fresh") == "first"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["fresh", "t"]
+
+
+def test_replace_dir_block_failure_leaves_live_untouched(spark, tmp_path):
+    from tia_data_pipeline_spark.operators.scale import replace_dir
+
+    live = tmp_path / "t"
+    _put(live, "old")
+    with pytest.raises(RuntimeError, match="writer died"):
+        with replace_dir(spark, str(live)):
+            _put(tmp_path / "t__new", "half")
+            raise RuntimeError("writer died")
+    assert _got(live) == "old"
+    assert not (tmp_path / "t__old").exists()
+
+
+@pytest.mark.parametrize("raises", [False, True], ids=["returns_false", "raises"])
+def test_replace_dir_failed_publish_rename_restores_live(spark, tmp_path, monkeypatch, raises):
+    from tia_data_pipeline_spark.operators import scale
+
+    real = scale.hadoop_fs_path
+
+    def failing(spark_, path):
+        fs, p = real(spark_, path)
+        return _RenameFailsFor(fs, "t__new", raises), p
+
+    monkeypatch.setattr(scale, "hadoop_fs_path", failing)
+    live = tmp_path / "t"
+    _put(live, "old")
+    with pytest.raises(OSError, match=f"previous copy at {live}$"):
+        with scale.replace_dir(spark, str(live)):
+            _put(tmp_path / "t__new", "new")
+    assert _got(live) == "old"
+    assert _got(tmp_path / "t__new") == "new"  # staging kept for inspection
+    assert not (tmp_path / "t__old").exists()
+
+
+def test_replace_dir_heals_torn_swap_and_keeps_the_only_copy(spark, tmp_path):
+    """A crash between the two renames leaves only ``__old``: the heal
+    renames it back, and a publish that then fails still leaves it
+    live — the only copy is never deleted."""
+    from tia_data_pipeline_spark.operators.scale import heal_replaced_dir, replace_dir
+
+    live, old = tmp_path / "t", tmp_path / "t__old"
+    _put(old, "old")
+    heal_replaced_dir(spark, str(live))
+    assert _got(live) == "old" and not old.exists()
+
+    live.rename(old)  # torn again
+    with pytest.raises(OSError):
+        with replace_dir(spark, str(live)):
+            pass  # nothing staged: the publish rename fails
+    assert _got(live) == "old" and not old.exists()
+
+    live.rename(old)  # torn again; this publish succeeds
+    with replace_dir(spark, str(live)):
+        _put(tmp_path / "t__new", "new")
+    assert _got(live) == "new" and not old.exists()
+
+
+def test_replace_dir_clears_stale_old_beside_live(spark, tmp_path):
+    from tia_data_pipeline_spark.operators.scale import replace_dir
+
+    live, old = tmp_path / "t", tmp_path / "t__old"
+    _put(live, "cur")
+    _put(old, "stale")  # a previous publish whose final delete failed
+    with replace_dir(spark, str(live)):
+        _put(tmp_path / "t__new", "new")
+    assert _got(live) == "new" and not old.exists()

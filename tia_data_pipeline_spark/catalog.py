@@ -93,7 +93,7 @@ def remove_staging(spark: SparkSession, path: str) -> bool:
     staging JSON): recursive delete through the Hadoop FS API so it
     works on any filesystem the cluster writes (local, HDFS, object
     stores), not just the driver's local disk."""
-    sc = spark.sparkContext
-    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(sc._jsc.hadoopConfiguration())
+    from tia_data_pipeline_spark.operators.scale import hadoop_fs_path
+
+    fs, hadoop_path = hadoop_fs_path(spark, path)
     return bool(fs.delete(hadoop_path, True))

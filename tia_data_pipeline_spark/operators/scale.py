@@ -15,7 +15,9 @@ the two levers it cannot pull by itself:
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -336,15 +338,15 @@ def write_zordered(
 
 
 def _require_local_path(path: str) -> None:
-    """The compaction swap walks and renames with os/glob/shutil, so it
-    is LOCAL-FILESYSTEM-ONLY by construction — fail up front with a
+    """Compaction lists data files with glob and copies side dirs with
+    shutil, so it is LOCAL-FILESYSTEM-ONLY by construction — fail up front with a
     clear message for object-store/HDFS URIs instead of inside a glob
     that silently sees nothing (ADVICE r8). On stores without atomic
     rename, write a NEW generation dir and flip a pointer instead."""
     if "://" in path:
         scheme = path.split("://", 1)[0]
         raise ValueError(
-            f"compact_partitioned_index is local-FS-only (os.rename swap) "
+            f"compact_partitioned_index is local-FS-only (glob/copytree) "
             f"and takes a bare local path; got scheme {scheme!r}. Rewrite "
             "to a new generation dir and flip a pointer on object stores."
         )
@@ -411,14 +413,11 @@ def compact_partitioned_index(
     The rewrite is one keyed shuffle (`repartition(partition_cols)` —
     each task owns whole partition dirs, same rule as the index
     writers) into a staging dir; underscore side dirs (meta tables,
-    centers) are carried over byte-for-byte; then a two-rename swap
-    (index → .pre-compact, staging → index) publishes it. Content is
-    IDENTICAL before and after — compaction is layout-only, so it is
-    trivially idempotent and probes need no coordination beyond the
-    swap window.
+    centers) are carried over byte-for-byte; then :func:`replace_dir`
+    publishes it.
 
-    NOT transactional: the swap is two POSIX renames, so a probe
-    listing files exactly between them can fail and should retry — run
+    NOT transactional: the publish is two renames, so a probe listing
+    files exactly between them can fail and should retry — run
     compaction in the maintenance window. On object stores without
     atomic rename, write a NEW generation dir and flip a pointer
     instead. ``schema_json`` (from the index meta) lets an EMPTY index
@@ -450,38 +449,22 @@ def compact_partitioned_index(
     if dedup_keys is not None:
         df = df.dropDuplicates(list(dedup_keys))
 
-    staging = path.rstrip("/") + ".compacting"
-    shutil.rmtree(staging, ignore_errors=True)
-    (
-        df.repartition(*[F.col(c) for c in partition_cols])
-        .write.partitionBy(*list(partition_cols))
-        .mode("overwrite")
-        .parquet(staging)
-    )
-    for d in side_dirs:
-        src = os.path.join(path, d)
-        if os.path.isdir(src):
-            shutil.copytree(src, os.path.join(staging, d))
-    # the rows stat is counted from the STAGING output (one file per
-    # partition — a handful of footers), not with a separate pre-count
-    # job over the fragmented input, which would double the read I/O of
-    # the whole maintenance op
-    rows = spark.read.schema(schema).parquet(staging).count()
-    old = path.rstrip("/") + ".pre-compact"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    try:
-        os.rename(staging, path)
-    except BaseException:
-        # recovery for the swap's only intermediate state: the first
-        # rename succeeded (index moved aside) but publishing the
-        # staging dir failed — put the original back so `path` is never
-        # left empty and a concurrent probe sees the pre-compact index
-        # (ADVICE r8). Both renames are same-directory POSIX moves, so
-        # the rollback can only fail if the FS itself is gone.
-        os.rename(old, path)
-        raise
-    shutil.rmtree(old)
+    with replace_dir(spark, path) as staging:
+        (
+            df.repartition(*[F.col(c) for c in partition_cols])
+            .write.partitionBy(*list(partition_cols))
+            .mode("overwrite")
+            .parquet(staging)
+        )
+        for d in side_dirs:
+            src = os.path.join(path, d)
+            if os.path.isdir(src):
+                shutil.copytree(src, os.path.join(staging, d))
+        # the rows stat is counted from the STAGING output (one file per
+        # partition — a handful of footers), not with a separate pre-count
+        # job over the fragmented input, which would double the read I/O
+        # of the whole maintenance op
+        rows = spark.read.schema(schema).parquet(staging).count()
     return {
         "rows": int(rows),
         "files_before": len(before),
@@ -685,6 +668,76 @@ def hadoop_fs_path(spark, path: str):
     and conf identically."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def heal_replaced_dir(spark, live: str) -> None:
+    """Undo a :func:`replace_dir` publish torn between its two renames:
+    ``live`` missing but ``<live>__old`` present means a crash landed
+    after the move-aside and before staging moved in — the previous
+    copy renames back. A no-op (one ``exists`` call) in every other
+    state, so side-table readers run it before each read."""
+    fs, p_live = hadoop_fs_path(spark, live)
+    if not fs.exists(p_live):
+        _, p_old = hadoop_fs_path(spark, live.rstrip("/") + "__old")
+        if fs.exists(p_old):
+            fs.rename(p_old, p_live)
+
+
+@contextmanager
+def replace_dir(spark, live: str):
+    """Stage-then-publish a directory rewrite — the one publish step of
+    every staged rewrite (index compaction, IVF retrain, the text
+    index's side tables, the lakehouse parquet fallback). Yields the
+    staging path ``<live>__new`` (cleared of any stale copy) for the
+    block to write; on a normal exit it heals a torn earlier publish,
+    moves ``live`` aside to ``<live>__old``, renames staging to
+    ``live`` and deletes ``__old``. If the block raises, nothing is
+    published and ``live`` is untouched.
+
+    A failed rename never leaves ``live`` empty: the moved-aside copy
+    renames back and :class:`OSError` names where the previous copy is,
+    with staging kept for inspection. ``FileSystem.rename`` signals
+    failure as False OR as an exception depending on the
+    implementation; both count as failure. A failed delete of the
+    superseded ``__old`` only warns — the swap itself succeeded.
+
+    NOT transactional: a reader listing files between the two renames
+    can fail and should retry, and a hard kill between them leaves
+    ``__old`` for :func:`heal_replaced_dir` (run by the next publish
+    and by side-table reads)."""
+    live = live.rstrip("/")
+    new, old = live + "__new", live + "__old"
+    fs, p_live = hadoop_fs_path(spark, live)
+    _, p_new = hadoop_fs_path(spark, new)
+    _, p_old = hadoop_fs_path(spark, old)
+
+    def rename(src, dst) -> bool:
+        try:
+            return bool(fs.rename(src, dst))
+        except Exception:  # noqa: BLE001 — FS implementations throw OR return False
+            return False
+
+    fs.delete(p_new, True)
+    yield new
+    heal_replaced_dir(spark, live)
+    moved = bool(fs.exists(p_live))
+    if moved:
+        fs.delete(p_old, True)  # stale: live is the newer copy
+        if not rename(p_live, p_old):
+            raise OSError(f"rename {live} -> {old} failed; {live} unchanged, staging kept at {new}")
+    if not rename(p_new, p_live):
+        msg = f"rename {new} -> {live} failed; staging kept at {new}"
+        if moved:
+            msg += f", previous copy at {live if rename(p_old, p_live) else old}"
+        raise OSError(msg)
+    if not moved:
+        return
+    try:
+        deleted = bool(fs.delete(p_old, True))
+    except Exception:  # noqa: BLE001 — FS implementations throw OR return False
+        deleted = False
+    if not deleted:
+        warnings.warn(f"replace_dir left the previous copy at {old}; delete it manually")
 
 
 def pending_marker_set(spark, marker_path: str) -> None:

@@ -897,14 +897,13 @@ def ivf_retrain(
     starts with no ``_tombstones`` dir), a fresh
     :func:`ivf_build_index` fit (sample-capped KMeans; assignment stays
     full-membership), a complete :func:`ivf_write_index` generation —
-    data, per-cell baselines, meta — written to a STAGING dir, then the
-    compaction two-rename swap with rollback
-    (``operators.scale.compact_partitioned_index``'s discipline): a
-    FAILED publish rename rolls the move-aside back in-process, so an
-    error never leaves the path empty. Like compaction it is NOT
+    data, per-cell baselines, meta — written to the staging dir of
+    ``operators.scale.replace_dir``, which publishes it: a FAILED
+    publish rename rolls the move-aside back in-process, so an error
+    never leaves the path empty. Like compaction it is NOT
     crash-transactional: a hard kill exactly between the two renames
-    leaves the previous generation intact at ``<path>.pre-retrain`` —
-    rename it back to recover — and a probe listing files inside the
+    leaves the previous generation at ``<path>__old``, which the next
+    publish renames back first, and a probe listing files inside the
     swap window should retry; run in the maintenance window.
 
     Search results over unchanged data are preserved up to cell
@@ -916,11 +915,8 @@ def ivf_retrain(
 
     Returns ``{"rows", "n_lists", "train_mean_d2"}`` for the new
     generation."""
-    import os
-    import shutil
-
     from tia_data_pipeline_spark.functions.vectors import valid_vector
-    from tia_data_pipeline_spark.operators.scale import _require_local_path
+    from tia_data_pipeline_spark.operators.scale import _require_local_path, replace_dir
 
     _require_local_path(index_path)
     meta = ivf_index_meta(spark, index_path)
@@ -931,7 +927,6 @@ def ivf_retrain(
         .drop("_cell")
         .persist()  # consumed twice: the guard count and the fit/assign
     )
-    staging = index_path.rstrip("/") + ".retraining"
     try:
         n_valid = live.filter(valid_vector(F.col(vec_col))).count()
         if n_valid < k:
@@ -947,19 +942,10 @@ def ivf_retrain(
             seed=seed,
             fit_sample_max=fit_sample_max,
         )
-        shutil.rmtree(staging, ignore_errors=True)
-        ivf_write_index(assigned, centers, staging, vec_col=vec_col, id_col=id_col)
+        with replace_dir(spark, index_path) as staging:
+            ivf_write_index(assigned, centers, staging, vec_col=vec_col, id_col=id_col)
     finally:
         live.unpersist()
-    old = index_path.rstrip("/") + ".pre-retrain"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(index_path, old)
-    try:
-        os.rename(staging, index_path)
-    except BaseException:
-        os.rename(old, index_path)  # never leave the path empty
-        raise
-    shutil.rmtree(old)
     base = _train_baseline(
         spark, index_path, F.coalesce(F.sum("train_n"), F.lit(0)).alias("rows")
     )

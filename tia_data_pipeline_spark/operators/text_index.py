@@ -121,53 +121,37 @@ def _write_corpus_stats(
     silently return a partial top-k; the postings schema persists so
     an EMPTY index (zero postings files) stays servable.
 
-    Staged swap, not a bare overwrite (round 11): ``_corpus_stats`` is
-    the ONLY copy of the bucket modulus — a crash inside an overwrite's
-    delete-then-write window would brick the index (n_buckets is not
-    reliably inferable from partition dirs). The fresh row writes to a
-    staging dir, then two Hadoop-FS renames swap it live; a crash
-    between them leaves ``_corpus_stats__old``, which
-    :func:`read_corpus_stats` heals by renaming back."""
-    staging = f"{path}/_corpus_stats__new"
-    live = f"{path}/_corpus_stats"
-    old = f"{path}/_corpus_stats__old"
-    spark.read.parquet(f"{path}/_doc_stats").agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("total_tokens"),
-        F.lit(n_buckets).cast("int").alias("n_buckets"),
-        F.lit(postings_schema_json).alias("postings_schema"),
-    ).coalesce(1).write.mode("overwrite").parquet(staging)
-    from tia_data_pipeline_spark.operators.scale import hadoop_fs_path
+    Staged publish through ``operators.scale.replace_dir``, not a bare
+    overwrite (round 11): ``_corpus_stats`` is the ONLY copy of the
+    bucket modulus — a crash inside an overwrite's delete-then-write
+    window would brick the index (n_buckets is not reliably inferable
+    from partition dirs). A crash between the publish's two renames
+    leaves ``_corpus_stats__old``, which :func:`read_corpus_stats`
+    heals by renaming back."""
+    from tia_data_pipeline_spark.operators.scale import replace_dir
 
-    fs, p_live = hadoop_fs_path(spark, live)
-    _, p_old = hadoop_fs_path(spark, old)
-    _, p_new = hadoop_fs_path(spark, staging)
-    fs.delete(p_old, True)
-    if fs.exists(p_live):
-        fs.rename(p_live, p_old)
-    if not fs.rename(p_new, p_live):
-        fs.rename(p_old, p_live)  # roll back — never leave the path empty
-        raise ValueError("corpus-stats swap failed; previous stats restored")
-    fs.delete(p_old, True)
+    with replace_dir(spark, f"{path}/_corpus_stats") as staging:
+        spark.read.parquet(f"{path}/_doc_stats").agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum("dl").cast("bigint").alias("total_tokens"),
+            F.lit(n_buckets).cast("int").alias("n_buckets"),
+            F.lit(postings_schema_json).alias("postings_schema"),
+        ).coalesce(1).write.mode("overwrite").parquet(staging)
 
 
 def read_corpus_stats(spark: SparkSession, path: str):
     """The one-row ``_corpus_stats`` read every lifecycle verb starts
     from — single-sources the side-table contract (column names, the
     bucket modulus, the postings-schema JSON) so no consumer, the
-    empty-batch schemas included, can drift from it (review r10). Heals the swap window: live dir missing but
-    ``_corpus_stats__old`` present means a crash landed between the
-    two swap renames — the previous generation renames back (the
-    scalars it carries are at most one append stale, and the retried
-    append rewrites them)."""
-    from tia_data_pipeline_spark.operators.scale import hadoop_fs_path
+    empty-batch schemas included, can drift from it (review r10).
+    Heals a publish torn between its two renames first
+    (``operators.scale.heal_replaced_dir``): the previous generation
+    renames back — the scalars it carries are at most one append
+    stale, and the retried append rewrites them."""
+    from tia_data_pipeline_spark.operators.scale import heal_replaced_dir
 
     live = f"{path}/_corpus_stats"
-    fs, p_live = hadoop_fs_path(spark, live)
-    if not fs.exists(p_live):
-        _, p_old = hadoop_fs_path(spark, f"{path}/_corpus_stats__old")
-        if fs.exists(p_old):
-            fs.rename(p_old, p_live)
+    heal_replaced_dir(spark, live)
     return spark.read.parquet(live).collect()[0]
 
 
@@ -520,13 +504,17 @@ def text_index_compact(spark: SparkSession, path: str) -> dict:
     """One file per term bucket (appends fragment it) + apply pending
     deletions everywhere: ``_doc_stats`` drops tombstoned rows,
     ``_corpus_stats`` recomputes, and the generic compact drops the
-    tombstoned postings plus the applied tombstone table. The stats
-    rewrites run FIRST so a crash mid-compact can only leave scalars
-    already consistent with the tombstones a serve still masks."""
+    tombstoned postings plus the applied tombstone table. All three
+    rewrites publish through ``operators.scale.replace_dir``, so a
+    failed rename restores the previous table, never an empty path.
+    The stats rewrites run FIRST so a crash mid-compact can only leave
+    scalars already consistent with the tombstones a serve still
+    masks."""
     from tia_data_pipeline_spark.operators.scale import (
         _require_local_path,
         compact_partitioned_index,
         read_index_tombstones,
+        replace_dir,
     )
 
     _require_local_path(path)  # fail BEFORE any rewrite, not inside a rename
@@ -536,31 +524,10 @@ def text_index_compact(spark: SparkSession, path: str) -> dict:
         spark, path, index_schema_json=schema_json, id_col="doc_id"
     )
     if ts.limit(1).count():
-        kept = (
-            spark.read.parquet(f"{path}/_doc_stats")
-            .join(F.broadcast(ts), "doc_id", "left_anti")
-            .persist()
-        )
-        kept.count()  # materialize BEFORE overwriting what it reads
-        staging = f"{path}/_doc_stats__new"
-        kept.write.mode("overwrite").parquet(staging)
-        kept.unpersist()
-        import os
-        import shutil
-
-        # move-aside-first swap (the _swap_table / compaction rollback
-        # discipline — review r9): a crash between the renames restores
-        # the ORIGINAL membership table instead of leaving the index
-        # with no _doc_stats at all and the previous data destroyed
-        old = f"{path}/_doc_stats__old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(f"{path}/_doc_stats", old)
-        try:
-            os.rename(staging, f"{path}/_doc_stats")
-        except BaseException:
-            os.rename(old, f"{path}/_doc_stats")
-            raise
-        shutil.rmtree(old)
+        with replace_dir(spark, f"{path}/_doc_stats") as staging:
+            spark.read.parquet(f"{path}/_doc_stats").join(
+                F.broadcast(ts), "doc_id", "left_anti"
+            ).write.mode("overwrite").parquet(staging)
         _write_corpus_stats(spark, path, int(stats_row["n_buckets"]), schema_json)
     return compact_partitioned_index(
         spark,

@@ -13,6 +13,9 @@ compare the same µs instants.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -43,10 +46,12 @@ REGISTRY: dict[str, ContractQuery] = {}
 TEMP_DERIVATION_DIRS: list[str] = []
 
 
-def register_temp_dir(path: str) -> str:
-    """Record a builder's temp derivation dir for per-query cleanup
-    (returns the path for chaining)."""
+def temp_derivation_dir(prefix: str) -> str:
+    """A fresh temp dir for a builder's derivation, registered for
+    per-query cleanup with an atexit ``rmtree`` backstop."""
+    path = tempfile.mkdtemp(prefix=prefix)
     TEMP_DERIVATION_DIRS.append(path)
+    atexit.register(shutil.rmtree, path, True)
     return path
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from tia_data_pipeline_spark.catalog import load_table
 from tia_data_pipeline_spark.functions.text import money_sum, money_sum_sql
 from tia_data_pipeline_spark.operators.incremental import incremental_append
-from tia_data_pipeline_spark.plans.contract import contract_query, register_temp_dir
+from tia_data_pipeline_spark.plans.contract import contract_query, temp_derivation_dir
 
 
 @contract_query(
@@ -113,10 +113,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final table equals the plain union window — which is exactly
     the oracle. Covers jdbc_ensure_table (PK DDL), the distributed
     staging write, the atomic MERGE, and the JDBC read-back."""
-    import atexit
-    import shutil
-    import tempfile
-
     from tia_data_pipeline_spark.sources.jdbc import (
         jdbc_ensure_table,
         jdbc_merge_upsert,
@@ -125,9 +121,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Each build gets a fresh embedded DB (bench warm-up + timed runs =
     # several); the atexit hook keeps them from accumulating on disk.
-    tmp = tempfile.mkdtemp(prefix="graft_merge_")
-    register_temp_dir(tmp)
-    atexit.register(shutil.rmtree, tmp, True)
+    tmp = temp_derivation_dir("graft_merge_")
     url = f"jdbc:derby:{tmp}/db;create=true"
     orders = load_table(spark, sf_dir, "orders")
 

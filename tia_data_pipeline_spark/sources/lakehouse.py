@@ -16,10 +16,12 @@ counterpart over a data-lake table:
   importable, else validates the interface through the fallback).
 - **Parquet fallback** (sandbox / jar-less): read-union-overwrite that
   preserves MERGE *semantics* — keyed idempotency, twice ≡ once — but
-  not its atomicity. The rewrite stages to a sibling directory and
-  swaps via two filesystem renames to shrink (not eliminate) the
-  window in which a concurrent reader sees a missing table. That
-  trade-off is documented here deliberately: the fallback is for
+  not its atomicity. Every fallback rewrite (merge, compaction, both
+  deletes) publishes through ``operators.scale.replace_dir``: it stages
+  to ``<path>__new`` and swaps it in with two Hadoop-FS renames, which
+  shrinks (not eliminates) the window in which a concurrent reader sees
+  a missing table, and a failed rename restores the previous table.
+  That trade-off is documented here deliberately: the fallback is for
   environments without a table format, not a replacement for one.
 
 Semantics parity with the JDBC tier: ``update_on_match=False`` is the
@@ -29,12 +31,12 @@ win); ``True`` is a full upsert (incoming rows win on key collision).
 
 from __future__ import annotations
 
-import uuid
-import warnings
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tia_data_pipeline_spark.operators.scale import hadoop_fs_path, replace_dir, write_zordered
 
 
 def have_delta(spark: SparkSession) -> bool:
@@ -52,15 +54,8 @@ def have_delta(spark: SparkSession) -> bool:
         return False
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
-
-
 def table_exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath, _ = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs_path(spark, path)
     return bool(fs.exists(hpath))
 
 
@@ -107,52 +102,8 @@ def _merge_parquet_fallback(
     # The anti-join shuffles on the keys only (pruned probe side); the
     # full-width rewrite is the fallback's real cost and the reason the
     # Delta path (file-pruned MERGE) is the production answer.
-    staging = f"{path}__staging_{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(staging)
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    _swap_table(fs, jvm, staging, path)
-
-
-def _swap_table(fs, jvm, staging: str, path: str) -> None:
-    """Swap ``staging`` into ``path`` rename-aside-first: live → __old,
-    staging → live, delete __old. A failed rename never leaves the live
-    path empty — worst case the old table survives (restored at
-    ``path``, or parked at ``__old`` if even the restore rename fails)
-    and staging is kept for inspection. Readers can still observe a
-    brief missing-path window between the two renames; a table FORMAT
-    with a transaction log (Delta — ``have_delta`` path above) is the
-    real fix, this is the strongest swap plain parquet offers."""
-    P = jvm.org.apache.hadoop.fs.Path
-    hpath, spath = P(path), P(staging)
-    old = P(f"{path}__old_{uuid.uuid4().hex[:8]}")
-
-    def _rename(src, dst) -> bool:
-        # Hadoop FileSystem.rename signals failure as False OR as an
-        # exception depending on implementation/version — normalize so
-        # the restore path below runs either way.
-        try:
-            return bool(fs.rename(src, dst))
-        except Exception:  # noqa: BLE001
-            return False
-
-    if not _rename(hpath, old):
-        raise IOError(
-            f"rename {path} -> {old} failed; table unchanged, staging left at {staging}"
-        )
-    if not _rename(spath, hpath):
-        where = path if _rename(old, hpath) else str(old)
-        raise IOError(
-            f"rename {staging} -> {path} failed; previous table at {where}, "
-            f"staging left at {staging}"
-        )
-    try:
-        deleted = bool(fs.delete(old, True))
-    except Exception:  # noqa: BLE001 — FS implementations throw OR return False
-        deleted = False
-    if not deleted:
-        # the swap SUCCEEDED — only the parked previous version leaked;
-        # surface it so retained __old dirs don't accumulate silently
-        warnings.warn(f"table swap left previous version at {old}; delete it manually")
+    with replace_dir(spark, path) as staging:
+        merged.write.mode("overwrite").parquet(staging)
 
 
 def merge_upsert_table(
@@ -219,37 +170,33 @@ def compact_table(
     """
     if sort_by and zorder_by:
         raise ValueError("sort_by and zorder_by are mutually exclusive")
-    fs, hpath, jvm = _hadoop_fs(spark, path)
     # Refuse Delta tables outright: spark.read.parquet would resurrect
     # tombstoned (logically deleted) data files and the swap would
     # discard _delta_log — silent corruption. Delta's own OPTIMIZE is
     # the right tool there.
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/_delta_log")):
+    if table_exists(spark, f"{path}/_delta_log"):
         raise ValueError(
             f"{path} is a Delta table (_delta_log present); use Delta's "
             "OPTIMIZE instead of parquet-level compaction"
         )
-    summary = fs.getContentSummary(hpath)
-    total = int(summary.getLength())
+    fs, hpath = hadoop_fs_path(spark, path)
+    total = int(fs.getContentSummary(hpath).getLength())
     n_files = max(1, -(-total // target_file_bytes))  # ceil
     df = spark.read.parquet(path)
-    staging = f"{path}__compact_{uuid.uuid4().hex}"
-    if zorder_by:
-        # one layout recipe, owned by write_zordered (collision-safe
-        # temp key, bits passthrough) — compaction just points it at
-        # the staging dir and swaps
-        from tia_data_pipeline_spark.operators.scale import write_zordered
-
-        write_zordered(df, staging, list(zorder_by), n_files=n_files, bits=zorder_bits)
-    else:
-        if sort_by:
-            df = df.repartitionByRange(n_files, *[F.col(c) for c in sort_by]).sortWithinPartitions(
-                *sort_by
-            )
+    with replace_dir(spark, path) as staging:
+        if zorder_by:
+            # one layout recipe, owned by write_zordered (collision-safe
+            # temp key, bits passthrough) — compaction just points it at
+            # the staging dir
+            write_zordered(df, staging, list(zorder_by), n_files=n_files, bits=zorder_bits)
         else:
-            df = df.coalesce(n_files)
-        df.write.mode("overwrite").parquet(staging)
-    _swap_table(fs, jvm, staging, path)
+            if sort_by:
+                df = df.repartitionByRange(
+                    n_files, *[F.col(c) for c in sort_by]
+                ).sortWithinPartitions(*sort_by)
+            else:
+                df = df.coalesce(n_files)
+            df.write.mode("overwrite").parquet(staging)
     return n_files
 
 
@@ -279,10 +226,8 @@ def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
     existing = spark.read.parquet(path)
     kept = existing.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
     before = existing.count()
-    staging = f"{path}__staging_{uuid.uuid4().hex}"
-    kept.write.mode("overwrite").parquet(staging)
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    _swap_table(fs, jvm, staging, path)
+    with replace_dir(spark, path) as staging:
+        kept.write.mode("overwrite").parquet(staging)
     return before - spark.read.parquet(path).count()
 
 
@@ -322,8 +267,6 @@ def delete_keys(
     on = [existing[k].eqNullSafe(cond_ids[k]) for k in keys]
     kept = existing.join(cond_ids, on, "left_anti")
     before = existing.count()
-    staging = f"{path}__staging_{uuid.uuid4().hex}"
-    kept.write.mode("overwrite").parquet(staging)
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    _swap_table(fs, jvm, staging, path)
+    with replace_dir(spark, path) as staging:
+        kept.write.mode("overwrite").parquet(staging)
     return before - spark.read.parquet(path).count()

@@ -161,9 +161,9 @@ def stream_ivf_append(
     retraining inline: the inline default suits the ``availableNow``
     backfill form, where the drained stream is its own maintenance
     window; a continuous deployment serving probes concurrently should
-    enqueue the event and retrain in its own window (the two-rename
-    swap is atomic per rename but a probe listing files inside the swap
-    window should retry — ``ivf_retrain``'s documented discipline).
+    enqueue the event and retrain in its own window (the retrain
+    publishes through ``operators.scale.replace_dir``, atomic per rename,
+    but a probe listing files between its two renames should retry).
 
     Replay note (review r11): the per-batch drift record is a pure
     function of (batch, index GENERATION) — and an inline retrain

@@ -4,7 +4,7 @@ SimHash or embedding sign-buckets), plus the deletion-request loop over
 every index kind.
 
 Every micro-batch probes the index for near-duplicates of what it
-carries, emits the pairs and (optionally) appends its own rows so later
+carries, emits the pairs and appends its own rows so later
 batches dedupe against it — the streaming form of
 ``comments_pipeline.py:33``'s daily-increment semantics. Its pairs are
 the index core's cross and intra legs, both replay-deterministic.
@@ -45,7 +45,6 @@ def index_increment_batch(
     pairs_out: str,
     batch_id: int,
     *,
-    update_index: bool = True,
     meta: dict | None = None,
     **opts,
 ) -> None:
@@ -68,8 +67,7 @@ def index_increment_batch(
         cross.unionByName(_intra(family, banded, check, cap)).write.mode(
             "overwrite"
         ).parquet(f"{pairs_out}/batch_id={batch_id}")
-        if update_index:
-            _append_delta(family, banded, spark, index_path, meta)
+        _append_delta(family, banded, spark, index_path, meta)
     finally:
         banded.unpersist()
 
@@ -81,7 +79,6 @@ def stream_index_incremental(
     index_path: str,
     pairs_out: str,
     checkpoint: str,
-    update_index: bool = True,
     available_now: bool = True,
     **opts,
 ) -> StreamingQuery:
@@ -98,7 +95,7 @@ def stream_index_incremental(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         index_increment_batch(
             family, batch_df, index_path, pairs_out, batch_id,
-            update_index=update_index, meta=meta, **opts,
+            meta=meta, **opts,
         )
 
     return start_foreach_batch(stream, write_batch, checkpoint, available_now)
