@@ -95,45 +95,59 @@ def test_connected_components_raises_when_budget_exhausted(spark):
     assert set(got.values()) == {1}
 
 
-def test_twophase_components_match_label_propagation(spark):
-    """Property: large-star/small-star labels == min-label propagation
-    labels on random graphs (both root every node at its component min)."""
-    import random
-
-    from tia_data_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_twophase,
-    )
-
-    rng = random.Random(11)
-    nodes = list(range(60))
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(55)]
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-    base = {r["node"]: r["component"] for r in connected_components(df, max_iter=60).collect()}
-    two = {r["node"]: r["component"] for r in connected_components_twophase(df).collect()}
-    assert two == base
-
-
 @pytest.mark.slow
-def test_twophase_handles_deep_chain_in_log_rounds(spark):
-    """A 120-hop chain: min-label propagation would need 120 rounds
-    (raises under a 10-round budget), the two-phase form converges well
-    inside it — the log-diameter claim, demonstrated."""
-    import pytest
-
-    from tia_data_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_twophase,
-    )
+def test_connected_components_deep_chain_needs_its_budget(spark):
+    """A 120-hop chain: min-label propagation needs about one round per
+    hop, so a 10-round budget raises and a 130-round budget gives one
+    component of all 121 nodes."""
+    from tia_data_pipeline_spark.operators.graph import connected_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(120)], "id_a bigint, id_b bigint"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iter=10)
-    got = {r["node"]: r["component"] for r in connected_components_twophase(chain, max_iter=10).collect()}
+    got = {r["node"]: r["component"] for r in connected_components(chain, max_iter=130).collect()}
     assert set(got.values()) == {0} and len(got) == 121
+
+
+@pytest.mark.parametrize(
+    "edge_rows, want",
+    [
+        # one-round pair graph: every node's first label is final
+        (
+            [(1, 2), (1, 3), (10, 11), (20, 21)],
+            {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20},
+        ),
+        # 12-hop chain: twelve propagation rounds over the same edges
+        ([(i, i + 1) for i in range(12)], {i: 0 for i in range(13)}),
+    ],
+    ids=["pairs", "chain12"],
+)
+def test_connected_components_evaluates_edge_source_at_most_4x(spark, edge_rows, want):
+    """The symmetric edge set is derived once and persisted: the edge
+    source plan (a lazy pair plan in the declared query) is evaluated
+    at most 4 times per edge row over the whole call, however many
+    rounds run — once per symmetrization leg for the projection and
+    once for its pushed-down NULL filter. Counted with an accumulator
+    in a test-only UDF wrapped around the source."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    from tia_data_pipeline_spark.operators.graph import connected_components
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def _counted(x):
+        calls.add(1)
+        return x
+
+    counted = F.udf(_counted, LongType())
+    base = spark.createDataFrame(edge_rows, "id_a bigint, id_b bigint")
+    edges = base.select(counted("id_a").alias("id_a"), "id_b")
+    labels = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    assert labels == want
+    assert calls.value <= 4 * len(edge_rows), (calls.value, len(edge_rows))
 
 
 def test_dedup_components_survivor_from_docs_subset(spark):
@@ -208,24 +222,15 @@ def test_thread_closure_raises_past_max_depth(spark):
     assert out.count() == 9
 
 
-def test_components_null_endpoints_identical_across_variants(spark):
-    """Review r7: both components operators state the same NULL-endpoint
-    precondition — an edge with a NULL endpoint is dropped, so the two
-    property-tested-equivalent algorithms return the SAME row set on
-    hostile input (label propagation used to silently lose the NULL
-    node while the twophase rewrite emitted a (NULL, NULL) row)."""
-    from tia_data_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_twophase,
-    )
+def test_connected_components_drops_null_endpoints(spark):
+    """An edge with a NULL endpoint is not an edge: it contributes
+    neither a (NULL, label) row nor its other endpoint as a node, while
+    a self-loop still labels its node."""
+    from tia_data_pipeline_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (None, 5), (7, None), (None, None), (3, 3)],
         "id_a bigint, id_b bigint",
     )
-    a = {(r["node"], r["component"]) for r in connected_components(edges).collect()}
-    b = {
-        (r["node"], r["component"])
-        for r in connected_components_twophase(edges).collect()
-    }
-    assert a == b == {(1, 1), (2, 1), (3, 3)}
+    got = {(r["node"], r["component"]) for r in connected_components(edges).collect()}
+    assert got == {(1, 1), (2, 1), (3, 3)}

@@ -94,47 +94,6 @@ def test_composes_to_exact_join_semantics(spark, docs):
     )
 
 
-def test_anti_join_probe_side_is_broadcast(spark, docs, tmp_path):
-    """ADVICE r4: the final subtract in bloom_anti_join must broadcast
-    the (tiny, derived) confirmed-hit set — without the hint Spark has
-    no size stats and plans a sort-merge anti-join that shuffles the
-    FULL probe side, contradicting the 'definitely-absent rows never
-    shuffle' contract. Same pin for bloom_semi_join's sliver join NOT
-    asserted: there the exact join against the full key set is the
-    deliberate pay-the-shuffle path."""
-    from tia_data_pipeline_spark.operators.membership import bloom_anti_join
-
-    members = docs.filter(F.col("doc_id") % 5 == 0).withColumnRenamed("doc_id", "k")
-    m, k = bloom_params(members.count(), 0.01)
-    bp = str(tmp_path / "b")
-    bloom_build(members, "k", m_bits=m, k_hashes=k).write.parquet(bp)
-    bloom = spark.read.parquet(bp)
-
-    anti = bloom_anti_join(docs, "doc_id", members, "k", bloom, m_bits=m, k_hashes=k)
-    p = _explain(anti)
-    anti_lines = [l for l in p.splitlines() if "Join LeftAnti" in l]
-    assert anti_lines, "expected an anti join in the plan"
-    assert all("BroadcastHashJoin" in l for l in anti_lines), (
-        "the confirmed-hit subtract must be a broadcast anti-join:\n" + p
-    )
-    assert "SortMergeJoin LeftAnti" not in p
-
-    # dense-overlap escape hatch: confirmed can approach the full
-    # blocklist (re-filtering a contaminated stream), where a forced
-    # broadcast would OOM — sparse_overlap=False must take a shuffle
-    # subtract instead, with identical rows
-    dense = bloom_anti_join(
-        docs, "doc_id", members, "k", bloom, m_bits=m, k_hashes=k, sparse_overlap=False
-    )
-    pd_ = _explain(dense)
-    assert not any(
-        "BroadcastHashJoin" in l for l in pd_.splitlines() if "Join LeftAnti" in l
-    )
-    assert sorted(r["doc_id"] for r in dense.collect()) == sorted(
-        r["doc_id"] for r in anti.collect()
-    )
-
-
 def test_membership_mark_parity_broadcast_vs_bloom(spark, docs):
     """VERDICT r4 #3: the size-conditional membership verb must produce
     IDENTICAL rows on both physical paths — broadcast join vs Bloom
@@ -148,14 +107,6 @@ def test_membership_mark_parity_broadcast_vs_bloom(spark, docs):
     rows_bloom = sorted((r["doc_id"], r["hit"]) for r in via_bloom.collect())
     assert rows_bc == rows_bloom
     assert via_bc.columns == via_bloom.columns
-    # prebuilt-filter escape hatch (explicit storage lifecycle): same rows
-    m, k = bloom_params(members.count(), 0.01)
-    pre = bloom_build(members, "k", m_bits=m, k_hashes=k)
-    via_pre = membership_mark(
-        docs, "doc_id", members, "k", strategy="bloom",
-        bloom=pre, bloom_m_bits=m, bloom_k_hashes=k,
-    )
-    assert sorted((r["doc_id"], r["hit"]) for r in via_pre.collect()) == rows_bc
     # sanity: actual membership semantics, not all-NULL
     assert any(h == 1 for _, h in rows_bc) and any(h is None for _, h in rows_bc)
 
@@ -246,33 +197,6 @@ def test_bad_args(spark, docs):
         bloom_build(docs, "doc_id", m_bits=100, k_hashes=3)
     with pytest.raises(ValueError):
         bloom_prefilter(docs, "doc_id", docs, m_bits=63, k_hashes=3)
-
-
-def test_semi_and_anti_join_verbs_exact(spark, docs, tmp_path):
-    """bloom_semi_join ≡ exact semi-join; bloom_anti_join ≡ exact
-    anti-join — the Bloom layer is invisible in the result."""
-    from tia_data_pipeline_spark.operators.membership import (
-        bloom_anti_join,
-        bloom_semi_join,
-    )
-
-    members = docs.filter(F.col("doc_id") % 5 == 0).withColumnRenamed("doc_id", "k")
-    m, k = bloom_params(members.count(), 0.01)
-    bp = str(tmp_path / "b")
-    bloom_build(members, "k", m_bits=m, k_hashes=k).write.parquet(bp)
-    bloom = spark.read.parquet(bp)
-
-    semi = bloom_semi_join(docs, "doc_id", members, "k", bloom, m_bits=m, k_hashes=k)
-    anti = bloom_anti_join(docs, "doc_id", members, "k", bloom, m_bits=m, k_hashes=k)
-    exact_semi = docs.join(members, F.col("doc_id") == F.col("k"), "left_semi")
-    exact_anti = docs.join(members, F.col("doc_id") == F.col("k"), "left_anti")
-    assert sorted(r["doc_id"] for r in semi.collect()) == sorted(
-        r["doc_id"] for r in exact_semi.collect()
-    )
-    assert sorted(r["doc_id"] for r in anti.collect()) == sorted(
-        r["doc_id"] for r in exact_anti.collect()
-    )
-    assert semi.count() + anti.count() == docs.count()
 
 
 def test_membership_mark_reserved_looking_stream_columns_survive(spark, docs):

@@ -153,7 +153,6 @@ TAIL_COVERED_BY = {
     "q_const_probe": "q_filter_range",
     "q_cooccur_lift": "q_mutual_info",
     "q_decontaminate": "q_semi_join",
-    "q_dedup_components": "q_containment",
     "q_dedup_incremental": "q_index_delete",
     "q_dedup_latest": "q_dedup_batch",
     "q_doc_fingerprint": "q_containment",
@@ -161,6 +160,7 @@ TAIL_COVERED_BY = {
     "q_dup_graph_degree": "q_containment",
     "q_edit_distance": "q_dup_spans",
     "q_embed_quantize": "q_embed_dedup",
+    "q_exact_dedup": "q_dedup_batch",
     "q_exists_guard": "q_semi_join",
     "q_feature_hash": "q_hash_sample",
     "q_funnel": "q_markov",

@@ -35,7 +35,6 @@ from tia_data_pipeline_spark.operators.index import (
 )
 from tia_data_pipeline_spark.operators.graph import (
     connected_components,
-    connected_components_twophase,
     dedup_components,
     thread_closure,
 )
@@ -119,7 +118,6 @@ __all__ = [
     "compact_partitioned_index",
     "partitioned_index_stats",
     "connected_components",
-    "connected_components_twophase",
     "dedup_components",
     "minhash_near_duplicates",
     "minhash_signature_frame",

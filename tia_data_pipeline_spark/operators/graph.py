@@ -117,8 +117,8 @@ def thread_closure(
         if cached is not None:
             cached.unpersist()
         if n_level == 0:
-            frontier = None
-            break
+            out = reduce(lambda a, b: a.unionByName(b), levels)
+            return out.select(F.col("_id").alias(id_col), "root_id", "depth")
         if level > max_depth:
             raise RuntimeError(
                 f"thread_closure: nodes exist below max_depth={max_depth} — "
@@ -127,10 +127,6 @@ def thread_closure(
             )
         levels.append(nxt)
         frontier = nxt
-    if frontier is not None:
-        raise AssertionError("unreachable: probe level must break or raise")
-    out = reduce(lambda a, b: a.unionByName(b), levels)
-    return out.select(F.col("_id").alias(id_col), "root_id", "depth")
 
 
 def connected_components(
@@ -148,55 +144,52 @@ def connected_components(
     cluster" — pairwise dedup alone drops too little (A~B, B~C but A≁C
     still forms one cluster via transitivity).
 
-    Algorithm: every node starts labeled with itself; each round, every
-    node adopts the minimum label in its closed neighborhood; stop when
-    no label changed. The min label travels one hop per round, so
-    rounds are bounded by the longest chain in a component (near-dup
-    clusters are shallow; ``max_iter`` guards the pathological chain).
-    Each round is one join + one groupBy over the edge list — the
-    standard Hash-to-Min shape, linear in |E| per round. The edge
-    relation stays fixed across rounds; per round exactly ONE
-    materialization (the joined old/new label frame is checkpointed,
-    and both the convergence test and the next labels read from it),
-    with lineage cut via localCheckpoint like :func:`thread_closure`.
+    Algorithm: every node adopts the minimum label in its closed
+    neighborhood, round after round, until no label changes. The min
+    label travels one hop per round, so rounds are bounded by the
+    longest chain in a component (near-dup clusters are shallow;
+    ``max_iter`` guards the pathological chain). Each round is one
+    join + one groupBy over the edge list — the standard Hash-to-Min
+    shape, linear in |E| per round.
+
+    The symmetric edge set is derived ONCE and persisted: the nodes,
+    the first labels and every round read it, so a lazy pair plan (the
+    declared-query case) runs once per call, not once per consumer.
+    The first labels need no join — ``least(u, min(v))`` per ``u`` is
+    round one. Each later round is ONE action: a full count of the
+    changed rows both tests convergence and materializes the round's
+    localCheckpoint (which cuts lineage like :func:`thread_closure`);
+    a ``limit(1)`` probe would leave partitions for a second job to
+    fill. No self-loops are needed: ``least(component,
+    new_component)`` folds each node's own label in.
 
     Exhausting ``max_iter`` before quiescence RAISES instead of
     returning silently-wrong labels (a component with a chain longer
     than ``max_iter`` hops would otherwise split into several partial
-    components and downstream dedup would under-collapse). Raise the
-    budget — rounds cost O(|E|) each — or pre-shrink diameter with a
-    large-star/small-star contraction pass if a corpus ever hits this.
+    components and downstream dedup would under-collapse); raise the
+    budget — rounds cost O(|E|) each.
     """
-    # NULL-endpoint precondition (stated, shared with the twophase
-    # variant so the property-tested equivalence holds on hostile
-    # inputs too): an edge with a NULL endpoint is not an edge — NULL
-    # never equi-joins, so label propagation would silently drop the
-    # row where the twophase rewrite would emit a (NULL, NULL)
-    # component. Filter explicitly; callers with NULL-id docs exclude
+    # NULL-endpoint precondition (stated): an edge with a NULL endpoint
+    # is not an edge. Unfiltered, the first-label groupBy would emit a
+    # (NULL, label) row and the other endpoint as a node (least()
+    # skips NULL). Filter explicitly; callers with NULL-id docs exclude
     # them before pair generation (the dedup-family discipline).
     edges = edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
     sym = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .union(edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v")))
         .distinct()
+        .persist()
     )
-    # closed neighborhood: each node is its own neighbor. The edge
-    # relation is loop-invariant — persist so each round's join reads
-    # the materialized set instead of re-running the source scan +
-    # symmetrize + distinct shuffle every iteration (the pagerank
-    # e_deg discipline). Unpersisted on the success path: the returned
-    # labels derive from a localCheckpoint, so the cache is loop
-    # scaffolding only (CacheManager holds persists until explicit
-    # unpersist — returning without one would leak the edge set for
-    # the session).
-    nodes = sym.select("u").distinct()
-    sym = sym.union(nodes.select(F.col("u"), F.col("u").alias("v"))).persist()
-    labels = nodes.select(F.col("u").alias("node"), F.col("u").alias("component"))
-    # try/finally: the cache must be released on EVERY exit path — the
-    # convergence return, the max_iter raise, and any mid-loop failure
-    # (a raise-path leak would hold the edge set for the session, the
-    # exact leak the unpersist exists to prevent).
+    # try/finally: the cache is loop scaffolding (the returned labels
+    # derive from a localCheckpoint) and must be released on EVERY exit
+    # path — the convergence return, the max_iter raise, and any
+    # mid-loop failure (CacheManager holds persists until explicit
+    # unpersist, so a leak would hold the edge set for the session).
     try:
+        labels = sym.groupBy("u").agg(
+            F.least(F.col("u"), F.min("v")).alias("component")
+        ).withColumnRenamed("u", "node")
         for _ in range(max_iter):
             # propagate: node's new label = min(label of every neighbor)
             prop = (
@@ -209,9 +202,7 @@ def connected_components(
                 .select("node", "component", "new_component")
                 .localCheckpoint(eager=False)
             )
-            n_changed = (
-                joined.filter(F.col("new_component") < F.col("component")).limit(1).count()
-            )
+            n_changed = joined.filter(F.col("new_component") < F.col("component")).count()
             labels = joined.select(
                 "node", F.least("component", "new_component").alias("component")
             )
@@ -267,109 +258,6 @@ def dedup_components(
         F.col(id_col),
         F.col("component"),
         (F.col(id_col) == keep).alias("is_kept"),
-    )
-
-
-def connected_components_twophase(
-    edges: DataFrame,
-    *,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """(node, component) labeling via alternating large-star /
-    small-star contractions — the O(log diameter)-round form of
-    :func:`connected_components` for graphs whose chains outrun a
-    per-hop label-propagation budget.
-
-    Min-label propagation moves the component minimum ONE hop per
-    round: a 10^6-node chain needs 10^6 rounds. The two-phase algorithm
-    (Kiveris et al., "Connected Components in MapReduce and Beyond")
-    instead rewires the edge list itself each round:
-
-    - large-star: every node links its LARGER neighbors directly to the
-      minimum of its closed neighborhood (halves depth along heavy
-      paths);
-    - small-star: every node links its smaller-or-equal neighbors and
-      itself to that minimum (contracts the remaining short hops).
-
-    Both steps preserve connectivity, and the fixed point is a star per
-    component rooted at its minimum — rounds grow with log(diameter),
-    so the default budget covers astronomically deep graphs. Per round:
-    two grouped mins + joins over the CURRENT edge list (which only
-    shrinks toward one edge per non-root node), one localCheckpoint materialized by a count
-    that doubles as the cheap half of the fixed-point test
-    (equal-cardinality DISTINCT sets + one empty exceptAll direction ⇔
-    equality; a count mismatch skips the exceptAll). Like
-    :func:`connected_components`, exhausting ``max_iter`` raises rather
-    than returning partial components; semantics equivalence between
-    the two algorithms is property-tested on random graphs.
-    """
-    # NULL-endpoint precondition — identical to connected_components'
-    # (stated on both variants so their property-tested equivalence
-    # holds on hostile inputs): without it this variant would emit a
-    # (NULL, NULL) row via all_nodes where label propagation silently
-    # drops the node.
-    edges = edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-    all_nodes = (
-        edges.select(F.col(src_col).alias("node"))
-        .union(edges.select(F.col(dst_col).alias("node")))
-        .distinct()
-    )
-    cur = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    n_cur: int | None = None
-    for _ in range(max_iter):
-        # -- large-star: sym neighborhoods; larger neighbors -> closed-nbhd min
-        sym = cur.union(cur.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        mins = sym.groupBy("a").agg(F.min("b").alias("_mn"))
-        m = F.least(F.col("a"), F.col("_mn"))
-        large = (
-            sym.join(mins, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), m.alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # -- small-star: orient (larger -> smaller); all small neighbors
-        #    and the node itself -> min neighbor
-        dir_ = large.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        ).distinct()
-        smins = dir_.groupBy("a").agg(F.min("b").alias("_mn"))
-        joined = dir_.join(smins, "a")
-        nxt = (
-            joined.select(F.col("b").alias("a"), F.col("_mn").alias("b"))
-            .union(joined.select(F.col("a"), F.col("_mn").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # fixed-point test in ONE heavy job: both sides are DISTINCT
-        # sets, so equal counts + one empty set-difference direction ⇔
-        # equality; the count also triggers the checkpoint
-        # materialization, and a count mismatch short-circuits the
-        # exceptAll entirely (the common changed-round case).
-        n_nxt = nxt.count()
-        if n_cur is None:
-            n_cur = cur.count()
-        unchanged = n_nxt == n_cur and nxt.exceptAll(cur).limit(1).count() == 0
-        cur, n_cur = nxt, n_nxt
-        if unchanged:
-            labels = cur.select(F.col("a").alias("node"), F.col("b").alias("component"))
-            return (
-                all_nodes.join(labels, "node", "left")
-                .select(
-                    "node", F.coalesce("component", F.col("node")).alias("component")
-                )
-            )
-    raise RuntimeError(
-        f"connected_components_twophase did not converge within max_iter={max_iter} "
-        "rounds — unexpected for any realistic graph (rounds grow with log diameter); "
-        "raise max_iter"
     )
 
 
@@ -506,10 +394,10 @@ def _pagerank_loop(
                 ).alias("rank_n"),
             )
         )
-        # long runs flatten lineage periodically (the same escape hatch
-        # connected_components_twophase uses): each iteration nests a
-        # join into the plan, and analyzer time goes super-linear past
-        # a few dozen levels. No-op at the fixed-iteration defaults.
+        # long runs flatten lineage periodically (as connected_components
+        # does every round): each iteration nests a join into the plan,
+        # and analyzer time goes super-linear past a few dozen levels.
+        # No-op at the fixed-iteration defaults.
         if (it + 1) % 10 == 0:
             ranks = ranks.localCheckpoint(eager=False)
     # Re-attach the contribution-less nodes exactly once, at the end.

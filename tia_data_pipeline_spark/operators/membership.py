@@ -23,6 +23,11 @@ DATAFRAME — never a driver-side object:
   exact-join semantics are preserved by construction when composed as
   ``bloom_prefilter(...) ⋈_exact keys``.
 
+The exact membership verb is :func:`membership_mark`, which builds a
+per-call filter on its large-set path. A long-lived service builds its
+filter once with :func:`bloom_build`, materializes it, and probes it
+with :func:`bloom_mark` (or :func:`bloom_prefilter`).
+
 Reference scope: the reference has no membership tier at all (it
 re-inserts every page, posts_pipeline.py:52-58); this is the SURVEY
 §2.4 scale path for membership against sets beyond broadcast reach.
@@ -31,6 +36,8 @@ re-inserts every page, posts_pipeline.py:52-58); this is the SURVEY
 from __future__ import annotations
 
 import math
+import uuid
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -40,8 +47,6 @@ __all__ = [
     "bloom_build",
     "bloom_prefilter",
     "bloom_mark",
-    "bloom_semi_join",
-    "bloom_anti_join",
     "membership_mark",
 ]
 
@@ -102,6 +107,52 @@ def bloom_build(
     )
 
 
+def _bloom_probe(
+    df: DataFrame,
+    key_col: str,
+    bloom: DataFrame,
+    m_bits: int,
+    k_hashes: int,
+    flag_col: str | None,
+) -> DataFrame:
+    """The k word-table probes shared by :func:`bloom_prefilter` and
+    :func:`bloom_mark`: one broadcast left join on the word index plus
+    one bit test per hash. ``flag_col=None`` filters on each bit right
+    after its probe (later probes see only the survivors); otherwise
+    every row rides through all k probes and the AND of the bit tests
+    lands in ``flag_col``."""
+    if m_bits < 64 or m_bits % 64:
+        raise ValueError("m_bits must be a positive multiple of 64")
+    # uuid-suffixed temp prefix (the write_zordered discipline): fixed
+    # names like _b0_pos would silently clobber same-named stream
+    # columns, making the bloom and broadcast strategies return
+    # different rows for the same input
+    tok = uuid.uuid4().hex[:8]
+    out = df
+    hits = []
+    temps = []
+    for i, pos in enumerate(_positions(F.col(key_col), m_bits, k_hashes)):
+        p, idx, bits = (f"_b{tok}{i}_{c}" for c in ("pos", "idx", "bits"))
+        temps += [idx, bits, p]
+        b = bloom.select(F.col("idx").alias(idx), F.col("bits").alias(bits))
+        out = out.withColumn(p, pos).join(
+            F.broadcast(b), (F.col(p) / 64).cast("int") == F.col(idx), "left"
+        )
+        hit = (
+            F.coalesce(F.col(bits), F.lit(0).cast("bigint")).bitwiseAND(
+                F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(pmod({p}, 64) AS INT))")
+            )
+            != 0
+        )
+        if flag_col is None:
+            out = out.filter(hit)
+        else:
+            hits.append(hit)
+    if flag_col is not None:
+        out = out.withColumn(flag_col, reduce(lambda a, b: a & b, hits))
+    return out.drop(*temps)
+
+
 def bloom_prefilter(
     df: DataFrame,
     key_col: str,
@@ -124,44 +175,7 @@ def bloom_prefilter(
     plan, so the build aggregate would re-run k times. The parquet
     round-trip probe plan is exactly k broadcasts of a tiny scan and
     ZERO keyed exchanges (pinned in tests/test_membership.py)."""
-    if m_bits < 64 or m_bits % 64:
-        raise ValueError("m_bits must be a positive multiple of 64")
-    # uuid-suffixed temp prefix (the write_zordered discipline): fixed
-    # names like _b0_pos would silently clobber same-named stream
-    # columns, making the bloom and broadcast strategies return
-    # different rows for the same input
-    import uuid as _uuid
-
-    tok = _uuid.uuid4().hex[:8]
-    out = df
-    key = F.col(key_col)
-    for i, pos in enumerate(_positions(key, m_bits, k_hashes)):
-        b = bloom.select(
-            F.col("idx").alias(f"_b{tok}{i}_idx"), F.col("bits").alias(f"_b{tok}{i}_bits")
-        )
-        out = (
-            out.withColumn(f"_b{tok}{i}_pos", pos)
-            .join(
-                F.broadcast(b),
-                (F.col(f"_b{tok}{i}_pos") / 64).cast("int") == F.col(f"_b{tok}{i}_idx"),
-                "left",
-            )
-            .filter(
-                F.coalesce(F.col(f"_b{tok}{i}_bits"), F.lit(0).cast("bigint")).bitwiseAND(
-                    F.expr(
-                        f"shiftleft(CAST(1 AS BIGINT), CAST(pmod(_b{tok}{i}_pos, 64) AS INT))"
-                    )
-                )
-                != 0
-            )
-        )
-    return out.drop(
-        *[
-            c
-            for i in range(k_hashes)
-            for c in (f"_b{tok}{i}_idx", f"_b{tok}{i}_bits", f"_b{tok}{i}_pos")
-        ]
-    )
+    return _bloom_probe(df, key_col, bloom, m_bits, k_hashes, None)
 
 
 def bloom_mark(
@@ -180,42 +194,7 @@ def bloom_mark(
     rides through all k probes (no between-probe reduction), which is
     the price of keeping the definitely-absent rows in the stream.
     Same materialization note as bloom_prefilter applies."""
-    if m_bits < 64 or m_bits % 64:
-        raise ValueError("m_bits must be a positive multiple of 64")
-    # uuid-suffixed temp prefix — see bloom_prefilter
-    import uuid as _uuid
-
-    tok = _uuid.uuid4().hex[:8]
-    out = df
-    key = F.col(key_col)
-    tests = []
-    for i, pos in enumerate(_positions(key, m_bits, k_hashes)):
-        b = bloom.select(
-            F.col("idx").alias(f"_b{tok}{i}_idx"), F.col("bits").alias(f"_b{tok}{i}_bits")
-        )
-        out = out.withColumn(f"_b{tok}{i}_pos", pos).join(
-            F.broadcast(b),
-            (F.col(f"_b{tok}{i}_pos") / 64).cast("int") == F.col(f"_b{tok}{i}_idx"),
-            "left",
-        )
-        tests.append(
-            F.coalesce(F.col(f"_b{tok}{i}_bits"), F.lit(0).cast("bigint")).bitwiseAND(
-                F.expr(
-                    f"shiftleft(CAST(1 AS BIGINT), CAST(pmod(_b{tok}{i}_pos, 64) AS INT))"
-                )
-            )
-            != 0
-        )
-    flag = tests[0]
-    for t in tests[1:]:
-        flag = flag & t
-    return out.withColumn(flag_col, flag).drop(
-        *[
-            c
-            for i in range(k_hashes)
-            for c in (f"_b{tok}{i}_idx", f"_b{tok}{i}_bits", f"_b{tok}{i}_pos")
-        ]
-    )
+    return _bloom_probe(df, key_col, bloom, m_bits, k_hashes, flag_col)
 
 
 def membership_mark(
@@ -230,9 +209,6 @@ def membership_mark(
     broadcast_max_bytes: int = BROADCAST_MAX_SOURCE_BYTES,
     fp_rate: float = 0.01,
     members_distinct: bool = False,
-    bloom: DataFrame | None = None,
-    bloom_m_bits: int | None = None,
-    bloom_k_hashes: int | None = None,
 ) -> DataFrame:
     """Mark each ``stream`` row with ``hit_col`` = 1 when its key is in
     ``members``, NULL otherwise — the membership-join verb behind
@@ -248,7 +224,10 @@ def membership_mark(
       majority against a sparse member set) bypass the exact join
       entirely, and only the possible sliver pays a SHUFFLE_HASH join
       against the full member set. One driver scalar (``members``
-      count) sizes the filter — control-plane, large path only.
+      count) sizes the filter, which is built and persisted per call —
+      control-plane, large path only. A long-lived service probing one
+      member set many times builds its filter once with
+      :func:`bloom_build` and probes it with :func:`bloom_mark`.
     - ``auto``: picks by ``est_member_source_bytes`` (see
       ``operators.scale.estimated_relation_bytes``; callers scale it by
       the member-side selectivity they know, e.g. 1/17 for the
@@ -277,31 +256,20 @@ def membership_mark(
     if strategy == "broadcast":
         return stream.join(F.broadcast(member_keys), key_col, "left")
 
-    if bloom is not None:
-        # caller-materialized filter (e.g. parquet-backed bloom_build
-        # output): no count job, no persist — the long-lived-service
-        # path with explicit storage lifecycle
-        if bloom_m_bits is None or bloom_k_hashes is None:
-            raise ValueError("bloom_m_bits/bloom_k_hashes required with a prebuilt bloom")
-        m_bits, k_hashes = bloom_m_bits, bloom_k_hashes
-    else:
-        n_keys = max(1, members.count())
-        m_bits, k_hashes = bloom_params(n_keys, fp_rate)
-        bloom = bloom_build(members, members_col, m_bits=m_bits, k_hashes=k_hashes)
-        # materialize: the probe references the word table k times and
-        # exchange reuse does not collapse alias-projected copies of an
-        # unmaterialized aggregate (see bloom_prefilter docstring).
-        # Lifecycle: the CacheManager holds the cache until explicit
-        # unpersist or session end (it does NOT release on GC of the
-        # result), so a loop over many member sets accumulates word
-        # tables — tiny (<= m/64 rows) but unbounded; a long-lived
-        # service should pass a parquet-materialized filter via
-        # ``bloom=`` instead, which takes this path out entirely.
-        bloom = bloom.persist()
-        bloom.count()
-    import uuid as _uuid
-
-    flag = f"_possible_{_uuid.uuid4().hex[:8]}"  # collision-proof temp name
+    n_keys = max(1, members.count())
+    m_bits, k_hashes = bloom_params(n_keys, fp_rate)
+    bloom = bloom_build(members, members_col, m_bits=m_bits, k_hashes=k_hashes)
+    # materialize: the probe references the word table k times and
+    # exchange reuse does not collapse alias-projected copies of an
+    # unmaterialized aggregate (see bloom_prefilter docstring).
+    # Lifecycle: the CacheManager holds the cache until explicit
+    # unpersist or session end (it does NOT release on GC of the
+    # result), so a loop over many member sets accumulates word tables
+    # — tiny (<= m/64 rows) but unbounded; a long-lived service builds
+    # its filter once with bloom_build and probes it with bloom_mark.
+    bloom = bloom.persist()
+    bloom.count()
+    flag = f"_possible_{uuid.uuid4().hex[:8]}"  # collision-proof temp name
     marked = bloom_mark(
         stream, key_col, bloom, m_bits=m_bits, k_hashes=k_hashes, flag_col=flag
     )
@@ -321,63 +289,3 @@ def membership_mark(
     # tests/test_membership.py::test_membership_mark_bloom_path_never_broadcasts_members)
     exact = sliver.join(member_keys.hint("shuffle_hash"), key_col, "left")
     return exact.unionByName(absent.withColumn(hit_col, F.lit(None).cast("int")))
-
-
-def bloom_semi_join(
-    df: DataFrame,
-    key_col: str,
-    keys: DataFrame,
-    keys_col: str,
-    bloom: DataFrame,
-    *,
-    m_bits: int,
-    k_hashes: int,
-) -> DataFrame:
-    """Rows of ``df`` whose key IS in ``keys`` — exact semantics, Bloom
-    cost profile. The pre-test (zero false negatives) drops the bulk of
-    ``df`` before any shuffle; only the surviving sliver pays the exact
-    semi-join against the full key set. ``bloom`` must be the
-    materialized output of :func:`bloom_build` over
-    ``keys[keys_col]``."""
-    sliver = bloom_prefilter(df, key_col, bloom, m_bits=m_bits, k_hashes=k_hashes)
-    rhs = keys.select(F.col(keys_col).alias("_bloom_k")).distinct()
-    return sliver.join(rhs, F.col(key_col) == F.col("_bloom_k"), "left_semi")
-
-
-def bloom_anti_join(
-    df: DataFrame,
-    key_col: str,
-    keys: DataFrame,
-    keys_col: str,
-    bloom: DataFrame,
-    *,
-    m_bits: int,
-    k_hashes: int,
-    sparse_overlap: bool = True,
-) -> DataFrame:
-    """Rows of ``df`` whose key is NOT in ``keys`` — the blocklist /
-    decontamination verb. Definitely-absent rows (the overwhelming
-    majority against a sparse blocklist) pass WITHOUT touching a
-    shuffle: only Bloom-possible rows are re-checked exactly, and the
-    confirmed hits subtract via an anti-join on the confirmed key set,
-    never on the full blocklist.
-
-    ``sparse_overlap=True`` (the verb's premise: few stream keys are
-    actually blocked) broadcasts ``confirmed`` — Spark has no size
-    stats for the derived plan and would otherwise fall back to a
-    sort-merge anti-join that shuffles the full probe side (pinned by
-    tests/test_membership.py::test_anti_join_probe_side_is_broadcast).
-    ``confirmed`` is bounded by ``distinct(stream keys) ∩ blocklist``,
-    NOT tiny by construction: re-filtering an already-contaminated
-    stream makes it approach the full blocklist. Pass
-    ``sparse_overlap=False`` there to take a shuffle-hash subtract
-    instead of risking a driver-sized broadcast."""
-    possible = bloom_prefilter(df, key_col, bloom, m_bits=m_bits, k_hashes=k_hashes)
-    rhs = keys.select(F.col(keys_col).alias("_bloom_k")).distinct()
-    confirmed = (
-        possible.select(F.col(key_col).alias("_bloom_hit"))
-        .distinct()
-        .join(rhs, F.col("_bloom_hit") == F.col("_bloom_k"), "left_semi")
-    )
-    confirmed = F.broadcast(confirmed) if sparse_overlap else confirmed.hint("shuffle_hash")
-    return df.join(confirmed, F.col(key_col) == F.col("_bloom_hit"), "left_anti")
