@@ -113,6 +113,7 @@ def _bloom_probe(
     bloom: DataFrame,
     m_bits: int,
     k_hashes: int,
+    *,
     flag_col: str | None,
 ) -> DataFrame:
     """The k word-table probes shared by :func:`bloom_prefilter` and
@@ -175,7 +176,7 @@ def bloom_prefilter(
     plan, so the build aggregate would re-run k times. The parquet
     round-trip probe plan is exactly k broadcasts of a tiny scan and
     ZERO keyed exchanges (pinned in tests/test_membership.py)."""
-    return _bloom_probe(df, key_col, bloom, m_bits, k_hashes, None)
+    return _bloom_probe(df, key_col, bloom, m_bits, k_hashes, flag_col=None)
 
 
 def bloom_mark(
@@ -194,7 +195,7 @@ def bloom_mark(
     rides through all k probes (no between-probe reduction), which is
     the price of keeping the definitely-absent rows in the stream.
     Same materialization note as bloom_prefilter applies."""
-    return _bloom_probe(df, key_col, bloom, m_bits, k_hashes, flag_col)
+    return _bloom_probe(df, key_col, bloom, m_bits, k_hashes, flag_col=flag_col)
 
 
 def membership_mark(
