@@ -33,6 +33,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from tia_data_pipeline_spark import get_spark
 from tia_data_pipeline_spark.catalog import load_table
+from tia_data_pipeline_spark.operators.index import IVF, index_stats
 from tia_data_pipeline_spark.operators.similarity import (
     brute_force_top_k,
     ivf_build_index,
@@ -40,7 +41,6 @@ from tia_data_pipeline_spark.operators.similarity import (
     ivf_index_append,
     ivf_index_compact,
     ivf_index_delete,
-    ivf_index_stats,
     ivf_search_batch,
     ivf_write_index,
     projection_bits_for,
@@ -127,10 +127,10 @@ def main() -> None:
     post = ivf_search_batch(probe_df, index_dir, k=10, n_probe=16)
     assert exact_ids[0] not in [r["vec_id"] for r in post.collect()]
     print(f"vec_id={exact_ids[0]} tombstoned: gone from a full-cell search")
-    print("health census before compact:", ivf_index_stats(spark, index_dir))
+    print("health census before compact:", index_stats(IVF, spark, index_dir))
     ivf_index_compact(spark, index_dir)
     print("after compact (tombstones applied, one file per cell):",
-          ivf_index_stats(spark, index_dir))
+          index_stats(IVF, spark, index_dir))
 
 
 if __name__ == "__main__":

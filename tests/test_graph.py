@@ -66,6 +66,22 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
+def test_connected_components_leaves_one_checkpoint_rdd(spark):
+    """Each round's localCheckpoint is released once the next round has
+    materialized: a 12-hop chain leaves at most one new persistent RDD
+    (the last round's, behind the returned labels), not one per round."""
+    from tia_data_pipeline_spark.operators.graph import connected_components
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "id_a bigint, id_b bigint"
+    )
+    before = persistent().size()
+    got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    assert got == {i: 0 for i in range(13)}
+    assert persistent().size() - before <= 1
+
+
 def test_dedup_components_transitive_survivors(spark):
     from tia_data_pipeline_spark.operators.graph import dedup_components
 

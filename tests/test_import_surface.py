@@ -107,3 +107,24 @@ def test_directory_moves_only_in_replace_dir():
             if (rel, owner) not in allowed:
                 bad.append(f"{rel}:{line} ({owner or 'module level'})")
     assert not bad, f"directory moves outside replace_dir: {bad}"
+
+
+def test_index_lifecycle_primitives_called_only_from_index_core():
+    """Tombstone appends, compaction and the stats census run through
+    ``operators.index``'s family verbs for all five index families; a
+    per-family copy calling the ``operators.scale`` primitives anywhere
+    else in the package fails here."""
+    primitives = {"append_index_tombstones", "compact_partitioned_index", "partitioned_index_stats"}
+    pkg = os.path.join(ROOT, PKG)
+    bad = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        if rel == os.path.join("operators", "index.py"):
+            continue
+        for n in ast.walk(ast.parse(open(path).read())):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in primitives:
+                    bad.append(f"{rel}:{n.lineno} {name}")
+    assert not bad, f"index lifecycle primitives called outside operators/index.py: {bad}"

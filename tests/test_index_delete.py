@@ -506,35 +506,55 @@ class TestReviewHardenings:
         assert files() == n1 == 1
 
     def test_stream_deletes_respect_family_id_defaults(self, spark, tmp_path):
-        """family='embedding' must accept the vec_id-keyed streams every
-        other embedding API defaults to (review r9: a hardcoded
-        forwarded 'doc_id' raised UNRESOLVED_COLUMN in foreachBatch)."""
+        """The deletion stream accepts the id column each index family
+        defaults to — vec_id for embedding (review r9: a hardcoded
+        forwarded 'doc_id' raised UNRESOLVED_COLUMN in foreachBatch),
+        the meta-recorded vec_id for IVF, doc_id for text — and its
+        tombstone masks real index rows."""
+        from tia_data_pipeline_spark.operators.index import (
+            EMBEDDING,
+            IVF,
+            TEXT,
+            index_probe,
+            index_stats,
+        )
         from tia_data_pipeline_spark.operators.similarity import (
             embedding_write_index,
+            ivf_build_index,
+            ivf_write_index,
         )
-        from tia_data_pipeline_spark.operators.index import EMBEDDING, index_probe
+        from tia_data_pipeline_spark.operators.text_index import build_text_index
         from tia_data_pipeline_spark.streaming.dedup_serve import (
             stream_index_deletes,
         )
 
         hist, shard = TestEmbeddingDelete()._data(spark)
-        path = str(tmp_path / "emb")
-        embedding_write_index(hist, path, bits=2)
-        req = tmp_path / "requests"
-        spark.createDataFrame([(1,)], "vec_id bigint").coalesce(1).write.parquet(
-            str(req / "a")
+        texts = spark.createDataFrame(
+            [(1, "spark data join"), (2, "table stream")], "doc_id bigint, text string"
         )
-        id_stream = spark.readStream.schema("vec_id bigint").parquet(f"{req}/*")
-        q = stream_index_deletes(
-            id_stream,
-            index_path=path,
-            checkpoint=str(tmp_path / "ckpt"),
+        writers = (
+            (EMBEDDING, "vec_id", lambda p: embedding_write_index(hist, p, bits=2)),
+            (IVF, "vec_id", lambda p: ivf_write_index(*ivf_build_index(hist, n_lists=2, seed=3), p)),
+            (TEXT, "doc_id", lambda p: build_text_index(texts, p, n_buckets=4)),
         )
-        q.awaitTermination()
-        got = {
-            (r["new_id"], r["dup_id"])
-            for r in index_probe(EMBEDDING, shard, [path], threshold=0.9)[0].collect()
-        }
+        for family, id_col, write in writers:
+            path = str(tmp_path / family.name)
+            write(path)
+            req = tmp_path / f"requests_{family.name}"
+            spark.createDataFrame([(1,)], f"{id_col} bigint").coalesce(1).write.parquet(
+                str(req / "a")
+            )
+            id_stream = spark.readStream.schema(f"{id_col} bigint").parquet(f"{req}/*")
+            q = stream_index_deletes(
+                id_stream,
+                index_path=path,
+                checkpoint=str(tmp_path / f"ckpt_{family.name}"),
+            )
+            q.awaitTermination()
+            st = index_stats(family, spark, path)
+            assert st["tombstones"] == 1 and st["tombstone_fraction"] > 0, family.name
+        (pairs,) = index_probe(EMBEDDING, shard, [str(tmp_path / "embedding")], threshold=0.9)
+        got = {(r["new_id"], r["dup_id"]) for r in pairs.collect()}
         assert not any(d == 1 for _, d in got)
 
 
@@ -571,21 +591,19 @@ class TestMassDeleteMask:
             df.explain("formatted")
         return buf.getvalue()
 
-    def test_bloom_path_equals_broadcast_path(self, spark, tmp_path):
+    def test_bloom_path_equals_broadcast_path(self, spark, tmp_path, monkeypatch):
+        from tia_data_pipeline_spark.operators import membership
         from tia_data_pipeline_spark.operators.scale import tombstone_mask_join
 
         df, ts = self._frames(spark, tmp_path)
         small = tombstone_mask_join(df, ts, "doc_id", keep="live")
-        big = tombstone_mask_join(
-            df, ts, "doc_id", keep="live", broadcast_max_bytes=0
-        )
+        monkeypatch.setattr(membership, "BROADCAST_MAX_SOURCE_BYTES", 0)
+        big = tombstone_mask_join(df, ts, "doc_id", keep="live")
         expect = {r["doc_id"] for r in small.collect()}
         assert expect == {i for i in range(10_000) if i % 7 != 0}
         assert {r["doc_id"] for r in big.collect()} == expect
         # keep="dead" (the text index's scalar-correction leg) too
-        dead = tombstone_mask_join(
-            df, ts, "doc_id", keep="dead", broadcast_max_bytes=0
-        )
+        dead = tombstone_mask_join(df, ts, "doc_id", keep="dead")
         assert {r["doc_id"] for r in dead.collect()} == {
             i for i in range(10_000) if i % 7 == 0
         }
@@ -599,26 +617,25 @@ class TestMassDeleteMask:
         assert "ShuffledHashJoin" not in p and "SortMergeJoin" not in p
 
     def test_mass_delete_never_shuffles_the_full_relation_as_broadcast(
-        self, spark, tmp_path
+        self, spark, tmp_path, monkeypatch
     ):
         """Past the budget the exact leg is a shuffle-hash join of the
         Bloom-possible sliver — the tombstone SET itself never appears
         under a BroadcastExchange (the word table that does broadcast
         is bounded by the filter bits, not the tombstone count)."""
+        from tia_data_pipeline_spark.operators import membership
         from tia_data_pipeline_spark.operators.scale import tombstone_mask_join
 
         df, ts = self._frames(spark, tmp_path)
-        p = self._plan(
-            tombstone_mask_join(
-                df, ts, "doc_id", keep="live", broadcast_max_bytes=0
-            )
-        )
+        monkeypatch.setattr(membership, "BROADCAST_MAX_SOURCE_BYTES", 0)
+        p = self._plan(tombstone_mask_join(df, ts, "doc_id", keep="live"))
         assert "ShuffledHashJoin" in p  # the exact sliver leg
         assert "LeftAnti" not in p  # mask is a marked filter, not an anti-join
 
-    def test_index_probe_routes_through_the_switch(self, spark, tmp_path):
+    def test_index_probe_routes_through_the_switch(self, spark, tmp_path, monkeypatch):
         """End-to-end: anti_join_index_tombstones over a real index dir
         gives identical results through both regimes."""
+        from tia_data_pipeline_spark.operators import membership
         from tia_data_pipeline_spark.operators.scale import (
             anti_join_index_tombstones,
             append_index_tombstones,
@@ -638,12 +655,9 @@ class TestMassDeleteMask:
         small = anti_join_index_tombstones(
             read_back, idx_path, index_schema_json=schema_json, id_col="doc_id"
         )
+        monkeypatch.setattr(membership, "BROADCAST_MAX_SOURCE_BYTES", 0)
         big = anti_join_index_tombstones(
-            read_back,
-            idx_path,
-            index_schema_json=schema_json,
-            id_col="doc_id",
-            broadcast_max_bytes=0,
+            read_back, idx_path, index_schema_json=schema_json, id_col="doc_id"
         )
         expect = {i for i in range(10_000) if i % 7 != 0}
         assert {r["doc_id"] for r in small.collect()} == expect

@@ -12,6 +12,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tia_data_pipeline_spark.operators.index import IVF, index_stats
 from tia_data_pipeline_spark.operators.similarity import (
     ivf_build_index,
     ivf_drift_stats,
@@ -19,7 +20,6 @@ from tia_data_pipeline_spark.operators.similarity import (
     ivf_index_compact,
     ivf_index_delete,
     ivf_index_meta,
-    ivf_index_stats,
     ivf_search_batch,
     ivf_write_index,
 )
@@ -114,13 +114,13 @@ def test_delete_masks_then_compact_removes(spark, index):
     ids = spark.createDataFrame([(7,)], "vec_id bigint")
     ivf_index_delete(ids, path)
     ivf_index_delete(ids, path)  # idempotent
-    st = ivf_index_stats(spark, path)
+    st = index_stats(IVF, spark, path)
     assert st["tombstones"] == 1 and st["tombstone_fraction"] > 0
     masked = ivf_search_batch(probe, path, k=3, n_probe=N_LISTS).collect()
     assert all(int(r["vec_id"]) != 7 for r in masked)
     out = ivf_index_compact(spark, path)
     assert out["rows"] == 39
-    post = ivf_index_stats(spark, path)
+    post = index_stats(IVF, spark, path)
     assert post["tombstones"] == 0 and post["rows"] == 39
     after = ivf_search_batch(probe, path, k=3, n_probe=N_LISTS).collect()
     assert [(r["vec_id"], r["score"]) for r in after] == [
@@ -143,7 +143,7 @@ def test_empty_index_probeable_via_meta_schema(spark, tmp_path):
         [(1, _vec(1))], "probe_id bigint, embedding array<double>"
     )
     assert ivf_search_batch(probe, path, k=3, n_probe=2).count() == 0
-    assert ivf_index_stats(spark, path)["rows"] == 0
+    assert index_stats(IVF, spark, path)["rows"] == 0
 
 
 def test_append_then_compact_defragments(spark, index):
@@ -154,7 +154,7 @@ def test_append_then_compact_defragments(spark, index):
             "vec_id bigint, embedding array<double>",
         )
         ivf_index_append(shard, path)
-    st = ivf_index_stats(spark, path)
+    st = index_stats(IVF, spark, path)
     assert st["rows"] == 55
     out = ivf_index_compact(spark, path)
     assert out["rows"] == 55

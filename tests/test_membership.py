@@ -150,9 +150,11 @@ def test_membership_mark_bloom_path_never_broadcasts_members(spark, docs):
     assert len(bcast) == 2 * k, p
 
 
-def test_membership_mark_auto_picks_by_estimated_bytes(spark, docs):
+def test_membership_mark_auto_picks_by_estimated_bytes(spark, docs, monkeypatch):
     """auto = broadcast under the bound (or with no estimate), bloom
-    above it — pinned via the resulting plan shape."""
+    above it — pinned via the resulting plan shape. The bound is read
+    at call time."""
+    from tia_data_pipeline_spark.operators import membership
     from tia_data_pipeline_spark.operators.membership import membership_mark
 
     members = docs.filter(F.col("doc_id") % 5 == 0).withColumnRenamed("doc_id", "k")
@@ -171,6 +173,11 @@ def test_membership_mark_auto_picks_by_estimated_bytes(spark, docs):
         est_member_source_bytes=1 << 40,
     )
     assert "ShuffledHashJoin" in _explain(big)
+    monkeypatch.setattr(membership, "BROADCAST_MAX_SOURCE_BYTES", 0)
+    lowered = membership_mark(
+        docs, "doc_id", members, "k", strategy="auto", est_member_source_bytes=1024
+    )
+    assert "ShuffledHashJoin" in _explain(lowered)
 
 
 def test_membership_queries_bloom_parity(spark, monkeypatch):

@@ -73,9 +73,10 @@ def test_replayed_batch_appends_nothing(spark, tmp_path):
 
 @pytest.mark.slow
 def test_takedown_stream_family_text(spark, tmp_path):
-    """stream_index_deletes(family="text"): a streamed takedown request
-    masks the docs from BM25 serving exactly like a shrunken rebuild
-    (candidates, df, AND the N/avgdl scalars all exclude them)."""
+    """stream_index_deletes over a text index (the kind is read from its
+    _corpus_stats meta table): a streamed takedown request masks the
+    docs from BM25 serving exactly like a shrunken rebuild (candidates,
+    df, AND the N/avgdl scalars all exclude them)."""
     from tia_data_pipeline_spark.streaming.dedup_serve import stream_index_deletes
 
     docs = load_table(spark, SMOKE_SF, "documents").select("doc_id", "text")

@@ -221,10 +221,10 @@ class TestTextIndexLifecycle:
 
     @pytest.mark.slow
     def test_delete_then_compact_equals_shrunken_rebuild(self, spark, tmp_path):
+        from tia_data_pipeline_spark.operators.index import TEXT, index_stats
         from tia_data_pipeline_spark.operators.text_index import (
             text_index_compact,
             text_index_delete,
-            text_index_stats,
         )
 
         docs = load_table(spark, SMOKE_SF, "documents").select("doc_id", "text")
@@ -233,7 +233,7 @@ class TestTextIndexLifecycle:
         doomed = docs.filter("doc_id % 3 = 0").select("doc_id")
         text_index_delete(doomed, path)
         text_index_delete(doomed, path)  # idempotent
-        st = text_index_stats(spark, path)
+        st = index_stats(TEXT, spark, path)
         assert st["tombstones"] == doomed.count() and st["tombstone_fraction"] > 0
         # masked serve equals a fresh build over the survivors — docs,
         # df, N and avgdl all excluded the tombstoned third
@@ -241,7 +241,7 @@ class TestTextIndexLifecycle:
         masked = self._serve(spark, path)
         assert masked == self._fresh(spark, live, tmp_path, "live")
         out = text_index_compact(spark, path)
-        post = text_index_stats(spark, path)
+        post = index_stats(TEXT, spark, path)
         assert post["tombstones"] == 0
         assert out["files_after"] <= out["files_before"]
         # physical removal changes nothing a serve can observe
@@ -252,10 +252,10 @@ class TestTextIndexLifecycle:
 
     @pytest.mark.slow
     def test_append_after_compact_defragments(self, spark, tmp_path):
+        from tia_data_pipeline_spark.operators.index import TEXT, index_stats
         from tia_data_pipeline_spark.operators.text_index import (
             text_index_append,
             text_index_compact,
-            text_index_stats,
         )
 
         docs = load_table(spark, SMOKE_SF, "documents").select("doc_id", "text")
@@ -263,9 +263,9 @@ class TestTextIndexLifecycle:
         build_text_index(docs.filter("doc_id % 4 = 0"), path, n_buckets=8)
         for m in (1, 2, 3):
             text_index_append(docs.filter(f"doc_id % 4 = {m}"), path)
-        before = text_index_stats(spark, path)
+        before = index_stats(TEXT, spark, path)
         text_index_compact(spark, path)
-        after = text_index_stats(spark, path)
+        after = index_stats(TEXT, spark, path)
         assert after["rows"] == before["rows"]
         assert after["files"] < before["files"]
         assert self._serve(spark, path) == self._fresh(spark, docs, tmp_path, "all")

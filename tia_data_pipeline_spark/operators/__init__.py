@@ -22,8 +22,10 @@ from tia_data_pipeline_spark.operators.dedup import (
 from tia_data_pipeline_spark.operators.features import zscore, zscore_pandas
 from tia_data_pipeline_spark.operators.index import (
     EMBEDDING,
+    IVF,
     MINHASH,
     SIMHASH,
+    TEXT,
     IndexFamily,
     index_append,
     index_compact,
@@ -62,7 +64,6 @@ from tia_data_pipeline_spark.operators.text_index import (
     text_index_append,
     text_index_compact,
     text_index_delete,
-    text_index_stats,
 )
 from tia_data_pipeline_spark.operators.similarity import (
     brute_force_top_k,
@@ -74,7 +75,6 @@ from tia_data_pipeline_spark.operators.similarity import (
     ivf_index_compact,
     ivf_index_delete,
     ivf_index_meta,
-    ivf_index_stats,
     ivf_search_batch,
     ivf_write_index,
     projection_bits_for,
@@ -98,6 +98,8 @@ __all__ = [
     "MINHASH",
     "SIMHASH",
     "EMBEDDING",
+    "IVF",
+    "TEXT",
     "index_probe",
     "index_probe_scoped",
     "index_append",
@@ -111,7 +113,6 @@ __all__ = [
     "text_index_append",
     "text_index_compact",
     "text_index_delete",
-    "text_index_stats",
     "embedding_write_index",
     "ivf_search_batch",
     "semantic_dedup_pairs",
@@ -147,7 +148,6 @@ __all__ = [
     "ivf_index_compact",
     "ivf_index_delete",
     "ivf_index_meta",
-    "ivf_index_stats",
     "ivf_write_index",
     "projection_bits_for",
     "knn_join",

@@ -129,6 +129,12 @@ def thread_closure(
         frontier = nxt
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a materialized ``localCheckpoint`` frame;
+    ``DataFrame.unpersist`` does not reach it (it is no cached plan)."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def connected_components(
     edges: DataFrame,
     *,
@@ -160,7 +166,10 @@ def connected_components(
     changed rows both tests convergence and materializes the round's
     localCheckpoint (which cuts lineage like :func:`thread_closure`);
     a ``limit(1)`` probe would leave partitions for a second job to
-    fill. No self-loops are needed: ``least(component,
+    fill. Once a round's count has filled its checkpoint, the previous
+    round's checkpoint RDD is released: only the last round feeds the
+    returned labels, so a call leaves one checkpoint registered, not one
+    per round. No self-loops are needed: ``least(component,
     new_component)`` folds each node's own label in.
 
     Exhausting ``max_iter`` before quiescence RAISES instead of
@@ -190,6 +199,7 @@ def connected_components(
         labels = sym.groupBy("u").agg(
             F.least(F.col("u"), F.min("v")).alias("component")
         ).withColumnRenamed("u", "node")
+        prev = None
         for _ in range(max_iter):
             # propagate: node's new label = min(label of every neighbor)
             prop = (
@@ -203,6 +213,9 @@ def connected_components(
                 .localCheckpoint(eager=False)
             )
             n_changed = joined.filter(F.col("new_component") < F.col("component")).count()
+            if prev is not None:
+                _release_checkpoint(prev)
+            prev = joined
             labels = joined.select(
                 "node", F.least("component", "new_component").alias("component")
             )

@@ -1,4 +1,4 @@
-"""One core for the banded near-duplicate index families.
+"""One core for the five persisted index families.
 
 MinHash signatures (Jaccard), SimHash fingerprints (hamming) and
 embedding sign-buckets (cosine) persist and serve the same way and
@@ -9,6 +9,13 @@ pruning, two-pass hot-bucket caps, probe legs, idempotent append,
 delete, compact and stats are written once below (REPOSE, ICDE 2021:
 one partition-local layout pruned by a key, parameterized by the
 function that computes the key).
+
+The IVF (``operators.similarity``) and text/BM25
+(``operators.text_index``) indexes have their own writers, serves and
+appends, but the same lifecycle: :data:`IVF` and :data:`TEXT` are
+lifecycle-only families (no band frame) that state their on-disk
+layout, so the tombstone mask, delete, compact, stats and meta read
+below serve all five families.
 
 Layout: banded rows partitioned by ``family.partition_cols``, plus a
 one-row meta side table (``family.meta_dir``) holding the hash family
@@ -37,7 +44,7 @@ from __future__ import annotations
 
 import json
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Callable, Mapping
 
 from pyspark.sql import Column, DataFrame
@@ -50,37 +57,55 @@ from tia_data_pipeline_spark.operators.scale import (
     append_index_tombstones,
     compact_partitioned_index,
     fan_out,
+    heal_replaced_dir,
     partitioned_index_stats,
 )
 
 
 @dataclass(frozen=True)
 class IndexFamily:
-    """What makes one banded index family differ from another.
+    """What makes one index family differ from another.
 
-    ``band(df, meta, opts)`` keys source rows into ``_id``, ``payload``,
-    the ``key_cols`` collision key and ``partition_cols`` (the writer's
-    frame IS the prober's, so their keys cannot drift). ``code(meta)``
-    encodes the partition columns into one injective int, the pruning
-    key. ``check(meta, opts)`` validates the options and returns
-    ``(score, keep)`` over the ``<payload>_n`` (shard) and
-    ``<payload>_o`` (index) columns. ``row_key`` is the append's
-    anti-join key, ``defaults`` the options (source columns,
-    ``max_bucket``, threshold); ``fan_probe`` widens the shard side
-    before the join, where vector payloads make pairs the costly leg."""
+    Every family states its on-disk layout: the one-row meta side table
+    (``meta_dir``), the partition columns, the meta field holding the
+    row schema as JSON (``schema_field``), the tombstone id column
+    (``tombstone_col``; ``None`` = the meta's own ``id_col``), the
+    further side dirs compaction carries over, and the ``dedup_keys``
+    compaction heals duplicated rows on.
+
+    The banded families add their probe: ``band(df, meta, opts)`` keys
+    source rows into ``_id``, ``payload``, the ``key_cols`` collision
+    key and ``partition_cols`` (the writer's frame IS the prober's, so
+    their keys cannot drift). ``code(meta)`` encodes the partition
+    columns into one injective int, the pruning key. ``check(meta,
+    opts)`` validates the options and returns ``(score, keep)`` over
+    the ``<payload>_n`` (shard) and ``<payload>_o`` (index) columns.
+    ``row_key`` is the append's anti-join key, ``defaults`` the options
+    (source columns, ``max_bucket``, threshold); ``fan_probe`` widens
+    the shard side before the join, where vector payloads make pairs
+    the costly leg. ``meta_ddl`` is the meta table the shared write
+    tail writes."""
 
     name: str
     meta_dir: str
-    meta_ddl: str
     partition_cols: tuple[str, ...]
-    key_cols: tuple[str, ...]
-    row_key: tuple[str, ...]
-    payload: tuple[str, ...]
-    band: Callable[[DataFrame, dict, dict], DataFrame]
-    code: Callable[[dict], Column]
-    check: Callable[[dict, dict], tuple[Column, Column]]
-    defaults: Mapping[str, object]
-    fan_probe: bool
+    schema_field: str = "schema_json"
+    tombstone_col: str | None = "_id"
+    side_dirs: tuple[str, ...] = ()
+    dedup_keys: tuple[str, ...] | None = None
+    meta_ddl: str = ""
+    key_cols: tuple[str, ...] = ()
+    row_key: tuple[str, ...] = ()
+    payload: tuple[str, ...] = ()
+    band: Callable[[DataFrame, dict, dict], DataFrame] | None = None
+    code: Callable[[dict], Column] | None = None
+    check: Callable[[dict, dict], tuple[Column, Column]] | None = None
+    defaults: Mapping[str, object] = field(default_factory=dict)
+    fan_probe: bool = False
+
+    def tombstone_id(self, meta: dict) -> str:
+        """The tombstone id column of an index with this ``meta``."""
+        return self.tombstone_col or meta["id_col"]
 
 
 def _minhash_band(df: DataFrame, meta: dict, o: dict) -> DataFrame:
@@ -203,7 +228,31 @@ EMBEDDING = IndexFamily(
     fan_probe=True,
 )
 
-FAMILIES = (MINHASH, SIMHASH, EMBEDDING)
+# lifecycle-only: the IVF writer, serve and append live in
+# operators/similarity.py, and IVF records its source id column in the
+# meta, so its tombstones are keyed by that column
+IVF = IndexFamily(
+    name="ivf",
+    meta_dir="_ivf_meta",
+    partition_cols=("_cell",),
+    tombstone_col=None,
+    side_dirs=("_ivf_centers",),
+)
+
+# lifecycle-only: operators/text_index.py writes and serves it. The
+# meta is _corpus_stats, republished on every append; a crashed and
+# retried append can duplicate postings, which compaction collapses
+TEXT = IndexFamily(
+    name="text",
+    meta_dir="_corpus_stats",
+    partition_cols=("_bucket",),
+    schema_field="postings_schema",
+    tombstone_col="doc_id",
+    side_dirs=("_doc_stats",),
+    dedup_keys=("tok", "doc_id"),
+)
+
+FAMILIES = (MINHASH, SIMHASH, EMBEDDING, IVF, TEXT)
 
 
 # ---------------------------------------------------------------------------
@@ -226,20 +275,25 @@ def write_index_frame(family: IndexFamily, banded: DataFrame, path: str, meta: d
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{family.meta_dir}")
 
 
-def read_meta_row(spark, path: str, meta_dir: str):
-    """The one row of an index's meta side table (control plane, not a
-    data collect); a ``ValueError`` naming the path when it is missing."""
+def read_meta_row(family: IndexFamily, spark, path: str):
+    """The one row of the index's meta side table (control plane, not
+    a data collect); a ``ValueError`` naming the path when it is
+    missing. A ``replace_dir`` publish of the table torn between its
+    two renames (text republishes ``_corpus_stats`` on every append)
+    is healed first: the previous copy renames back."""
     from pyspark.errors import AnalysisException
 
+    live = f"{path}/{family.meta_dir}"
+    heal_replaced_dir(spark, live)
     try:
-        return spark.read.parquet(f"{path}/{meta_dir}").collect()[0]
+        return spark.read.parquet(live).collect()[0]
     except AnalysisException:
-        raise ValueError(f"{path} holds no {meta_dir} index meta table") from None
+        raise ValueError(f"{path} holds no {family.meta_dir} index meta table") from None
 
 
 def index_meta(family: IndexFamily, spark, path: str) -> dict:
     """The family's meta side table as a dict."""
-    return read_meta_row(spark, path, family.meta_dir).asDict()
+    return read_meta_row(family, spark, path).asDict()
 
 
 def read_index(spark, path: str, meta: dict) -> DataFrame:
@@ -317,11 +371,8 @@ def _cross(
     family: IndexFamily, shard: tuple, spark, path: str, meta: dict, check, max_bucket: int
 ) -> DataFrame:
     pred, shard_ids, probe = shard
-    idx = anti_join_index_tombstones(
-        read_index(spark, path, meta).filter(pred),
-        path,
-        index_schema_json=meta["schema_json"],
-        id_col="_id",
+    idx = mask_tombstones(
+        family, read_index(spark, path, meta).filter(pred), path, meta
     ).join(shard_ids, on="_id", how="left_anti")
     hist = _side(family, _capped(family, idx, max_bucket), "dup_id")
     return _pairs(family, probe.join(hist, list(family.key_cols)), check)
@@ -433,6 +484,18 @@ def index_append(family: IndexFamily, new: DataFrame, index_path: str, **opts) -
         banded.unpersist()
 
 
+def mask_tombstones(family: IndexFamily, df: DataFrame, path: str, meta: dict) -> DataFrame:
+    """``df``, a scan of the index at ``path``, minus its tombstoned
+    ids — the mask every probe and search applies after its pruned
+    scan (see :func:`…operators.scale.anti_join_index_tombstones`)."""
+    return anti_join_index_tombstones(
+        df,
+        path,
+        index_schema_json=meta[family.schema_field],
+        id_col=family.tombstone_id(meta),
+    )
+
+
 def index_delete(
     family: IndexFamily, ids: DataFrame, index_path: str, *, id_col: str | None = None
 ) -> None:
@@ -442,24 +505,29 @@ def index_delete(
     — a takedown request never ships the document back. ``id_col``
     defaults to the family's source id column."""
     meta = index_meta(family, ids.sparkSession, index_path)
+    col = family.tombstone_id(meta)
     append_index_tombstones(
-        ids.select(F.col(id_col or family.defaults["id_col"]).alias("_id")),
+        ids.select(F.col(id_col or family.defaults.get("id_col", col)).alias(col)),
         index_path,
-        index_schema_json=meta["schema_json"],
-        id_col="_id",
+        index_schema_json=meta[family.schema_field],
+        id_col=col,
     )
 
 
 def index_compact(family: IndexFamily, spark, path: str) -> dict:
     """One file per partition, pending tombstones applied (see
     :func:`…operators.scale.compact_partitioned_index` for the swap)."""
-    meta = index_meta(family, spark, path)
+    return _compact(family, spark, path, index_meta(family, spark, path))
+
+
+def _compact(family: IndexFamily, spark, path: str, meta: dict) -> dict:
     return compact_partitioned_index(
         spark, path,
         partition_cols=family.partition_cols,
-        schema_json=meta["schema_json"],
-        side_dirs=(family.meta_dir,),
-        tombstones_id_col="_id",
+        schema_json=meta[family.schema_field],
+        side_dirs=(family.meta_dir, *family.side_dirs),
+        tombstones_id_col=family.tombstone_id(meta),
+        dedup_keys=family.dedup_keys,
     )
 
 
@@ -470,6 +538,6 @@ def index_stats(family: IndexFamily, spark, path: str) -> dict:
     return partitioned_index_stats(
         spark, path,
         partition_cols=family.partition_cols,
-        schema_json=meta["schema_json"],
-        tombstones_id_col="_id",
+        schema_json=meta[family.schema_field],
+        tombstones_id_col=family.tombstone_id(meta),
     )

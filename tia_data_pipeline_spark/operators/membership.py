@@ -207,7 +207,6 @@ def membership_mark(
     hit_col: str = "hit",
     strategy: str = "auto",
     est_member_source_bytes: int | None = None,
-    broadcast_max_bytes: int = BROADCAST_MAX_SOURCE_BYTES,
     fp_rate: float = 0.01,
     members_distinct: bool = False,
 ) -> DataFrame:
@@ -229,7 +228,8 @@ def membership_mark(
       control-plane, large path only. A long-lived service probing one
       member set many times builds its filter once with
       :func:`bloom_build` and probes it with :func:`bloom_mark`.
-    - ``auto``: picks by ``est_member_source_bytes`` (see
+    - ``auto``: bloom when ``est_member_source_bytes`` exceeds
+      ``BROADCAST_MAX_SOURCE_BYTES``, read at call time (the estimate:
       ``operators.scale.estimated_relation_bytes``; callers scale it by
       the member-side selectivity they know, e.g. 1/17 for the
       benchmark split). None → broadcast (the safe default at test
@@ -246,7 +246,7 @@ def membership_mark(
     if strategy == "auto":
         big = (
             est_member_source_bytes is not None
-            and est_member_source_bytes > broadcast_max_bytes
+            and est_member_source_bytes > BROADCAST_MAX_SOURCE_BYTES
         )
         strategy = "bloom" if big else "broadcast"
 

@@ -768,7 +768,6 @@ def tombstone_mask_join(
     id_col: str,
     *,
     keep: str = "live",
-    broadcast_max_bytes: int | None = None,
 ) -> DataFrame:
     """Size-conditional tombstone membership join: ``keep="live"``
     drops tombstoned ids from ``df`` (the probe-side mask),
@@ -804,13 +803,8 @@ def tombstone_mask_join(
         membership_mark,
     )
 
-    limit = (
-        BROADCAST_MAX_SOURCE_BYTES
-        if broadcast_max_bytes is None
-        else broadcast_max_bytes
-    )
     est = estimated_relation_bytes(ts)
-    if est is None or est <= limit:
+    if est is None or est <= BROADCAST_MAX_SOURCE_BYTES:
         how = "left_anti" if keep == "live" else "left_semi"
         return df.join(F.broadcast(ts), id_col, how)
     import uuid as _uuid
@@ -831,7 +825,6 @@ def anti_join_index_tombstones(
     *,
     index_schema_json: str,
     id_col: str,
-    broadcast_max_bytes: int | None = None,
 ) -> DataFrame:
     """Mask tombstoned ids out of an index-side frame — the probe-side
     leg every `index_probe` / IVF search applies after its
@@ -845,6 +838,4 @@ def anti_join_index_tombstones(
     )
     if ts is None:
         return df
-    return tombstone_mask_join(
-        df, ts, id_col, keep="live", broadcast_max_bytes=broadcast_max_bytes
-    )
+    return tombstone_mask_join(df, ts, id_col, keep="live")

@@ -24,11 +24,15 @@ from tia_data_pipeline_spark.functions.text import portable_round
 from tia_data_pipeline_spark.functions.vectors import cosine_from_norms, dot, l2_norm
 from tia_data_pipeline_spark.operators.index import (
     EMBEDDING,
+    IVF,
+    index_compact,
+    index_delete,
+    index_meta,
+    mask_tombstones,
     read_index,
-    read_meta_row,
     write_index_frame,
 )
-from tia_data_pipeline_spark.operators.scale import anti_join_index_tombstones, fan_out
+from tia_data_pipeline_spark.operators.scale import fan_out
 
 # Deterministic projection matrix shared with the DuckDB oracle
 # (plans/llm.py embeds the same literals in the generated SQL).
@@ -444,8 +448,7 @@ def ivf_build_index(
     return assigned, centers
 
 
-_IVF_META_DIR = "_ivf_meta"
-_IVF_CENTERS_DIR = "_ivf_centers"
+_IVF_CENTERS_DIR = IVF.side_dirs[0]
 
 
 def _center_d2(vec: Column, center: list[float]) -> Column:
@@ -531,7 +534,7 @@ def ivf_write_index(
     ]
     spark.createDataFrame(
         meta, "n_lists int, dim int, id_col string, vec_col string, schema_json string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{_IVF_META_DIR}")
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{IVF.meta_dir}")
 
 
 def ivf_read_centers(spark, path: str) -> list[list[float]]:
@@ -548,14 +551,7 @@ def ivf_index_meta(spark, path: str) -> dict:
     """Meta side table → ``{n_lists, dim, id_col, vec_col,
     schema_json}`` (one driver row — control plane); a ``ValueError``
     naming the path when the table is missing."""
-    return read_meta_row(spark, path, _IVF_META_DIR).asDict()
-
-
-def _mask_ivf_tombstones(df: DataFrame, path: str, meta: dict) -> DataFrame:
-    """Anti-join tombstoned ids off an IVF index scan."""
-    return anti_join_index_tombstones(
-        df, path, index_schema_json=meta["schema_json"], id_col=meta["id_col"]
-    )
+    return index_meta(IVF, spark, path)
 
 
 def ivf_search_batch(
@@ -674,7 +670,8 @@ def _ivf_batch_topk(
     the once-read ``meta`` through (immutable after write — the
     read-once-per-stream rule)."""
     touched = sorted(int(r["_cell"]) for r in pb.select("_cell").distinct().collect())
-    idx = _mask_ivf_tombstones(
+    idx = mask_tombstones(
+        IVF,
         read_index(spark, index_path, meta).filter(
             F.col("_cell").isin(touched) if touched else F.lit(False)
         ),
@@ -841,7 +838,7 @@ def ivf_drift_stats(spark, index_path: str) -> DataFrame:
     vec = F.col(meta["vec_col"]).cast("array<double>")
     dists = F.array(*[_center_d2(vec, c) for c in centers])
     cur = (
-        _mask_ivf_tombstones(read_index(spark, index_path, meta), index_path, meta)
+        mask_tombstones(IVF, read_index(spark, index_path, meta), index_path, meta)
         .select(
             F.col("_cell").alias("cell"),
             F.element_at(dists, F.col("_cell") + 1).alias("_d2"),
@@ -923,7 +920,7 @@ def ivf_retrain(
     k = n_lists if n_lists is not None else meta["n_lists"]
     vec_col, id_col = meta["vec_col"], meta["id_col"]
     live = (
-        _mask_ivf_tombstones(read_index(spark, index_path, meta), index_path, meta)
+        mask_tombstones(IVF, read_index(spark, index_path, meta), index_path, meta)
         .drop("_cell")
         .persist()  # consumed twice: the guard count and the fit/assign
     )
@@ -975,48 +972,15 @@ def _train_baseline(spark, index_path: str, *aggs: Column):
 
 
 def ivf_index_delete(ids: DataFrame, index_path: str, *, id_col: str | None = None) -> None:
-    """Tombstone vectors out of the IVF index — same semantics as the
-    other three families (masked from every search immediately,
-    physically removed at the next compact, idempotent, ids-only)."""
-    from tia_data_pipeline_spark.operators.scale import append_index_tombstones
-
-    meta = ivf_index_meta(ids.sparkSession, index_path)
-    src = id_col or meta["id_col"]
-    append_index_tombstones(
-        ids.select(F.col(src).alias(meta["id_col"])),
-        index_path,
-        index_schema_json=meta["schema_json"],
-        id_col=meta["id_col"],
-    )
+    """Tombstone vectors out of the IVF index (``index.index_delete``);
+    ``id_col`` defaults to the meta's id column."""
+    index_delete(IVF, ids, index_path, id_col=id_col)
 
 
 def ivf_index_compact(spark, path: str) -> dict:
-    """One file per ``_cell`` partition (appends fragment it) — applies
-    pending tombstones, same swap semantics as the other families."""
-    from tia_data_pipeline_spark.operators.scale import compact_partitioned_index
-
-    meta = ivf_index_meta(spark, path)
-    return compact_partitioned_index(
-        spark, path,
-        partition_cols=("_cell",),
-        schema_json=meta["schema_json"],
-        side_dirs=(_IVF_CENTERS_DIR, _IVF_META_DIR),
-        tombstones_id_col=meta["id_col"],
-    )
-
-
-def ivf_index_stats(spark, path: str) -> dict:
-    """Health census of the IVF index (fragmentation / cell skew /
-    tombstone debt) — the IVF member of the `*_index_stats` family."""
-    from tia_data_pipeline_spark.operators.scale import partitioned_index_stats
-
-    meta = ivf_index_meta(spark, path)
-    return partitioned_index_stats(
-        spark, path,
-        partition_cols=("_cell",),
-        schema_json=meta["schema_json"],
-        tombstones_id_col=meta["id_col"],
-    )
+    """One file per ``_cell`` partition, pending tombstones applied
+    (``index.index_compact``)."""
+    return index_compact(IVF, spark, path)
 
 
 def knn_join_bucketed(

@@ -65,6 +65,12 @@ from pyspark.sql import functions as F
 
 from tia_data_pipeline_spark.functions import text as TX
 from tia_data_pipeline_spark.functions.text import portable_round
+from tia_data_pipeline_spark.operators.index import (
+    TEXT,
+    _compact,
+    index_delete,
+    read_meta_row,
+)
 
 _INDEX_SEED = 0x1DE7
 
@@ -140,19 +146,14 @@ def _write_corpus_stats(
 
 
 def read_corpus_stats(spark: SparkSession, path: str):
-    """The one-row ``_corpus_stats`` read every lifecycle verb starts
-    from — single-sources the side-table contract (column names, the
-    bucket modulus, the postings-schema JSON) so no consumer, the
-    empty-batch schemas included, can drift from it (review r10).
-    Heals a publish torn between its two renames first
-    (``operators.scale.heal_replaced_dir``): the previous generation
-    renames back — the scalars it carries are at most one append
-    stale, and the retried append rewrites them."""
-    from tia_data_pipeline_spark.operators.scale import heal_replaced_dir
-
-    live = f"{path}/_corpus_stats"
-    heal_replaced_dir(spark, live)
-    return spark.read.parquet(live).collect()[0]
+    """The one-row ``_corpus_stats`` read every text verb starts from —
+    single-sources the side-table contract (column names, the bucket
+    modulus, the postings-schema JSON) so no consumer, the empty-batch
+    schemas included, can drift from it (review r10). A publish torn
+    between its two renames heals first (``index.read_meta_row``): the
+    previous generation renames back — the scalars it carries are at
+    most one append stale, and the retried append rewrites them."""
+    return read_meta_row(TEXT, spark, path)
 
 
 def read_postings_schema(spark: SparkSession, path: str):
@@ -483,36 +484,24 @@ def text_index_append(
 
 
 def text_index_delete(ids: DataFrame, path: str, *, id_col: str = "doc_id") -> None:
-    """Tombstone documents out of the text index — same semantics as
-    the other four index families (masked from every serve immediately
-    — candidates, df, AND the N/avgdl scalars all exclude them;
-    physically removed at the next :func:`text_index_compact`;
-    idempotent; ids-only)."""
-    from tia_data_pipeline_spark.operators.scale import append_index_tombstones
-
-    spark = ids.sparkSession
-    stats_row = read_corpus_stats(spark, path)
-    append_index_tombstones(
-        ids.select(F.col(id_col).alias("doc_id")),
-        path,
-        index_schema_json=stats_row["postings_schema"],
-        id_col="doc_id",
-    )
+    """Tombstone documents out of the text index (``index.index_delete``):
+    candidates, df AND the N/avgdl scalars exclude them at once; the
+    next :func:`text_index_compact` removes them physically."""
+    index_delete(TEXT, ids, path, id_col=id_col)
 
 
 def text_index_compact(spark: SparkSession, path: str) -> dict:
     """One file per term bucket (appends fragment it) + apply pending
     deletions everywhere: ``_doc_stats`` drops tombstoned rows,
-    ``_corpus_stats`` recomputes, and the generic compact drops the
-    tombstoned postings plus the applied tombstone table. All three
-    rewrites publish through ``operators.scale.replace_dir``, so a
-    failed rename restores the previous table, never an empty path.
-    The stats rewrites run FIRST so a crash mid-compact can only leave
-    scalars already consistent with the tombstones a serve still
-    masks."""
+    ``_corpus_stats`` recomputes, and the generic compact
+    (``index.index_compact``) drops the tombstoned postings plus the
+    applied tombstone table. All three rewrites publish through
+    ``operators.scale.replace_dir``, so a failed rename restores the
+    previous table, never an empty path. The stats rewrites run FIRST
+    so a crash mid-compact can only leave scalars already consistent
+    with the tombstones a serve still masks."""
     from tia_data_pipeline_spark.operators.scale import (
         _require_local_path,
-        compact_partitioned_index,
         read_index_tombstones,
         replace_dir,
     )
@@ -529,29 +518,4 @@ def text_index_compact(spark: SparkSession, path: str) -> dict:
                 F.broadcast(ts), "doc_id", "left_anti"
             ).write.mode("overwrite").parquet(staging)
         _write_corpus_stats(spark, path, int(stats_row["n_buckets"]), schema_json)
-    return compact_partitioned_index(
-        spark,
-        path,
-        partition_cols=("_bucket",),
-        schema_json=schema_json,
-        side_dirs=("_doc_stats", "_corpus_stats"),
-        tombstones_id_col="doc_id",
-        # heal duplicated postings from a crashed-and-retried append
-        # (exact duplicates by construction — see text_index_append)
-        dedup_keys=("tok", "doc_id"),
-    )
-
-
-def text_index_stats(spark: SparkSession, path: str) -> dict:
-    """Health census of the text index — fragmentation / bucket skew /
-    pending-tombstone fraction, the text member of the stats family."""
-    from tia_data_pipeline_spark.operators.scale import partitioned_index_stats
-
-    stats_row = read_corpus_stats(spark, path)
-    return partitioned_index_stats(
-        spark,
-        path,
-        partition_cols=("_bucket",),
-        schema_json=stats_row["postings_schema"],
-        tombstones_id_col="doc_id",
-    )
+    return _compact(TEXT, spark, path, stats_row)

@@ -19,8 +19,6 @@ executor storage memory); the immutable meta is read once per stream.
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
@@ -121,26 +119,19 @@ def stream_index_deletes(
     ``id_col=None`` keeps the index's OWN default ("doc_id" for the
     text-hash families and the BM25 text index, "vec_id" for
     embedding, the meta-recorded column for IVF); pass it only to
-    override."""
+    override. The index kind is read from the meta side table the dir
+    carries, one of the five ``operators.index.FAMILIES``."""
     from tia_data_pipeline_spark.operators.scale import hadoop_fs_path
-    from tia_data_pipeline_spark.operators.similarity import _IVF_META_DIR, ivf_index_delete
-    from tia_data_pipeline_spark.operators.text_index import text_index_delete
 
-    def holds(meta_dir: str) -> bool:
-        fs, p = hadoop_fs_path(id_stream.sparkSession, f"{index_path}/{meta_dir}")
+    def holds(family: IndexFamily) -> bool:
+        fs, p = hadoop_fs_path(id_stream.sparkSession, f"{index_path}/{family.meta_dir}")
         return bool(fs.exists(p))
 
-    # the index kind is read from the meta side table the dir carries
-    verbs = [(f.meta_dir, partial(index_delete, f)) for f in FAMILIES]
-    verbs += [(_IVF_META_DIR, ivf_index_delete), ("_corpus_stats", text_index_delete)]
-    delete = next((verb for meta_dir, verb in verbs if holds(meta_dir)), None)
-    if delete is None:
+    family = next((f for f in FAMILIES if holds(f)), None)
+    if family is None:
         raise ValueError(f"{index_path} holds no index meta table; write the index first")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if id_col is None:
-            delete(batch_df, index_path)
-        else:
-            delete(batch_df, index_path, id_col=id_col)
+        index_delete(family, batch_df, index_path, id_col=id_col)
 
     return start_foreach_batch(id_stream, write_batch, checkpoint, available_now)
