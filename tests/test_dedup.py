@@ -266,9 +266,9 @@ class TestMinhashIncrementalIndex:
         shard = self._shard(spark, base)
         meta = index_meta(MINHASH, spark, path)
         index_append(MINHASH, shard, path)
-        n1 = read_index(spark, path, meta).count()
+        n1 = read_index(MINHASH, spark, path, meta).count()
         index_append(MINHASH, shard, path)
-        n2 = read_index(spark, path, meta).count()
+        n2 = read_index(MINHASH, spark, path, meta).count()
         assert n1 == n2, "re-appending the same shard must be a no-op"
         # replay determinism: the probe excludes the shard's OWN ids
         # from the index side, so the pair set is IDENTICAL before and
@@ -312,7 +312,7 @@ class TestMinhashIncrementalIndex:
         ).mode("append").parquet(path)
         index_append(MINHASH, shard, path)  # the retry
         per_doc = (
-            read_index(spark, path, meta)
+            read_index(MINHASH, spark, path, meta)
             .join(
                 shard.select(F.col("doc_id").alias("_id")), "_id", "leftsemi"
             )
@@ -490,9 +490,9 @@ class TestSimhashIncrementalIndex:
         shard = self._shard(spark, base)
         meta = index_meta(SIMHASH, spark, path)
         index_append(SIMHASH, shard, path)
-        n1 = read_index(spark, path, meta).count()
+        n1 = read_index(SIMHASH, spark, path, meta).count()
         index_append(SIMHASH, shard, path)
-        n2 = read_index(spark, path, meta).count()
+        n2 = read_index(SIMHASH, spark, path, meta).count()
         assert n1 == n2, "re-appending the same shard must be a no-op"
         # replay determinism: the probe anti-joins the shard's own ids
         # off the index side, so the pair set is identical before and
@@ -533,7 +533,7 @@ class TestSimhashIncrementalIndex:
         ).mode("append").parquet(path)
         index_append(SIMHASH, shard, path)
         per_doc = (
-            read_index(spark, path, meta)
+            read_index(SIMHASH, spark, path, meta)
             .join(
                 shard.select(F.col("doc_id").alias("_id")), "_id", "leftsemi"
             )

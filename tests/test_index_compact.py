@@ -127,19 +127,14 @@ def test_index_stats_track_appends_and_compaction(spark, docs, tmp_path):
         MINHASH,
         index_append,
         index_compact,
-        index_meta,
+        index_stats,
     )
-    from tia_data_pipeline_spark.operators.scale import partitioned_index_stats
 
     idx = str(tmp_path / "mh_stats")
     minhash_write_index(docs.filter("doc_id <= 10"), "text", "doc_id", idx, n_shards=4)
-    meta = index_meta(MINHASH, spark, idx)
 
     def stats():
-        return partitioned_index_stats(
-            spark, idx, partition_cols=("band", "bshard"),
-            schema_json=meta["schema_json"],
-        )
+        return index_stats(MINHASH, spark, idx)
 
     s0 = stats()
     index_append(MINHASH, docs.filter("doc_id > 10"), idx)

@@ -3,7 +3,7 @@ probes immediately, deletes are idempotent (twice ≡ once), compaction
 physically removes tombstoned rows AND the applied tombstones, and the
 stats census reports the pending-deletion fraction. One suite per index
 family (MinHash / SimHash / embedding) over the shared machinery in
-operators/scale.py, plus the generic-layer edge cases (day-zero
+operators/index.py, plus the generic-layer edge cases (day-zero
 tombstone reads, underscore partition dirs, non-local URI guard)."""
 
 from __future__ import annotations
@@ -77,24 +77,21 @@ class TestMinhashDelete:
     def test_delete_twice_equals_once(self, spark, docs, tmp_path):
         from tia_data_pipeline_spark.operators.index import (
             MINHASH,
+            _read_tombstones,
             index_delete,
             index_meta,
         )
-        from tia_data_pipeline_spark.operators.scale import read_index_tombstones
 
         hist, _ = docs
         path = self._index(spark, hist, tmp_path)
-        index_delete(MINHASH, _ids(spark, 1, 2), path)
         meta = index_meta(MINHASH, spark, path)
-        ts1 = read_index_tombstones(
-            spark, path, index_schema_json=meta["schema_json"], id_col="_id"
-        ).count()
+        assert _read_tombstones(MINHASH, spark, path, meta) is None
+        index_delete(MINHASH, _ids(spark, 1, 2), path)
+        ts1 = _read_tombstones(MINHASH, spark, path, meta).count()
         # retried batch + overlapping later batch: no duplicate rows
         index_delete(MINHASH, _ids(spark, 1, 2), path)
         index_delete(MINHASH, _ids(spark, 2, 999), path)
-        ts2 = read_index_tombstones(
-            spark, path, index_schema_json=meta["schema_json"], id_col="_id"
-        ).count()
+        ts2 = _read_tombstones(MINHASH, spark, path, meta).count()
         assert (ts1, ts2) == (2, 3)
 
     def test_null_ids_are_excluded(self, spark, docs, tmp_path):
@@ -125,7 +122,7 @@ class TestMinhashDelete:
         path = self._index(spark, hist, tmp_path)
         meta = index_meta(MINHASH, spark, path)
         bands = meta["bands"]
-        total = read_index(spark, path, meta).count()
+        total = read_index(MINHASH, spark, path, meta).count()
         index_delete(MINHASH, _ids(spark, 1), path)
 
         stats = index_stats(MINHASH, spark, path)
@@ -139,7 +136,7 @@ class TestMinhashDelete:
         out = index_compact(MINHASH, spark, path)
         # physical removal: the deleted doc's rows are gone...
         assert out["rows"] == total - bands
-        left = read_index(spark, path, index_meta(MINHASH, spark, path))
+        left = read_index(MINHASH, spark, path, index_meta(MINHASH, spark, path))
         assert left.filter(F.col("_id") == 1).count() == 0
         # ...the applied tombstones are gone...
         assert not os.path.isdir(os.path.join(path, "_tombstones"))
@@ -314,32 +311,41 @@ class TestGenericTombstoneLayer:
         when the column starts with an underscore (the IVF `_cell=K/`
         layout) — stats must census their files and compaction must not
         silently no-op."""
-        from tia_data_pipeline_spark.operators.scale import (
-            compact_partitioned_index,
-            partitioned_index_stats,
+        from tia_data_pipeline_spark.operators.index import (
+            IVF,
+            index_compact,
+            index_meta,
+            index_stats,
+            read_index,
+        )
+        from tia_data_pipeline_spark.operators.similarity import (
+            ivf_build_index,
+            ivf_index_append,
+            ivf_write_index,
         )
 
-        path = str(tmp_path / "ivfish")
-        df = spark.createDataFrame(
-            [(i, i % 3) for i in range(30)], "vec_id bigint, _cell int"
+        rng = random.Random(5)
+        vecs = spark.createDataFrame(
+            [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(40)],
+            "vec_id bigint, embedding array<double>",
         )
-        df.repartition(4).write.partitionBy("_cell").parquet(path)
-        st = partitioned_index_stats(spark, path, partition_cols=("_cell",))
-        assert st["rows"] == 30 and st["partitions"] == 3 and st["files"] > 0
-        out = compact_partitioned_index(spark, path, partition_cols=("_cell",))
-        assert out["rows"] == 30
-        assert out["files_after"] == 3
-        assert spark.read.parquet(path).count() == 30
+        path = str(tmp_path / "ivf")
+        ivf_write_index(*ivf_build_index(vecs.filter("vec_id < 30"), n_lists=3, seed=3), path)
+        ivf_index_append(vecs.filter("vec_id >= 30"), path)  # a second file per touched cell
+        st = index_stats(IVF, spark, path)
+        assert st["rows"] == 40 and st["files"] > st["partitions"] > 0
+        out = index_compact(IVF, spark, path)
+        assert out == {"rows": 40, "files_before": st["files"], "files_after": st["partitions"]}
+        assert read_index(IVF, spark, path, index_meta(IVF, spark, path)).count() == 40
 
     def test_compact_rejects_non_local_uri(self, spark):
-        from tia_data_pipeline_spark.operators.scale import (
-            compact_partitioned_index,
-        )
+        """The local-path check runs before the meta read, so an
+        object-store URI fails with the local-FS-only message, not a
+        Hadoop filesystem error."""
+        from tia_data_pipeline_spark.operators.index import IVF, index_compact
 
-        with pytest.raises(ValueError, match="local-FS-only"):
-            compact_partitioned_index(
-                spark, "s3a://bucket/idx", partition_cols=("band",)
-            )
+        with pytest.raises(ValueError, match="index_compact is local-FS-only"):
+            index_compact(IVF, spark, "s3a://bucket/idx")
 
 
 class TestScopedProbeCacheRelease:
@@ -427,6 +433,17 @@ class TestScopedProbeCacheRelease:
         from tests.conftest import assert_cache_settles_to
 
         assert_cache_settles_to(jsc, before, "shard and probe-side caches")
+
+
+def test_index_families_key_a_dict():
+    """A family is one fixed descriptor: it hashes by identity, so the
+    five can key a dict (``defaults`` is a dict, which a field-wise
+    hash would reject)."""
+    from tia_data_pipeline_spark.operators.index import FAMILIES, MINHASH
+
+    by_family = {family: family.name for family in FAMILIES}
+    assert len(by_family) == 5 and len(set(FAMILIES)) == 5
+    assert by_family[MINHASH] == "minhash"
 
 
 def test_stream_index_deletes_masks_and_replays_idempotently(spark, docs, tmp_path):
@@ -532,12 +549,12 @@ class TestReviewHardenings:
         texts = spark.createDataFrame(
             [(1, "spark data join"), (2, "table stream")], "doc_id bigint, text string"
         )
-        writers = (
-            (EMBEDDING, "vec_id", lambda p: embedding_write_index(hist, p, bits=2)),
-            (IVF, "vec_id", lambda p: ivf_write_index(*ivf_build_index(hist, n_lists=2, seed=3), p)),
-            (TEXT, "doc_id", lambda p: build_text_index(texts, p, n_buckets=4)),
-        )
-        for family, id_col, write in writers:
+        writers = {
+            EMBEDDING: ("vec_id", lambda p: embedding_write_index(hist, p, bits=2)),
+            IVF: ("vec_id", lambda p: ivf_write_index(*ivf_build_index(hist, n_lists=2, seed=3), p)),
+            TEXT: ("doc_id", lambda p: build_text_index(texts, p, n_buckets=4)),
+        }
+        for family, (id_col, write) in writers.items():
             path = str(tmp_path / family.name)
             write(path)
             req = tmp_path / f"requests_{family.name}"
@@ -565,22 +582,30 @@ class TestMassDeleteMask:
     routes through the Bloom membership split so the tombstone set is
     never shipped to every executor — definitely-live rows skip the
     shuffle and only the Bloom-possible sliver pays the exact
-    shuffle-hash join. Both paths must be row-identical."""
+    shuffle-hash join. Both paths must be row-identical, for the live
+    mask and for the dead-rows leg."""
 
-    def _frames(self, spark, tmp_path):
+    LIVE = {i for i in range(10_000) if i % 7 != 0}
+    DEAD = {i for i in range(10_000) if i % 7 == 0}
+
+    def _index(self, spark, tmp_path):
+        """A 10,000-row text-family index dir whose tombstones are a
+        15% retention sweep — mass-deletion regime, not request-sized.
+        Returns (scan, path, meta)."""
         import pandas as pd
 
-        base = pd.DataFrame(
-            {"doc_id": range(10_000), "val": [i % 97 for i in range(10_000)]}
-        )
-        df_path = str(tmp_path / "rows")
-        ts_path = str(tmp_path / "ts")
-        spark.createDataFrame(base).write.parquet(df_path)
-        # a 15% retention sweep — mass-deletion regime, NOT request-sized
+        from tia_data_pipeline_spark.operators.index import TEXT, index_delete, index_meta
+
+        path = str(tmp_path / "idx")
         spark.createDataFrame(
-            pd.DataFrame({"doc_id": [i for i in range(10_000) if i % 7 == 0]})
-        ).write.parquet(ts_path)
-        return spark.read.parquet(df_path), spark.read.parquet(ts_path)
+            pd.DataFrame({"doc_id": range(10_000), "val": [i % 97 for i in range(10_000)]})
+        ).write.parquet(path)
+        df = spark.read.parquet(path)
+        spark.createDataFrame([(df.schema.json(),)], "postings_schema string").write.parquet(
+            f"{path}/{TEXT.meta_dir}"
+        )
+        index_delete(TEXT, df.filter("doc_id % 7 = 0"), path)
+        return df, path, index_meta(TEXT, spark, path)
 
     def _plan(self, df):
         import contextlib
@@ -591,30 +616,31 @@ class TestMassDeleteMask:
             df.explain("formatted")
         return buf.getvalue()
 
+    def _doc_ids(self, df):
+        return {r["doc_id"] for r in df.collect()}
+
     def test_bloom_path_equals_broadcast_path(self, spark, tmp_path, monkeypatch):
         from tia_data_pipeline_spark.operators import membership
-        from tia_data_pipeline_spark.operators.scale import tombstone_mask_join
+        from tia_data_pipeline_spark.operators.index import TEXT, mask_tombstones
 
-        df, ts = self._frames(spark, tmp_path)
-        small = tombstone_mask_join(df, ts, "doc_id", keep="live")
-        monkeypatch.setattr(membership, "BROADCAST_MAX_SOURCE_BYTES", 0)
-        big = tombstone_mask_join(df, ts, "doc_id", keep="live")
-        expect = {r["doc_id"] for r in small.collect()}
-        assert expect == {i for i in range(10_000) if i % 7 != 0}
-        assert {r["doc_id"] for r in big.collect()} == expect
-        # keep="dead" (the text index's scalar-correction leg) too
-        dead = tombstone_mask_join(df, ts, "doc_id", keep="dead")
-        assert {r["doc_id"] for r in dead.collect()} == {
-            i for i in range(10_000) if i % 7 == 0
-        }
+        df, path, meta = self._index(spark, tmp_path)
+        for regime in ("broadcast", "bloom"):
+            if regime == "bloom":
+                monkeypatch.setattr(membership, "BROADCAST_MAX_SOURCE_BYTES", 0)
+            live = mask_tombstones(TEXT, df, path, meta)
+            # keep="dead" is the text index's scalar-correction leg
+            dead = mask_tombstones(TEXT, df, path, meta, keep="dead")
+            assert self._doc_ids(live) == self.LIVE, regime
+            assert self._doc_ids(dead) == self.DEAD, regime
 
     def test_request_sized_path_stays_broadcast(self, spark, tmp_path):
-        from tia_data_pipeline_spark.operators.scale import tombstone_mask_join
+        from tia_data_pipeline_spark.operators.index import TEXT, mask_tombstones
 
-        df, ts = self._frames(spark, tmp_path)
-        p = self._plan(tombstone_mask_join(df, ts, "doc_id", keep="live"))
-        assert "BroadcastHashJoin" in p and "LeftAnti" in p
-        assert "ShuffledHashJoin" not in p and "SortMergeJoin" not in p
+        df, path, meta = self._index(spark, tmp_path)
+        for keep, how in (("live", "LeftAnti"), ("dead", "LeftSemi")):
+            p = self._plan(mask_tombstones(TEXT, df, path, meta, keep=keep))
+            assert "BroadcastHashJoin" in p and how in p, keep
+            assert "ShuffledHashJoin" not in p and "SortMergeJoin" not in p, keep
 
     def test_mass_delete_never_shuffles_the_full_relation_as_broadcast(
         self, spark, tmp_path, monkeypatch
@@ -624,41 +650,41 @@ class TestMassDeleteMask:
         under a BroadcastExchange (the word table that does broadcast
         is bounded by the filter bits, not the tombstone count)."""
         from tia_data_pipeline_spark.operators import membership
-        from tia_data_pipeline_spark.operators.scale import tombstone_mask_join
+        from tia_data_pipeline_spark.operators.index import TEXT, mask_tombstones
 
-        df, ts = self._frames(spark, tmp_path)
+        df, path, meta = self._index(spark, tmp_path)
         monkeypatch.setattr(membership, "BROADCAST_MAX_SOURCE_BYTES", 0)
-        p = self._plan(tombstone_mask_join(df, ts, "doc_id", keep="live"))
-        assert "ShuffledHashJoin" in p  # the exact sliver leg
-        assert "LeftAnti" not in p  # mask is a marked filter, not an anti-join
+        for keep in ("live", "dead"):
+            p = self._plan(mask_tombstones(TEXT, df, path, meta, keep=keep))
+            assert "ShuffledHashJoin" in p, keep  # the exact sliver leg
+            # the mask is a marked filter, not an anti- or semi-join
+            assert "LeftAnti" not in p and "LeftSemi" not in p, keep
 
     def test_index_probe_routes_through_the_switch(self, spark, tmp_path, monkeypatch):
-        """End-to-end: anti_join_index_tombstones over a real index dir
-        gives identical results through both regimes."""
+        """End-to-end: a BM25 serve over a tombstoned text index masks
+        its candidates and corrects its scalars through the switch, and
+        gives identical rows in both regimes."""
         from tia_data_pipeline_spark.operators import membership
-        from tia_data_pipeline_spark.operators.scale import (
-            anti_join_index_tombstones,
-            append_index_tombstones,
+        from tia_data_pipeline_spark.operators.text_index import (
+            bm25_search_batch,
+            build_text_index,
+            text_index_delete,
         )
 
-        df, _ = self._frames(spark, tmp_path)
-        idx_path = str(tmp_path / "idx")
-        df.write.parquet(idx_path)
-        schema_json = df.schema.json()
-        append_index_tombstones(
-            df.filter("doc_id % 7 = 0").select("doc_id"),
-            idx_path,
-            index_schema_json=schema_json,
-            id_col="doc_id",
+        words = ["spark", "join", "table", "stream", "index"]
+        docs = spark.createDataFrame(
+            [(i, " ".join(words[j % 5] for j in range(i % 7 + 1, i % 7 + 4))) for i in range(60)],
+            "doc_id bigint, text string",
         )
-        read_back = spark.read.schema(df.schema).parquet(idx_path)
-        small = anti_join_index_tombstones(
-            read_back, idx_path, index_schema_json=schema_json, id_col="doc_id"
-        )
+        path = str(tmp_path / "tidx")
+        build_text_index(docs, path, n_buckets=4)
+        text_index_delete(docs.filter("doc_id % 7 = 0").select("doc_id"), path)
+        queries = spark.createDataFrame([(1, ["spark", "join"])], "query_id bigint, terms array<string>")
+
+        def serve():
+            return sorted(map(tuple, bm25_search_batch(queries, path, k=60).collect()))
+
+        small = serve()
         monkeypatch.setattr(membership, "BROADCAST_MAX_SOURCE_BYTES", 0)
-        big = anti_join_index_tombstones(
-            read_back, idx_path, index_schema_json=schema_json, id_col="doc_id"
-        )
-        expect = {i for i in range(10_000) if i % 7 != 0}
-        assert {r["doc_id"] for r in small.collect()} == expect
-        assert {r["doc_id"] for r in big.collect()} == expect
+        assert serve() == small
+        assert small and all(r[1] % 7 != 0 for r in small)

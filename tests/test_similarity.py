@@ -319,9 +319,9 @@ class TestEmbeddingIncrementalIndex:
         shard = self._vecs(spark, [(10, [v * 1.01 for v in base])])
         meta = index_meta(EMBEDDING, spark, path)
         index_append(EMBEDDING, shard, path)
-        n1 = read_index(spark, path, meta).count()
+        n1 = read_index(EMBEDDING, spark, path, meta).count()
         index_append(EMBEDDING, shard, path)
-        assert read_index(spark, path, meta).count() == n1
+        assert read_index(EMBEDDING, spark, path, meta).count() == n1
         # self-pairs excluded after the shard becomes index-resident
         got = {
             (r["new_id"], r["dup_id"])

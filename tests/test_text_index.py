@@ -378,3 +378,32 @@ def test_corpus_stats_swap_window_heals_on_read(spark, tmp_path):
     assert not os.path.exists(f"{path}/_corpus_stats__old")
     # the healed index serves
     assert bm25_serve_one(spark, path, ["data", "spark"], k=3)
+
+
+def test_tombstoned_serve_runs_no_emptiness_job(spark, tmp_path):
+    """A BM25 request over a tombstoned index runs no Spark job to ask
+    whether the tombstone table is empty: the dir exists only while it
+    holds ids. Pinned as the request's whole job count under one job
+    group, with the rows of a fresh build over the live docs. A serve
+    that first ran ``limit(1).count()`` on the table read 23: that one
+    action is two jobs (the limit's shuffle stage and the count)."""
+    import uuid
+
+    from tia_data_pipeline_spark.operators.text_index import text_index_delete
+
+    docs = load_table(spark, SMOKE_SF, "documents").select("doc_id", "text")
+    path, fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
+    build_text_index(docs, path, n_buckets=8)
+    text_index_delete(docs.filter("doc_id % 3 = 0").select("doc_id"), path)
+    build_text_index(docs.filter("doc_id % 3 <> 0"), fresh, n_buckets=8)
+    query = _queries(spark, [(1, ["data", "spark"])])
+    sc = spark.sparkContext
+    group = f"bm25-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one BM25 request")
+    try:
+        rows = bm25_search_batch(query, path, k=20).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert rows and sorted(rows) == sorted(bm25_search_batch(query, fresh, k=20).collect())
+    assert jobs == 21, jobs

@@ -53,8 +53,6 @@ from tia_data_pipeline_spark.operators.multimodal import (
 )
 from tia_data_pipeline_spark.operators.sampling import hash_sample, stratified_hash_sample
 from tia_data_pipeline_spark.operators.scale import (
-    compact_partitioned_index,
-    partitioned_index_stats,
     salted_group_count,
     salted_join,
     write_bucketed,
@@ -116,8 +114,6 @@ __all__ = [
     "embedding_write_index",
     "ivf_search_batch",
     "semantic_dedup_pairs",
-    "compact_partitioned_index",
-    "partitioned_index_stats",
     "connected_components",
     "dedup_components",
     "minhash_near_duplicates",

@@ -14,13 +14,16 @@ The IVF (``operators.similarity``) and text/BM25
 (``operators.text_index``) indexes have their own writers, serves and
 appends, but the same lifecycle: :data:`IVF` and :data:`TEXT` are
 lifecycle-only families (no band frame) that state their on-disk
-layout, so the tombstone mask, delete, compact, stats and meta read
-below serve all five families.
+layout, so the meta and schema read, tombstone mask, delete, compact
+and stats below serve all five families. This module is the one owner
+of that layout: every fact about it comes from ``(family, meta)``.
 
-Layout: banded rows partitioned by ``family.partition_cols``, plus a
-one-row meta side table (``family.meta_dir``) holding the hash family
-AND ``schema_json`` — probes read with an explicit schema, so an EMPTY
-index (day-zero bootstrap) stays probeable.
+Layout: rows partitioned by ``family.partition_cols``; a one-row meta
+side table (``family.meta_dir``) holding the build parameters AND the
+row schema as JSON (``family.schema_field``) — scans read with that
+explicit schema (:func:`index_schema`), so an EMPTY index (day-zero
+bootstrap) stays probeable; and, after a delete, a ``_tombstones/``
+table of masked ids (see the Tombstones section).
 
 A probe has two legs, both replay-deterministic:
 
@@ -53,16 +56,14 @@ from pyspark.sql import functions as F
 from tia_data_pipeline_spark.functions.text import portable_round
 from tia_data_pipeline_spark.functions.vectors import cosine_from_norms, l2_norm
 from tia_data_pipeline_spark.operators.scale import (
-    anti_join_index_tombstones,
-    append_index_tombstones,
-    compact_partitioned_index,
+    estimated_relation_bytes,
     fan_out,
     heal_replaced_dir,
-    partitioned_index_stats,
+    replace_dir,
 )
 
 
-@dataclass(frozen=True)
+@dataclass(frozen=True, eq=False)
 class IndexFamily:
     """What makes one index family differ from another.
 
@@ -84,7 +85,10 @@ class IndexFamily:
     (source columns, ``max_bucket``, threshold); ``fan_probe`` widens
     the shard side before the join, where vector payloads make pairs
     the costly leg. ``meta_ddl`` is the meta table the shared write
-    tail writes."""
+    tail writes.
+
+    A family is one fixed descriptor, so it hashes and compares by
+    identity and can key a dict."""
 
     name: str
     meta_dir: str
@@ -260,14 +264,18 @@ FAMILIES = (MINHASH, SIMHASH, EMBEDDING, IVF, TEXT)
 # ---------------------------------------------------------------------------
 
 
+def _write_partitioned(family: IndexFamily, df: DataFrame, path: str, mode: str) -> None:
+    # one shuffle keyed by the partition columns: each task owns whole
+    # partition dirs and writes one file per dir, not a sliver per task
+    parts = list(family.partition_cols)
+    df.repartition(*parts).write.partitionBy(*parts).mode(mode).parquet(path)
+
+
 def write_index_frame(family: IndexFamily, banded: DataFrame, path: str, meta: dict) -> None:
     """The write tail every family writer ends in: ``banded`` (the
     family's band frame) partitioned by ``family.partition_cols``, plus
     the one-row meta side table — ``meta`` and the row schema."""
-    parts = list(family.partition_cols)
-    # one shuffle keyed by the partition columns: each task owns whole
-    # partition dirs and writes one file per dir, not a sliver per task
-    banded.repartition(*parts).write.partitionBy(*parts).mode("overwrite").parquet(path)
+    _write_partitioned(family, banded, path, "overwrite")
     row = {**meta, "schema_json": banded.schema.json()}
     names = [c.split()[0] for c in family.meta_ddl.split(",")]
     banded.sparkSession.createDataFrame(
@@ -296,13 +304,117 @@ def index_meta(family: IndexFamily, spark, path: str) -> dict:
     return read_meta_row(family, spark, path).asDict()
 
 
-def read_index(spark, path: str, meta: dict) -> DataFrame:
+def index_schema(family: IndexFamily, meta):
+    """The index's row schema, parsed from the JSON the meta holds in
+    ``family.schema_field`` — the one parse of it in the package, so
+    every scan, the append's payload check and the tombstone table read
+    the types the writer wrote."""
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(meta[family.schema_field]))
+
+
+def read_index(family: IndexFamily, spark, path: str, meta) -> DataFrame:
     """Index scan with the meta's explicit schema: an EMPTY index has
     no data files to infer from, and inference is a driver-side footer
     read a 100 TB index can skip."""
+    return spark.read.schema(index_schema(family, meta)).parquet(path)
+
+
+# ---------------------------------------------------------------------------
+# Tombstones
+# ---------------------------------------------------------------------------
+#
+# A takedown, right-to-be-forgotten or TTL'd-corpus user must be able to
+# REMOVE documents from a persisted index without a full rewrite. The
+# mechanism is a tombstone side table (`_tombstones/` under the index
+# root — an underscore dir, hidden from the index's own scans like the
+# meta tables): deletion appends the ids, probes and serves mask them,
+# and compaction physically drops both the tombstoned rows and the
+# applied tombstones.
+#
+# Semantics: a tombstone MASKS the id until compaction removes the rows
+# and the tombstone together. Appending a tombstoned id while the
+# tombstone lives is a no-op from the probe's point of view (the rows
+# land but stay masked, and compaction drops them); after compaction
+# the id is gone entirely and a later append re-indexes it fresh. This
+# keeps probes replay-deterministic: output is a pure function of
+# (shard, index-minus-shard-minus-tombstones) at probe time.
+#
+# The dir exists only while it holds ids: a delete never writes an
+# empty delta and compaction drops the dir, so "no dir" is the one
+# zero-tombstone state and costs no join node and no Spark job.
+#
+# 100 TB posture: the tombstone set is sized by deletion REQUESTS, not
+# by the corpus, so the mask broadcasts it and the append is a
+# driver-tiny idempotent delta write. A TTL/retention sweep breaks that
+# sizing assumption (tombstones can reach a corpus fraction before the
+# next compaction), so the mask is SIZE-CONDITIONAL: past the broadcast
+# budget it routes through the Bloom membership split
+# (`operators.membership.membership_mark`, the switch decontamination
+# uses) — definitely-live rows never touch a shuffle; only the
+# Bloom-possible sliver pays the exact join.
+
+_TOMBSTONE_DIR = "_tombstones"
+
+
+def _read_tombstones(family: IndexFamily, spark, path: str, meta) -> DataFrame | None:
+    """The index's tombstoned ids — one column, named and typed as the
+    index's tombstone id column, so the two can never drift — or
+    ``None`` when the index has no ``_tombstones/`` dir. The existence
+    check is analysis-time only: the explicit-schema read raises before
+    any job."""
+    from pyspark.errors import AnalysisException
     from pyspark.sql.types import StructType
 
-    return spark.read.schema(StructType.fromJson(json.loads(meta["schema_json"]))).parquet(path)
+    schema = StructType([index_schema(family, meta)[family.tombstone_id(meta)]])
+    try:
+        return spark.read.schema(schema).parquet(f"{path}/{_TOMBSTONE_DIR}")
+    except AnalysisException:
+        return None
+
+
+def mask_tombstones(
+    family: IndexFamily, df: DataFrame, path: str, meta, keep: str = "live"
+) -> DataFrame:
+    """``df``, a frame holding the index at ``path``'s tombstone id
+    column, minus its tombstoned ids (``keep="live"``, the mask every
+    probe and serve applies after its pruned scan) or only them
+    (``keep="dead"``, the text serve's N/avgdl corrections). An index
+    with no tombstones returns ``df`` itself for ``live`` — no join
+    node — and an empty ``df`` for ``dead``.
+
+    Request-sized tombstone sets broadcast (a semi/anti join). Past the
+    source-byte budget (``operators.membership.BROADCAST_MAX_SOURCE_
+    BYTES``, read at call time) the mask routes through the Bloom
+    membership split instead: every ``df`` row is tested against k
+    broadcast word-table probes (bounded by the filter size, never the
+    tombstone count), definitely-absent rows pass with no shuffle, and
+    only the Bloom-possible sliver pays the exact shuffle-hash join.
+    Both paths give the same rows (the Bloom layer has no false
+    negatives; false positives die in the exact join). The estimate
+    reads driver file metadata only; an unestimatable set broadcasts."""
+    if keep not in ("live", "dead"):
+        raise ValueError(f"keep must be 'live' or 'dead', got {keep!r}")
+    ts = _read_tombstones(family, df.sparkSession, path, meta)
+    if ts is None:
+        return df if keep == "live" else df.limit(0)
+    from tia_data_pipeline_spark.operators import membership
+
+    col = family.tombstone_id(meta)
+    est = estimated_relation_bytes(ts)
+    if est is None or est <= membership.BROADCAST_MAX_SOURCE_BYTES:
+        return df.join(F.broadcast(ts), col, "left_anti" if keep == "live" else "left_semi")
+    import uuid
+
+    flag = f"_ts_hit_{uuid.uuid4().hex[:8]}"  # collision-proof temp name
+    # the tombstone table is distinct by construction (index_delete
+    # dedups before writing): skip the redundant exchange
+    marked = membership.membership_mark(
+        df, col, ts, col, hit_col=flag, strategy="bloom", members_distinct=True
+    )
+    hit = F.col(flag).isNull() if keep == "live" else F.col(flag).isNotNull()
+    return marked.filter(hit).drop(flag)
 
 
 # ---------------------------------------------------------------------------
@@ -372,7 +484,7 @@ def _cross(
 ) -> DataFrame:
     pred, shard_ids, probe = shard
     idx = mask_tombstones(
-        family, read_index(spark, path, meta).filter(pred), path, meta
+        family, read_index(family, spark, path, meta).filter(pred), path, meta
     ).join(shard_ids, on="_id", how="left_anti")
     hist = _side(family, _capped(family, idx, max_bucket), "dup_id")
     return _pairs(family, probe.join(hist, list(family.key_cols)), check)
@@ -457,15 +569,14 @@ def _append_delta(family: IndexFamily, banded: DataFrame, spark, path: str, meta
     # function of its content), so the anti-join reads touched
     # partitions only and the retry cost is sized by the shard
     existing = (
-        read_index(spark, path, meta)
+        read_index(family, spark, path, meta)
         .filter(_touched(family, banded, meta))
         .select(*family.row_key)
         .distinct()
     )
-    parts = list(family.partition_cols)
-    banded.join(existing, on=list(family.row_key), how="left_anti").repartition(
-        *parts
-    ).write.partitionBy(*parts).mode("append").parquet(path)
+    _write_partitioned(
+        family, banded.join(existing, on=list(family.row_key), how="left_anti"), path, "append"
+    )
 
 
 def index_append(family: IndexFamily, new: DataFrame, index_path: str, **opts) -> None:
@@ -484,60 +595,161 @@ def index_append(family: IndexFamily, new: DataFrame, index_path: str, **opts) -
         banded.unpersist()
 
 
-def mask_tombstones(family: IndexFamily, df: DataFrame, path: str, meta: dict) -> DataFrame:
-    """``df``, a scan of the index at ``path``, minus its tombstoned
-    ids — the mask every probe and search applies after its pruned
-    scan (see :func:`…operators.scale.anti_join_index_tombstones`)."""
-    return anti_join_index_tombstones(
-        df,
-        path,
-        index_schema_json=meta[family.schema_field],
-        id_col=family.tombstone_id(meta),
-    )
-
-
 def index_delete(
     family: IndexFamily, ids: DataFrame, index_path: str, *, id_col: str | None = None
 ) -> None:
     """Tombstone documents out of the index (takedown, right to be
     forgotten, TTL): masked from every probe at once, physically
-    removed by the next :func:`index_compact`. Idempotent, and ids-only
-    — a takedown request never ships the document back. ``id_col``
-    defaults to the family's source id column."""
-    meta = index_meta(family, ids.sparkSession, index_path)
+    removed by the next :func:`index_compact`. Ids-only — a takedown
+    request never ships the document back; ``id_col`` defaults to the
+    family's source id column.
+
+    Idempotent (twice ≡ once): already-tombstoned ids are anti-joined
+    away, so a retried batch never duplicates tombstone rows, and an
+    empty delta (all-NULL batch, replayed ids) writes nothing — no
+    empty file, and no dir on a pristine index. NULL ids are dropped
+    (nothing to mask), which also makes the anti-join's plain equality
+    exact."""
+    spark = ids.sparkSession
+    meta = index_meta(family, spark, index_path)
     col = family.tombstone_id(meta)
-    append_index_tombstones(
-        ids.select(F.col(id_col or family.defaults.get("id_col", col)).alias(col)),
-        index_path,
-        index_schema_json=meta[family.schema_field],
-        id_col=col,
+    dtype = index_schema(family, meta)[col].dataType
+    delta = (
+        ids.select(F.col(id_col or family.defaults.get("id_col", col)).cast(dtype).alias(col))
+        .filter(F.col(col).isNotNull())
+        .distinct()
     )
+    existing = _read_tombstones(family, spark, index_path, meta)
+    if existing is not None:
+        delta = delta.join(existing, col, "left_anti")
+    delta = delta.persist()
+    try:
+        if delta.limit(1).count():
+            # deletion batches are request-sized: one file per batch
+            delta.coalesce(1).write.mode("append").parquet(f"{index_path}/{_TOMBSTONE_DIR}")
+    finally:
+        delta.unpersist()
+
+
+def _require_local_path(path: str, op: str) -> None:
+    """Compaction lists data files with glob and copies side dirs with
+    shutil, so it is local-filesystem-only: fail up front, before any
+    read, for object-store and HDFS URIs instead of inside a glob that
+    silently sees nothing."""
+    if "://" in path:
+        scheme = path.split("://", 1)[0]
+        raise ValueError(
+            f"{op} is local-FS-only (glob/copytree) and takes a bare local "
+            f"path; got scheme {scheme!r}. Rewrite to a new generation dir "
+            "and flip a pointer on object stores."
+        )
+
+
+def _index_data_files(root: str) -> list[str]:
+    """Data files of an index, root-relative — the one definition of a
+    data file (underscore side dirs, _SUCCESS and dot/CRC files are
+    not), shared by compaction and stats so they agree on
+    fragmentation. ``key=value`` components are exempt from the
+    underscore skip: a partition column may start with an underscore
+    (IVF's ``_cell=K/``, text's ``_bucket=K/``), and Spark's scanner
+    treats such dirs as data too."""
+    import glob
+    import os
+
+    out = []
+    for f in glob.glob(os.path.join(root, "**", "*"), recursive=True):
+        rel = os.path.relpath(f, root)
+        if any(p.startswith(("_", ".")) and "=" not in p for p in rel.split(os.sep)):
+            continue
+        if os.path.isfile(f):
+            out.append(rel)
+    return out
 
 
 def index_compact(family: IndexFamily, spark, path: str) -> dict:
-    """One file per partition, pending tombstones applied (see
-    :func:`…operators.scale.compact_partitioned_index` for the swap)."""
+    """Rewrite the index to one file per partition dir with pending
+    tombstones applied (see :func:`_compact`). Local paths only — an
+    object-store URI raises ``ValueError`` before the meta is read.
+    Returns ``{"rows", "files_before", "files_after"}``."""
+    _require_local_path(path, "index_compact")
     return _compact(family, spark, path, index_meta(family, spark, path))
 
 
-def _compact(family: IndexFamily, spark, path: str, meta: dict) -> dict:
-    return compact_partitioned_index(
-        spark, path,
-        partition_cols=family.partition_cols,
-        schema_json=meta[family.schema_field],
-        side_dirs=(family.meta_dir, *family.side_dirs),
-        tombstones_id_col=family.tombstone_id(meta),
-        dedup_keys=family.dedup_keys,
-    )
+def _compact(family: IndexFamily, spark, path: str, meta) -> dict:
+    """The compaction every incremental index needs: each append adds a
+    file per touched partition, and after months of daily shards a
+    probe's pruned scan pays listing and footer cost per tiny file.
+    Tombstoned rows are masked out of the rewrite and ``_tombstones/``
+    is not carried over, so compaction applies pending deletes;
+    ``family.dedup_keys`` drops rows duplicated by a crashed and
+    retried append (exact duplicates by construction, so any survivor
+    will do). Otherwise content is identical before and after.
+
+    One keyed shuffle into the staging dir of :func:`…scale.replace_dir`
+    (each task owns whole partition dirs), the meta and side dirs
+    copied byte for byte, then the publish. NOT transactional: a probe
+    listing files between the publish's two renames can fail and should
+    retry, so run it in the maintenance window."""
+    import os
+    import shutil
+
+    before = _index_data_files(path)
+    df = mask_tombstones(family, read_index(family, spark, path, meta), path, meta)
+    if family.dedup_keys is not None:
+        df = df.dropDuplicates(list(family.dedup_keys))
+    with replace_dir(spark, path) as staging:
+        _write_partitioned(family, df, staging, "overwrite")
+        for d in (family.meta_dir, *family.side_dirs):
+            src = os.path.join(path, d)
+            if os.path.isdir(src):
+                shutil.copytree(src, os.path.join(staging, d))
+        # counted from the staging output (one file per partition), not
+        # by a pre-count that would read the fragmented input twice
+        rows = read_index(family, spark, staging, meta).count()
+    return {
+        "rows": int(rows),
+        "files_before": len(before),
+        "files_after": len(_index_data_files(path)),
+    }
 
 
 def index_stats(family: IndexFamily, spark, path: str) -> dict:
-    """Health census: fragmentation (compact due?), partition skew
-    (caps earning their keep?) and the pending-tombstone fraction."""
+    """Health census: fragmentation (compaction due?), partition skew
+    (caps earning their keep?) and pending deletes. One aggregate job
+    over the index plus a driver-side file walk; with tombstones, two
+    more small jobs.
+
+    Returns ``{"rows", "partitions", "files", "max_partition_rows",
+    "avg_files_per_partition", "tombstones", "tombstone_fraction"}``.
+    ``rows`` is the PHYSICAL row count (tombstoned rows cost scan I/O
+    until compaction), and the fraction is in rows (a doc masks
+    ``bands`` index rows), so it is the scan share compaction
+    reclaims."""
     meta = index_meta(family, spark, path)
-    return partitioned_index_stats(
-        spark, path,
-        partition_cols=family.partition_cols,
-        schema_json=meta[family.schema_field],
-        tombstones_id_col=family.tombstone_id(meta),
+    df = read_index(family, spark, path, meta)
+    n_files = len(_index_data_files(path))
+    per_part = (
+        df.groupBy(*family.partition_cols)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .agg(
+            F.count(F.lit(1)).alias("parts"),
+            F.coalesce(F.sum("_n"), F.lit(0)).alias("rows"),
+            F.coalesce(F.max("_n"), F.lit(0)).alias("max_rows"),
+        )
+        .collect()[0]
     )
+    rows, n_parts = int(per_part["rows"]), int(per_part["parts"])
+    ts = _read_tombstones(family, spark, path, meta)
+    n_ts = masked = 0
+    if ts is not None:
+        n_ts = ts.count()
+        masked = mask_tombstones(family, df, path, meta, keep="dead").count()
+    return {
+        "rows": rows,
+        "partitions": n_parts,
+        "files": n_files,
+        "max_partition_rows": int(per_part["max_rows"]),
+        "avg_files_per_partition": round(n_files / n_parts, 2) if n_parts else 0.0,
+        "tombstones": int(n_ts),
+        "tombstone_fraction": round(masked / rows, 6) if rows else 0.0,
+    }

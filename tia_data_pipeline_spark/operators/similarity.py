@@ -25,9 +25,11 @@ from tia_data_pipeline_spark.functions.vectors import cosine_from_norms, dot, l2
 from tia_data_pipeline_spark.operators.index import (
     EMBEDDING,
     IVF,
+    _require_local_path,
     index_compact,
     index_delete,
     index_meta,
+    index_schema,
     mask_tombstones,
     read_index,
     write_index_frame,
@@ -672,7 +674,7 @@ def _ivf_batch_topk(
     touched = sorted(int(r["_cell"]) for r in pb.select("_cell").distinct().collect())
     idx = mask_tombstones(
         IVF,
-        read_index(spark, index_path, meta).filter(
+        read_index(IVF, spark, index_path, meta).filter(
             F.col("_cell").isin(touched) if touched else F.lit(False)
         ),
         index_path,
@@ -741,8 +743,6 @@ def ivf_index_append(
     At 100 TB: assignment is one expression over the shard (n_lists
     center literals — control plane), the anti-join reads only touched
     partitions, and nothing about the append scales with history."""
-    from pyspark.sql.types import StructType
-
     from tia_data_pipeline_spark.functions.vectors import valid_vector
 
     spark = new_vecs.sparkSession
@@ -768,7 +768,7 @@ def ivf_index_append(
         touched = sorted(
             int(r["_cell"]) for r in assigned.select("_cell").distinct().collect()
         )
-        idx_scan = read_index(spark, index_path, meta)
+        idx_scan = read_index(IVF, spark, index_path, meta)
         if not full_id_check:
             # touched-cells-only scope: exact under the ids-immutable
             # contract (an unchanged embedding re-lands in its own cell)
@@ -777,8 +777,7 @@ def ivf_index_append(
             )
         existing = idx_scan.select(id_col).distinct()
         delta = assigned.join(existing, on=id_col, how="left_anti")
-        schema = StructType.fromJson(json.loads(meta["schema_json"]))
-        data_fields = [f for f in schema.fields if f.name != "_cell"]
+        data_fields = [f for f in index_schema(IVF, meta).fields if f.name != "_cell"]
         missing = [f.name for f in data_fields if f.name not in delta.columns]
         if missing:
             # fail with names, not an unresolved-column plan dump: the
@@ -838,7 +837,7 @@ def ivf_drift_stats(spark, index_path: str) -> DataFrame:
     vec = F.col(meta["vec_col"]).cast("array<double>")
     dists = F.array(*[_center_d2(vec, c) for c in centers])
     cur = (
-        mask_tombstones(IVF, read_index(spark, index_path, meta), index_path, meta)
+        mask_tombstones(IVF, read_index(IVF, spark, index_path, meta), index_path, meta)
         .select(
             F.col("_cell").alias("cell"),
             F.element_at(dists, F.col("_cell") + 1).alias("_d2"),
@@ -913,14 +912,14 @@ def ivf_retrain(
     Returns ``{"rows", "n_lists", "train_mean_d2"}`` for the new
     generation."""
     from tia_data_pipeline_spark.functions.vectors import valid_vector
-    from tia_data_pipeline_spark.operators.scale import _require_local_path, replace_dir
+    from tia_data_pipeline_spark.operators.scale import replace_dir
 
-    _require_local_path(index_path)
+    _require_local_path(index_path, "ivf_retrain")
     meta = ivf_index_meta(spark, index_path)
     k = n_lists if n_lists is not None else meta["n_lists"]
     vec_col, id_col = meta["vec_col"], meta["id_col"]
     live = (
-        mask_tombstones(IVF, read_index(spark, index_path, meta), index_path, meta)
+        mask_tombstones(IVF, read_index(IVF, spark, index_path, meta), index_path, meta)
         .drop("_cell")
         .persist()  # consumed twice: the guard count and the fit/assign
     )

@@ -58,8 +58,6 @@ compaction applies deletes and restores one file per bucket.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,7 +66,11 @@ from tia_data_pipeline_spark.functions.text import portable_round
 from tia_data_pipeline_spark.operators.index import (
     TEXT,
     _compact,
+    _require_local_path,
     index_delete,
+    index_schema,
+    mask_tombstones,
+    read_index,
     read_meta_row,
 )
 
@@ -157,14 +159,9 @@ def read_corpus_stats(spark: SparkSession, path: str):
 
 
 def read_postings_schema(spark: SparkSession, path: str):
-    """The index's postings StructType, parsed from the persisted
-    ``schema_json`` (the explicit-schema read that keeps an EMPTY
-    index servable)."""
-    from pyspark.sql.types import StructType
-
-    return StructType.fromJson(
-        json.loads(read_corpus_stats(spark, path)["postings_schema"])
-    )
+    """The index's postings StructType, from its ``_corpus_stats`` meta
+    (the explicit schema that keeps an EMPTY index servable)."""
+    return index_schema(TEXT, read_corpus_stats(spark, path))
 
 
 def _bm25_term_doc_scores(
@@ -193,18 +190,8 @@ def _bm25_term_doc_scores(
         .collect()
     )
     buckets = sorted({int(x) for x in bucket_rows[0]["b"]})
-
-    from pyspark.sql.types import StructType
-
-    from tia_data_pipeline_spark.operators.scale import (
-        tombstone_mask_join,
-        try_read_index_tombstones,
-    )
-
-    postings_schema = StructType.fromJson(json.loads(stats_row["postings_schema"]))
     postings = (
-        spark.read.schema(postings_schema)
-        .parquet(path)
+        read_index(TEXT, spark, path, stats_row)
         .filter(F.col("_bucket").isin(buckets))
         .filter(F.col("tok").isin(*terms))
     )
@@ -216,15 +203,12 @@ def _bm25_term_doc_scores(
     # and the length total subtract the dead docs' contributions (one
     # _doc_stats semi-join), making the serve equal a full scan of the
     # CURRENT membership until compaction removes the rows physically.
-    # A never-deleted-from index (no _tombstones dir — the common case)
-    # skips both legs entirely; an emptied one (all tombstones applied
-    # by compact) costs one tiny limit(1) probe.
-    ts = try_read_index_tombstones(
-        spark, path, index_schema_json=stats_row["postings_schema"], id_col="doc_id"
-    )
-    if ts is not None and ts.limit(1).count():
-        postings = tombstone_mask_join(postings, ts, "doc_id", keep="live")
-        dead = tombstone_mask_join(dl, ts, "doc_id", keep="dead").agg(
+    # A never-deleted-from or compacted index has no tombstones, gets
+    # its postings back unmasked, and skips both legs
+    live = mask_tombstones(TEXT, postings, path, stats_row)
+    if live is not postings:
+        postings = live
+        dead = mask_tombstones(TEXT, dl, path, stats_row, keep="dead").agg(
             F.count("*").cast("bigint").alias("_dead_n"),
             F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("_dead_dl"),
         )
@@ -453,15 +437,8 @@ def text_index_append(
             # parquet read would raise UNABLE_TO_INFER_SCHEMA on an
             # index with zero postings files, wedging every retry of a
             # crashed first append behind the marker it cannot clear
-            from pyspark.sql.types import StructType
-
             landed = (
-                spark.read.schema(
-                    StructType.fromJson(
-                        json.loads(stats_row["postings_schema"])
-                    )
-                )
-                .parquet(path)
+                read_index(TEXT, spark, path, stats_row)
                 .filter(
                     F.col("_bucket").isin(touched) if touched else F.lit(False)
                 )
@@ -500,22 +477,16 @@ def text_index_compact(spark: SparkSession, path: str) -> dict:
     previous table, never an empty path. The stats rewrites run FIRST
     so a crash mid-compact can only leave scalars already consistent
     with the tombstones a serve still masks."""
-    from tia_data_pipeline_spark.operators.scale import (
-        _require_local_path,
-        read_index_tombstones,
-        replace_dir,
-    )
+    from tia_data_pipeline_spark.operators.scale import replace_dir
 
-    _require_local_path(path)  # fail BEFORE any rewrite, not inside a rename
+    _require_local_path(path, "text_index_compact")  # before any rewrite
     stats_row = read_corpus_stats(spark, path)
-    schema_json = stats_row["postings_schema"]
-    ts = read_index_tombstones(
-        spark, path, index_schema_json=schema_json, id_col="doc_id"
-    )
-    if ts.limit(1).count():
+    dl = spark.read.parquet(f"{path}/_doc_stats")
+    live = mask_tombstones(TEXT, dl, path, stats_row)
+    if live is not dl:  # pending tombstones
         with replace_dir(spark, f"{path}/_doc_stats") as staging:
-            spark.read.parquet(f"{path}/_doc_stats").join(
-                F.broadcast(ts), "doc_id", "left_anti"
-            ).write.mode("overwrite").parquet(staging)
-        _write_corpus_stats(spark, path, int(stats_row["n_buckets"]), schema_json)
+            live.write.mode("overwrite").parquet(staging)
+        _write_corpus_stats(
+            spark, path, int(stats_row["n_buckets"]), stats_row["postings_schema"]
+        )
     return _compact(TEXT, spark, path, stats_row)

@@ -1269,7 +1269,7 @@ def q_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIM.ivf_write_index(assigned, _SEM_CENTERS, f"{tmp}/idx")
     SIM.ivf_index_append(emb.filter(F.col("vec_id") % 5 == 0), f"{tmp}/idx")
     meta = SIM.ivf_index_meta(spark, f"{tmp}/idx")
-    idx = IX.read_index(spark, f"{tmp}/idx", meta)
+    idx = IX.read_index(IX.IVF, spark, f"{tmp}/idx", meta)
     d2 = F.least(
         SIM.nearest_centroid_struct(F.col("embedding"), _SEM_CENTERS)["d"],
         F.lit(_IVF_D2_CAP),
