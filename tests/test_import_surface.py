@@ -66,10 +66,22 @@ def test_example_imports_resolve(path):
     assert not missing, f"{os.path.basename(path)} imports names that do not resolve: {missing}"
 
 
+def _calls(tree, match) -> list[tuple[int, str | None]]:
+    """(line, enclosing top-level function) of every call in ``tree``
+    whose callee ``match`` accepts."""
+    found = []
+    for top in tree.body:
+        owner = top.name if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)) else None
+        for n in ast.walk(top):
+            if isinstance(n, ast.Call) and match(n.func):
+                found.append((n.lineno, owner))
+    return found
+
+
 def _rename_calls(tree) -> list[tuple[int, str | None]]:
-    """(line, enclosing top-level function) of every directory move in
-    ``tree``: ``os.rename``, ``shutil.move``, any ``*.rename(`` call,
-    and a bare call of a ``rename``/``move`` imported from os/shutil."""
+    """Every directory move in ``tree``: ``os.rename``, ``shutil.move``,
+    any ``*.rename(`` call, and a bare call of a ``rename``/``move``
+    imported from os/shutil."""
     imported = {
         a.asname or a.name
         for n in ast.walk(tree)
@@ -77,21 +89,15 @@ def _rename_calls(tree) -> list[tuple[int, str | None]]:
         for a in n.names
         if a.name in ("rename", "move", "replace")
     }
-    found = []
-    for top in tree.body:
-        owner = top.name if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)) else None
-        for n in ast.walk(top):
-            if not isinstance(n, ast.Call):
-                continue
-            f = n.func
-            if (
-                (isinstance(f, ast.Attribute) and f.attr == "rename")
-                or (isinstance(f, ast.Attribute) and f.attr in ("move", "replace")
-                    and isinstance(f.value, ast.Name) and f.value.id in ("os", "shutil"))
-                or (isinstance(f, ast.Name) and f.id in imported)
-            ):
-                found.append((n.lineno, owner))
-    return found
+    return _calls(
+        tree,
+        lambda f: (
+            (isinstance(f, ast.Attribute) and f.attr == "rename")
+            or (isinstance(f, ast.Attribute) and f.attr in ("move", "replace")
+                and isinstance(f.value, ast.Name) and f.value.id in ("os", "shutil"))
+            or (isinstance(f, ast.Name) and f.id in imported)
+        ),
+    )
 
 
 def test_directory_moves_only_in_replace_dir():
@@ -146,3 +152,39 @@ def test_index_layout_owned_by_index_core():
         for line, what in _layout_facts(ast.parse(open(path).read())):
             bad.append(f"{rel}:{line} {what}")
     assert not bad, f"index layout spelled out outside operators/index.py: {bad}"
+
+
+def _is_partitioned_write(f) -> bool:
+    """``<frame>.write[.mode(…)…].partitionBy(…)``."""
+    if not (isinstance(f, ast.Attribute) and f.attr == "partitionBy"):
+        return False
+    node = f.value
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute) and node.attr == "write":
+            return True
+        node = node.value if isinstance(node, ast.Attribute) else node.func
+    return False
+
+
+def test_index_rows_appended_only_by_index_core():
+    """All five index families append rows through
+    ``operators.index._write_partitioned`` (after ``_append_delta``): a
+    partitioned write anywhere else under ``operators/`` or
+    ``streaming/`` fails here. The two build writes are exempt; they
+    skip the keyed shuffle so a build is not capped at
+    ``n_lists``/``n_buckets`` tasks."""
+    allowed = {
+        ("operators/similarity.py", "ivf_write_index"),
+        ("operators/text_index.py", "build_text_index"),
+    }
+    pkg = os.path.join(ROOT, PKG)
+    bad = []
+    for sub in ("operators", "streaming"):
+        for path in sorted(glob.glob(os.path.join(pkg, sub, "**", "*.py"), recursive=True)):
+            rel = os.path.relpath(path, pkg)
+            if rel == os.path.join("operators", "index.py"):
+                continue
+            for line, owner in _calls(ast.parse(open(path).read()), _is_partitioned_write):
+                if (rel, owner) not in allowed:
+                    bad.append(f"{rel}:{line} ({owner or 'module level'})")
+    assert not bad, f"partitioned index writes outside operators/index.py: {bad}"

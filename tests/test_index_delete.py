@@ -282,6 +282,38 @@ class TestEmbeddingDelete:
         assert after == masked
 
 
+class TestIvfDelete:
+    def test_reappend_after_compact_reindexes(self, spark, tmp_path):
+        """The IVF append runs through the index core's touched-cell
+        delta: while the tombstones live, re-appending the deleted
+        shard lands nothing; after compaction it re-indexes every id,
+        and replaying that append lands nothing again."""
+        from tia_data_pipeline_spark.operators.similarity import (
+            ivf_build_index,
+            ivf_index_append,
+            ivf_index_compact,
+            ivf_index_delete,
+            ivf_write_index,
+        )
+
+        rng = random.Random(11)
+        vecs = spark.createDataFrame(
+            [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(40)],
+            "vec_id bigint, embedding array<double>",
+        )
+        path = str(tmp_path / "ivf")
+        ivf_write_index(*ivf_build_index(vecs.filter("vec_id < 30"), n_lists=3, seed=3), path)
+        shard = vecs.filter("vec_id >= 30")
+        assert ivf_index_append(shard, path)["appended"] == 10
+        ivf_index_delete(shard.select("vec_id"), path)
+        assert ivf_index_append(shard, path)["appended"] == 0
+        assert ivf_index_compact(spark, path)["rows"] == 30
+        assert ivf_index_append(shard, path)["appended"] == 10
+        assert ivf_index_append(shard, path)["appended"] == 0
+        ids = [r["vec_id"] for r in spark.read.parquet(path).select("vec_id").collect()]
+        assert sorted(ids) == list(range(40))
+
+
 class TestGenericTombstoneLayer:
     def test_pre_tombstone_index_reads_as_zero(self, spark, docs, tmp_path):
         """Back-compat: an index written before the tombstone layer has

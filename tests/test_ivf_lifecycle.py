@@ -183,22 +183,6 @@ def test_append_rejects_missing_payload_columns(spark, tmp_path):
         ivf_index_append(shard, path)
 
 
-def test_full_id_check_blocks_changed_embedding_resubmission(spark, index):
-    """ADVICE r9 #3: the touched-cells idempotency scope assumes ids are
-    immutable once indexed — a re-submitted id whose embedding CHANGED
-    lands in a different cell and would duplicate the identity.
-    ``full_id_check=True`` anti-joins the whole index's narrow id scan
-    instead, so the changed-content resubmission appends nothing."""
-    path, _ = index
-    changed = spark.createDataFrame(
-        [(5, _vec(9999, shift=6.0))], "vec_id bigint, embedding array<double>"
-    )
-    out = ivf_index_append(changed, path, full_id_check=True)
-    assert out["appended"] == 0
-    ids = [r["vec_id"] for r in spark.read.parquet(path).select("vec_id").collect()]
-    assert ids.count(5) == 1
-
-
 class TestIvfRetrain:
     """VERDICT r9 #5: the consumer of the drift signal — re-train the
     quantizer on the live membership, swap generations atomically."""

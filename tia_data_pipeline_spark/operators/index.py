@@ -11,12 +11,13 @@ one partition-local layout pruned by a key, parameterized by the
 function that computes the key).
 
 The IVF (``operators.similarity``) and text/BM25
-(``operators.text_index``) indexes have their own writers, serves and
-appends, but the same lifecycle: :data:`IVF` and :data:`TEXT` are
-lifecycle-only families (no band frame) that state their on-disk
-layout, so the meta and schema read, tombstone mask, delete, compact
-and stats below serve all five families. This module is the one owner
-of that layout: every fact about it comes from ``(family, meta)``.
+(``operators.text_index``) indexes have their own builds and serves,
+but the same lifecycle: :data:`IVF` and :data:`TEXT` are families
+without a band frame that state their on-disk layout, partition code
+and row key, so the meta and schema read, touched-partition append
+delta and write, tombstone mask, delete, compact and stats below serve
+all five families. This module is the one owner of that layout: every
+fact about it comes from ``(family, meta)``.
 
 Layout: rows partitioned by ``family.partition_cols``; a one-row meta
 side table (``family.meta_dir``) holding the build parameters AND the
@@ -58,6 +59,7 @@ from tia_data_pipeline_spark.functions.vectors import cosine_from_norms, l2_norm
 from tia_data_pipeline_spark.operators.scale import (
     estimated_relation_bytes,
     fan_out,
+    hadoop_fs_path,
     heal_replaced_dir,
     replace_dir,
 )
@@ -74,18 +76,21 @@ class IndexFamily:
     further side dirs compaction carries over, and the ``dedup_keys``
     compaction heals duplicated rows on.
 
+    Every family also states what its append reads: ``code(meta)``
+    encodes the partition columns into one injective int, the pruning
+    key, and ``row_key`` is the append's anti-join key (``None`` = the
+    meta's own ``id_col``, read through :meth:`append_key`).
+
     The banded families add their probe: ``band(df, meta, opts)`` keys
     source rows into ``_id``, ``payload``, the ``key_cols`` collision
     key and ``partition_cols`` (the writer's frame IS the prober's, so
-    their keys cannot drift). ``code(meta)`` encodes the partition
-    columns into one injective int, the pruning key. ``check(meta,
-    opts)`` validates the options and returns ``(score, keep)`` over
-    the ``<payload>_n`` (shard) and ``<payload>_o`` (index) columns.
-    ``row_key`` is the append's anti-join key, ``defaults`` the options
-    (source columns, ``max_bucket``, threshold); ``fan_probe`` widens
-    the shard side before the join, where vector payloads make pairs
-    the costly leg. ``meta_ddl`` is the meta table the shared write
-    tail writes.
+    their keys cannot drift). ``check(meta, opts)`` validates the
+    options and returns ``(score, keep)`` over the ``<payload>_n``
+    (shard) and ``<payload>_o`` (index) columns. ``defaults`` are the
+    options (source columns, ``max_bucket``, threshold); ``fan_probe``
+    widens the shard side before the join, where vector payloads make
+    pairs the costly leg. ``meta_ddl`` is the meta table the shared
+    write tail writes.
 
     A family is one fixed descriptor, so it hashes and compares by
     identity and can key a dict."""
@@ -93,16 +98,16 @@ class IndexFamily:
     name: str
     meta_dir: str
     partition_cols: tuple[str, ...]
+    code: Callable[[dict], Column]
+    row_key: tuple[str, ...] | None
     schema_field: str = "schema_json"
     tombstone_col: str | None = "_id"
     side_dirs: tuple[str, ...] = ()
     dedup_keys: tuple[str, ...] | None = None
     meta_ddl: str = ""
     key_cols: tuple[str, ...] = ()
-    row_key: tuple[str, ...] = ()
     payload: tuple[str, ...] = ()
     band: Callable[[DataFrame, dict, dict], DataFrame] | None = None
-    code: Callable[[dict], Column] | None = None
     check: Callable[[dict, dict], tuple[Column, Column]] | None = None
     defaults: Mapping[str, object] = field(default_factory=dict)
     fan_probe: bool = False
@@ -110,6 +115,10 @@ class IndexFamily:
     def tombstone_id(self, meta: dict) -> str:
         """The tombstone id column of an index with this ``meta``."""
         return self.tombstone_col or meta["id_col"]
+
+    def append_key(self, meta: dict) -> list[str]:
+        """The append's anti-join key of an index with this ``meta``."""
+        return list(self.row_key or (meta["id_col"],))
 
 
 def _minhash_band(df: DataFrame, meta: dict, o: dict) -> DataFrame:
@@ -232,24 +241,29 @@ EMBEDDING = IndexFamily(
     fan_probe=True,
 )
 
-# lifecycle-only: the IVF writer, serve and append live in
+# no band frame: the IVF build, serve and cell assignment live in
 # operators/similarity.py, and IVF records its source id column in the
-# meta, so its tombstones are keyed by that column
+# meta, so its rows and tombstones are keyed by that column
 IVF = IndexFamily(
     name="ivf",
     meta_dir="_ivf_meta",
     partition_cols=("_cell",),
+    code=lambda meta: F.col("_cell"),
+    row_key=None,
     tombstone_col=None,
     side_dirs=("_ivf_centers",),
 )
 
-# lifecycle-only: operators/text_index.py writes and serves it. The
-# meta is _corpus_stats, republished on every append; a crashed and
-# retried append can duplicate postings, which compaction collapses
+# no band frame: operators/text_index.py builds and serves it. The
+# meta is _corpus_stats, republished on every append; an append that
+# crashed before its membership commit is retried through the row-key
+# anti-join, and compaction collapses any duplicate that remains
 TEXT = IndexFamily(
     name="text",
     meta_dir="_corpus_stats",
     partition_cols=("_bucket",),
+    code=lambda meta: F.col("_bucket"),
+    row_key=("tok", "doc_id"),
     schema_field="postings_schema",
     tombstone_col="doc_id",
     side_dirs=("_doc_stats",),
@@ -361,17 +375,17 @@ _TOMBSTONE_DIR = "_tombstones"
 def _read_tombstones(family: IndexFamily, spark, path: str, meta) -> DataFrame | None:
     """The index's tombstoned ids — one column, named and typed as the
     index's tombstone id column, so the two can never drift — or
-    ``None`` when the index has no ``_tombstones/`` dir. The existence
-    check is analysis-time only: the explicit-schema read raises before
-    any job."""
-    from pyspark.errors import AnalysisException
+    ``None`` when the index has no ``_tombstones/`` dir. One Hadoop
+    ``exists`` call, no Spark job: reading a missing dir would make
+    Spark log a stack trace before it raised."""
     from pyspark.sql.types import StructType
 
-    schema = StructType([index_schema(family, meta)[family.tombstone_id(meta)]])
-    try:
-        return spark.read.schema(schema).parquet(f"{path}/{_TOMBSTONE_DIR}")
-    except AnalysisException:
+    ts_dir = f"{path}/{_TOMBSTONE_DIR}"
+    fs, p = hadoop_fs_path(spark, ts_dir)
+    if not fs.exists(p):
         return None
+    schema = StructType([index_schema(family, meta)[family.tombstone_id(meta)]])
+    return spark.read.schema(schema).parquet(ts_dir)
 
 
 def mask_tombstones(
@@ -429,12 +443,13 @@ def _opts(family: IndexFamily, given: dict) -> dict:
     return {**family.defaults, **given}
 
 
-def _touched(family: IndexFamily, banded: DataFrame, meta: dict) -> Column:
-    """Partition predicate: the distinct partition codes the shard's own
-    rows land in, collected to the driver (bounded by the partition
-    count) and stated as literals, so the scan plans PartitionFilters."""
+def _touched(family: IndexFamily, rows: DataFrame, meta: dict) -> Column:
+    """Partition predicate: the distinct partition codes ``rows`` (a
+    shard, or a batch of IVF probes) land in, collected to the driver
+    (bounded by the partition count) and stated as literals, so the
+    scan plans PartitionFilters. The one touched-partition collect."""
     code = family.code(meta)
-    codes = sorted(int(r[0]) for r in banded.select(code).distinct().collect())
+    codes = sorted(int(r[0]) for r in rows.select(code).distinct().collect())
     return code.isin(codes) if codes else F.lit(False)
 
 
@@ -564,19 +579,24 @@ def index_probe_scoped(
 # ---------------------------------------------------------------------------
 
 
-def _append_delta(family: IndexFamily, banded: DataFrame, spark, path: str, meta: dict) -> None:
-    # a row can live nowhere but its own partition (its key is a pure
-    # function of its content), so the anti-join reads touched
-    # partitions only and the retry cost is sized by the shard
+def _append_delta(family: IndexFamily, rows: DataFrame, path: str, meta: dict) -> DataFrame:
+    """``rows`` (index rows, partition columns included) minus those
+    already in the index under ``family.append_key(meta)`` — the
+    idempotent append delta every family writes with
+    ``_write_partitioned(family, delta, path, "append")``. A row can
+    live nowhere but its own partition (its partition code is a pure
+    function of its content), so the anti-join reads the touched
+    partitions only and a retry costs what the shard costs. Lazy but
+    for the touched collect; ``rows`` is read twice, so callers
+    persist it."""
+    key = family.append_key(meta)
     existing = (
-        read_index(family, spark, path, meta)
-        .filter(_touched(family, banded, meta))
-        .select(*family.row_key)
+        read_index(family, rows.sparkSession, path, meta)
+        .filter(_touched(family, rows, meta))
+        .select(*key)
         .distinct()
     )
-    _write_partitioned(
-        family, banded.join(existing, on=list(family.row_key), how="left_anti"), path, "append"
-    )
+    return rows.join(existing, on=key, how="left_anti")
 
 
 def index_append(family: IndexFamily, new: DataFrame, index_path: str, **opts) -> None:
@@ -584,13 +604,14 @@ def index_append(family: IndexFamily, new: DataFrame, index_path: str, **opts) -
     present under ``family.row_key`` are anti-joined away over the
     touched partitions. ``_id`` is non-null by every band frame's
     precondition, so plain-equality anti-join semantics are exact."""
-    spark = new.sparkSession
-    meta = index_meta(family, spark, index_path)
+    meta = index_meta(family, new.sparkSession, index_path)
     # consumed twice (touched collect + write); the append is EAGER,
     # so the cache lifecycle is exact
     banded = family.band(new, meta, _opts(family, opts)).persist()
     try:
-        _append_delta(family, banded, spark, index_path, meta)
+        _write_partitioned(
+            family, _append_delta(family, banded, index_path, meta), index_path, "append"
+        )
     finally:
         banded.unpersist()
 

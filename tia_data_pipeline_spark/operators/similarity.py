@@ -25,7 +25,10 @@ from tia_data_pipeline_spark.functions.vectors import cosine_from_norms, dot, l2
 from tia_data_pipeline_spark.operators.index import (
     EMBEDDING,
     IVF,
+    _append_delta,
     _require_local_path,
+    _touched,
+    _write_partitioned,
     index_compact,
     index_delete,
     index_meta,
@@ -671,12 +674,9 @@ def _ivf_batch_topk(
     cosine → per-probe rank-limited window. The streaming loop passes
     the once-read ``meta`` through (immutable after write — the
     read-once-per-stream rule)."""
-    touched = sorted(int(r["_cell"]) for r in pb.select("_cell").distinct().collect())
     idx = mask_tombstones(
         IVF,
-        read_index(IVF, spark, index_path, meta).filter(
-            F.col("_cell").isin(touched) if touched else F.lit(False)
-        ),
+        read_index(IVF, spark, index_path, meta).filter(_touched(IVF, pb, meta)),
         index_path,
         meta,
     )
@@ -707,15 +707,15 @@ def _ivf_batch_topk(
     )
 
 
-def ivf_index_append(
-    new_vecs: DataFrame, index_path: str, *, full_id_check: bool = False
-) -> dict:
+def ivf_index_append(new_vecs: DataFrame, index_path: str) -> dict:
     """Append a vector shard to the written IVF index — the write-side
     increment of the IVF lifecycle. Each new vector is assigned to its
     nearest PINNED centroid (the index's own centers — appending never
-    moves a center), the delta anti-joins already-indexed ids over the
-    touched ``_cell`` partitions only (idempotent: twice ≡ once), and
-    the write appends one file per touched cell.
+    moves a center); the index core's append delta
+    (``operators.index._append_delta``, shared by all five families)
+    anti-joins already-indexed ids over the touched ``_cell``
+    partitions only (idempotent: twice ≡ once), and its partitioned
+    write appends one file per touched cell.
 
     Ids are IMMUTABLE once indexed (ADVICE r9 #3): the idempotency
     anti-join is scoped to the batch's touched cells — the 100 TB
@@ -725,10 +725,6 @@ def ivf_index_append(
     identity. Re-ingesting changed content goes through
     :func:`ivf_index_delete` + :func:`ivf_index_compact` first (the
     tombstone-wins discipline shared with the other index families).
-    Callers that cannot guarantee immutability pass
-    ``full_id_check=True``: the anti-join then reads the WHOLE index's
-    id column (a column-pruned narrow scan — exact, but its cost grows
-    with history, which is why it is not the default).
 
     Returns the batch's centroid-drift reading — the re-train signal:
     ``{"appended", "batch_n", "batch_mean_d2", "train_mean_d2",
@@ -765,18 +761,9 @@ def ivf_index_append(
         # append is EAGER, so the lifecycle is exact (released below)
     )
     try:
-        touched = sorted(
-            int(r["_cell"]) for r in assigned.select("_cell").distinct().collect()
-        )
-        idx_scan = read_index(IVF, spark, index_path, meta)
-        if not full_id_check:
-            # touched-cells-only scope: exact under the ids-immutable
-            # contract (an unchanged embedding re-lands in its own cell)
-            idx_scan = idx_scan.filter(
-                F.col("_cell").isin(touched) if touched else F.lit(False)
-            )
-        existing = idx_scan.select(id_col).distinct()
-        delta = assigned.join(existing, on=id_col, how="left_anti")
+        # touched-cells-only scope: exact under the ids-immutable
+        # contract (an unchanged embedding re-lands in its own cell)
+        delta = _append_delta(IVF, assigned, index_path, meta)
         data_fields = [f for f in index_schema(IVF, meta).fields if f.name != "_cell"]
         missing = [f.name for f in data_fields if f.name not in delta.columns]
         if missing:
@@ -797,9 +784,7 @@ def ivf_index_append(
         # anti-join — counting after the write would re-run the
         # anti-join against the just-appended rows and report 0
         n_appended = appended.count()
-        appended.repartition("_cell").write.partitionBy("_cell").mode(
-            "append"
-        ).parquet(index_path)
+        _write_partitioned(IVF, appended, index_path, "append")
         appended.unpersist()
         drift = assigned.agg(
             F.count(F.lit(1)).alias("n"), F.avg("_d2").alias("mean_d2")

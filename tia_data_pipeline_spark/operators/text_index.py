@@ -58,15 +58,17 @@ compaction applies deletes and restores one file per bucket.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tia_data_pipeline_spark.functions import text as TX
 from tia_data_pipeline_spark.functions.text import portable_round
 from tia_data_pipeline_spark.operators.index import (
     TEXT,
+    _append_delta,
     _compact,
     _require_local_path,
+    _write_partitioned,
     index_delete,
     index_schema,
     mask_tombstones,
@@ -75,6 +77,12 @@ from tia_data_pipeline_spark.operators.index import (
 )
 
 _INDEX_SEED = 0x1DE7
+
+
+def _term_bucket(tok: Column, n_buckets: int) -> Column:
+    """The postings partition a term lands in — the one hash the writer
+    buckets with and the serve prunes by, so the two cannot drift."""
+    return F.pmod(F.xxhash64(tok, F.lit(_INDEX_SEED)), F.lit(n_buckets))
 
 
 def build_text_index(
@@ -110,9 +118,7 @@ def _postings_frame(
         "tok",
         "doc_id",
         "tf",
-        F.pmod(F.xxhash64(F.col("tok"), F.lit(_INDEX_SEED)), F.lit(n_buckets))
-        .cast("int")
-        .alias("_bucket"),
+        _term_bucket(F.col("tok"), n_buckets).cast("int").alias("_bucket"),
     )
 
 
@@ -180,12 +186,7 @@ def _bm25_term_doc_scores(
     bucket_rows = (
         spark.range(1)
         .select(
-            F.array(
-                *[
-                    F.pmod(F.xxhash64(F.lit(t), F.lit(_INDEX_SEED)), F.lit(n_buckets))
-                    for t in terms
-                ]
-            ).alias("b")
+            F.array(*[_term_bucket(F.lit(t), n_buckets) for t in terms]).alias("b")
         )
         .collect()
     )
@@ -312,20 +313,7 @@ def bm25_search_batch(
     )
     all_terms = sorted({r["tok"] for r in qmap.select("tok").distinct().collect()})
     if not all_terms:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(query_id_col, queries.schema[query_id_col].dataType),
-                    read_postings_schema(spark, path)["doc_id"],
-                    T.StructField("n_terms", T.LongType()),
-                    T.StructField("score", T.DoubleType()),
-                    T.StructField("rnk", T.IntegerType()),
-                ]
-            ),
-        )
+        return _empty_topk(queries, path, query_id_col)
     sc = _bm25_term_doc_scores(spark, path, all_terms)
     # projection/order mirror q_bm25 (bit-for-bit equivalence is
     # test-pinned): the raw nano-nat score_n stays OFF the output —
@@ -361,6 +349,28 @@ def bm25_search_batch(
     )
 
 
+def _empty_topk(queries: DataFrame, path: str, query_id_col: str) -> DataFrame:
+    """The typed empty ``(query_id, doc_id, n_terms, score, rnk)`` top-k
+    of a batch with no servable query: query_id typed as the input
+    column, doc_id as the index's postings (a hardcoded type would give
+    a batch dir a parquet schema that conflicts with its siblings)."""
+    from pyspark.sql import types as T
+
+    spark = queries.sparkSession
+    return spark.createDataFrame(
+        [],
+        T.StructType(
+            [
+                T.StructField(query_id_col, queries.schema[query_id_col].dataType),
+                read_postings_schema(spark, path)["doc_id"],
+                T.StructField("n_terms", T.LongType()),
+                T.StructField("score", T.DoubleType()),
+                T.StructField("rnk", T.IntegerType()),
+            ]
+        ),
+    )
+
+
 def text_index_append(
     docs: DataFrame,
     path: str,
@@ -391,10 +401,11 @@ def text_index_append(
     now CRASH-DETECTED instead of serve-healed. A ``_append_pending``
     marker is set before the first data write and cleared only after
     the last commit; an append that finds the marker knows a
-    predecessor died mid-protocol and runs a reconciliation pass:
-    anti-join the delta's postings against the (tok, doc_id) pairs
-    already on disk in the delta's touched buckets, restricted to the
-    delta's own doc ids. Row-level (not doc-level) so even a hard kill
+    predecessor died mid-protocol and runs a reconciliation pass: the
+    index core's append delta (``operators.index._append_delta``,
+    shared by all five families) anti-joins the delta's postings
+    against the (tok, doc_id) pairs already on disk in their touched
+    buckets. Row-level (not doc-level) so even a hard kill
     inside the postings JOB COMMIT — some bucket files moved, some not
     — retries to exactly the missing rows. Twice ≡ once therefore holds
     under hard kills with no duplicate postings ever visible; the serve
@@ -428,27 +439,8 @@ def text_index_append(
         postings = _postings_frame(delta, "doc_id", "text", n_buckets)
         if reconcile:
             cached = postings.persist()  # touched collect + write
-            postings = cached
-            touched = sorted(
-                int(r["_bucket"])
-                for r in postings.select("_bucket").distinct().collect()
-            )
-            # explicit schema (CLAUDE.md persisted-index rule): a bare
-            # parquet read would raise UNABLE_TO_INFER_SCHEMA on an
-            # index with zero postings files, wedging every retry of a
-            # crashed first append behind the marker it cannot clear
-            landed = (
-                read_index(TEXT, spark, path, stats_row)
-                .filter(
-                    F.col("_bucket").isin(touched) if touched else F.lit(False)
-                )
-                .join(delta.select("doc_id"), "doc_id", "leftsemi")
-                .select("tok", "doc_id")
-            )
-            postings = postings.join(landed, ["tok", "doc_id"], "left_anti")
-        postings.repartition("_bucket").write.partitionBy("_bucket").mode(
-            "append"
-        ).parquet(path)
+            postings = _append_delta(TEXT, cached, path, stats_row)
+        _write_partitioned(TEXT, postings, path, "append")
         delta.select("doc_id", TX.word_count(F.col("text")).alias("dl")).write.mode(
             "append"
         ).parquet(f"{path}/_doc_stats")

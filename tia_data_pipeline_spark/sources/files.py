@@ -1,5 +1,5 @@
 """JSON staging file source/sink (SURVEY ops `src-json-file`,
-`snk-json-file`, `snk-manifest`).
+`snk-json-file`).
 
 The reference stages every task boundary through JSON array files on a
 shared volume (``posts_pipeline.py:25-32``); in Spark the stages
@@ -48,8 +48,3 @@ def write_json_records(df: DataFrame, path: str, *, partitions: int | None = Non
     out = df.repartition(partitions) if partitions else df
     out.write.mode("overwrite").json(path)
 
-
-def write_manifest(df: DataFrame, key_col: str, path: str) -> None:
-    """`snk-manifest` (``comments_pipeline.py:45-49``): persist the
-    distinct key set that produced output."""
-    df.select(key_col).distinct().write.mode("overwrite").json(path)

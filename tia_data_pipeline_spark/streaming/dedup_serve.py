@@ -30,6 +30,7 @@ from tia_data_pipeline_spark.operators.index import (
     _intra,
     _opts,
     _shard_side,
+    _write_partitioned,
     index_delete,
     index_meta,
 )
@@ -65,7 +66,9 @@ def index_increment_batch(
         cross.unionByName(_intra(family, banded, check, cap)).write.mode(
             "overwrite"
         ).parquet(f"{pairs_out}/batch_id={batch_id}")
-        _append_delta(family, banded, spark, index_path, meta)
+        _write_partitioned(
+            family, _append_delta(family, banded, index_path, meta), index_path, "append"
+        )
     finally:
         banded.unpersist()
 

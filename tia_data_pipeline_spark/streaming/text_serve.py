@@ -63,9 +63,8 @@ def bm25_topk_batch(
     ``bm25_search_batch``'s own qmap filter (which also drops NULL
     array ELEMENTS post-explode, ADVICE r10 #1)."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    from tia_data_pipeline_spark.operators.text_index import bm25_search_batch
+    from tia_data_pipeline_spark.operators.text_index import _empty_topk, bm25_search_batch
 
     servable = batch_queries.filter(
         F.col(query_id_col).isNotNull()
@@ -79,31 +78,7 @@ def bm25_topk_batch(
             terms_col=terms_col, k=k,
         )
     else:
-        from tia_data_pipeline_spark.operators.text_index import (
-            read_postings_schema,
-        )
-
-        spark = batch_queries.sparkSession
-        qid_type = batch_queries.schema[query_id_col].dataType
-        # doc_id's type comes from the INDEX, not a hardcoded bigint
-        # (review r10: an index over string doc ids would otherwise
-        # write this batch dir with a conflicting parquet schema and
-        # break a batch_id=* read downstream); the schema parse is the
-        # index module's own accessor so the side-table contract stays
-        # single-sourced
-        postings = read_postings_schema(spark, index_path)
-        out = spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(query_id_col, qid_type),
-                    postings["doc_id"],
-                    T.StructField("n_terms", T.LongType()),
-                    T.StructField("score", T.DoubleType()),
-                    T.StructField("rnk", T.IntegerType()),
-                ]
-            ),
-        )
+        out = _empty_topk(batch_queries, index_path, query_id_col)
     out.write.mode("overwrite").parquet(f"{topk_out}/batch_id={batch_id}")
 
 
