@@ -14,10 +14,14 @@ Usage:
       [--repeat 2]
 
 Prints one JSON line per repeat:
-  {"queries": {name: {"min", "warm", "n"}, ...}, "host_load": [...]}
+  {"queries": {name: {"min", "warm", "n"}, ...}, "host_load": [...],
+   "jit_ms": ...}
 ``host_load`` is os.getloadavg() before/after — record it: same-code
 totals swing 1.15-1.7× with neighbor load (BASELINE.md), so a cluster
-reading is only meaningful next to a quiet-host control.
+reading is only meaningful next to a quiet-host control. ``jit_ms`` is
+the driver JVM's cumulative JIT compile time (``CompilationMXBean``)
+at the end of the repeat: with the warm minimums it shows a JIT
+profile's trade between compile work and steady-state speed.
 """
 
 from __future__ import annotations
@@ -53,6 +57,7 @@ def main() -> None:
         sys.exit(f"unknown queries: {unknown}")
 
     spark = get_spark(app_name="bench_subset")
+    jit = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JIT warm-up
 
     if args.explain_dir:
@@ -91,6 +96,7 @@ def main() -> None:
                     "queries": results,
                     "sf_dir": args.sf_dir,
                     "host_load": [round(x, 2) for x in (*load0, *os.getloadavg())],
+                    "jit_ms": jit.getTotalCompilationTime(),
                 },
                 separators=(",", ":"),
             )

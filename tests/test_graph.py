@@ -51,6 +51,20 @@ def test_thread_closure_cycle_under_depth_cap(spark):
     assert out == {0, 1}
 
 
+def test_thread_closure_releases_level_checkpoints(spark):
+    """The returned union is checkpointed once and each level's
+    checkpoint released: a 13-node reply chain leaves at most one new
+    persistent RDD, not one per level."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    out = {
+        r["cid"]: (r["root_id"], r["depth"])
+        for r in thread_closure(_chain_forest(spark, 12).filter("cid < 1000"), "cid", "parent").collect()
+    }
+    assert out == {i: (0, i) for i in range(13)}
+    assert persistent().size() - before <= 1
+
+
 def test_connected_components_chain_and_islands(spark):
     from tia_data_pipeline_spark.operators.graph import connected_components
 

@@ -71,6 +71,35 @@ def test_replayed_batch_appends_nothing(spark, tmp_path):
     assert _serve(spark, path) == first
 
 
+def test_replay_writes_no_side_files(spark, tmp_path):
+    """A replayed shard writes nothing: ``_doc_stats`` keeps its
+    post-append file count and ``_corpus_stats`` is not republished,
+    however often the shard is replayed."""
+    import os
+
+    words = ["spark", "join", "stream", "table", "index", "query"]
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[j % 6] for j in range(i, i + 5))) for i in range(130)],
+        DOC_SCHEMA,
+    )
+    path = str(tmp_path / "idx")
+    build_text_index(docs.filter("doc_id < 100"), path, n_buckets=8)
+    shard = docs.filter("doc_id >= 100")
+
+    def files(side):
+        return sorted(
+            f for _, _, fs in os.walk(f"{path}/{side}") for f in fs if f.endswith(".parquet")
+        )
+
+    text_index_append_batch(shard, path)
+    doc_stats, corpus_stats = files("_doc_stats"), files("_corpus_stats")
+    for _ in range(3):
+        text_index_append_batch(shard, path)
+        assert files("_doc_stats") == doc_stats
+        assert files("_corpus_stats") == corpus_stats
+    assert spark.read.parquet(f"{path}/_doc_stats").count() == 130
+
+
 @pytest.mark.slow
 def test_takedown_stream_family_text(spark, tmp_path):
     """stream_index_deletes over a text index (the kind is read from its

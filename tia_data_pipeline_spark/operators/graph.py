@@ -55,7 +55,10 @@ def thread_closure(
     unreplicated executor blocks and void the recovery guarantee), so
     a failure recomputes at most ``checkpoint_every`` levels from the
     last reliable point. Comment threads are tens of levels deep at
-    most, so the default suits the reference workload.
+    most, so the default suits the reference workload. On the default
+    path the returned union is itself local-checkpointed once (one more
+    action), and every level's checkpoint RDD is then released, so a
+    call leaves one persistent RDD, not one per level.
 
     A frontier still non-empty at ``max_depth`` RAISES instead of
     silently truncating (the contract oracle is an UNBOUNDED recursive
@@ -75,58 +78,67 @@ def thread_closure(
     children = nodes.filter(F.col("_parent").isNotNull())
 
     levels = [roots]
+    pinned = []  # localCheckpoint frames, released on every exit path
     frontier = roots
-    # one iteration PAST the cap: the extra expansion is the overflow
-    # probe — a forest exactly max_depth deep leaves a non-empty final
-    # frontier that is fully resolved; only nodes BELOW the cap raise
-    for level in range(1, max_depth + 2):
-        # rename frontier cols: children and frontier share lineage on
-        # the first iteration (both from `nodes`) and Spark rejects the
-        # ambiguous self-join otherwise
-        f_r = frontier.select(
-            F.col("_id").alias("_fid"), F.col("root_id").alias("_froot"), F.col("depth").alias("_fdepth")
-        )
-        nxt = children.join(f_r, children["_parent"] == f_r["_fid"]).select(
-            "_id",
-            F.col("_froot").alias("root_id"),
-            (F.col("_fdepth") + 1).alias("depth"),
-        )
-        cached = None
-        if checkpoint_dir is not None:
-            if level % checkpoint_every == 0:
-                # persist BEFORE a reliable checkpoint: without it,
-                # writing the checkpoint files launches a second job
-                # that re-executes the level's whole lineage since the
-                # previous reliable point (ReliableRDDCheckpointData
-                # recomputes unpersisted RDDs) — the count() below
-                # would otherwise no longer be the only action paying
-                # the level's joins. The cache is SCAFFOLDING for the
-                # checkpoint write only: it is unpersisted right after
-                # the count materializes the files (CacheManager holds
-                # persists until explicit unpersist — a deep forest
-                # would otherwise keep ~depth/checkpoint_every cached
-                # frames alive for the whole session), and later reads
-                # of this level come from the checkpoint data.
-                cached = nxt.persist()
-                nxt = cached.checkpoint(eager=False)
-            # between reliable points: keep lineage (recovery chains
-            # from the last reliable checkpoint)
-        else:
-            nxt = nxt.localCheckpoint(eager=False)
-        n_level = nxt.count()  # materializes the checkpoint
-        if cached is not None:
-            cached.unpersist()
-        if n_level == 0:
-            out = reduce(lambda a, b: a.unionByName(b), levels)
-            return out.select(F.col("_id").alias(id_col), "root_id", "depth")
-        if level > max_depth:
-            raise RuntimeError(
-                f"thread_closure: nodes exist below max_depth={max_depth} — "
-                "they would be silently dropped while the recursive-CTE "
-                "oracle returns them; raise max_depth"
+    try:
+        # one iteration PAST the cap: the extra expansion is the overflow
+        # probe — a forest exactly max_depth deep leaves a non-empty final
+        # frontier that is fully resolved; only nodes BELOW the cap raise
+        for level in range(1, max_depth + 2):
+            # rename frontier cols: children and frontier share lineage on
+            # the first iteration (both from `nodes`) and Spark rejects the
+            # ambiguous self-join otherwise
+            f_r = frontier.select(
+                F.col("_id").alias("_fid"), F.col("root_id").alias("_froot"), F.col("depth").alias("_fdepth")
             )
-        levels.append(nxt)
-        frontier = nxt
+            nxt = children.join(f_r, children["_parent"] == f_r["_fid"]).select(
+                "_id",
+                F.col("_froot").alias("root_id"),
+                (F.col("_fdepth") + 1).alias("depth"),
+            )
+            cached = None
+            if checkpoint_dir is not None:
+                if level % checkpoint_every == 0:
+                    # persist BEFORE a reliable checkpoint: without it,
+                    # writing the checkpoint files launches a second job
+                    # that re-executes the level's whole lineage since the
+                    # previous reliable point (ReliableRDDCheckpointData
+                    # recomputes unpersisted RDDs) — the count() below
+                    # would otherwise no longer be the only action paying
+                    # the level's joins. The cache is SCAFFOLDING for the
+                    # checkpoint write only: it is unpersisted right after
+                    # the count materializes the files (CacheManager holds
+                    # persists until explicit unpersist — a deep forest
+                    # would otherwise keep ~depth/checkpoint_every cached
+                    # frames alive for the whole session), and later reads
+                    # of this level come from the checkpoint data.
+                    cached = nxt.persist()
+                    nxt = cached.checkpoint(eager=False)
+                # between reliable points: keep lineage (recovery chains
+                # from the last reliable checkpoint)
+            else:
+                nxt = nxt.localCheckpoint(eager=False)
+                pinned.append(nxt)
+            n_level = nxt.count()  # materializes the checkpoint
+            if cached is not None:
+                cached.unpersist()
+            if n_level == 0:
+                out = reduce(lambda a, b: a.unionByName(b), levels)
+                if pinned:
+                    # the result's own checkpoint, so the levels can go
+                    out = out.localCheckpoint(eager=True)
+                return out.select(F.col("_id").alias(id_col), "root_id", "depth")
+            if level > max_depth:
+                raise RuntimeError(
+                    f"thread_closure: nodes exist below max_depth={max_depth} — "
+                    "they would be silently dropped while the recursive-CTE "
+                    "oracle returns them; raise max_depth"
+                )
+            levels.append(nxt)
+            frontier = nxt
+    finally:
+        for df_level in pinned:
+            _release_checkpoint(df_level)
 
 
 def _release_checkpoint(df: DataFrame) -> None:

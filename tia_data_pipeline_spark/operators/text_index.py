@@ -389,6 +389,12 @@ def text_index_append(
     index incremental at all). NULL ids are excluded explicitly, so
     the anti-join's plain equality is exact.
 
+    A shard whose every doc is already indexed (an at-least-once
+    replay) writes nothing: no marker, no empty ``_doc_stats`` file, no
+    ``_corpus_stats`` republish. One emptiness job over the persisted
+    delta buys that; otherwise each replay would add a ``_doc_stats``
+    file that every serve lists and reads until compaction.
+
     Re-appending a TOMBSTONED doc before compaction is a no-op (its
     membership row still exists) and the tombstone keeps masking it —
     the tombstone-wins-until-compact semantics shared by all four
@@ -435,6 +441,8 @@ def text_index_append(
     delta = base.join(existing, "doc_id", "left_anti").persist()
     cached = None
     try:
+        if not reconcile and delta.isEmpty():
+            return  # every doc already indexed (a replay): write nothing
         pending_marker_set(spark, marker)
         postings = _postings_frame(delta, "doc_id", "text", n_buckets)
         if reconcile:
