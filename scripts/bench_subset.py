@@ -15,13 +15,19 @@ Usage:
 
 Prints one JSON line per repeat:
   {"queries": {name: {"min", "warm", "n"}, ...}, "host_load": [...],
-   "jit_ms": ...}
+   "jit_ms": ..., "codegen_compiles": ..., "codegen_ms": ...}
 ``host_load`` is os.getloadavg() before/after — record it: same-code
 totals swing 1.15-1.7× with neighbor load (BASELINE.md), so a cluster
 reading is only meaningful next to a quiet-host control. ``jit_ms`` is
 the driver JVM's cumulative JIT compile time (``CompilationMXBean``)
 at the end of the repeat: with the warm minimums it shows a JIT
 profile's trade between compile work and steady-state speed.
+``codegen_compiles`` / ``codegen_ms`` are the cumulative Janino
+compilations of generated classes and their summed milliseconds
+(``CodegenMetrics.METRIC_COMPILATION_TIME``); a warm repeat that still
+compiles is thrashing Spark's codegen cache. The histogram keeps a
+reservoir of 1028 samples, so past that many compilations ``codegen_ms``
+is the reservoir mean times the count.
 """
 
 from __future__ import annotations
@@ -34,6 +40,16 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def codegen_compilations(jvm) -> tuple[int, int]:
+    """(count, total ms) of the driver JVM's Janino compilations so far."""
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n = hist.getCount()
+    snap = hist.getSnapshot()
+    values = list(snap.getValues())
+    total = sum(values) if len(values) == n else snap.getMean() * n
+    return n, round(total)
 
 
 def main() -> None:
@@ -90,6 +106,7 @@ def main() -> None:
                 for d in TEMP_DERIVATION_DIRS[mark:]:
                     shutil.rmtree(d, ignore_errors=True)
                 del TEMP_DERIVATION_DIRS[mark:]
+        codegen = codegen_compilations(spark.sparkContext._jvm)
         print(
             json.dumps(
                 {
@@ -97,6 +114,8 @@ def main() -> None:
                     "sf_dir": args.sf_dir,
                     "host_load": [round(x, 2) for x in (*load0, *os.getloadavg())],
                     "jit_ms": jit.getTotalCompilationTime(),
+                    "codegen_compiles": codegen[0],
+                    "codegen_ms": codegen[1],
                 },
                 separators=(",", ":"),
             )

@@ -8,6 +8,7 @@ import random
 import string
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from tia_data_pipeline_spark.functions.text import (
@@ -125,8 +126,22 @@ def test_money_sum_fuzz_vs_duckdb(spark):
 def test_md5_int_sql_cross_engine_fuzz(spark):
     """The portable MinHash shingle hash (md5_int_sql) must produce the
     SAME bigint in Spark SQL and DuckDB for arbitrary strings — the
-    whole q_fuzzy_dedup oracle upgrade rests on this primitive."""
-    from tia_data_pipeline_spark.operators.dedup import md5_int_sql
+    whole q_fuzzy_dedup oracle upgrade rests on this primitive.
+
+    The Spark plans hash through the column twins (``md5_int``, and
+    ``md5_words`` + ``md5_bit`` for the SimHash votes) while the
+    oracles keep the instr-digit SQL: each twin must equal its SQL in
+    DuckDB for every digit count 1-15 and every bit of the 1-, 32-,
+    48-, 61- and 62-bit widths, on the fuzz strings plus '' and NULL."""
+    import pandas as pd
+
+    from tia_data_pipeline_spark.operators.dedup import (
+        _md5_bit_expr,
+        md5_bit,
+        md5_int,
+        md5_int_sql,
+        md5_words,
+    )
 
     vals = [s for s in _rand_strings(300, seed=77) if s]  # md5 of '' agrees too, keep distinct rows simple
     vals += ["", "a", "the quick brown fox", "ünïcode ğ 漢字", " " * 5]
@@ -136,7 +151,7 @@ def test_md5_int_sql_cross_engine_fuzz(spark):
         for r in df.selectExpr("i", f"{md5_int_sql('s')} AS h").collect()
     }
     con = duckdb.connect()
-    con.register("t", __import__("pandas").DataFrame({"i": list(range(len(vals))), "s": vals}))
+    con.register("t", pd.DataFrame({"i": list(range(len(vals))), "s": vals}))
     want = {
         int(i): int(h)
         for i, h in con.execute(f"SELECT i, {md5_int_sql('s')} AS h FROM t").fetchall()
@@ -144,6 +159,28 @@ def test_md5_int_sql_cross_engine_fuzz(spark):
     assert got == want
     # range invariant: < 16^7 so a*x stays clear of ANSI bigint overflow
     assert all(0 <= h < 16**7 for h in got.values())
+
+    vals.append(None)
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(vals)], "i int, s string")
+    con.register("u", pd.DataFrame({"i": list(range(len(vals))), "s": vals}))
+    digits = range(1, 16)
+    widths = (1, 32, 48, 61, 62)
+    cols = [md5_int(F.col("s"), d) for d in digits]
+    frags = [md5_int_sql("s", d) for d in digits]
+    for w in widths:
+        words = md5_words(F.col("s"), w)
+        cols += [md5_bit(words, j) for j in range(w)]
+        frags += [_md5_bit_expr("s", j) for j in range(w)]
+    got = {r[0]: tuple(r[1:]) for r in df.select("i", *cols).collect()}
+    want = {
+        int(r[0]): tuple(None if v is None else int(v) for v in r[1:])
+        for r in con.execute(f"SELECT i, {', '.join(frags)} FROM u").fetchall()
+    }
+    assert got == want
+    assert set(got[len(vals) - 1]) == {None}  # NULL in, NULL out
+    assert None not in got[vals.index("")]
+    with pytest.raises(ValueError):
+        md5_int(F.col("s"), 16)
 
 
 def test_word_shingles_fuzz_vs_cpython_and_duckdb(spark):

@@ -188,3 +188,100 @@ def test_index_rows_appended_only_by_index_core():
                 if (rel, owner) not in allowed:
                     bad.append(f"{rel}:{line} ({owner or 'module level'})")
     assert not bad, f"partitioned index writes outside operators/index.py: {bad}"
+
+
+# The instr-digit md5 SQL is the DuckDB oracles' spelling of the
+# portable hashes; Spark plans take the same values from the column
+# twins in operators/dedup.py (md5_int, md5_words + md5_bit), which
+# parse the digits with one conv per row.
+_MD5_SQL_CALLS = {"md5_int_sql", "_md5_bit_expr", "hash_bucket_sql"}
+_MD5_SQL_NAMES = {"_DSIR_BUCKET_SQL"}
+
+
+def _callee(f) -> str | None:
+    return f.attr if isinstance(f, ast.Attribute) else f.id if isinstance(f, ast.Name) else None
+
+
+def _holds_md5_sql(node, tainted: set[str]) -> bool:
+    """Whether ``node`` spells md5 hex-digit SQL: a literal holding the
+    hex alphabet, a call of an oracle-fragment builder, or a name bound
+    to such a value."""
+    for n in ast.walk(node):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and "0123456789abcdef" in n.value:
+            return True
+        if isinstance(n, ast.Call) and _callee(n.func) in _MD5_SQL_CALLS:
+            return True
+        if isinstance(n, (ast.Name, ast.Attribute)) and _callee(n) in tainted:
+            return True
+    return False
+
+
+def _tainted(assigns, tainted: set[str]) -> set[str]:
+    """``tainted`` plus every target of ``assigns`` bound to md5
+    hex-digit SQL, to a fixed point (a name built from a tainted name
+    is tainted too)."""
+    tainted = set(tainted)
+    while True:
+        more = {
+            t.id
+            for n in assigns
+            if _holds_md5_sql(n.value, tainted)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        if more <= tainted:
+            return tainted
+        tainted |= more
+
+
+def _md5_sql_exprs(trees: dict[str, ast.Module]) -> list[str]:
+    """``expr``/``selectExpr`` calls over md5 hex-digit SQL. Names are
+    scoped: module-level bindings count package-wide (they are
+    imported), a function's own bindings only inside it."""
+    module_level = _tainted(
+        [n for tree in trees.values() for n in tree.body if isinstance(n, ast.Assign)],
+        _MD5_SQL_NAMES,
+    )
+    bad = []
+    for rel, tree in trees.items():
+        scopes = [(tree, module_level)] + [
+            (f, _tainted([n for n in ast.walk(f) if isinstance(n, ast.Assign)], module_level))
+            for f in ast.walk(tree)
+            if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for scope, tainted in scopes:
+            for n in ast.walk(scope):
+                if (
+                    isinstance(n, ast.Call)
+                    and _callee(n.func) in ("expr", "selectExpr")
+                    and any(
+                        _holds_md5_sql(a, tainted)
+                        for a in [*n.args, *(k.value for k in n.keywords)]
+                    )
+                ):
+                    bad.append(f"{rel}:{n.lineno}")
+    return sorted(set(bad))
+
+
+def test_no_md5_digit_sql_in_spark_expressions():
+    """Spark plans hash through ``md5_int`` / ``md5_words`` +
+    ``md5_bit``, never through ``F.expr`` (or ``selectExpr``) over the
+    oracles' per-digit ``instr`` SQL, which costs one lookup chain per
+    digit and per bit. Oracle strings are not Spark expressions and
+    stay allowed."""
+    pkg = os.path.join(ROOT, PKG)
+    trees = {
+        os.path.relpath(path, pkg): ast.parse(open(path).read())
+        for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
+    }
+    bad = _md5_sql_exprs(trees)
+    assert not bad, f"F.expr over md5 hex-digit SQL (use dedup.md5_int / md5_bit): {bad}"
+    # the guard sees each spelling it names
+    for src in (
+        'F.expr(md5_int_sql("_sh"))',
+        "F.expr(f\"sum(2 * {_md5_bit_expr('tok', 3)} - 1)\")",
+        "F.expr(_DSIR_BUCKET_SQL)",
+        "F.expr(\"instr('0123456789abcdef', substr(md5(x), 1, 1)) - 1\")",
+        'def f():\n    h = DD.md5_int_sql("k")\n    return F.expr(h)',
+    ):
+        assert _md5_sql_exprs({"probe.py": ast.parse(src)}), src

@@ -232,3 +232,21 @@ def test_membership_mark_reserved_looking_stream_columns_survive(spark, docs):
             (r["k"], r["_possible"], r["_b0_pos"], r["hit"]) for r in got
         )
     assert out["broadcast"] == out["bloom"]
+
+
+def test_membership_mark_bloom_path_persists_nothing(spark, docs):
+    """The bloom path's word table is a local relation, not a
+    persisted frame: calls over distinct member sets add no persistent
+    RDD to the session, and the probes broadcast the local table."""
+    from tia_data_pipeline_spark.operators.membership import membership_mark
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for r in (3, 5, 7):
+        members = docs.filter(F.col("doc_id") % r == 0).withColumnRenamed("doc_id", "k")
+        marked = membership_mark(docs, "doc_id", members, "k", strategy="bloom")
+        hits = marked.filter(F.col("hit") == 1).count()
+        assert hits == members.distinct().count() > 0
+    assert jsc.getPersistentRDDs().size() == before
+    p = _explain(marked)
+    assert "LocalTableScan" in p and "InMemoryTableScan" not in p, p

@@ -131,16 +131,16 @@ def test_chunk_featurize_search_composition(spark):
 
     from tests.conftest import SMOKE_SF
     from tia_data_pipeline_spark import plans
+    from tia_data_pipeline_spark.operators.dedup import md5_int
     from tia_data_pipeline_spark.operators.similarity import knn_join
 
     chunks = plans.REGISTRY["q_chunking"].build(spark, SMOKE_SF)
-    bucket = "instr('0123456789abcdef', substr(md5(tok), 1, 1)) - 1"
     feats = (
         chunks.select(
             F.concat_ws("#", F.col("doc_id"), F.col("chunk_id")).alias("cid"),
             F.explode(F.split(F.col("chunk"), " ")).alias("tok"),
         )
-        .select("cid", F.expr(bucket).alias("b"))
+        .select("cid", md5_int(F.col("tok"), 1).alias("b"))
         .groupBy("cid")
         .agg(
             F.array(

@@ -75,12 +75,34 @@ def md5_int_sql(s: str, digits: int = 7) -> str:
     the default) — the engine-portable shingle hash for the
     oracle-checkable MinHash path (same instr-digit construction as the
     SimHash bits below). 7 digits keeps a*x < 2^31 * 2^28 = 2^59, clear
-    of ANSI-mode bigint overflow in the affine hash family."""
+    of ANSI-mode bigint overflow in the affine hash family.
+
+    The DuckDB oracles spell the hash with this fragment; the Spark
+    plans use its column twin :func:`md5_int` (one ``conv`` per row
+    instead of one ``instr`` chain per digit), fuzz-pinned equal."""
     terms = []
     for i in range(digits):
         d = f"(instr('0123456789abcdef', substr(md5({s}), {i + 1}, 1)) - 1)"
         terms.append(f"CAST({d} AS BIGINT) * {16 ** (digits - 1 - i)}")
     return "(" + " + ".join(terms) + ")"
+
+
+def _md5_hex_int(col: Column, first: int, digits: int) -> Column:
+    """Hex digits ``first .. first+digits-1`` (1-based) of md5(col) as a
+    BIGINT: one md5, one substring, one ``conv`` per row."""
+    return F.conv(F.substring(F.md5(col), first, digits), 16, 10).cast("bigint")
+
+
+def md5_int(col: Column, digits: int = 7) -> Column:
+    """Spark column twin of :func:`md5_int_sql`: the first ``digits``
+    hex digits of md5(col) as a BIGINT, parsed by one ``conv`` rather
+    than one ``instr`` lookup per digit. NULL in, NULL out, like the
+    SQL form. At most 15 digits: 16 can pass 2^63 - 1, and ``conv``
+    raises on that under ANSI mode (:func:`md5_words` chunks wider
+    hashes)."""
+    if not 1 <= digits <= 15:
+        raise ValueError("digits must be in [1, 15] (a BIGINT holds 15 hex digits)")
+    return _md5_hex_int(col, 1, digits)
 
 
 def word_ngrams(col: Column, n: int) -> Column:
@@ -229,8 +251,9 @@ def minhash_signature_frame(
     mins. Docs with zero shingles drop out (explode of empty array).
 
     ``portable=True`` swaps the shingle hash xxhash64 → md5-digit
-    (:func:`md5_int_sql`): identical pipeline shape, but every value is
-    reproducible in DuckDB, so the whole MinHash estimate becomes
+    (:func:`md5_int`, twin of :func:`md5_int_sql`): identical pipeline
+    shape, but every value is reproducible in DuckDB, so the whole
+    MinHash estimate becomes
     hash-checkable cross-engine (the declared `q_fuzzy_dedup` path);
     xxhash64 stays the production default (faster, JVM-native)."""
     # NULL ids are excluded at the source: groupBy would otherwise
@@ -243,7 +266,7 @@ def minhash_signature_frame(
         )
     )
     x = (
-        F.expr(md5_int_sql("_sh"))
+        md5_int(F.col("_sh"))
         if portable
         else F.pmod(F.xxhash64("_sh"), F.lit(_X_MOD))
     )
@@ -692,9 +715,31 @@ SIMHASH_BITS = 32
 
 def _md5_bit_expr(tok: str, j: int) -> str:
     """SQL fragment (valid in BOTH Spark SQL and DuckDB) for bit j of a
-    token's 32-bit md5-derived hash: hex digit j//4, bit j%4."""
+    token's md5-derived hash: hex digit j//4, bit j%4. The DuckDB
+    oracles spell the bit with this fragment; the Spark plans take it
+    from :func:`md5_words` through :func:`md5_bit`, fuzz-pinned
+    equal."""
     digit = f"(instr('0123456789abcdef', substr(md5({tok}), {j // 4 + 1}, 1)) - 1)"
     return f"(CAST(floor({digit} / {1 << (j % 4)}) AS INT) % 2)"
+
+
+def md5_words(col: Column, bits: int) -> list[Column]:
+    """The md5 hex digits that hold hash bits ``0 .. bits-1``, as BIGINT
+    words of 8 digits each (word w = digits 8w+1 .. 8w+8, < 2^32): one
+    ``conv`` per word per row. Eight-digit words keep every cast clear
+    of the ANSI overflow a single 16-digit ``conv`` would hit at the
+    61–62-bit SimHash widths. Read bit j with :func:`md5_bit`."""
+    if not 1 <= bits <= 128:
+        raise ValueError("bits must be in [1, 128] (md5 has 32 hex digits)")
+    return [_md5_hex_int(col, 8 * w + 1, 8) for w in range((bits + 31) // 32)]
+
+
+def md5_bit(words: list[Column], j: int) -> Column:
+    """Bit j of the md5-derived hash over :func:`md5_words` columns, the
+    Spark twin of :func:`_md5_bit_expr` (hex digit j//4, bit j%4):
+    a shift and a mask of word j//32, 0 or 1 as a BIGINT."""
+    d = j // 4
+    return F.shiftright(words[d // 8], 4 * (7 - d % 8) + j % 4).bitwiseAND(F.lit(1))
 
 
 def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -707,7 +752,7 @@ def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
     No fan-out repartition here, unlike the shingle-based operators:
     the map side is only tokenize+explode (cheap; md5 is computed once
-    per exploded row and its 32 bit extractions CSE), so the vote
+    per exploded row and every bit is a shift of its words), so the vote
     aggregate's own exchange provides the parallelism — the explicit
     repartition was measured ~1.4x pure cost at sf0.1 (interleaved A/B,
     same method as the `_docs(fan=...)` split).
@@ -724,17 +769,19 @@ def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 def _simhash_votes(toked: DataFrame, bits: int) -> DataFrame:
     """(_id, _fp) from (_id, tok) rows: every token votes ±1 on each of
     ``bits`` md5-derived bits; bit j is 1 iff its vote sum is positive."""
-    votes = [
-        F.expr(f"sum(2 * {_md5_bit_expr('tok', j)} - 1)").alias(f"v{j}")
-        for j in range(bits)
-    ]
+    # the md5 words compute once per token row, before the aggregate;
+    # each vote is then a shift and a mask of a BIGINT column
+    words = md5_words(F.col("tok"), bits)
+    hashed = toked.select("_id", *[w.alias(f"_w{i}") for i, w in enumerate(words)])
+    wcols = [F.col(f"_w{i}") for i in range(len(words))]
+    votes = [F.sum(2 * md5_bit(wcols, j) - 1).alias(f"v{j}") for j in range(bits)]
     fp = None
     for j in range(bits):
         term = F.when(F.col(f"v{j}") > 0, F.lit(1 << j).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
         fp = term if fp is None else fp + term
-    return toked.groupBy("_id").agg(*votes).select("_id", fp.alias("_fp"))
+    return hashed.groupBy("_id").agg(*votes).select("_id", fp.alias("_fp"))
 
 
 def _simhash_sql_votes(bits: int) -> tuple[str, str]:
@@ -981,16 +1028,15 @@ def substring_overlap_pairs(
     corpus self-join. Returns (id_a, id_b, shared).
 
     ``portable=True`` swaps the k-mer hash xxhash64 → md5-digit
-    (:func:`md5_int_sql`, the q_fuzzy_dedup discipline), making the
+    (:func:`md5_int`, the q_fuzzy_dedup discipline), making the
     pair set reproducible in DuckDB for the oracle-checked contract
     query. Pipeline shape differs mechanically: positions explode to
-    rows BEFORE hashing (a plain projection gets codegen CSE across
-    the 7 digit extractions, which a higher-order lambda never would —
-    7 md5 calls per k-mer vs 1), the 1/mod sampling filter runs
-    before anything shuffles, and ``collect_set`` dedupes per-doc
-    repeats inside the bucket aggregate instead of a per-doc
-    ``array_distinct``, so both paths reach the wire with the same
-    sampled-distinct volume. xxhash64 stays the production default
+    rows BEFORE hashing (one md5 per k-mer row; a higher-order lambda
+    would re-evaluate its captured subexpressions per element), the
+    1/mod sampling filter runs before anything shuffles, and
+    ``collect_set`` dedupes per-doc repeats inside the bucket aggregate
+    instead of a per-doc ``array_distinct``, so both paths reach the
+    wire with the same sampled-distinct volume. xxhash64 stays the production default
     (JVM-native, no md5 per position)."""
     src = fan_out(df.select(F.col(id_col), F.col(text_col)))
     if portable:
@@ -1008,7 +1054,7 @@ def substring_overlap_pairs(
             pos.select(
                 "_id", F.substring(F.col("_t"), F.col("_i"), F.lit(k)).alias("_km")
             )
-            .select("_id", F.expr(md5_int_sql("_km")).alias("h"))
+            .select("_id", md5_int(F.col("_km")).alias("h"))
             .filter(F.pmod(F.col("h"), F.lit(mod)) == 0)
         )
         # The two-pass cap consumes hs twice (count + collect legs), and
@@ -1095,7 +1141,7 @@ def duplicated_spans(
             )
         ).alias("_i"),
     ).select("_id", "_i", F.substring(F.col("_t"), F.col("_i"), F.lit(k)).alias("_km"))
-    h = F.expr(md5_int_sql("_km")) if portable else F.xxhash64("_km")
+    h = md5_int(F.col("_km")) if portable else F.xxhash64("_km")
     anchors = (
         pos.select("_id", "_i", h.alias("h"))
         .filter(F.pmod(F.col("h"), F.lit(mod)) == 0)

@@ -224,10 +224,11 @@ def membership_mark(
       majority against a sparse member set) bypass the exact join
       entirely, and only the possible sliver pays a SHUFFLE_HASH join
       against the full member set. One driver scalar (``members``
-      count) sizes the filter, which is built and persisted per call —
-      control-plane, large path only. A long-lived service probing one
-      member set many times builds its filter once with
-      :func:`bloom_build` and probes it with :func:`bloom_mark`.
+      count) sizes the filter, which is built per call and collected
+      into a local relation — control-plane, large path only. A
+      long-lived service probing one member set many times builds its
+      filter once with :func:`bloom_build` and probes it with
+      :func:`bloom_mark`.
     - ``auto``: bloom when ``est_member_source_bytes`` exceeds
       ``BROADCAST_MAX_SOURCE_BYTES``, read at call time (the estimate:
       ``operators.scale.estimated_relation_bytes``; callers scale it by
@@ -259,17 +260,16 @@ def membership_mark(
 
     n_keys = max(1, members.count())
     m_bits, k_hashes = bloom_params(n_keys, fp_rate)
-    bloom = bloom_build(members, members_col, m_bits=m_bits, k_hashes=k_hashes)
     # materialize: the probe references the word table k times and
     # exchange reuse does not collapse alias-projected copies of an
-    # unmaterialized aggregate (see bloom_prefilter docstring).
-    # Lifecycle: the CacheManager holds the cache until explicit
-    # unpersist or session end (it does NOT release on GC of the
-    # result), so a loop over many member sets accumulates word tables
-    # — tiny (<= m/64 rows) but unbounded; a long-lived service builds
-    # its filter once with bloom_build and probes it with bloom_mark.
-    bloom = bloom.persist()
-    bloom.count()
+    # unmaterialized aggregate (see bloom_prefilter docstring). The
+    # table (<= m/64 rows) comes to the driver once and returns as a
+    # local relation, which nothing has to release: a persisted copy
+    # would stay in the CacheManager until the session ends. Collecting
+    # costs no more reach than the probes already need, since each
+    # broadcast ships the whole table from the driver.
+    words = bloom_build(members, members_col, m_bits=m_bits, k_hashes=k_hashes)
+    bloom = stream.sparkSession.createDataFrame(words.toArrow())
     flag = f"_possible_{uuid.uuid4().hex[:8]}"  # collision-proof temp name
     marked = bloom_mark(
         stream, key_col, bloom, m_bits=m_bits, k_hashes=k_hashes, flag_col=flag

@@ -18,16 +18,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tia_data_pipeline_spark.operators.dedup import md5_int
+
 _BUCKETS = 16
 
 
 def hash_bucket(id_col: str) -> Column:
-    """0..15 bucket from the first md5 hex digit of the row id —
-    evaluates identically in Spark SQL and DuckDB."""
-    return F.expr(f"instr('0123456789abcdef', substr(md5(cast({id_col} AS string)), 1, 1)) - 1")
+    """0..15 INT bucket from the first md5 hex digit of the row id
+    (:func:`~tia_data_pipeline_spark.operators.dedup.md5_int`) — the
+    same value as :func:`hash_bucket_sql` evaluates in DuckDB."""
+    return md5_int(F.col(id_col).cast("string"), 1).cast("int")
 
 
 def hash_bucket_sql(id_col: str) -> str:
+    """DuckDB form of :func:`hash_bucket` (its Spark twin), for the
+    oracles."""
     return f"(instr('0123456789abcdef', substr(md5(cast({id_col} AS VARCHAR)), 1, 1)) - 1)"
 
 

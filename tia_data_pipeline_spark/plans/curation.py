@@ -1554,7 +1554,8 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # 256 hashed unigram features: two md5 hex digits, the engine-portable
 # construction shared with q_feature_hash / hash_sample / SimHash.
-# Valid verbatim in BOTH Spark SQL and DuckDB over a column named tok.
+# The oracle's form over a column named tok; the Spark plan computes
+# the same value as DD.md5_int(tok, 2).
 _DSIR_BUCKET_SQL = (
     "((instr('0123456789abcdef', substr(md5(tok), 1, 1)) - 1) * 16 + "
     "(instr('0123456789abcdef', substr(md5(tok), 2, 1)) - 1))"
@@ -1619,7 +1620,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", F.explode(TX.tokens(F.col("text"))).alias("tok")
     )
     dbc = (
-        tok.select("doc_id", "lang", F.expr(_DSIR_BUCKET_SQL).alias("b"))
+        tok.select("doc_id", "lang", DD.md5_int(F.col("tok"), 2).alias("b"))
         .groupBy("doc_id", "lang", "b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         # persisted: crt/per both consume dbc, and their differing

@@ -1738,10 +1738,12 @@ def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = _docs(spark, sf_dir, fan=False).select(
         "doc_id", F.explode_outer(TX.tokens(F.col("text"))).alias("tok")
     )
-    bucketed = tok.select("doc_id", F.expr(
-        "CASE WHEN tok IS NULL THEN -1 ELSE "
-        "instr('0123456789abcdef', substr(md5(tok), 1, 1)) - 1 END"
-    ).alias("b"))
+    bucketed = tok.select(
+        "doc_id",
+        F.when(F.col("tok").isNull(), F.lit(-1))
+        .otherwise(DD.md5_int(F.col("tok"), 1))
+        .alias("b"),
+    )
     return (
         bucketed.groupBy("doc_id")
         .agg(

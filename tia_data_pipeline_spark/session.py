@@ -56,6 +56,25 @@ JIT_PROFILE = (
 
 _JAVA_OPTS = "spark.driver.extraJavaOptions"
 
+# Ceiling of the default driver heap: in local mode the heap is the
+# cluster memory, and text-heavy operators GC-thrash at Spark's 1g.
+_MAX_DEFAULT_HEAP_MB = 48 << 10
+
+
+def driver_memory(env: dict[str, str] | None = None, phys_bytes: int | None = None) -> str:
+    """The driver heap ``get_spark`` launches with:
+    ``SPARK_GRAFT_DRIVER_MEM`` when set, else half of physical memory
+    capped at 48g (in MiB, at least 1g). A fixed 48g default let G1
+    grow the heap past what a 16 GB host holds, and the kernel's OOM
+    killer ended the JVM."""
+    env = os.environ if env is None else env
+    if env.get("SPARK_GRAFT_DRIVER_MEM"):
+        return env["SPARK_GRAFT_DRIVER_MEM"]
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    half_mb = phys_bytes // 2 >> 20
+    return f"{max(1024, min(half_mb, _MAX_DEFAULT_HEAP_MB))}m"
+
 
 def driver_java_options(extra_conf: dict[str, str] | None) -> str:
     """``JIT_PROFILE`` followed by the caller's own
@@ -86,10 +105,9 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # Local mode = driver-only: its heap is the cluster memory.
-        # Spark's 1g default GC-thrashes on text-heavy operators; size
-        # to the host (only effective before the JVM starts).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # Local mode = driver-only: its heap is the cluster memory,
+        # sized to the host (only effective before the JVM starts).
+        .config("spark.driver.memory", driver_memory())
         # Event-time parity: the oracle (DuckDB) and the reference (Airflow
         # UTC) both treat timestamps as UTC wall clock.
         .config("spark.sql.session.timeZone", "UTC")
