@@ -88,6 +88,20 @@ def test_decode_media_dispatch_and_stub_fallback():
     fake = decode_media(b"\xff\xd8\xff\xe0 not actually jpeg")
     assert fake["format"].startswith("fake/") and fake["width"] > 0
     assert sniff_format(b"") == "unknown" and decode_media(b"")["format"] == "empty"
+    # PNG and JPEG are sniffed by name but decode and resize via the stub
+    from tia_data_pipeline_spark.operators.multimodal import _fake_resize, fake_decode
+
+    png = b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR" + bytes(40)
+    jpeg = b"\xff\xd8\xff\xdb" + bytes(70)
+    assert sniff_format(png) == "png" and sniff_format(jpeg) == "jpeg"
+    assert decode_media(png)["format"] == "fake/89"
+    assert decode_media(png) == fake_decode(png) and decode_media(jpeg) == fake_decode(jpeg)
+    for payload in (png, jpeg):
+        assert resize_media(payload, 16, 64) == _fake_resize(payload, 16, 64)
+    # header dimensions past C ssize_t raise OverflowError, not ValueError
+    huge = b"P6\n99999999999 99999999999\n255\n\x00"
+    assert decode_media(huge) == fake_decode(huge)
+    assert resize_media(huge, 8, 8) == _fake_resize(huge, 8, 8)
 
 
 def test_real_codecs_through_spark_pipeline(spark):
@@ -206,13 +220,33 @@ def test_extract_media_features_operator(spark):
         (1, bytearray(ppm)),
         (2, bytearray(_wav_sine(200.0, rate=8000, seconds=0.25, amp=0.25))),
         (3, bytearray(b"\x00garbage payload")),
+        (4, bytearray(b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR" + bytes(40))),
+        (5, bytearray(b"\xff\xd8\xff\xdb" + bytes(70))),
     ]
+    # the corrupt PPM/WAV cases of test_corrupt_payloads_never_crash_decode_media,
+    # plus a zero-dimension header and dimensions past C ssize_t
+    corrupt = [
+        ppm[:20],
+        b"P6\n9999999 9999999\n255\n\x00",
+        b"P6",
+        b"RIFF\x04\x00\x00\x00WAVE",
+        b"RIFF\xff\xff\xff\xffWAVEjunk",
+        b"P6 0 0 255\n",
+        b"P6\n99999999999 99999999999\n255\n\x00",
+    ]
+    rows += [(10 + i, bytearray(p)) for i, p in enumerate(corrupt)]
     df = spark.createDataFrame(rows, "id bigint, payload binary")
     got = {r["id"]: r.asDict() for r in extract_media_features(df).collect()}
     assert got[1]["kind"] == "ppm" and got[1]["width"] == 8 and got[1]["rms"] is None
     assert got[2]["kind"] == "wav" and got[2]["duration_ms"] == 250
     assert got[2]["width"] is None and got[2]["rms"] is not None
     assert got[3]["width"] is None and got[3]["rms"] is None
+    assert (got[4]["kind"], got[5]["kind"]) == ("png", "jpeg")
+    assert len(got) == len(rows)
+    for rid in [4, 5] + [10 + i for i in range(len(corrupt))]:
+        feats = {k: v for k, v in got[rid].items() if k not in ("id", "kind")}
+        assert set(feats.values()) == {None}, (rid, got[rid])
+    assert [got[10 + i]["kind"] for i in range(len(corrupt))] == ["ppm"] * 3 + ["wav"] * 2 + ["ppm"] * 2
 
 
 def test_ppm_comment_at_eof_clamps_offset():
@@ -247,1468 +281,3 @@ def test_wav_multi_data_chunk_first_wins_even_zero_length():
     pcm, rate = wav_pcm(payload)
     assert meta["n_samples"] == 0
     assert pcm.shape[0] == 0 and rate == 8000
-
-
-# ------------------------------------------------------------------ PNG ----
-
-
-def _png_forward_filter(px: np.ndarray, filters: list[int], channels: int) -> bytes:
-    """Independent FORWARD implementation of the PNG scanline filters
-    (per the spec's encoder direction) — the decoder under test must
-    invert it exactly. px is (h, w, channels) uint8."""
-    h, w = px.shape[:2]
-    bpp = channels
-    flat = px.reshape(h, w * bpp).astype(np.int64)
-    out = bytearray()
-    for y in range(h):
-        f = filters[y % len(filters)]
-        out.append(f)
-        prev = flat[y - 1] if y > 0 else np.zeros(w * bpp, dtype=np.int64)
-        for x in range(w * bpp):
-            raw = flat[y, x]
-            a = flat[y, x - bpp] if x >= bpp else 0
-            b = prev[x]
-            c = prev[x - bpp] if (x >= bpp and y > 0) else 0
-            if f == 0:
-                v = raw
-            elif f == 1:
-                v = raw - a
-            elif f == 2:
-                v = raw - b
-            elif f == 3:
-                v = raw - ((a + b) >> 1)
-            else:  # Paeth
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                v = raw - pred
-            out.append(v & 0xFF)
-    return bytes(out)
-
-
-def _png_bytes(px: np.ndarray, color: int, filters: list[int]) -> bytes:
-    """Hand-built PNG from chosen RECONSTRUCTED pixels + a forward
-    filter per scanline — independent of encode_png."""
-    import zlib
-
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}[color]
-    h, w = px.shape[:2]
-    raw = _png_forward_filter(px, filters, channels)
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return sig + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-
-
-def test_png_all_filters_invert_exactly():
-    """Every scanline filter (None/Sub/Up/Average/Paeth) must invert
-    bit-exactly against an independent forward implementation."""
-    from tia_data_pipeline_spark.functions.codecs import decode_png
-
-    rng = np.random.default_rng(17)
-    px = rng.integers(0, 256, size=(10, 7, 3), dtype=np.uint8)
-    payload = _png_bytes(px, color=2, filters=[0, 1, 2, 3, 4])
-    d = decode_png(payload)
-    assert (d["width"], d["height"]) == (7, 10)
-    assert d["format"] == "image/png;color=2"
-    np.testing.assert_array_equal(d["pixels"], px)
-
-
-def test_png_rgba_and_grayscale_widen_to_rgb():
-    from tia_data_pipeline_spark.functions.codecs import decode_png
-
-    rng = np.random.default_rng(5)
-    rgba = rng.integers(0, 256, size=(4, 5, 4), dtype=np.uint8)
-    d = decode_png(_png_bytes(rgba, color=6, filters=[4, 1, 3, 2]))
-    np.testing.assert_array_equal(d["pixels"], rgba[:, :, :3])
-    gray = rng.integers(0, 256, size=(3, 6, 1), dtype=np.uint8)
-    d2 = decode_png(_png_bytes(gray, color=0, filters=[1, 2, 4]))
-    assert d2["pixels"].shape == (3, 6, 3)
-    np.testing.assert_array_equal(d2["pixels"][:, :, 0], gray[:, :, 0])
-    np.testing.assert_array_equal(d2["pixels"][:, :, 2], gray[:, :, 0])
-
-
-def test_png_encode_decode_roundtrip_and_resize():
-    from tia_data_pipeline_spark.functions.codecs import decode_png, encode_png
-
-    rng = np.random.default_rng(29)
-    px = rng.integers(0, 256, size=(16, 9, 3), dtype=np.uint8)
-    payload = encode_png(px)
-    assert sniff_format(payload) == "png"
-    np.testing.assert_array_equal(decode_png(payload)["pixels"], px)
-    # real resize path: decode -> nearest -> re-encode stays a PNG with
-    # exactly the resampled pixels
-    small = resize_media(payload, 3, 4)
-    d = decode_png(small)
-    assert (d["width"], d["height"]) == (3, 4)
-    np.testing.assert_array_equal(d["pixels"], resize_nearest(px, 3, 4))
-
-
-def test_png_unsupported_and_corrupt_fall_back_to_stub():
-    """Damaged/geometry-inconsistent PNGs must degrade to the
-    deterministic stub (same posture as every other corrupt payload),
-    never raise out of decode_media. (The 16-bit flip below stays a
-    stub case because the 8-bit raster is then TRUNCATED for the
-    doubled stride — real 16-bit and Adam7 images decode since
-    round 10.)"""
-    import zlib
-
-    from tia_data_pipeline_spark.functions.codecs import encode_png
-    from tia_data_pipeline_spark.operators.multimodal import fake_decode
-
-    px = np.zeros((4, 4, 3), dtype=np.uint8)
-    good = encode_png(px)
-    # corrupt the IDAT payload bytes (zlib stream damage)
-    bad = bytearray(good)
-    bad[-30] ^= 0xFF
-    got = decode_media(bytes(bad))
-    assert got == fake_decode(bytes(bad))
-    # 16-bit depth header
-    deep = bytearray(good)
-    deep[24] = 16  # IHDR bit-depth byte
-    assert decode_media(bytes(deep)) == fake_decode(bytes(deep))
-    # truncated raster: valid zlib, too few scanline bytes
-    sig = good[:8]
-    ihdr = good[8 : 8 + 25]
-    short_idat = zlib.compress(b"\x00" + b"\x01" * 5)  # one partial row
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    trunc = sig + ihdr + chunk(b"IDAT", short_idat) + chunk(b"IEND", b"")
-    assert decode_media(trunc) == fake_decode(trunc)
-
-
-def test_png_image_features_and_decode_media():
-    from tia_data_pipeline_spark.functions.codecs import encode_png, image_features
-
-    solid = np.full((8, 8, 3), 200, dtype=np.uint8)
-    payload = encode_png(solid)
-    d = decode_media(payload)
-    assert d["format"] == "image/png;color=2"
-    assert (d["width"], d["height"]) == (8, 8)
-    f = image_features(payload)
-    assert f["mean_r"] == f["mean_g"] == f["mean_b"] == 200.0
-    assert abs(f["brightness"] - 200.0) < 1e-9 and f["contrast"] == 0.0
-
-
-def test_png_through_spark_feature_pipeline(spark):
-    """PNG payloads flow through the Arrow mapInPandas feature
-    extractor exactly like PPM ones — real pixel features, with a
-    corrupt PNG degrading to (kind, NULLs)."""
-    from tia_data_pipeline_spark.functions.codecs import encode_png
-    from tia_data_pipeline_spark.operators.multimodal import extract_media_features
-
-    bright = encode_png(np.full((6, 6, 3), 250, dtype=np.uint8))
-    dark = encode_png(np.zeros((4, 4, 3), dtype=np.uint8))
-    broken = bytearray(bright)
-    broken[-25] ^= 0x55
-    df = spark.createDataFrame(
-        [(1, bytes(bright)), (2, bytes(dark)), (3, bytes(broken))],
-        "id bigint, payload binary",
-    )
-    rows = {r["id"]: r for r in extract_media_features(df).collect()}
-    assert rows[1]["kind"] == "png" and rows[1]["brightness"] == 250.0
-    assert rows[2]["width"] == 4 and rows[2]["brightness"] == 0.0
-    assert rows[3]["kind"] == "png" and rows[3]["brightness"] is None
-
-
-def test_png_decompression_bomb_degrades_to_stub():
-    """A crafted IDAT that inflates far beyond the IHDR geometry must
-    hit the stub fallback after a BOUNDED inflate — never allocate the
-    full bomb (review r9: this path runs inside the corpus-facing
-    pandas UDF where corrupt payloads degrade, not kill)."""
-    import zlib
-
-    from tia_data_pipeline_spark.operators.multimodal import fake_decode
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    # claims 2x2 RGB (19 bytes of raster) but inflates to ~64 MB
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
-    bomb = zlib.compress(b"\x00" * (64 * 1024 * 1024), 9)
-    payload = sig + chunk(b"IHDR", ihdr) + chunk(b"IDAT", bomb) + chunk(b"IEND", b"")
-    assert len(payload) < 1024 * 1024  # the payload itself is small
-    assert decode_media(payload) == fake_decode(payload)
-
-
-def _chunk(ctype: bytes, data: bytes) -> bytes:
-    import zlib
-
-    return (
-        struct.pack(">I", len(data))
-        + ctype
-        + data
-        + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-    )
-
-
-def test_png_palette_decode():
-    """8-bit paletted PNG (color type 3): indexes look up PLTE RGB
-    triples — round-10 coverage for the palette shape stock encoders
-    emit for screenshots/logos."""
-    import zlib
-
-    from tia_data_pipeline_spark.functions.codecs import decode_png
-
-    pal = np.array(
-        [[255, 0, 0], [0, 255, 0], [0, 0, 255], [7, 8, 9]], dtype=np.uint8
-    )
-    idxs = np.array([[0, 1, 2, 3], [3, 2, 1, 0]], dtype=np.uint8)
-    raw = b"".join(b"\x00" + row.tobytes() for row in idxs)
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr = struct.pack(">IIBBBBB", 4, 2, 8, 3, 0, 0, 0)
-    payload = (
-        sig
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"PLTE", pal.tobytes())
-        + _chunk(b"IDAT", zlib.compress(raw))
-        + _chunk(b"IEND", b"")
-    )
-    d = decode_png(payload)
-    assert (d["width"], d["height"]) == (4, 2)
-    assert np.array_equal(d["pixels"], pal[idxs])
-    # out-of-range index or missing PLTE -> ValueError (stub fallback)
-    bad_idx = np.array([[0, 9]], dtype=np.uint8)
-    bad_raw = b"\x00" + bad_idx.tobytes()
-    bad = (
-        sig
-        + _chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 1, 8, 3, 0, 0, 0))
-        + _chunk(b"PLTE", pal.tobytes())
-        + _chunk(b"IDAT", zlib.compress(bad_raw))
-        + _chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError):
-        decode_png(bad)
-    no_plte = (
-        sig
-        + _chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 1, 8, 3, 0, 0, 0))
-        + _chunk(b"IDAT", zlib.compress(b"\x00\x00\x01"))
-        + _chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError):
-        decode_png(no_plte)
-
-
-def test_png_16bit_reduces_to_high_byte():
-    """16-bit RGB decodes via the spec's depth reduction: each
-    big-endian sample keeps its most-significant byte."""
-    import zlib
-
-    from tia_data_pipeline_spark.functions.codecs import decode_png
-
-    want = np.array(
-        [[[10, 20, 30], [40, 50, 60]], [[70, 80, 90], [100, 110, 120]]],
-        dtype=np.uint8,
-    )
-    lo = np.full_like(want, 0xAB)  # low bytes are discarded
-    samples = np.stack([want, lo], axis=-1).reshape(2, -1)  # (h, w*3*2)
-    raw = b"".join(b"\x00" + row.tobytes() for row in samples)
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0)
-    payload = (
-        sig
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(raw))
-        + _chunk(b"IEND", b"")
-    )
-    d = decode_png(payload)
-    assert d["maxval"] == 255
-    assert np.array_equal(d["pixels"], want)
-
-
-def test_png_claimed_huge_geometry_is_rejected_before_inflate():
-    """ADVICE r9 #1: the inflate cap derives from IHDR width/height,
-    which the attacker controls — a payload CLAIMING huge dimensions
-    must be rejected against the FIXED budget before any allocation,
-    not re-enable the bomb through a big `expected`."""
-    import zlib
-
-    from tia_data_pipeline_spark.functions.codecs import decode_png
-    from tia_data_pipeline_spark.operators.multimodal import fake_decode
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    # claims 40000x40000 RGB (~4.8 GB raster) with a small bomb IDAT
-    ihdr = struct.pack(">IIBBBBB", 40_000, 40_000, 8, 2, 0, 0, 0)
-    bomb = zlib.compress(b"\x00" * (8 << 20), 9)
-    payload = (
-        sig + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", bomb) + _chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError, match="decode budget"):
-        decode_png(payload)
-    assert decode_media(payload) == fake_decode(payload)
-
-
-# ---------------------------------------------------------------- JPEG ----
-# Independent baseline encoder (forward direction, per the public
-# spec): direct O(n^4) cosine-sum FDCT (deliberately NOT the decoder's
-# matrix form), its own diagonal-walk zigzag derivation, simple
-# custom canonical Huffman tables (the decoder must honor whatever DHT
-# carries, not just the Annex-K defaults), byte stuffing, optional
-# 4:2:0 subsampling and restart markers.
-
-
-def _jz_zigzag():
-    """Diagonal-walk zigzag order, derived independently: within an
-    odd diagonal the walk descends (row increasing, the down-left
-    leg), within an even diagonal it ascends — the spec's Figure A.6
-    serpentine starting right from DC."""
-    order = sorted(
-        ((x, y) for x in range(8) for y in range(8)),
-        key=lambda p: (p[0] + p[1], p[0] if (p[0] + p[1]) % 2 else -p[0]),
-    )
-    return [x * 8 + y for x, y in order]
-
-
-def _jz_fdct(block):
-    out = np.zeros((8, 8))
-    for u in range(8):
-        for v in range(8):
-            cu = 1 / np.sqrt(2) if u == 0 else 1.0
-            cv = 1 / np.sqrt(2) if v == 0 else 1.0
-            s = 0.0
-            for x in range(8):
-                for y in range(8):
-                    s += (
-                        block[x, y]
-                        * np.cos((2 * x + 1) * u * np.pi / 16)
-                        * np.cos((2 * y + 1) * v * np.pi / 16)
-                    )
-            out[u, v] = cu * cv * s / 4.0
-    return out
-
-
-class _JzBitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, value, nbits):
-        if nbits == 0:
-            return
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.n += nbits
-        while self.n >= 8:
-            b = (self.acc >> (self.n - 8)) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)  # byte stuffing
-            self.n -= 8
-            self.acc &= (1 << self.n) - 1
-
-    def flush(self):
-        if self.n:
-            pad = 8 - self.n
-            self.put((1 << pad) - 1, pad)  # 1-fill per spec
-        return bytes(self.out)
-
-
-# custom canonical tables: DC symbols 0..11 at code length 4; AC
-# symbols {EOB, ZRL} ∪ {run<<4|size} at code length 8 (prefix-free,
-# all-ones code unused)
-_JZ_DC_SYMS = list(range(12))
-_JZ_AC_SYMS = [0x00, 0xF0] + [
-    (r << 4) | s for r in range(16) for s in range(1, 11)
-]
-
-
-def _jz_canonical(symbols, length):
-    return {sym: (length, code) for code, sym in enumerate(symbols)}
-
-
-_JZ_DC_CODES = _jz_canonical(_JZ_DC_SYMS, 4)
-_JZ_AC_CODES = _jz_canonical(_JZ_AC_SYMS, 8)
-
-
-def _jz_dht(tc, th, symbols, length):
-    bits = [0] * 16
-    bits[length - 1] = len(symbols)
-    return bytes([(tc << 4) | th]) + bytes(bits) + bytes(symbols)
-
-
-def _jz_category(v):
-    t = 0
-    a = abs(v)
-    while a:
-        t += 1
-        a >>= 1
-    return t
-
-
-def _jz_emit_block(w, fq, pred, zz):
-    """Huffman-encode one quantized block (zigzag order)."""
-    seq = [int(fq.flat[i]) for i in zz]
-    diff = seq[0] - pred
-    t = _jz_category(diff)
-    ln, code = _JZ_DC_CODES[t]
-    w.put(code, ln)
-    if t:
-        w.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    run = 0
-    last_nz = 0
-    for k in range(1, 64):
-        if seq[k]:
-            last_nz = k
-    for k in range(1, last_nz + 1):
-        v = seq[k]
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            ln, code = _JZ_AC_CODES[0xF0]
-            w.put(code, ln)
-            run -= 16
-        s = _jz_category(v)
-        ln, code = _JZ_AC_CODES[(run << 4) | s]
-        w.put(code, ln)
-        w.put(v if v >= 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last_nz < 63:
-        ln, code = _JZ_AC_CODES[0x00]  # EOB
-        w.put(code, ln)
-    return seq[0]
-
-
-def _jz_seg(marker, data):
-    return bytes([0xFF, marker]) + struct.pack(">H", len(data) + 2) + data
-
-
-def _jz_encode(px, *, gray=False, subsample=False, q_luma=8, q_chroma=8,
-               restart_interval=0):
-    """Baseline JPEG bytes for (h, w, 3) uint8 RGB (or (h, w) gray).
-    4:4:4 by default; subsample=True emits 4:2:0 with box-averaged
-    chroma."""
-    zz = _jz_zigzag()
-    if gray:
-        h, w_ = px.shape
-        y_pl = px.astype(np.float64)
-        planes = [("Y", y_pl, 0)]
-    else:
-        h, w_ = px.shape[:2]
-        r, g, b = (px[..., i].astype(np.float64) for i in range(3))
-        y_pl = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        planes = [("Y", y_pl, 0), ("Cb", cb, 1), ("Cr", cr, 1)]
-    qt = {0: np.full(64, q_luma, dtype=np.uint8),
-          1: np.full(64, q_chroma, dtype=np.uint8)}
-
-    hv = {"Y": (2, 2) if subsample else (1, 1), "Cb": (1, 1), "Cr": (1, 1)}
-    hmax = max(v[0] for k, v in hv.items() if any(p[0] == k for p in planes))
-    vmax = max(v[1] for k, v in hv.items() if any(p[0] == k for p in planes))
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x, mcus_y = -(-w_ // mcu_w), -(-h // mcu_h)
-
-    # pad + (for chroma under 4:2:0) box-downsample each plane
-    prepared = []
-    for name, pl, tq in planes:
-        ch, cv = hv[name]
-        tw, th = mcus_x * ch * 8, mcus_y * cv * 8
-        if subsample and name != "Y":
-            # box 2x2 mean over the padded full-res plane
-            fw, fh = mcus_x * mcu_w, mcus_y * mcu_h
-            pad = np.pad(pl, ((0, fh - h), (0, fw - w_)), mode="edge")
-            pl2 = pad.reshape(fh // 2, 2, fw // 2, 2).mean(axis=(1, 3))
-        else:
-            pl2 = np.pad(pl, ((0, th - h), (0, tw - w_)), mode="edge")
-        prepared.append((name, pl2 - 128.0, tq, ch, cv))
-
-    wtr = _JzBitWriter()
-    preds = {name: 0 for name, *_ in prepared}
-    chunks = []
-    mcu = 0
-    rst = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                chunks.append(wtr.flush())
-                chunks.append(bytes([0xFF, 0xD0 + (rst % 8)]))
-                rst += 1
-                wtr = _JzBitWriter()
-                preds = {k: 0 for k in preds}
-            for name, pl2, tq, ch, cv in prepared:
-                for by in range(cv):
-                    for bx in range(ch):
-                        y0 = (my * cv + by) * 8
-                        x0 = (mx * ch + bx) * 8
-                        block = pl2[y0 : y0 + 8, x0 : x0 + 8]
-                        fq = np.round(_jz_fdct(block).flatten() / qt[tq])
-                        preds[name] = _jz_emit_block(wtr, fq, preds[name], zz)
-            mcu += 1
-    chunks.append(wtr.flush())
-    scan = b"".join(chunks)
-
-    out = bytearray(b"\xff\xd8")
-    # quant tables in ZIGZAG order per spec
-    for tq, tbl in qt.items():
-        zz_tbl = bytes(int(tbl[0]) for _ in range(64))  # uniform: zigzag = identity
-        out += _jz_seg(0xDB, bytes([tq]) + zz_tbl)
-    ncomp = len(prepared)
-    sof = bytes([8]) + struct.pack(">HH", h, w_) + bytes([ncomp])
-    for i, (name, _, tq, ch, cv) in enumerate(prepared):
-        sof += bytes([i + 1, (ch << 4) | cv, tq])
-    out += _jz_seg(0xC0, sof)
-    out += _jz_seg(0xC4, _jz_dht(0, 0, _JZ_DC_SYMS, 4))
-    out += _jz_seg(0xC4, _jz_dht(1, 0, _JZ_AC_SYMS, 8))
-    if restart_interval:
-        out += _jz_seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytes([ncomp])
-    for i in range(ncomp):
-        sos += bytes([i + 1, 0x00])  # every component: DC table 0, AC table 0
-    sos += bytes([0, 63, 0])
-    out += _jz_seg(0xDA, sos)
-    out += scan + b"\xff\xd9"
-    return bytes(out)
-
-
-def test_jpeg_solid_color_near_exact():
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    px = np.zeros((16, 24, 3), dtype=np.uint8)
-    px[:] = (180, 90, 40)
-    payload = _jz_encode(px)
-    d = decode_jpeg(payload)
-    assert (d["width"], d["height"]) == (24, 16)
-    assert d["format"] == "image/jpeg;nc=3"
-    err = np.abs(d["pixels"].astype(int) - px.astype(int))
-    assert err.max() <= 2, f"solid-color max error {err.max()}"
-
-
-def _jz_reference_decode(px, *, gray=False, q_luma=8, q_chroma=8):
-    """The TEST's own inverse of the encoder's quantized coefficients
-    (direct cosine-sum inverse — independent of the decoder's matrix
-    IDCT): what a spec-correct decoder must reproduce up to rounding.
-    4:4:4 only (the reference exists to isolate decoder bugs from
-    quantization loss, not to re-model subsampling)."""
-    zz = _jz_zigzag()
-    if gray:
-        planes = [px.astype(np.float64)]
-        qts = [np.full(64, q_luma, dtype=np.float64)]
-    else:
-        r, g, b = (px[..., i].astype(np.float64) for i in range(3))
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
-            128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
-        ]
-        qts = [np.full(64, q_luma, np.float64)] + [
-            np.full(64, q_chroma, np.float64)
-        ] * 2
-    h, w_ = planes[0].shape
-    th, tw = -(-h // 8) * 8, -(-w_ // 8) * 8
-    outs = []
-    for pl, qt in zip(planes, qts):
-        pad = np.pad(pl, ((0, th - h), (0, tw - w_)), mode="edge") - 128.0
-        rec = np.zeros_like(pad)
-        for y0 in range(0, th, 8):
-            for x0 in range(0, tw, 8):
-                f = _jz_fdct(pad[y0 : y0 + 8, x0 : x0 + 8])
-                fq = np.round(f.flatten() / qt) * qt  # quantize+dequantize
-                dq = fq.reshape(8, 8)
-                blk = np.zeros((8, 8))
-                for x in range(8):
-                    for y in range(8):
-                        sacc = 0.0
-                        for u in range(8):
-                            for v in range(8):
-                                cu = 1 / np.sqrt(2) if u == 0 else 1.0
-                                cv = 1 / np.sqrt(2) if v == 0 else 1.0
-                                sacc += (
-                                    cu * cv * dq[u, v]
-                                    * np.cos((2 * x + 1) * u * np.pi / 16)
-                                    * np.cos((2 * y + 1) * v * np.pi / 16)
-                                )
-                        blk[x, y] = sacc / 4.0
-                rec[y0 : y0 + 8, x0 : x0 + 8] = blk
-        outs.append(rec[:h, :w_] + 128.0)
-    if gray:
-        gch = np.clip(np.round(outs[0]), 0, 255)
-        return np.repeat(gch[:, :, None], 3, axis=2)
-    y, cb, cr = outs[0], outs[1] - 128.0, outs[2] - 128.0
-    rgb = np.stack(
-        [
-            y + 1.402 * cr,
-            y - 0.344136 * cb - 0.714136 * cr,
-            y + 1.772 * cb,
-        ],
-        axis=2,
-    )
-    return np.clip(np.round(rgb), 0, 255)
-
-
-def test_jpeg_gradient_matches_reference_inverse_exactly():
-    """The decoder must reproduce the test's own direct-cosine-sum
-    inverse of the quantized coefficients within rounding (±1): this
-    isolates decoder defects (zigzag order, Huffman walk, predictor
-    chain, IDCT convention) from ordinary quantization loss, and the
-    non-square shape makes a row/col swap impossible to hide."""
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    h, w = 24, 40
-    yy, xx = np.mgrid[0:h, 0:w]
-    px = np.stack(
-        [
-            (xx * 5) % 200 + 20,
-            (yy * 7) % 180 + 30,
-            ((xx + yy) * 3) % 160 + 40,
-        ],
-        axis=2,
-    ).astype(np.uint8)
-    d = decode_jpeg(_jz_encode(px))
-    ref = _jz_reference_decode(px)
-    err = np.abs(d["pixels"].astype(int) - ref.astype(int))
-    assert err.max() <= 1, f"decoder deviates from reference inverse by {err.max()}"
-
-
-def test_jpeg_fill_bytes_before_markers_decode_identically():
-    """ADVICE r10 #2: JPEG spec B.1.1.2 allows any number of 0xFF fill
-    bytes before a marker; encoders that emit fill padding produce
-    spec-valid baseline files. The segment walker must skip the run
-    instead of reading a garbage length / raising marker desync (which
-    silently degraded the file to the stub despite being decodable)."""
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    px = np.zeros((16, 24, 3), dtype=np.uint8)
-    px[:] = (180, 90, 40)
-    payload = _jz_encode(px)
-    base = decode_jpeg(payload)["pixels"]
-    # fill run right after SOI (before the first header marker)
-    padded = payload[:2] + b"\xff" * 3 + payload[2:]
-    d = decode_jpeg(padded)
-    assert d["format"] == "image/jpeg;nc=3"
-    assert np.array_equal(d["pixels"], base)
-
-
-def test_jpeg_grayscale_matches_reference():
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    h, w = 16, 16
-    g = (np.add.outer(np.arange(h) * 3, np.arange(w) * 5) % 200 + 20).astype(
-        np.uint8
-    )
-    d = decode_jpeg(_jz_encode(g, gray=True))
-    assert d["format"] == "image/jpeg;nc=1"
-    ref = _jz_reference_decode(g, gray=True)
-    err = np.abs(d["pixels"].astype(int) - ref.astype(int))
-    assert err.max() <= 1
-    # gray widens to identical RGB channels
-    assert np.array_equal(d["pixels"][..., 0], d["pixels"][..., 1])
-
-
-def test_jpeg_420_subsampling():
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    h, w = 32, 48
-    yy, xx = np.mgrid[0:h, 0:w]
-    # smooth luma gradient + slowly-varying chroma (subsampling-friendly)
-    px = np.stack(
-        [
-            40 + xx * 2 + yy,
-            60 + xx + yy * 2,
-            80 + xx + yy,
-        ],
-        axis=2,
-    ).astype(np.uint8)
-    d = decode_jpeg(_jz_encode(px, subsample=True))
-    assert (d["width"], d["height"]) == (w, h)
-    err = np.abs(d["pixels"].astype(int) - px.astype(int))
-    assert err.mean() < 5.0 and err.max() < 45, (err.mean(), err.max())
-
-
-def test_jpeg_restart_markers_equal_unrestarted():
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    h, w = 24, 32
-    yy, xx = np.mgrid[0:h, 0:w]
-    px = np.stack([(xx * 9) % 230, (yy * 11) % 230, ((xx * yy) % 230)], axis=2).astype(
-        np.uint8
-    )
-    plain = decode_jpeg(_jz_encode(px))
-    rst = decode_jpeg(_jz_encode(px, restart_interval=3))
-    assert np.array_equal(plain["pixels"], rst["pixels"])
-
-
-def test_jpeg_unsupported_and_bomb_degrade_to_stub():
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-    from tia_data_pipeline_spark.operators.multimodal import fake_decode
-
-    px = np.full((8, 8, 3), 128, dtype=np.uint8)
-    good = _jz_encode(px)
-    # progressive: flip SOF0 -> SOF2
-    prog = good.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    assert decode_media(prog) == fake_decode(prog)
-    # truncated entropy stream
-    trunc = good[:-12]
-    assert decode_media(trunc) == fake_decode(trunc)
-    # claimed-huge geometry is rejected before any block decodes
-    import re as _re
-
-    huge = bytearray(good)
-    sof_at = bytes(huge).find(b"\xff\xc0")
-    struct.pack_into(">HH", huge, sof_at + 5, 30_000, 30_000)
-    with pytest.raises(ValueError, match="decode budget"):
-        decode_jpeg(bytes(huge))
-
-
-def test_jpeg_through_decode_media_and_features(spark):
-    from tia_data_pipeline_spark.functions.codecs import image_features
-    from tia_data_pipeline_spark.operators.multimodal import extract_media_features
-
-    solid = _jz_encode(np.full((16, 16, 3), 200, dtype=np.uint8))
-    d = decode_media(solid)
-    assert d["format"] == "image/jpeg;nc=3" and (d["width"], d["height"]) == (16, 16)
-    f = image_features(solid)
-    assert abs(f["brightness"] - 200.0) < 3.0 and f["contrast"] < 3.0
-    broken = bytearray(solid)
-    broken[-20] ^= 0x55
-    df = spark.createDataFrame(
-        [(1, bytes(solid)), (2, bytes(broken))], "id bigint, payload binary"
-    )
-    rows = {r["id"]: r for r in extract_media_features(df).collect()}
-    assert rows[1]["kind"] == "jpeg" and abs(rows[1]["brightness"] - 200.0) < 3.0
-    assert rows[2]["kind"] == "jpeg"
-
-
-def test_jpeg_structurally_lying_payloads_degrade_to_stub():
-    """Review r10: corrupt-but-sniffable JPEG structures (undefined
-    table references, truncated SOF/SOS/DHT segments) must degrade to
-    the stub via ValueError — a KeyError/IndexError escaping
-    decode_media kills the whole Arrow batch."""
-    from tia_data_pipeline_spark.operators.multimodal import fake_decode
-
-    sig = b"\xff\xd8\xff"
-    # SOS references Huffman table 3 that no DHT defined
-    px = np.full((8, 8, 3), 100, dtype=np.uint8)
-    good = _jz_encode(px)
-    sos_at = good.find(b"\xff\xda")
-    bad_tables = bytearray(good)
-    # component 1's Td/Ta byte sits 2 bytes after the component id
-    bad_tables[sos_at + 6] = 0x33
-    for payload in (
-        bytes(bad_tables),
-        sig[:2] + b"\xff" + _chunkless(b"\xc0", b"\x08\x00\x10"),  # short SOF
-        sig[:2] + b"\xff" + _chunkless(b"\xda", b""),  # empty SOS
-        sig[:2] + b"\xff" + _chunkless(b"\xc4", b"\x00\x01"),  # short DHT
-    ):
-        out = decode_media(payload)
-        assert out == fake_decode(payload), payload[:8]
-
-
-def _chunkless(marker: bytes, data: bytes) -> bytes:
-    """A bare marker segment (no CRC — JPEG segments are just
-    length-prefixed): FF <marker> <len+2> <data>."""
-    return marker + struct.pack(">H", len(data) + 2) + data
-
-
-def test_jpeg_budget_counts_the_float64_working_set():
-    """Review r10: the budget must bound the decoder's REAL working
-    set (float64 planes + upsample/color copies ≈ 72 B/pixel), not the
-    nominal uint8 raster — a ~22 MP claim fits 64 MB nominally but
-    would allocate >1 GB of float64."""
-    import zlib
-
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    sig = b"\xff\xd8\xff\xe0" + struct.pack(">H", 4) + b"\x00\x00"
-    ihdr = struct.pack(">IIBBBBB", 0, 0, 0, 0, 0, 0, 0)  # unused, PNG-style
-    # 4300 x 4300 RGB = 18.5 MP: under 64 MB as uint8*3, far over as
-    # the real working set
-    sof = struct.pack(">BHHB", 8, 4300, 4300, 3) + bytes(
-        [1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]
-    )
-    payload = (
-        b"\xff\xd8"
-        + b"\xff\xc0" + struct.pack(">H", len(sof) + 2) + sof
-        # spec-valid SOS: ns=3 components + the mandatory Ss/Se/Ah/Al
-        # trailer (the decoder now parses the trailer, so a truncated
-        # SOS would fail earlier than the budget check under test)
-        + b"\xff\xda" + struct.pack(">H", 12)
-        + bytes([3, 1, 0, 2, 0x11, 3, 0x11, 0, 63, 0])
-        + zlib.compress(b"\x00" * 100)
-        + b"\xff\xd9"
-    )
-    with pytest.raises(ValueError, match="decode budget"):
-        decode_jpeg(payload)
-
-
-def test_png_adam7_interlaced_decode_exact():
-    """Adam7 interlaced PNG (round 10): the test builds the interlaced
-    byte stream with its own independent pass extraction + forward
-    filters, and the decoder must reconstruct the original pixels
-    EXACTLY — odd dimensions exercise the partial passes."""
-    import zlib
-
-    from tia_data_pipeline_spark.functions.codecs import decode_png
-
-    rng = np.random.default_rng(77)
-    for h, w, color, ch in ((13, 7, 2, 3), (9, 11, 0, 1), (8, 8, 6, 4)):
-        px = rng.integers(0, 256, size=(h, w, ch), dtype=np.uint8)
-        # independent Adam7 forward: spec pass grid, per-pass filtering
-        grid = [
-            (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-        ]
-        raster = bytearray()
-        filters = [0, 1, 2, 3, 4]
-        for x0, y0, dx, dy in grid:
-            sub = px[y0::dy, x0::dx, :]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            raster += _png_forward_filter(sub, filters, ch)
-        sig = b"\x89PNG\r\n\x1a\n"
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 1)  # interlace=1
-        payload = (
-            sig
-            + _chunk(b"IHDR", ihdr)
-            + _chunk(b"IDAT", zlib.compress(bytes(raster)))
-            + _chunk(b"IEND", b"")
-        )
-        d = decode_png(payload)
-        assert (d["width"], d["height"]) == (w, h)
-        if color == 2:
-            assert np.array_equal(d["pixels"], px)
-        elif color == 0:
-            assert np.array_equal(d["pixels"][:, :, 0], px[:, :, 0])
-        else:  # RGBA -> alpha dropped
-            assert np.array_equal(d["pixels"], px[:, :, :3])
-
-
-# ----------------------------------------------------- JPEG encoder ----
-def test_encode_jpeg_round_trip_within_quantization_error():
-    """VERDICT r10 #8: the production encoder closes the JPEG
-    decode→transform→re-encode loop. Round-trip error through the
-    production decoder must be bounded by the quantization step: per
-    coefficient the reconstruction error is ≤ qt/2, and the sharp
-    wrap-around edges in this gradient land on the LARGE high-frequency
-    chroma entries (10 at q95) amplified ×1.77 by the color transform —
-    measured max 14, pinned at ≤20 with a tight mean (the codec is
-    near-exact away from the discontinuities)."""
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg, encode_jpeg
-
-    h, w = 24, 40
-    yy, xx = np.mgrid[0:h, 0:w]
-    px = np.stack(
-        [
-            (xx * 5) % 200 + 20,
-            (yy * 7) % 180 + 30,
-            ((xx + yy) * 3) % 160 + 40,
-        ],
-        axis=2,
-    ).astype(np.uint8)
-    payload = encode_jpeg(px, quality=95)
-    d = decode_jpeg(payload)
-    assert (d["width"], d["height"]) == (w, h)
-    assert d["format"] == "image/jpeg;nc=3"
-    err = np.abs(d["pixels"].astype(int) - px.astype(int))
-    assert err.max() <= 20, f"round-trip error {err.max()} exceeds quantization bound"
-    assert err.mean() <= 1.5, f"mean round-trip error {err.mean():.2f} too high"
-    # solid color must survive near-exactly at any quality (DC-only)
-    solid = np.full((16, 16, 3), (90, 180, 40), dtype=np.uint8)
-    back = decode_jpeg(encode_jpeg(solid, quality=75))["pixels"]
-    assert np.abs(back.astype(int) - solid.astype(int)).max() <= 2
-
-
-def test_encode_jpeg_grayscale_and_quality_monotonicity():
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg, encode_jpeg
-
-    g = (np.add.outer(np.arange(24) * 3, np.arange(16) * 5) % 200 + 20).astype(
-        np.uint8
-    )
-    payload = encode_jpeg(g, quality=95)
-    d = decode_jpeg(payload)
-    assert d["format"] == "image/jpeg;nc=1"
-    assert np.array_equal(d["pixels"][..., 0], d["pixels"][..., 1])
-    err95 = np.abs(d["pixels"][..., 0].astype(int) - g.astype(int)).max()
-    assert err95 <= 6
-    # lower quality -> smaller payload (coarser quantization compresses)
-    lo = encode_jpeg(np.repeat(g[:, :, None], 3, axis=2), quality=30)
-    hi = encode_jpeg(np.repeat(g[:, :, None], 3, axis=2), quality=95)
-    assert len(lo) < len(hi)
-
-
-def test_encode_jpeg_extreme_blocks_stay_in_baseline_range():
-    """The basis-matched checkerboard drives coefficients to the ±1024
-    theoretical bound at quality 100 (qt=1) — one past the K.3 tables'
-    size-10 categories. The encoder clamps; the stream must stay
-    decodable and near-exact everywhere else."""
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg, encode_jpeg
-
-    yy, xx = np.mgrid[0:16, 0:16]
-    checker = ((xx + yy) % 2 * 255).astype(np.uint8)
-    px = np.repeat(checker[:, :, None], 3, axis=2)
-    d = decode_jpeg(encode_jpeg(px, quality=100))
-    assert (d["width"], d["height"]) == (16, 16)
-    # the checkerboard itself survives (it IS a single basis function)
-    err = np.abs(d["pixels"].astype(int) - px.astype(int))
-    assert err.max() <= 16
-
-
-def test_encode_jpeg_rejects_bad_inputs():
-    from tia_data_pipeline_spark.functions.codecs import encode_jpeg
-
-    with np.testing.assert_raises(ValueError):
-        encode_jpeg(np.zeros((4, 4, 2), dtype=np.uint8))
-    with np.testing.assert_raises(ValueError):
-        encode_jpeg(np.zeros((0, 4, 3), dtype=np.uint8))
-    with np.testing.assert_raises(ValueError):
-        encode_jpeg(np.zeros((8, 8, 3), dtype=np.uint8), quality=0)
-
-
-def test_std_huffman_tables_cover_every_symbol():
-    """A transcription slip in the Annex K.3 tables would surface as a
-    KeyError on a rare (run, size) pair deep in production: pin the
-    complete symbol sets here instead."""
-    from tia_data_pipeline_spark.functions.codecs import (
-        _JPEG_STD_AC_CHROMA,
-        _JPEG_STD_AC_LUMA,
-        _JPEG_STD_DC_CHROMA,
-        _JPEG_STD_DC_LUMA,
-        _jpeg_enc_table,
-    )
-
-    want_ac = {0x00, 0xF0} | {(r << 4) | s for r in range(16) for s in range(1, 11)}
-    for bits, vals in (_JPEG_STD_AC_LUMA, _JPEG_STD_AC_CHROMA):
-        assert sum(bits) == len(vals) == 162
-        assert set(vals) == want_ac
-        assert len(_jpeg_enc_table(bits, vals)) == 162
-    for bits, vals in (_JPEG_STD_DC_LUMA, _JPEG_STD_DC_CHROMA):
-        assert set(vals) == set(range(12))
-        assert len(_jpeg_enc_table(bits, vals)) == 12
-
-
-def test_resize_media_round_trips_jpeg_for_real():
-    """resize_media on a baseline JPEG now decodes, nearest-neighbor
-    resizes, and re-encodes AS JPEG (previously the stub size-law);
-    the output must itself decode to the target geometry with content
-    that tracks the source."""
-    from tia_data_pipeline_spark.functions.codecs import (
-        decode_jpeg,
-        encode_jpeg,
-        resize_media,
-        sniff_format,
-    )
-
-    px = np.zeros((16, 24, 3), dtype=np.uint8)
-    px[:8] = (200, 40, 40)
-    px[8:] = (40, 40, 200)
-    payload = encode_jpeg(px, quality=95)
-    out = resize_media(payload, 48, 32)
-    assert sniff_format(out) == "jpeg"
-    d = decode_jpeg(out)
-    assert (d["width"], d["height"]) == (48, 32)
-    # the halves keep their hue through resize + requantization
-    top = d["pixels"][:14, :, 0].astype(int).mean()
-    bot = d["pixels"][18:, :, 2].astype(int).mean()
-    assert top > 150 and bot > 150
-
-
-# ------------------------------------------------ progressive JPEG ----
-# Test-side progressive encoder (spectral selection + successive
-# approximation, spec G.1.2 / the libjpeg emission discipline),
-# independent of the production decoder: flat quant tables, custom
-# single-length Huffman tables extended with the EOBn symbols.
-_JZP_AC_SYMS = (
-    [r << 4 for r in range(15)]  # EOB0..EOB14
-    + [0xF0]
-    + [(r << 4) | s for r in range(16) for s in range(1, 11)]
-)
-_JZP_AC_CODES = _jz_canonical(_JZP_AC_SYMS, 8)
-
-
-class _JzpScanWriter:
-    """Bit writer + EOB-run bookkeeping for one progressive scan.
-    Supports restart markers: flush() hard-flushes pending state and
-    the caller splices the RST byte pair between chunks."""
-
-    def __init__(self):
-        self.chunks = []
-        self.w = _JzBitWriter()
-        self.eobrun = 0
-        self.be_bits = []  # correction bits attached to the EOB run
-        self.br_bits = []  # current block's bits since the last symbol
-
-    def put_sym(self, codes, sym):
-        ln, code = codes[sym]
-        self.w.put(code, ln)
-
-    def emit_eobrun(self):
-        if self.eobrun > 0:
-            nbits = self.eobrun.bit_length() - 1
-            self.put_sym(_JZP_AC_CODES, nbits << 4)
-            if nbits:
-                self.w.put(self.eobrun, nbits)
-            self.eobrun = 0
-            for b in self.be_bits:
-                self.w.put(b, 1)
-            self.be_bits = []
-
-    def flush_br(self):
-        for b in self.br_bits:
-            self.w.put(b, 1)
-        self.br_bits = []
-
-    def restart(self, rst_idx):
-        self.emit_eobrun()
-        self.chunks.append(self.w.flush())
-        self.chunks.append(bytes([0xFF, 0xD0 + (rst_idx % 8)]))
-        self.w = _JzBitWriter()
-
-    def finish(self):
-        self.emit_eobrun()
-        self.chunks.append(self.w.flush())
-        return b"".join(self.chunks)
-
-
-def _jzp_dc_scan(sw, dcs, preds, ah, al, ri=0):
-    """Interleaved DC scan over all components' shared 4:4:4 block
-    raster. dcs: list of (nby, nbx, 64) zigzag coefficient arrays —
-    only index 0 (DC) is read here."""
-    nby, nbx = dcs[0].shape[:2]
-    unit = 0
-    rst = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if ri and unit and unit % ri == 0:
-                sw.restart(rst)
-                rst += 1
-                for i in range(len(preds)):
-                    preds[i] = 0
-            for ci, dc in enumerate(dcs):
-                v = int(dc[by, bx, 0]) >> al  # arithmetic point transform
-                if ah == 0:
-                    diff = v - preds[ci]
-                    preds[ci] = v
-                    t = _jz_category(diff)
-                    ln, code = _JZ_DC_CODES[t]
-                    sw.w.put(code, ln)
-                    if t:
-                        sw.w.put(diff if diff >= 0 else diff + (1 << t) - 1, t)
-                else:
-                    sw.w.put(v & 1, 1)
-            unit += 1
-
-
-def _jzp_ac_first_scan(sw, blocks, ss, se, al, ri=0):
-    nby, nbx = blocks.shape[:2]
-    unit = 0
-    rst = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if ri and unit and unit % ri == 0:
-                sw.restart(rst)
-                rst += 1
-            blk = blocks[by, bx]
-            r = 0
-            for k in range(ss, se + 1):
-                v = int(blk[k])
-                t = abs(v) >> al  # magnitude point transform (AC)
-                if t == 0:
-                    r += 1
-                    continue
-                if v < 0:
-                    t = -t
-                sw.emit_eobrun()
-                while r > 15:
-                    sw.put_sym(_JZP_AC_CODES, 0xF0)
-                    r -= 16
-                s = abs(t).bit_length()
-                sw.put_sym(_JZP_AC_CODES, (r << 4) | s)
-                sw.w.put(t if t >= 0 else t + (1 << s) - 1, s)
-                r = 0
-            if r > 0:
-                sw.eobrun += 1
-                if sw.eobrun == 0x7FFF:
-                    sw.emit_eobrun()
-            unit += 1
-
-
-def _jzp_ac_refine_scan(sw, blocks, ss, se, al, ri=0):
-    nby, nbx = blocks.shape[:2]
-    unit = 0
-    rst = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if ri and unit and unit % ri == 0:
-                sw.restart(rst)
-                rst += 1
-            blk = blocks[by, bx]
-            absv = [abs(int(blk[k])) >> al for k in range(se + 1)]
-            eob_k = ss - 1  # last newly-nonzero position
-            for k in range(ss, se + 1):
-                if absv[k] == 1:
-                    eob_k = k
-            r = 0
-            for k in range(ss, se + 1):
-                t = absv[k]
-                if t == 0:
-                    r += 1
-                    continue
-                while r > 15 and k <= eob_k:
-                    sw.emit_eobrun()
-                    sw.put_sym(_JZP_AC_CODES, 0xF0)
-                    r -= 16
-                    sw.flush_br()
-                if t > 1:  # history coefficient: one correction bit
-                    sw.br_bits.append(t & 1)
-                    continue
-                sw.emit_eobrun()
-                sw.put_sym(_JZP_AC_CODES, (r << 4) | 1)
-                sw.w.put(1 if int(blk[k]) >= 0 else 0, 1)
-                sw.flush_br()
-                r = 0
-            if r > 0 or sw.br_bits:
-                sw.eobrun += 1
-                sw.be_bits.extend(sw.br_bits)
-                sw.br_bits = []
-                if sw.eobrun == 0x7FFF:
-                    sw.emit_eobrun()
-            unit += 1
-
-
-def _jzp_quantized_components(px, gray, q_luma, q_chroma):
-    """(name, tq, blocks) per component — blocks (nby, nbx, 64) int in
-    ZIGZAG order, the shared coefficient source for every scan."""
-    zz = _jz_zigzag()
-    if gray:
-        h, w_ = px.shape
-        planes = [(px.astype(np.float64), 0)]
-    else:
-        h, w_ = px.shape[:2]
-        r, g, b = (px[..., i].astype(np.float64) for i in range(3))
-        planes = [
-            (0.299 * r + 0.587 * g + 0.114 * b, 0),
-            (128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b, 1),
-            (128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b, 1),
-        ]
-    qt = {0: float(q_luma), 1: float(q_chroma)}
-    nby, nbx = -(-h // 8), -(-w_ // 8)
-    out = []
-    for pl, tq in planes:
-        pad = np.pad(pl, ((0, nby * 8 - h), (0, nbx * 8 - w_)), mode="edge") - 128.0
-        blocks = np.zeros((nby, nbx, 64), dtype=np.int64)
-        for by in range(nby):
-            for bx in range(nbx):
-                f = _jz_fdct(pad[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8])
-                fq = np.round(f.flatten() / qt[tq]).astype(np.int64)
-                blocks[by, bx] = fq[zz]  # store zigzag order
-        out.append((tq, blocks))
-    return out, (h, w_)
-
-
-_JZP_COLOR_SCRIPT = [
-    ("dc", None, 0, 0, 0, 1),
-    ("ac", 0, 1, 5, 0, 2),
-    ("ac", 1, 1, 63, 0, 1),
-    ("ac", 2, 1, 63, 0, 1),
-    ("ac", 0, 6, 63, 0, 2),
-    ("ac", 0, 1, 63, 2, 1),
-    ("dc", None, 0, 0, 1, 0),
-    ("ac", 1, 1, 63, 1, 0),
-    ("ac", 2, 1, 63, 1, 0),
-    ("ac", 0, 1, 63, 1, 0),
-]
-_JZP_GRAY_SCRIPT = [
-    ("dc", None, 0, 0, 0, 1),
-    ("ac", 0, 1, 63, 0, 1),
-    ("dc", None, 0, 0, 1, 0),
-    ("ac", 0, 1, 63, 1, 0),
-]
-
-
-def _jzp_encode_progressive(
-    px, *, gray=False, q_luma=8, q_chroma=8, script=None, restart_interval=0
-):
-    """Progressive JPEG bytes (SOF2) for the same pixel contract as
-    _jz_encode — the default script mirrors libjpeg's standard
-    progression (DC Al=1 → AC bands → AC refine → DC refine →
-    final AC refinements)."""
-    comps, (h, w_) = _jzp_quantized_components(px, gray, q_luma, q_chroma)
-    if script is None:
-        script = _JZP_GRAY_SCRIPT if gray else _JZP_COLOR_SCRIPT
-    out = bytearray(b"\xff\xd8")
-    for tq in sorted({tq for tq, _ in comps}):
-        q = q_luma if tq == 0 else q_chroma
-        out += _jz_seg(0xDB, bytes([tq]) + bytes([int(q)] * 64))
-    sof = struct.pack(">BHHB", 8, h, w_, len(comps))
-    for i, (tq, _) in enumerate(comps):
-        sof += bytes([i + 1, 0x11, tq])
-    out += _jz_seg(0xC2, sof)
-    out += _jz_seg(0xC4, _jz_dht(0, 0, _JZ_DC_SYMS, 4))
-    out += _jz_seg(0xC4, _jz_dht(1, 0, _JZP_AC_SYMS, 8))
-    if restart_interval:
-        out += _jz_seg(0xDD, struct.pack(">H", restart_interval))
-    preds = None
-    for kind, ci, ss, se, ah, al in script:
-        sw = _JzpScanWriter()
-        if kind == "dc":
-            sos = bytes([len(comps)])
-            for i in range(len(comps)):
-                sos += bytes([i + 1, 0x00])
-            sos += bytes([ss, se, (ah << 4) | al])
-            preds = [0] * len(comps)
-            _jzp_dc_scan(
-                sw, [b for _, b in comps], preds, ah, al,
-                ri=restart_interval,
-            )
-        else:
-            sos = bytes([1, ci + 1, 0x00, ss, se, (ah << 4) | al])
-            blocks = comps[ci][1]
-            if ah == 0:
-                _jzp_ac_first_scan(sw, blocks, ss, se, al, ri=restart_interval)
-            else:
-                _jzp_ac_refine_scan(sw, blocks, ss, se, al, ri=restart_interval)
-        out += _jz_seg(0xDA, sos)
-        out += sw.finish()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def test_progressive_jpeg_equals_baseline_of_same_coefficients():
-    """The strongest oracle: a progressive stream carrying the SAME
-    quantized coefficients as a baseline stream must reconstruct the
-    same pixels (spectral selection + successive approximation merely
-    reorder the bits). Both encoders share the quantization front end;
-    the decode paths (per-block Huffman walk vs multi-scan coefficient
-    accumulation + vectorized IDCT) share only the reconstruction
-    tail — agreement to the last rounding step is the check."""
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    h, w = 24, 40
-    yy, xx = np.mgrid[0:h, 0:w]
-    px = np.stack(
-        [
-            (xx * 5) % 200 + 20,
-            (yy * 7) % 180 + 30,
-            ((xx + yy) * 3) % 160 + 40,
-        ],
-        axis=2,
-    ).astype(np.uint8)
-    base = decode_jpeg(_jz_encode(px))
-    prog = decode_jpeg(_jzp_encode_progressive(px))
-    assert prog["format"] == "image/jpeg;nc=3"
-    assert (prog["width"], prog["height"]) == (w, h)
-    diff = np.abs(prog["pixels"].astype(int) - base["pixels"].astype(int))
-    assert diff.max() <= 1, f"progressive deviates from baseline by {diff.max()}"
-    assert (diff > 0).mean() < 0.01
-
-
-def test_progressive_jpeg_grayscale_and_odd_size():
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    g = (np.add.outer(np.arange(19) * 3, np.arange(13) * 5) % 200 + 20).astype(
-        np.uint8
-    )
-    base = decode_jpeg(_jz_encode(g, gray=True))
-    prog = decode_jpeg(_jzp_encode_progressive(g, gray=True))
-    assert prog["format"] == "image/jpeg;nc=1"
-    diff = np.abs(prog["pixels"].astype(int) - base["pixels"].astype(int))
-    assert diff.max() <= 1
-
-
-def test_progressive_jpeg_spectral_selection_only():
-    """A script with NO successive approximation (Ah=Al=0 everywhere)
-    exercises pure spectral selection + cross-block EOB runs."""
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    px = np.zeros((16, 24, 3), dtype=np.uint8)
-    px[:8] = (200, 40, 40)
-    px[8:] = (40, 40, 200)
-    script = [
-        ("dc", None, 0, 0, 0, 0),
-        ("ac", 0, 1, 9, 0, 0),
-        ("ac", 0, 10, 63, 0, 0),
-        ("ac", 1, 1, 63, 0, 0),
-        ("ac", 2, 1, 63, 0, 0),
-    ]
-    base = decode_jpeg(_jz_encode(px))
-    prog = decode_jpeg(_jzp_encode_progressive(px, script=script))
-    diff = np.abs(prog["pixels"].astype(int) - base["pixels"].astype(int))
-    assert diff.max() <= 1
-
-
-def test_progressive_jpeg_with_restart_markers():
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    h, w = 24, 40
-    yy, xx = np.mgrid[0:h, 0:w]
-    px = np.stack(
-        [(xx * 7) % 220 + 10, (yy * 5) % 190 + 25, ((xx * yy) % 170) + 35],
-        axis=2,
-    ).astype(np.uint8)
-    plain = decode_jpeg(_jzp_encode_progressive(px))
-    rst = decode_jpeg(_jzp_encode_progressive(px, restart_interval=3))
-    assert np.array_equal(plain["pixels"], rst["pixels"])
-
-
-def test_progressive_jpeg_through_decode_media():
-    """decode_media now really decodes progressive JPEG instead of
-    stubbing (the round-10 'remaining tail' item); corrupt progressive
-    structures still degrade."""
-    from tia_data_pipeline_spark.operators.multimodal import fake_decode
-
-    px = np.full((16, 16, 3), 180, dtype=np.uint8)
-    payload = _jzp_encode_progressive(px)
-    d = decode_media(payload)
-    assert d["format"] == "image/jpeg;nc=3"
-    assert (d["width"], d["height"]) == (16, 16)
-    # interleaved AC scan is spec-invalid -> ValueError -> stub
-    bad = bytearray(_jz_encode(px))
-    bad[bad.index(b"\xff\xc0") + 1] = 0xC2  # claim progressive, keep
-    # the baseline interleaved full-band scan: mixes DC and AC
-    assert decode_media(bytes(bad)) == fake_decode(bytes(bad))
-    # truncated mid-scan
-    trunc = payload[: len(payload) // 2]
-    assert decode_media(trunc) == fake_decode(trunc)
-
-
-# ------------------------------------- multi-scan sequential baseline ----
-def _jz_encode_multiscan(px, *, q_luma=8, q_chroma=8):
-    """Sequential baseline (SOF0) with each component in its OWN
-    non-interleaved scan — spec-legal output some encoders emit, which
-    previously degraded to the stub. Reuses the progressive front end's
-    quantizer and the baseline per-block emitter."""
-    zz = _jz_zigzag()
-    comps, (h, w_) = _jzp_quantized_components(px, False, q_luma, q_chroma)
-    out = bytearray(b"\xff\xd8")
-    for tq in (0, 1):
-        q = q_luma if tq == 0 else q_chroma
-        out += _jz_seg(0xDB, bytes([tq]) + bytes([int(q)] * 64))
-    sof = struct.pack(">BHHB", 8, h, w_, len(comps))
-    for i, (tq, _) in enumerate(comps):
-        sof += bytes([i + 1, 0x11, tq])
-    out += _jz_seg(0xC0, sof)
-    out += _jz_seg(0xC4, _jz_dht(0, 0, _JZ_DC_SYMS, 4))
-    out += _jz_seg(0xC4, _jz_dht(1, 0, _JZ_AC_SYMS, 8))
-    for ci, (_, blocks) in enumerate(comps):
-        sos = bytes([1, ci + 1, 0x00, 0, 63, 0])
-        out += _jz_seg(0xDA, sos)
-        wtr = _JzBitWriter()
-        pred = 0
-        nby, nbx = blocks.shape[:2]
-        for by in range(nby):
-            for bx in range(nbx):
-                # _jz_emit_block expects a row-major flat block; invert
-                # the stored zigzag order
-                fq = np.zeros(64, dtype=np.int64)
-                fq[zz] = blocks[by, bx]
-                pred = _jz_emit_block(wtr, fq, pred, zz)
-        out += wtr.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def test_multiscan_sequential_baseline_equals_interleaved():
-    """A 3-scan non-interleaved SOF0 stream carrying the same
-    quantized coefficients as the single interleaved scan must decode
-    to the same pixels (previously it degraded to the stub via the
-    one-scan layout check)."""
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    h, w = 24, 40
-    yy, xx = np.mgrid[0:h, 0:w]
-    px = np.stack(
-        [
-            (xx * 5) % 200 + 20,
-            (yy * 7) % 180 + 30,
-            ((xx + yy) * 3) % 160 + 40,
-        ],
-        axis=2,
-    ).astype(np.uint8)
-    inter = decode_jpeg(_jz_encode(px))
-    multi = decode_jpeg(_jz_encode_multiscan(px))
-    assert multi["format"] == "image/jpeg;nc=3"
-    assert (multi["width"], multi["height"]) == (w, h)
-    diff = np.abs(multi["pixels"].astype(int) - inter["pixels"].astype(int))
-    assert diff.max() <= 1
-
-
-def test_multiscan_incomplete_coverage_degrades_to_stub():
-    """A sequential stream whose scans do not cover every frame
-    component (or cover one twice) is corrupt -> ValueError -> stub."""
-    from tia_data_pipeline_spark.operators.multimodal import fake_decode
-
-    px = np.full((16, 16, 3), 120, dtype=np.uint8)
-    payload = _jz_encode_multiscan(px)
-    # drop the LAST scan: find the third SOS and truncate to EOI
-    sos_positions = []
-    i = 0
-    while True:
-        i = payload.find(b"\xff\xda", i + 1)
-        if i < 0:
-            break
-        sos_positions.append(i)
-    assert len(sos_positions) == 3
-    truncated = payload[: sos_positions[2]] + b"\xff\xd9"
-    assert decode_media(truncated) == fake_decode(truncated)
-
-
-@pytest.mark.slow
-def test_progressive_random_scripts_fuzz_equals_baseline():
-    """Script-space fuzz: random spectral-band splits, random
-    successive-approximation ladder depths, and random interleavings
-    of the components' scans must ALL reconstruct the baseline pixels
-    (the coefficient content is script-invariant). Catches ladder/band
-    bookkeeping bugs the fixed default script cannot reach."""
-    import random as _random
-
-    from tia_data_pipeline_spark.functions.codecs import decode_jpeg
-
-    rng = _random.Random(411)
-    nprng = np.random.default_rng(411)
-    for trial in range(6):
-        h = int(rng.choice([8, 13, 16, 24]))
-        w = int(rng.choice([8, 11, 24, 32]))
-        px = nprng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        script = []
-        # DC ladder: first pass at Al=d, then single-bit refines to 0
-        d = rng.randint(0, 2)
-        script.append(("dc", None, 0, 0, 0, d))
-        dc_refines = [("dc", None, 0, 0, al + 1, al) for al in range(d - 1, -1, -1)]
-        ac_scans = []
-        for ci in range(3):
-            # random band split of 1..63 into 1-3 segments
-            cuts = sorted(rng.sample(range(2, 63), rng.randint(0, 2)))
-            bounds = [1] + cuts + [64]
-            a = rng.randint(0, 2)  # ladder depth for this component
-            for lo, hi in zip(bounds, bounds[1:]):
-                ac_scans.append(("ac", ci, lo, hi - 1, 0, a))
-            for al in range(a - 1, -1, -1):
-                # refine the whole AC region at once (legal: every
-                # coefficient had its first pass at al+1)
-                ac_scans.append(("ac", ci, 1, 63, al + 1, al))
-        # shuffle AC scans but keep each component's own ORDER (first
-        # passes before refines, ladder descending) — merge the three
-        # per-component queues in random interleaving
-        queues = {ci: [s for s in ac_scans if s[1] == ci] for ci in range(3)}
-        merged = []
-        while any(queues.values()):
-            ci = rng.choice([c for c in queues if queues[c]])
-            merged.append(queues[ci].pop(0))
-        script += dc_refines + merged
-        base = decode_jpeg(_jz_encode(px))
-        prog = decode_jpeg(_jzp_encode_progressive(px, script=script))
-        diff = np.abs(prog["pixels"].astype(int) - base["pixels"].astype(int))
-        assert diff.max() <= 1, (
-            f"trial {trial} ({h}x{w}, script {script}) deviates by {diff.max()}"
-        )

@@ -10,22 +10,14 @@ need none — their layouts are public byte structures:
   bit depth.
 - **WAV** (RIFF PCM): chunk walk → channels, sample rate, bit depth,
   sample count, duration.
-- **PNG** (round 9+): REAL decode over stdlib zlib — chunk walk, all
-  five scanline filters, 8-bit gray/gray-alpha/RGB/RGBA and paletted
-  images, 16-bit depth reduction — plus a deflate re-encoder. See the
-  PNG section below for supported shapes and the fixed decode budget.
-- **JPEG** (round 10): REAL baseline decode — marker/table parse,
-  canonical Huffman, dequantize + dezigzag, matrix IDCT, generic MCU
-  layout (4:4:4 / 4:2:2 / 4:2:0), restart markers, grayscale and
-  YCbCr→RGB. Decoder-only (no encoder); progressive/arithmetic/12-bit
-  raise → the stub seam. Verified against an independent test-side
-  encoder AND a direct cosine-sum reference inverse (±1).
 
-Remaining compressed formats (MP3/H.264, progressive JPEG) still
-require a real codec library; :func:`decode_media` falls
-back to the deterministic stub for those, preserving the documented
-injection seam (``operators/multimodal.py``): a deployment swaps in
-Pillow/ffmpeg callables with the same signatures.
+This module is the one place that says which formats decode for real.
+Compressed formats (PNG, JPEG, MP3, H.264) need a real codec library:
+:func:`sniff_format` labels them, and :func:`decode_media`,
+:func:`resize_media` and :func:`media_features` give them the
+deterministic stub, preserving the documented injection seam
+(``operators/multimodal.py``): a deployment swaps in Pillow/ffmpeg
+callables with the same signatures.
 
 Everything here runs INSIDE the Arrow ``mapInPandas`` batches — plain
 bytes-in/dict-out functions, no Spark imports, trivially testable.
@@ -120,259 +112,6 @@ def resize_nearest(pixels: np.ndarray, target_w: int, target_h: int) -> np.ndarr
     return pixels[ys[:, None], xs[None, :]]
 
 
-# ---------------------------------------------------------------- PNG ----
-#
-# PNG is a public byte structure over stdlib zlib: 8-byte signature,
-# length-type-data-CRC chunks, IHDR geometry, IDAT = one zlib stream of
-# filtered scanlines. The container ships no image libraries, but
-# inflate + the five scanline filters (None/Sub/Up/Average/Paeth) need
-# none — so the most common real-corpus image format gets REAL pixels
-# (VERDICT r8 #5). Supported: 8- and 16-bit truecolor RGB/RGBA,
-# grayscale and gray+alpha (widened to RGB; 16-bit reduces to the high
-# byte per spec), 8-bit paletted (PLTE lookup), and Adam7 interlaced
-# (each pass unfiltered independently, scattered onto the full raster)
-# — the shapes stock encoders emit. Sub-byte palettes still raise →
-# the deterministic stub fallback, preserving the injection seam. All
-# decodes are bounded by a FIXED raster budget (geometry is attacker-
-# controlled; see _PNG_MAX_RASTER_BYTES).
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color_type -> samples/pixel
-# Fixed decode budget for the unfiltered raster (width×height×bpp +
-# one filter byte per row). IHDR geometry is ATTACKER-CONTROLLED, so
-# every allocation bound must compare against this constant, never
-# against a value derived from the header alone (ADVICE r9 #1). 64 MB
-# covers ~16 MP RGBA — far beyond feature-extraction thumbnails; bulk
-# decode of larger assets goes through the documented real-codec seam.
-_PNG_MAX_RASTER_BYTES = 64 << 20
-
-
-def _png_chunks(payload: bytes):
-    """(type, data) pairs of the chunk stream (CRCs not verified —
-    corruption surfaces as a zlib/shape error on the same ValueError
-    fallback path)."""
-    i = len(_PNG_SIG)
-    while i + 8 <= len(payload):
-        (size,) = struct.unpack_from(">I", payload, i)
-        ctype = payload[i + 4 : i + 8]
-        yield ctype, payload[i + 8 : i + 8 + size]
-        if ctype == b"IEND":
-            return
-        i += 12 + size  # len + type + data + CRC
-
-
-# Adam7 pass grid per the spec: (x_origin, y_origin, x_step, y_step)
-_ADAM7 = (
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-)
-
-
-def _adam7_passes(w: int, h: int) -> list[tuple[int, int, int, int, int, int]]:
-    """Non-empty Adam7 passes as (x0, y0, dx, dy, pass_w, pass_h) —
-    each pass is serialized as an independent reduced image (its own
-    filter byte per reduced scanline), in this fixed order."""
-    out = []
-    for x0, y0, dx, dy in _ADAM7:
-        wp = (w - x0 + dx - 1) // dx
-        hp = (h - y0 + dy - 1) // dy
-        if wp > 0 and hp > 0:
-            out.append((x0, y0, dx, dy, wp, hp))
-    return out
-
-
-def _png_unfilter(raw: bytes, w: int, h: int, bpp: int) -> np.ndarray:
-    """Reverse the per-scanline filters → (h, w*bpp) uint8 matrix.
-
-    Sub is a per-byte-lane prefix sum (vectorized cumsum mod 256), Up
-    a vectorized add of the prior reconstructed row; Average and Paeth
-    depend on the in-row left neighbor, so those ROWS reconstruct with
-    a per-byte loop — fine at feature-extraction batch sizes, and the
-    documented seam swaps in a real codec for bulk decode."""
-    stride = w * bpp
-    if len(raw) < h * (stride + 1):
-        raise ValueError("truncated PNG raster")
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        off = y * (stride + 1)
-        ftype = raw[off]
-        line = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=off + 1)
-        if ftype == 0:  # None
-            cur = line.copy()
-        elif ftype == 1:  # Sub: prefix sum per byte lane
-            cur = (
-                line.reshape(-1, bpp).astype(np.int64).cumsum(axis=0) % 256
-            ).astype(np.uint8).reshape(-1)
-        elif ftype == 2:  # Up
-            cur = line + prev  # uint8 wraps mod 256, per spec
-        elif ftype in (3, 4):  # Average / Paeth: left-dependent
-            cur = np.zeros(stride, dtype=np.uint8)
-            li, pi = line.astype(np.int64), prev.astype(np.int64)
-            for x in range(stride):
-                a = int(cur[x - bpp]) if x >= bpp else 0
-                b = int(pi[x])
-                if ftype == 3:
-                    cur[x] = (li[x] + ((a + b) >> 1)) & 0xFF
-                else:
-                    c = int(out[y - 1, x - bpp]) if (x >= bpp and y > 0) else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    cur[x] = (li[x] + pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter {ftype}")
-        out[y] = cur
-        prev = out[y]
-    return out
-
-
-def decode_png(payload: bytes) -> dict:
-    """PNG → metadata + pixel array (h, w, 3) uint8 (alpha dropped,
-    grayscale widened — one RGB contract shared with decode_ppm so the
-    feature extractor is format-blind)."""
-    import zlib
-
-    if payload[: len(_PNG_SIG)] != _PNG_SIG:
-        raise ValueError("not a PNG")
-    width = height = None
-    plte = None
-    idat = bytearray()
-    for ctype, data in _png_chunks(payload):
-        if ctype == b"IHDR":
-            width, height, depth, color, comp, filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-            if color not in _PNG_CHANNELS:
-                raise ValueError(f"unsupported PNG color type {color}")
-            # 16-bit samples reduce to their high byte (the spec's own
-            # depth reduction); paletted images are 8-bit indexes only
-            # (1/2/4-bit packed palettes stay on the stub fallback)
-            if depth not in (8, 16) or (color == 3 and depth != 8):
-                raise ValueError(f"unsupported PNG bit depth {depth}")
-            if interlace not in (0, 1):
-                raise ValueError(f"unknown PNG interlace method {interlace}")
-            if comp or filt:
-                raise ValueError("nonstandard PNG compression/filter method")
-            if width < 1 or height < 1:
-                raise ValueError("non-positive PNG dimensions")
-        elif ctype == b"PLTE":
-            plte = data
-        elif ctype == b"IDAT":
-            idat.extend(data)
-    if width is None or not idat:
-        raise ValueError("PNG without IHDR/IDAT")
-    channels = _PNG_CHANNELS[color]
-    bpp = channels * (depth // 8)  # filter unit = BYTES per pixel
-    # bounded inflate: IHDR fixes the raster size, so cap the output at
-    # exactly that (+1 byte to detect overrun) — an unbounded
-    # zlib.decompress would let a crafted decompression-bomb payload
-    # allocate the full inflated buffer and OOM the executor BEFORE the
-    # truncated/oversized checks could route it to the stub fallback
-    # (review r9); this path runs inside the corpus-facing pandas UDF,
-    # where "corrupt payload degrades, never kills the batch" is the
-    # contract
-    passes = (
-        _adam7_passes(width, height)
-        if interlace
-        else [(0, 0, 1, 1, width, height)]
-    )
-    expected = sum(hp * (wp * bpp + 1) for *_xy, wp, hp in passes)
-    # …and the cap itself must not trust IHDR (ADVICE r9 #1: a payload
-    # CLAIMING huge dimensions re-derives a huge cap — a 306 KB bomb
-    # reached a 631 MB allocation through `expected`): reject
-    # implausible geometry against a FIXED budget before any inflate,
-    # routing oversized claims to the stub fallback like every other
-    # unsupported shape
-    if expected > _PNG_MAX_RASTER_BYTES:
-        raise ValueError(
-            f"PNG raster {width}x{height}x{bpp} exceeds the "
-            f"{_PNG_MAX_RASTER_BYTES >> 20} MB decode budget"
-        )
-    raw = zlib.decompressobj().decompress(bytes(idat), expected + 1)
-    if len(raw) > expected:
-        raise ValueError("PNG raster larger than IHDR geometry")
-    if interlace:
-        # Adam7 (round 10): each pass is an independent reduced image —
-        # own scanline filters over its own reduced stride — unfiltered
-        # with the SAME engine as the sequential path, then scattered
-        # onto the full raster at the pass's (x0, y0, dx, dy) grid
-        mat = np.zeros((height, width * bpp), dtype=np.uint8)
-        off = 0
-        for x0, y0, dx, dy, wp, hp in passes:
-            seg_len = hp * (wp * bpp + 1)
-            sub = _png_unfilter(raw[off : off + seg_len], wp, hp, bpp)
-            off += seg_len
-            full = mat.reshape(height, width, bpp)
-            full[y0::dy, x0::dx, :] = sub.reshape(hp, wp, bpp)
-    else:
-        mat = _png_unfilter(raw, width, height, bpp)
-    if depth == 16:
-        # big-endian 16-bit samples → most-significant byte (the
-        # spec-sanctioned reduction to 8 bits)
-        mat = np.ascontiguousarray(
-            mat.reshape(height, width, channels, 2)[:, :, :, 0]
-        )
-    else:
-        mat = mat.reshape(height, width, channels)
-    if color == 0:  # gray -> RGB
-        pixels = np.repeat(mat, 3, axis=2)
-    elif color == 2:  # RGB
-        pixels = mat
-    elif color == 3:  # palette indexes -> RGB lookup
-        if plte is None or len(plte) < 3 or len(plte) % 3:
-            raise ValueError("paletted PNG without a valid PLTE chunk")
-        pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-        idxs = mat[:, :, 0]
-        if int(idxs.max(initial=0)) >= pal.shape[0]:
-            raise ValueError("PNG palette index out of range")
-        pixels = pal[idxs]
-    elif color == 4:  # gray+alpha -> RGB (alpha dropped)
-        pixels = np.repeat(mat[:, :, :1], 3, axis=2)
-    else:  # RGBA -> RGB (alpha dropped)
-        pixels = mat[:, :, :3]
-    return {
-        "format": f"image/png;color={color}",
-        "width": int(width),
-        "height": int(height),
-        "maxval": 255,
-        "pixels": np.ascontiguousarray(pixels),
-        "checksum": int(mat.astype(np.int64).sum()) % 2_147_483_647,
-    }
-
-
-def encode_png(pixels: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 → 8-bit truecolor PNG (filter 0 scanlines,
-    stdlib zlib deflate) — the re-encode leg that makes PNG resize a
-    REAL decode→transform→encode path like PPM's."""
-    import zlib
-
-    h, w = pixels.shape[:2]
-    px = pixels.astype(np.uint8)
-    raw = b"".join(b"\x00" + px[y].tobytes() for y in range(h))
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
 # ---------------------------------------------------------------- BMP ----
 def decode_bmp(payload: bytes) -> dict:
     """Uncompressed BMP header → dimensions/bit depth (no raster read;
@@ -435,1005 +174,21 @@ def decode_wav(payload: bytes) -> dict:
 
 
 # ---------------------------------------------------------- dispatch ----
-# --------------------------------------------------------------- JPEG ----
-#
-# Baseline sequential JPEG (SOF0/SOF1, Huffman-coded, 8-bit) is — like
-# PNG — a public byte structure needing no codec library: marker
-# segments carry the quantization and Huffman tables, the scan is an
-# entropy-coded stream of 8×8 DCT blocks, and the inverse DCT is one
-# 8×8 matrix product. Supported: grayscale and YCbCr with any
-# sampling factors ≤ 4 (4:4:4 / 4:2:2 / 4:2:0 all fall out of the
-# generic MCU layout), restart markers, 8/16-bit quant precision.
-# Progressive (SOF2) / arithmetic coding / 12-bit raise → the stub
-# seam, same posture as interlaced PNG. The entropy loop is
-# plain-Python per block — feature-extraction batch sizes, with the
-# documented real-codec injection seam for bulk decode.
-
-# JPEG decode budget: geometry is attacker-controlled (the PNG rule),
-# and the binding resource here is the float64 WORKING SET (~72 B/px:
-# 3 channels × 8 bytes × ~3 full-geometry copies through upsample +
-# color conversion) plus the per-block Python entropy loop. 256 MB of
-# working set caps decode at ~3.7 MP (≈2300×1600 — web/photo sizes
-# decode for real; a poster-size claim degrades to the stub) and the
-# block loop at ~58k blocks. Deliberately a SEPARATE constant from the
-# PNG raster budget: the two bound different resources, and retuning
-# one must not silently move the other.
-_JPEG_WORKING_BYTES_PER_PIXEL = 72
-_JPEG_MAX_WORKING_BYTES = 256 << 20
-
-# zigzag scan order: index k in the stream -> linear position in the
-# row-major 8x8 block (the spec's Figure A.6 walk, generated by the
-# standard diagonal traversal)
-_JPEG_ZIGZAG = np.array(
-    [
-        0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-        12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-        35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-        58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-    ],
-    dtype=np.int64,
-)
-
-# orthonormal 8-point DCT-II basis: A[u, x] = c(u)/2 · cos((2x+1)uπ/16)
-# — spatial = Aᵀ·F·A is the inverse transform
-_JPEG_IDCT_A = np.array(
-    [
-        [
-            (np.sqrt(0.5) if u == 0 else 1.0)
-            / 2.0
-            * np.cos((2 * x + 1) * u * np.pi / 16.0)
-            for x in range(8)
-        ]
-        for u in range(8)
-    ]
-)
-
-
-class _JpegBits:
-    """MSB-first bit reader over an UNSTUFFED entropy segment."""
-
-    __slots__ = ("data", "pos", "buf", "n")
-
-    def __init__(self, data: bytes):
-        self.data, self.pos, self.buf, self.n = data, 0, 0, 0
-
-    def receive(self, nbits: int) -> int:
-        while self.n < nbits:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated JPEG entropy segment")
-            self.buf = (self.buf << 8) | self.data[self.pos]
-            self.pos += 1
-            self.n += 8
-        self.n -= nbits
-        out = (self.buf >> self.n) & ((1 << nbits) - 1)
-        self.buf &= (1 << self.n) - 1
-        return out
-
-
-def _jpeg_huff_table(bits: bytes, vals: bytes) -> dict:
-    """Canonical Huffman table per the spec's C.2 code assignment:
-    {(length, code): symbol}."""
-    table, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            k += 1
-            code += 1
-        code <<= 1
-    return table
-
-
-def _jpeg_huff_decode(br: _JpegBits, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.receive(1)
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid JPEG Huffman code")
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    """Sign-extend a t-bit magnitude per the spec's EXTEND procedure."""
-    return v - ((1 << t) - 1) if t and v < (1 << (t - 1)) else v
-
-
-def _jpeg_decode_block(
-    br: _JpegBits, dc_tbl: dict, ac_tbl: dict, pred: int, quant: np.ndarray
-) -> tuple[np.ndarray, int]:
-    """One 8×8 block: DC diff + run-length AC, dequantize, dezigzag,
-    inverse DCT. Returns (spatial block BEFORE level shift, new DC
-    predictor)."""
-    coef = np.zeros(64, dtype=np.float64)
-    t = _jpeg_huff_decode(br, dc_tbl)
-    pred += _jpeg_extend(br.receive(t), t) if t else 0
-    coef[0] = pred
-    k = 1
-    while k < 64:
-        rs = _jpeg_huff_decode(br, ac_tbl)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:  # ZRL: sixteen zeros
-                k += 16
-                continue
-            break  # EOB
-        k += r
-        if k > 63:
-            raise ValueError("JPEG AC run overflows the block")
-        coef[k] = _jpeg_extend(br.receive(s), s)
-        k += 1
-    dq = coef * quant
-    block = np.zeros(64, dtype=np.float64)
-    block[_JPEG_ZIGZAG] = dq
-    f = block.reshape(8, 8)
-    return _JPEG_IDCT_A.T @ f @ _JPEG_IDCT_A, pred
-
-
-def _jpeg_segments(payload: bytes):
-    """(marker, data) pairs of the header segments; after each SOS a
-    ("SCAN", entropy_bytes) item follows (still stuffed, RSTs inline)
-    and the walk CONTINUES — progressive streams carry many scans,
-    with DHT updates allowed between them. Markers without a length
-    field (SOI/EOI/RST/TEM) are skipped per spec."""
-    i = 2  # past SOI
-    n = len(payload)
-    while i + 4 <= n:
-        if payload[i] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        # spec B.1.1.2: a marker may be preceded by any number of 0xFF
-        # fill bytes — skip the run so fill-padded (spec-valid) files
-        # decode for real instead of desyncing to the stub (ADVICE r10)
-        while i + 4 <= n and payload[i + 1] == 0xFF:
-            i += 1
-        if i + 4 > n:
-            break
-        marker = payload[i + 1]
-        if marker in (0x01, 0xD8) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        if marker == 0xD9:  # EOI before any scan
-            return
-        (size,) = struct.unpack_from(">H", payload, i + 2)
-        data = payload[i + 4 : i + 2 + size]
-        yield marker, data
-        i += 2 + size
-        if marker == 0xDA:
-            # entropy runs to the next real marker (stuffed 0x00 and
-            # RST0-7 stay inside; a 0xFF fill run before the ending
-            # marker terminates the scan and the outer walk skips it)
-            j = i
-            while j < n:
-                if payload[j] == 0xFF and j + 1 < n:
-                    nxt = payload[j + 1]
-                    if nxt == 0x00 or 0xD0 <= nxt <= 0xD7:
-                        j += 2
-                        continue
-                    break
-                j += 1
-            yield "SCAN", payload[i:j]
-            i = j
-
-
-def decode_jpeg(payload: bytes) -> dict:
-    """Baseline AND progressive (SOF2, Huffman) JPEG → metadata +
-    (h, w, 3) uint8 RGB pixels — the same contract as
-    decode_ppm/decode_png so the feature extractor stays format-blind.
-    Progressive scans accumulate into per-component coefficient arrays
-    (spectral selection + successive approximation per spec G.1.2);
-    arithmetic coding stays at the stub seam."""
-    if payload[:3] != b"\xff\xd8\xff":
-        raise ValueError("not a JPEG")
-    quant: dict[int, np.ndarray] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
-    frame = None
-    progressive = False
-    scans: list[dict] = []
-    pending_sos = None
-    restart_interval = 0
-    for marker, data in _jpeg_segments(payload):
-        if marker == 0xDB:  # DQT (possibly several tables per segment)
-            j = 0
-            while j < len(data):
-                pq, tq = data[j] >> 4, data[j] & 0x0F
-                j += 1
-                if pq == 0:
-                    tbl = np.frombuffer(data, dtype=np.uint8, count=64, offset=j)
-                    j += 64
-                else:
-                    tbl = np.frombuffer(data, dtype=">u2", count=64, offset=j)
-                    j += 128
-                quant[tq] = tbl.astype(np.float64)
-        elif marker == 0xC4:  # DHT (possibly several tables per segment)
-            j = 0
-            while j < len(data):
-                # short/lying segment lengths must surface as the
-                # ValueError the stub fallback catches, never as an
-                # IndexError escaping the corpus boundary (review r10)
-                if len(data) < j + 17:
-                    raise ValueError("truncated JPEG DHT segment")
-                tc, th = data[j] >> 4, data[j] & 0x0F
-                bits = data[j + 1 : j + 17]
-                nvals = sum(bits)
-                vals = data[j + 17 : j + 17 + nvals]
-                if len(vals) < nvals:
-                    raise ValueError("truncated JPEG DHT values")
-                (huff_dc if tc == 0 else huff_ac)[th] = _jpeg_huff_table(bits, vals)
-                j += 17 + nvals
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/SOF1 baseline, SOF2 progressive
-            if len(data) < 6:
-                raise ValueError("truncated JPEG SOF segment")
-            depth, h, w, nc = data[0], *struct.unpack_from(">HH", data, 1), data[5]
-            if len(data) < 6 + 3 * nc:
-                raise ValueError("truncated JPEG SOF components")
-            if depth != 8:
-                raise ValueError(f"unsupported JPEG sample precision {depth}")
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = data[6 + 3 * c : 9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
-            frame = {"w": w, "h": h, "comps": comps}
-            progressive = marker == 0xC2
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("non-baseline JPEG (lossless/arithmetic) unsupported")
-        elif marker == 0xDD:  # DRI: restart interval in MCUs
-            (restart_interval,) = struct.unpack_from(">H", data, 0)
-        elif marker == 0xDA:  # SOS
-            if not data:
-                raise ValueError("empty JPEG SOS segment")
-            ns = data[0]
-            if len(data) < 1 + 2 * ns + 3:
-                raise ValueError("truncated JPEG SOS components")
-            scan_comps = []
-            for c in range(ns):
-                cid, tt = data[1 + 2 * c : 3 + 2 * c]
-                scan_comps.append({"id": cid, "dc": tt >> 4, "ac": tt & 0x0F})
-            ss, se, a = data[1 + 2 * ns : 4 + 2 * ns]
-            pending_sos = {
-                "comps": scan_comps,
-                "ss": int(ss),
-                "se": int(se),
-                "ah": a >> 4,
-                "al": a & 0x0F,
-                # snapshot: progressive streams may redefine DHT
-                # between scans, so each scan pins the tables that
-                # were live at ITS header
-                "dc": dict(huff_dc),
-                "ac": dict(huff_ac),
-                "ri": restart_interval,
-            }
-        elif marker == "SCAN":
-            if pending_sos is None:
-                raise ValueError("JPEG scan data without a SOS header")
-            pending_sos["entropy"] = data
-            scans.append(pending_sos)
-            pending_sos = None
-    if frame is None or not scans:
-        raise ValueError("JPEG without SOF/SOS/scan data")
-    w, h, comps = frame["w"], frame["h"], frame["comps"]
-    if w < 1 or h < 1:
-        raise ValueError("non-positive JPEG dimensions")
-    if len(comps) not in (1, 3):
-        raise ValueError("unsupported JPEG component layout")
-    # fixed decode budget: SOF geometry is attacker-controlled, same
-    # rule as the PNG raster cap — but budgeted against the decoder's
-    # REAL working set, not the nominal uint8 raster (review r10): the
-    # planes are float64 and the upsample/color steps hold ~3
-    # full-geometry copies, ≈ 3ch × 8B × 3 ≈ 72 bytes/pixel. JPEG gets
-    # its OWN constant (second review pass: reusing the PNG raster
-    # constant both capped real decode at ~0.9 MP — silently stubbing
-    # ordinary photos — and made one number mean two different things).
-    if h * w * _JPEG_WORKING_BYTES_PER_PIXEL > _JPEG_MAX_WORKING_BYTES:
-        raise ValueError(
-            f"JPEG raster {w}x{h} exceeds the "
-            f"{_JPEG_MAX_WORKING_BYTES >> 20} MB decode budget"
-        )
-    if progressive:
-        return _jpeg_decode_progressive(frame, scans, quant)
-    by_id = {c["id"]: c for c in comps}
-    for c in comps:
-        if not (1 <= c["h"] <= 4 and 1 <= c["v"] <= 4):
-            raise ValueError("JPEG sampling factors out of range")
-        if c["tq"] not in quant:
-            raise ValueError("JPEG component references an undefined quant table")
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    planes = {
-        c["id"]: np.zeros((mcus_y * c["v"] * 8, mcus_x * c["h"] * 8)) for c in comps
-    }
-    # Sequential baseline may split components across SEVERAL scans
-    # (round 11; previously only the single interleaved scan decoded):
-    # each scan is interleaved within itself (ns > 1, the MCU walk on
-    # the frame grid) or non-interleaved (ns = 1, one block per MCU
-    # over the component's TRUE ceil-scaled raster). Every frame
-    # component must be decoded by exactly one scan.
-    covered: set = set()
-    for scan in scans:
-        scomps = []
-        for p in scan["comps"]:
-            c = by_id.get(p["id"])
-            if c is None:
-                raise ValueError("JPEG scan names an unknown component")
-            if p["id"] in covered:
-                raise ValueError("JPEG component decoded by two sequential scans")
-            covered.add(p["id"])
-            # a scan referencing a table no DHT defined is corrupt —
-            # surface it as the ValueError the stub fallback catches,
-            # never a KeyError escaping the batch (review r10); tables
-            # resolve from the scan's own snapshot (DHT may be
-            # redefined between sequential scans, same as progressive)
-            if p["dc"] not in scan["dc"] or p["ac"] not in scan["ac"]:
-                raise ValueError("JPEG scan references an undefined Huffman table")
-            scomps.append(
-                {
-                    **c,
-                    "dc": scan["dc"][p["dc"]],
-                    "ac": scan["ac"][p["ac"]],
-                    "q": quant[c["tq"]],
-                }
-            )
-        segments = _jpeg_entropy_segments(scan["entropy"])
-        # DRI drives segment switching deterministically: a new entropy
-        # segment (fresh bit alignment, zeroed DC predictors) starts
-        # every `ri` MCUs — never inferred from decode failures, which
-        # padding bits can mask
-        ri = scan["ri"]
-        if ri == 0 and len(segments) > 1:
-            raise ValueError("JPEG restart markers without a DRI interval")
-        seg_iter = iter(segments)
-        br = _JpegBits(next(seg_iter))
-        preds = {c["id"]: 0 for c in scomps}
-
-        def _restart():
-            nxt_seg = next(seg_iter, None)
-            if nxt_seg is None:
-                raise ValueError("JPEG scan ended before its last MCU")
-            for key in preds:
-                preds[key] = 0
-            return _JpegBits(nxt_seg)
-
-        if len(scomps) == 1:
-            c = scomps[0]
-            cw = -(-w * c["h"] // hmax)  # ceil-scaled component geometry
-            ch_ = -(-h * c["v"] // vmax)
-            nbx = -(-cw // 8)
-            nby = -(-ch_ // 8)
-            unit = 0
-            for by in range(nby):
-                for bx in range(nbx):
-                    if ri and unit and unit % ri == 0:
-                        br = _restart()
-                    block, preds[c["id"]] = _jpeg_decode_block(
-                        br, c["dc"], c["ac"], preds[c["id"]], c["q"]
-                    )
-                    planes[c["id"]][
-                        by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8
-                    ] = block
-                    unit += 1
-        else:
-            mcu = 0
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    if ri and mcu and mcu % ri == 0:
-                        br = _restart()
-                    for c in scomps:
-                        for by in range(c["v"]):
-                            for bx in range(c["h"]):
-                                block, preds[c["id"]] = _jpeg_decode_block(
-                                    br, c["dc"], c["ac"], preds[c["id"]], c["q"]
-                                )
-                                y0 = (my * c["v"] + by) * 8
-                                x0 = (mx * c["h"] + bx) * 8
-                                planes[c["id"]][y0 : y0 + 8, x0 : x0 + 8] = block
-                    mcu += 1
-    if covered != set(by_id):
-        raise ValueError("JPEG scans do not cover every component")
-    # reconstruction order = FRAME component order (the spec's Y-first
-    # contract; scan order is an interleave detail)
-    return _jpeg_reconstruct(list(comps), planes, w, h, hmax, vmax)
-
-
-def _jpeg_entropy_segments(entropy: bytes) -> list[bytes]:
-    """Unstuffed entropy segments split at restart markers: byte
-    unstuffing (FF 00 -> FF) happens per segment; each RST0-7 starts a
-    fresh segment (fresh bit alignment + zeroed DC predictors /
-    EOB run at the consumer)."""
-    segments: list[bytes] = []
-    cur = bytearray()
-    j = 0
-    while j < len(entropy):
-        b = entropy[j]
-        if b == 0xFF and j + 1 < len(entropy):
-            nxt = entropy[j + 1]
-            if nxt == 0x00:
-                cur.append(0xFF)
-                j += 2
-                continue
-            if 0xD0 <= nxt <= 0xD7:
-                segments.append(bytes(cur))
-                cur = bytearray()
-                j += 2
-                continue
-            break  # EOI or the next real marker ends the scan
-        cur.append(b)
-        j += 1
-    segments.append(bytes(cur))
-    return segments
-
-
-def _jpeg_reconstruct(
-    order: list[dict], planes: dict, w: int, h: int, hmax: int, vmax: int
-) -> dict:
-    """Shared tail of both decode paths: level shift, upsample each
-    plane to full geometry, crop, color-convert (JFIF full-range
-    BT.601), and package the contract dict."""
-    full = []
-    for c in order:
-        p = planes[c["id"]] + 128.0
-        p = np.repeat(np.repeat(p, vmax // c["v"], axis=0), hmax // c["h"], axis=1)
-        full.append(p[:h, :w])
-    if len(full) == 1:
-        g = np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
-        pixels = np.repeat(g[:, :, None], 3, axis=2)
-    else:
-        y, cb, cr = full[0], full[1] - 128.0, full[2] - 128.0
-        r = y + 1.402 * cr
-        g = y - 0.344136 * cb - 0.714136 * cr
-        b = y + 1.772 * cb
-        pixels = np.clip(np.round(np.stack([r, g, b], axis=2)), 0, 255).astype(
-            np.uint8
-        )
-    return {
-        "format": f"image/jpeg;nc={len(full)}",
-        "width": int(w),
-        "height": int(h),
-        "maxval": 255,
-        "pixels": pixels,
-        "checksum": int(pixels.astype(np.int64).sum()) % 2_147_483_647,
-    }
-
-
-def _jpeg_dc_unit(br, blk, dc_tbl, preds, cid, ah, al):
-    """One block's DC contribution in a progressive DC scan: first pass
-    (Ah=0) decodes the point-transformed difference chain and stores
-    pred << Al; a refinement pass reads one raw bit and ORs it in at
-    bit Al (two's-complement OR matches the encoder's arithmetic-shift
-    point transform for negative DC values)."""
-    if ah == 0:
-        t = _jpeg_huff_decode(br, dc_tbl)
-        if t:
-            preds[cid] += _jpeg_extend(br.receive(t), t)
-        blk[0] = preds[cid] << al
-    elif br.receive(1):
-        blk[0] = int(blk[0]) | (1 << al)
-
-
-def _jpeg_ac_first(br, ac_tbl, blk, ss, se, al, eobrun):
-    """One block of a first AC scan (Ah=0) over the band [Ss, Se]:
-    run/size pairs with ZRL, magnitudes point-transformed by << Al,
-    and EOBn symbols starting a run of end-of-band blocks (spec
-    G.1.2.2). Returns the updated EOB run (current block consumed)."""
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = _jpeg_huff_decode(br, ac_tbl)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:  # ZRL
-                k += 16
-                continue
-            eobrun = (1 << r) - 1
-            if r:
-                eobrun += br.receive(r)
-            return eobrun
-        k += r
-        if k > se:
-            raise ValueError("progressive AC run overflows the band")
-        blk[k] = _jpeg_extend(br.receive(s), s) << al
-        k += 1
-    return 0
-
-
-def _jpeg_ac_refine(br, ac_tbl, blk, ss, se, al, eobrun):
-    """One block of an AC refinement scan (Ah = Al+1) — spec G.1.2.3:
-    every coefficient with nonzero history reads a correction bit
-    (applied toward larger magnitude when bit Al is not yet set);
-    newly-nonzero coefficients arrive as (zero-history-run, size=1)
-    symbols with a raw sign bit; EOBn covers whole blocks whose
-    remaining band carries only correction bits. The interleaving of
-    correction bits with run counting follows the reference algorithm
-    structure exactly — zero-HISTORY positions consume the run,
-    nonzero-history positions do not."""
-    p1 = 1 << al
-    m1 = -p1
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = _jpeg_huff_decode(br, ac_tbl)
-            r, s = rs >> 4, rs & 0x0F
-            val = 0
-            if s == 0:
-                if r != 15:
-                    eobrun = 1 << r
-                    if r:
-                        eobrun += br.receive(r)
-                    break
-                # r == 15 (ZRL): skip 16 zero-history positions below
-            else:
-                if s != 1:
-                    raise ValueError("invalid progressive refinement magnitude")
-                val = p1 if br.receive(1) else m1
-            while k <= se:
-                c = int(blk[k])
-                if c != 0:
-                    if br.receive(1) and (c & p1) == 0:
-                        blk[k] = c + (p1 if c >= 0 else m1)
-                else:
-                    r -= 1
-                    if r < 0:
-                        break
-                k += 1
-            if val:
-                if k > se:
-                    raise ValueError("progressive refinement overflows the band")
-                blk[k] = val
-            k += 1
-    if eobrun > 0:
-        while k <= se:
-            c = int(blk[k])
-            if c != 0:
-                if br.receive(1) and (c & p1) == 0:
-                    blk[k] = c + (p1 if c >= 0 else m1)
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def _jpeg_progressive_scan(sc, by_id, coef, nblocks, mcus_x, mcus_y):
-    """Apply one progressive scan to the coefficient arrays. DC scans
-    may interleave all frame components (MCU walk); AC scans are
-    single-component by spec, walking that component's true block
-    raster. Restart markers reset bit alignment, DC predictors, and
-    the EOB run every `ri` MCUs (interleaved) or blocks."""
-    ss, se, ah, al = sc["ss"], sc["se"], sc["ah"], sc["al"]
-    if not (0 <= ss <= se <= 63) or ah > 13 or al > 13:
-        raise ValueError("invalid progressive spectral band")
-    if ss == 0 and se != 0:
-        raise ValueError("progressive scan mixes DC and AC")
-    if ss != 0 and len(sc["comps"]) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    if ah != 0 and ah != al + 1:
-        raise ValueError("successive approximation must refine one bit")
-    for p in sc["comps"]:
-        if p["id"] not in by_id:
-            raise ValueError("JPEG scan names an unknown component")
-    segments = _jpeg_entropy_segments(sc["entropy"])
-    ri = sc["ri"]
-    if ri == 0 and len(segments) > 1:
-        raise ValueError("JPEG restart markers without a DRI interval")
-    seg_iter = iter(segments)
-    br = _JpegBits(next(seg_iter))
-    preds = {p["id"]: 0 for p in sc["comps"]}
-    state = {"eobrun": 0}
-
-    def restart():
-        nonlocal br
-        nxt = next(seg_iter, None)
-        if nxt is None:
-            raise ValueError("JPEG scan ended before its last MCU")
-        br = _JpegBits(nxt)
-        state["eobrun"] = 0
-        for key in preds:
-            preds[key] = 0
-
-    if ss == 0:
-        dc_tbls = {}
-        if ah == 0:
-            for p in sc["comps"]:
-                tbl = sc["dc"].get(p["dc"])
-                if tbl is None:
-                    raise ValueError(
-                        "JPEG scan references an undefined Huffman table"
-                    )
-                dc_tbls[p["id"]] = tbl
-        if len(sc["comps"]) == 1:
-            cid = sc["comps"][0]["id"]
-            nby, nbx = nblocks[cid]
-            unit = 0
-            for by in range(nby):
-                for bx in range(nbx):
-                    if ri and unit and unit % ri == 0:
-                        restart()
-                    _jpeg_dc_unit(
-                        br, coef[cid][by, bx], dc_tbls.get(cid), preds, cid, ah, al
-                    )
-                    unit += 1
-        else:
-            mcu = 0
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    if ri and mcu and mcu % ri == 0:
-                        restart()
-                    for p in sc["comps"]:
-                        c = by_id[p["id"]]
-                        for byy in range(c["v"]):
-                            for bxx in range(c["h"]):
-                                blk = coef[c["id"]][
-                                    my * c["v"] + byy, mx * c["h"] + bxx
-                                ]
-                                _jpeg_dc_unit(
-                                    br, blk, dc_tbls.get(p["id"]), preds,
-                                    p["id"], ah, al,
-                                )
-                    mcu += 1
-    else:
-        p = sc["comps"][0]
-        ac_tbl = sc["ac"].get(p["ac"])
-        if ac_tbl is None:
-            raise ValueError("JPEG scan references an undefined Huffman table")
-        cid = p["id"]
-        nby, nbx = nblocks[cid]
-        unit = 0
-        step = _jpeg_ac_first if ah == 0 else _jpeg_ac_refine
-        for by in range(nby):
-            for bx in range(nbx):
-                if ri and unit and unit % ri == 0:
-                    restart()
-                state["eobrun"] = step(
-                    br, ac_tbl, coef[cid][by, bx], ss, se, al, state["eobrun"]
-                )
-                unit += 1
-
-
-def _jpeg_decode_progressive(frame, scans, quant):
-    """Progressive (SOF2, Huffman) reconstruction: every scan
-    accumulates into per-component ZIGZAG-ordered coefficient arrays;
-    after the last scan each component dequantizes and inverse-DCTs
-    in one vectorized pass and the shared baseline tail reassembles
-    pixels. Non-interleaved scans walk each component's TRUE block
-    raster (ceil of its scaled geometry), while the arrays stay
-    MCU-padded so interleaved DC scans index the same storage."""
-    w, h, comps = frame["w"], frame["h"], frame["comps"]
-    for c in comps:
-        if not (1 <= c["h"] <= 4 and 1 <= c["v"] <= 4):
-            raise ValueError("JPEG sampling factors out of range")
-        if c["tq"] not in quant:
-            raise ValueError("JPEG component references an undefined quant table")
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    # int32, not int64 (review r11): reconstructed coefficients are
-    # bounded by |1023 << Al| ≤ 1023·2^13 ≈ 8.4M — comfortably int32 —
-    # and the budget check at the caller is calibrated to a ~72 B/px
-    # working set; int64 arrays for 3 components alone would add
-    # 48 B/px on attacker-controlled geometry
-    coef = {
-        c["id"]: np.zeros((mcus_y * c["v"], mcus_x * c["h"], 64), dtype=np.int32)
-        for c in comps
-    }
-    nblocks = {}
-    for c in comps:
-        cw = -(-w * c["h"] // hmax)
-        ch_ = -(-h * c["v"] // vmax)
-        nblocks[c["id"]] = (-(-ch_ // 8), -(-cw // 8))
-    by_id = {c["id"]: c for c in comps}
-    for sc in scans:
-        _jpeg_progressive_scan(sc, by_id, coef, nblocks, mcus_x, mcus_y)
-    planes = {}
-    for c in comps:
-        # pop: release each component's coefficient array as soon as
-        # its plane is built — the peak working set holds ONE
-        # component's float64 temporaries, not all three (review r11)
-        arr = coef.pop(c["id"]).astype(np.float64) * quant[c["tq"]]  # zigzag·zigzag
-        blocks = np.zeros_like(arr)
-        blocks[..., _JPEG_ZIGZAG] = arr  # dezigzag to row-major (u, v)
-        f8 = blocks.reshape(arr.shape[0], arr.shape[1], 8, 8)
-        spatial = np.einsum("ui,abuv,vj->abij", _JPEG_IDCT_A, f8, _JPEG_IDCT_A)
-        planes[c["id"]] = spatial.transpose(0, 2, 1, 3).reshape(
-            arr.shape[0] * 8, arr.shape[1] * 8
-        )
-    return _jpeg_reconstruct(list(comps), planes, w, h, hmax, vmax)
-
-
-# ------------------------------------------------------- JPEG encoder ----
-# Quantization base tables from the public spec (ITU T.81 Annex K.1 /
-# K.2), row-major spatial order; scaled by the libjpeg-convention
-# quality factor at encode time. Independent of the test suite's
-# flat-table encoder (tests/test_codecs.py::_jz_encode) — the decoder
-# is verified against THAT encoder, and this encoder is verified by
-# round-trip through the decoder, so neither check is circular.
-_JPEG_QT_LUMA = np.array(
-    [
-        16, 11, 10, 16, 24, 40, 51, 61,
-        12, 12, 14, 19, 26, 58, 60, 55,
-        14, 13, 16, 24, 40, 57, 69, 56,
-        14, 17, 22, 29, 51, 87, 80, 62,
-        18, 22, 37, 56, 68, 109, 103, 77,
-        24, 35, 55, 64, 81, 104, 113, 92,
-        49, 64, 78, 87, 103, 121, 120, 101,
-        72, 92, 95, 98, 112, 100, 103, 99,
-    ],
-    dtype=np.float64,
-)
-_JPEG_QT_CHROMA = np.array(
-    [
-        17, 18, 24, 47, 99, 99, 99, 99,
-        18, 21, 26, 66, 99, 99, 99, 99,
-        24, 26, 56, 99, 99, 99, 99, 99,
-        47, 66, 99, 99, 99, 99, 99, 99,
-        99, 99, 99, 99, 99, 99, 99, 99,
-        99, 99, 99, 99, 99, 99, 99, 99,
-        99, 99, 99, 99, 99, 99, 99, 99,
-        99, 99, 99, 99, 99, 99, 99, 99,
-    ],
-    dtype=np.float64,
-)
-
-# "Typical" Huffman tables from Annex K.3 — (BITS, HUFFVAL) pairs. The
-# encoder derives its code map from these THROUGH the decoder's own
-# canonical-assignment routine, so the emitted DHT segments and the
-# entropy stream can never disagree about a code.
-_JPEG_STD_DC_LUMA = (
-    bytes([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]),
-    bytes(range(12)),
-)
-_JPEG_STD_DC_CHROMA = (
-    bytes([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]),
-    bytes(range(12)),
-)
-_JPEG_STD_AC_LUMA = (
-    bytes([0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]),
-    bytes(
-        [
-            0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-            0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-            0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-            0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
-            0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-            0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-            0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-            0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-            0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-            0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-            0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-            0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-            0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-            0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
-            0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-            0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
-            0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
-            0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-            0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
-            0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-            0xF9, 0xFA,
-        ]
-    ),
-)
-_JPEG_STD_AC_CHROMA = (
-    bytes([0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]),
-    bytes(
-        [
-            0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
-            0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
-            0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-            0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0,
-            0x15, 0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34,
-            0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-            0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38,
-            0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
-            0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-            0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
-            0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-            0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-            0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96,
-            0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-            0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-            0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3,
-            0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2,
-            0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-            0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9,
-            0xEA, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-            0xF9, 0xFA,
-        ]
-    ),
-)
-
-
-def _jpeg_quality_table(base: np.ndarray, quality: int) -> np.ndarray:
-    """Scale an Annex K base table by the libjpeg quality convention:
-    q<50 scales up (coarser), q>50 scales down, q=50 is the base, and
-    every entry stays in [1, 255] (baseline 8-bit DQT range)."""
-    if not 1 <= quality <= 100:
-        raise ValueError("JPEG quality must be in 1..100")
-    scale = 5000.0 / quality if quality < 50 else 200.0 - 2.0 * quality
-    return np.clip(np.floor((base * scale + 50.0) / 100.0), 1.0, 255.0)
-
-
-class _JpegBitWriter:
-    """MSB-first bit writer producing a STUFFED entropy segment
-    (0xFF data bytes are followed by 0x00 per spec B.1.1.5)."""
-
-    __slots__ = ("out", "acc", "n")
-
-    def __init__(self):
-        self.out, self.acc, self.n = bytearray(), 0, 0
-
-    def put(self, value: int, nbits: int) -> None:
-        if not nbits:
-            return
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.n += nbits
-        while self.n >= 8:
-            self.n -= 8
-            b = (self.acc >> self.n) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)
-            self.acc &= (1 << self.n) - 1
-
-    def finish(self) -> bytes:
-        if self.n:
-            self.put((1 << (8 - self.n)) - 1, 8 - self.n)  # 1-fill pad
-        return bytes(self.out)
-
-
-def _jpeg_enc_table(bits: bytes, vals: bytes) -> dict:
-    """symbol -> (code, length): the encoder orientation of the
-    canonical code assignment — derived THROUGH the decoder's
-    :func:`_jpeg_huff_table` so both sides of the codec share one
-    assignment routine by construction."""
-    return {
-        sym: (code, length)
-        for (length, code), sym in _jpeg_huff_table(bits, vals).items()
-    }
-
-
-def _jpeg_fdct_quantized(plane: np.ndarray, qt: np.ndarray) -> np.ndarray:
-    """Level-shift, forward-DCT, and quantize every 8×8 block of a
-    padded plane at once — (by, bx, 64) int32 of ZIGZAG-ordered
-    coefficient runs. The forward transform is the exact adjoint of the
-    decoder's ``Aᵀ·F·A`` (A is orthonormal, so F = A·f·Aᵀ)."""
-    th, tw = plane.shape
-    blk = (plane - 128.0).reshape(th // 8, 8, tw // 8, 8).transpose(0, 2, 1, 3)
-    f = np.einsum("ux,byxz,vz->byuv", _JPEG_IDCT_A, blk, _JPEG_IDCT_A)
-    q = np.round(f.reshape(th // 8, tw // 8, 64) / qt.reshape(1, 1, 64))
-    # baseline categories top out at size 10 (|AC| ≤ 1023) / DC diff
-    # size 11: the theoretical coefficient bound is ±1024 (the basis-
-    # matched checkerboard at qt=1), one past the encodable range —
-    # clamp rather than emit a symbol the K.3 tables don't carry.
-    return np.clip(q[:, :, _JPEG_ZIGZAG], -1023, 1023).astype(np.int32)
-
-
-def _jpeg_encode_block(
-    w: _JpegBitWriter, zz: np.ndarray, pred: int, dc_tbl: dict, ac_tbl: dict
-) -> int:
-    """Emit one zigzag-ordered quantized block: DC difference category
-    + magnitude bits, then run-length/size AC pairs with ZRL for 16+
-    zero runs and EOB when the tail is all zero. Negative magnitudes
-    use the spec's v + 2^s - 1 encoding (the inverse of EXTEND)."""
-    dc = int(zz[0])
-    diff = dc - pred
-    s = int(abs(diff)).bit_length()
-    code, ln = dc_tbl[s]
-    w.put(code, ln)
-    if s:
-        w.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
-    nz = np.nonzero(zz[1:])[0]
-    last = int(nz[-1]) + 1 if nz.size else 0
-    run = 0
-    for k in range(1, last + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, ln = ac_tbl[0xF0]  # ZRL
-            w.put(code, ln)
-            run -= 16
-        s = abs(v).bit_length()
-        code, ln = ac_tbl[(run << 4) | s]
-        w.put(code, ln)
-        w.put(v if v >= 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last < 63:
-        code, ln = ac_tbl[0x00]  # EOB
-        w.put(code, ln)
-    return dc
-
-
-def _jpeg_marker_segment(marker: int, body: bytes) -> bytes:
-    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-
-def encode_jpeg(pixels: np.ndarray, *, quality: int = 85) -> bytes:
-    """(h, w, 3) uint8 RGB or (h, w) grayscale → baseline JFIF-style
-    JPEG bytes: BT.601 full-range color transform, 4:4:4 (no chroma
-    subsampling — resolution is preserved exactly; the decode side
-    handles subsampled inputs, but re-encoding never discards detail
-    the pipeline might re-extract), Annex K quant tables at the given
-    quality, Annex K.3 typical Huffman tables. Closes the JPEG
-    decode→transform→re-encode loop the way PNG already has its
-    deflate re-encoder (VERDICT r10 #8); round-trip error is bounded
-    by quantization, test-pinned."""
-    px = np.asarray(pixels)
-    if px.ndim == 3 and px.shape[2] == 1:
-        px = px[:, :, 0]
-    gray = px.ndim == 2
-    if not gray and (px.ndim != 3 or px.shape[2] != 3):
-        raise ValueError("encode_jpeg needs (h, w, 3) RGB or (h, w) gray")
-    h, w_ = px.shape[:2]
-    if h < 1 or w_ < 1 or h > 0xFFFF or w_ > 0xFFFF:
-        raise ValueError("JPEG dimensions out of range")
-    qt_l = _jpeg_quality_table(_JPEG_QT_LUMA, quality)
-    if gray:
-        planes = [(px.astype(np.float64), qt_l, 0)]
-    else:
-        r, g, b = (px[..., i].astype(np.float64) for i in range(3))
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        qt_c = _jpeg_quality_table(_JPEG_QT_CHROMA, quality)
-        planes = [(y, qt_l, 0), (cb, qt_c, 1), (cr, qt_c, 1)]
-    th, tw = -(-h // 8) * 8, -(-w_ // 8) * 8
-    quantized = [
-        _jpeg_fdct_quantized(
-            np.pad(pl, ((0, th - h), (0, tw - w_)), mode="edge"), qt
-        )
-        for pl, qt, _ in planes
-    ]
-
-    dc_tables = [_JPEG_STD_DC_LUMA, _JPEG_STD_DC_CHROMA]
-    ac_tables = [_JPEG_STD_AC_LUMA, _JPEG_STD_AC_CHROMA]
-    enc_dc = [_jpeg_enc_table(*t) for t in dc_tables]
-    enc_ac = [_jpeg_enc_table(*t) for t in ac_tables]
-    wtr = _JpegBitWriter()
-    preds = [0] * len(planes)
-    for by in range(th // 8):
-        for bx in range(tw // 8):
-            for ci in range(len(planes)):
-                t = 0 if ci == 0 else 1
-                preds[ci] = _jpeg_encode_block(
-                    wtr, quantized[ci][by, bx], preds[ci], enc_dc[t], enc_ac[t]
-                )
-    entropy = wtr.finish()
-
-    out = bytearray(b"\xff\xd8")
-    out += _jpeg_marker_segment(
-        0xDB, bytes([0x00]) + bytes(qt_l[_JPEG_ZIGZAG].astype(np.uint8))
-    )
-    if not gray:
-        out += _jpeg_marker_segment(
-            0xDB, bytes([0x01]) + bytes(qt_c[_JPEG_ZIGZAG].astype(np.uint8))
-        )
-    nc = len(planes)
-    sof = bytes([8]) + struct.pack(">HH", h, w_) + bytes([nc])
-    for ci, (_, _, tq) in enumerate(planes):
-        sof += bytes([ci + 1, 0x11, tq])  # h=v=1: 4:4:4
-    out += _jpeg_marker_segment(0xC0, sof)
-    n_tables = 1 if gray else 2
-    for t in range(n_tables):
-        bits, vals = dc_tables[t]
-        out += _jpeg_marker_segment(0xC4, bytes([t]) + bits + vals)
-        bits, vals = ac_tables[t]
-        out += _jpeg_marker_segment(0xC4, bytes([0x10 | t]) + bits + vals)
-    sos = bytes([nc])
-    for ci in range(nc):
-        t = 0 if ci == 0 else 1
-        sos += bytes([ci + 1, (t << 4) | t])
-    sos += bytes([0, 63, 0])
-    out += _jpeg_marker_segment(0xDA, sos)
-    out += entropy + b"\xff\xd9"
-    return bytes(out)
+# What the parsers above raise on a corrupt payload: ValueError from
+# their own guards and from numpy's buffer/reshape checks, struct.error
+# from a truncated RIFF chunk header, and OverflowError from PPM header
+# dimensions whose raster size does not fit a C ssize_t. These, and
+# only these, degrade a row to the stub or to NULL features.
+_DECODE_ERRORS = (ValueError, struct.error, OverflowError)
 
 
 def sniff_format(payload: bytes) -> str:
+    """The payload's kind from its magic bytes. ``png`` and ``jpeg``
+    are labels only: no decoder here reads them, so they take the stub
+    path like every other compressed format."""
     if payload[:2] == b"P6":
         return "ppm"
-    if payload[: len(_PNG_SIG)] == _PNG_SIG:
+    if payload[:8] == b"\x89PNG\r\n\x1a\n":
         return "png"
     if payload[:3] == b"\xff\xd8\xff":
         return "jpeg"
@@ -1447,23 +202,15 @@ def sniff_format(payload: bytes) -> str:
 def decode_media(payload: bytes) -> dict:
     """Real decode for the lib-free formats, matching the
     ``DECODED_SCHEMA`` contract of ``operators/multimodal.py``
-    (format/width/height/checksum); compressed or unknown payloads fall
-    back to the deterministic stub so the pipeline never dies on a
-    missing codec."""
-    import zlib
-
+    (format/width/height/checksum); compressed, unknown or corrupt
+    payloads fall back to the deterministic stub so the pipeline never
+    dies on a missing codec."""
     from tia_data_pipeline_spark.operators.multimodal import fake_decode
 
     kind = sniff_format(payload)
     try:
         if kind == "ppm":
             d = decode_ppm(payload)
-            return {k: d[k] for k in ("format", "width", "height", "checksum")}
-        if kind == "png":
-            d = decode_png(payload)
-            return {k: d[k] for k in ("format", "width", "height", "checksum")}
-        if kind == "jpeg":
-            d = decode_jpeg(payload)
             return {k: d[k] for k in ("format", "width", "height", "checksum")}
         if kind == "bmp":
             return decode_bmp(payload)
@@ -1476,45 +223,19 @@ def decode_media(payload: bytes) -> dict:
                 "height": d["channels"],
                 "checksum": d["n_samples"] % 2_147_483_647,
             }
-    except (ValueError, struct.error, zlib.error, KeyError, IndexError):
-        # corrupt/unsupported payload (incl. a damaged IDAT stream):
-        # degrade to the stub, never fail the batch. KeyError/IndexError
-        # are the defense-in-depth net for structurally-lying headers a
-        # parser guard missed (review r10: decode_payloads has no outer
-        # catch, so anything escaping here kills the whole Arrow batch).
+    except _DECODE_ERRORS:
         pass
     return fake_decode(payload)
 
 
 def resize_media(payload: bytes, target_w: int, target_h: int) -> bytes:
-    """Real resize for PPM, PNG, and JPEG (decode → nearest-neighbor →
-    re-encode). JPEG input may be baseline OR progressive — both decode
-    for real — and re-encodes as BASELINE (a format-narrowing
-    transcode: the encoder emits SOF0 only). Other formats fall back
-    to the stub's size-law resample."""
-    import zlib
-
-    kind = sniff_format(payload)
-    if kind == "ppm":
+    """Real resize for PPM (decode → nearest-neighbor → re-encode).
+    Other formats, and corrupt PPM, fall back to the stub's size-law
+    resample."""
+    if sniff_format(payload) == "ppm":
         try:
             return encode_ppm(resize_nearest(decode_ppm(payload)["pixels"], target_w, target_h))
-        except ValueError:
-            pass
-    elif kind == "png":
-        try:
-            return encode_png(
-                resize_nearest(decode_png(payload)["pixels"], target_w, target_h)
-            )
-        except (ValueError, zlib.error):
-            pass
-    elif kind == "jpeg":
-        try:
-            return encode_jpeg(
-                resize_nearest(decode_jpeg(payload)["pixels"], target_w, target_h)
-            )
-        except (ValueError, struct.error, KeyError, IndexError):
-            # arithmetic-coded/lossless or corrupt input: the decoder
-            # refuses, and the stub size-law keeps the pipeline alive
+        except _DECODE_ERRORS:
             pass
     from tia_data_pipeline_spark.operators.multimodal import _fake_resize
 
@@ -1560,18 +281,11 @@ def audio_features(payload: bytes) -> dict:
 
 
 def image_features(payload: bytes) -> dict:
-    """Shape/intensity features over REAL decoded pixels (PPM, PNG or
-    baseline JPEG — the decoders share the (h, w, 3) RGB contract):
+    """Shape/intensity features over REAL decoded PPM pixels:
     per-channel means, luma brightness, RMS contrast — the cheap
     screens an image curation pipeline gates on (black/blank frames,
     washed-out captures)."""
-    kind = sniff_format(payload)
-    if kind == "png":
-        d = decode_png(payload)
-    elif kind == "jpeg":
-        d = decode_jpeg(payload)
-    else:
-        d = decode_ppm(payload)
+    d = decode_ppm(payload)
     px = d["pixels"].astype(np.float64)  # (h, w, 3) in [0, maxval]
     px = px * (255.0 / max(1, d["maxval"]))
     means = px.reshape(-1, 3).mean(axis=0)
@@ -1585,3 +299,17 @@ def image_features(payload: bytes) -> dict:
         "brightness": float(luma.mean()),
         "contrast": float(luma.std()),
     }
+
+
+def media_features(payload: bytes) -> tuple[str, dict]:
+    """The payload's kind plus its content features: image stats for
+    PPM, PCM stats for WAV. Every other kind, and a corrupt payload of
+    either, gets no features (the caller's NULLs)."""
+    kind = sniff_format(payload)
+    extract = {"ppm": image_features, "wav": audio_features}.get(kind)
+    if extract is not None:
+        try:
+            return kind, extract(payload)
+        except _DECODE_ERRORS:
+            pass
+    return kind, {}

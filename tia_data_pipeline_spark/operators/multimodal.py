@@ -3,13 +3,12 @@
 Images/audio/video ride as opaque ``binary`` columns with typed
 metadata structs; decode / feature-extract / resize / frame-sample run
 as Arrow-batched pandas transforms over ``mapInPandas``. Codec status:
-**uncompressed formats decode for real** — pure-numpy PPM (full
-decode + nearest-neighbor resize + re-encode), BMP headers, RIFF/WAV
-PCM in ``functions/codecs.py``, injectable via ``decode_fn`` /
-``resize_fn``. Compressed formats (JPEG/PNG/MP3) still need a codec
-library this container lacks; for those the deterministic stub stands
-in and a deployment injects e.g. a Pillow/ffmpeg-backed callable with
-the same signature. The Spark-side plumbing — schema, batch iteration,
+``functions/codecs.py`` decodes the uncompressed formats for real with
+pure numpy and is the one module that names them; it plugs in via
+``decode_fn`` / ``resize_fn``. Compressed formats need a codec library
+this container lacks; for those the deterministic stub stands in and a
+deployment injects e.g. a Pillow/ffmpeg-backed callable with the same
+signature. The Spark-side plumbing — schema, batch iteration,
 partition sizing — is real and tested (tests/test_multimodal.py,
 tests/test_codecs.py).
 
@@ -56,8 +55,8 @@ def fake_decode(payload: bytes) -> dict:
 def _fake_resize(payload: bytes, w: int, h: int) -> bytes:
     """Deterministic stand-in resize: re-samples the byte stream to a
     size proportional to the target area (the law the q_resize_meta
-    oracle reproduces). The real lib-free path for uncompressed formats
-    is ``functions.codecs.resize_media``."""
+    oracle reproduces). ``functions.codecs.resize_media`` resizes PPM
+    for real and falls back to this law for every other payload."""
     if not payload:
         return b""
     target_len = max(1, (w * h) // 512)
@@ -114,8 +113,9 @@ def resize_images(
     The default codec is the deterministic stub (the contract oracle
     reproduces its size law); pass
     ``functions.codecs.resize_media`` for the REAL pure-numpy path on
-    uncompressed PPM payloads (decode → nearest-neighbor → re-encode),
-    or a Pillow-backed callable in deployment — same signature."""
+    PPM payloads (decode → nearest-neighbor → re-encode; other formats
+    keep the stub law), or a Pillow-backed callable in deployment —
+    same signature."""
     fn = resize_fn or _fake_resize
     out_schema = (
         f"{id_col} bigint, resized binary, width int, height int, "
@@ -195,9 +195,11 @@ def extract_media_features(
     silence, clipping).
 
     Arrow-batched ``mapInPandas`` like the sibling verbs; modality
-    columns are NULL for the other kind, and undecodable/compressed
+    columns are NULL for the other kind, and compressed or corrupt
     payloads degrade to (kind, NULLs) rather than failing the batch —
-    the same corrupt-input posture as decode_payloads."""
+    the same corrupt-input posture as decode_payloads. Which kinds
+    decode, and which errors count as corrupt input, is
+    ``functions.codecs.media_features``' business."""
     from tia_data_pipeline_spark.functions import codecs
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -208,18 +210,8 @@ def extract_media_features(
         for pdf in batches:
             rows = []
             for rid, p in zip(pdf[id_col], pdf[payload_col]):
-                payload = b"" if p is None else bytes(p)
-                kind = codecs.sniff_format(payload)
-                row = {"id": rid, "kind": kind, **base}
-                try:
-                    if kind in ("ppm", "png", "jpeg"):
-                        row.update(codecs.image_features(payload))
-                    elif kind == "wav":
-                        f = codecs.audio_features(payload)
-                        row.update(f)
-                except Exception:  # noqa: BLE001 — corrupt payload: keep NULLs
-                    pass
-                rows.append(row)
+                kind, feats = codecs.media_features(b"" if p is None else bytes(p))
+                rows.append({"id": rid, "kind": kind, **base, **feats})
             out = pd.DataFrame(rows)
             yield out[
                 ["id", "kind", "width", "height", "brightness", "contrast",
