@@ -78,9 +78,9 @@ def test_word_shingles_short_docs(spark):
 
 
 def test_minhash_portable_path_finds_planted_near_dups(spark):
-    """The md5-portable hash family must still find planted near-dups
-    (same banding math, different shingle hash), and both paths must
-    agree on the high-estimate pairs for identical planted content."""
+    """The md5-digit (engine-portable) shingle hash must find planted
+    near-dups on short documents and pair nothing with unrelated
+    text."""
     from tia_data_pipeline_spark.operators.dedup import minhash_near_duplicates
 
     base = (
@@ -89,15 +89,12 @@ def test_minhash_portable_path_finds_planted_near_dups(spark):
     )
     rows = [(1, base), (2, base + " tonight"), (3, "completely different words " * 8)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    for portable in (False, True):
-        pairs = {
-            (r["id_a"], r["id_b"])
-            for r in minhash_near_duplicates(
-                df, "text", "doc_id", threshold=0.5, portable=portable
-            ).collect()
-        }
-        assert (1, 2) in pairs, f"portable={portable} missed the planted near-dup"
-        assert all(3 not in p for p in pairs)
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_near_duplicates(df, "text", "doc_id", threshold=0.5).collect()
+    }
+    assert (1, 2) in pairs, "missed the planted near-dup"
+    assert all(3 not in p for p in pairs)
 
 
 class TestSubstringOverlap:
@@ -132,18 +129,15 @@ class TestSubstringOverlap:
         assert shared >= 5
 
     def test_short_docs_sketch_empty(self, spark):
-        from tia_data_pipeline_spark.operators.dedup import (
-            char_kmer_sketch,
-            substring_overlap_pairs,
-        )
+        from tia_data_pipeline_spark.operators.dedup import substring_overlap_pairs
 
+        # docs shorter than k and NULL texts have no k-mer to share
         df = self._frame(spark, [(1, "tiny"), (2, "tiny"), (3, None)])
-        sk = df.select(char_kmer_sketch(F.col("text"), k=32).alias("s")).collect()
-        assert [r["s"] for r in sk][:2] == [[], []]
         assert (
             substring_overlap_pairs(df.filter(F.col("text").isNotNull()), "text", "doc_id").count()
             == 0
         )
+        assert substring_overlap_pairs(df, "text", "doc_id").count() == 0
 
     def test_hot_kmer_cap_excludes_mass_duplication(self, spark):
         from tia_data_pipeline_spark.operators.dedup import substring_overlap_pairs
@@ -157,12 +151,17 @@ class TestSubstringOverlap:
         assert pairs.count() == 0
 
     def test_bad_args(self, spark):
-        from tia_data_pipeline_spark.operators.dedup import char_kmer_sketch
+        from tia_data_pipeline_spark.operators.dedup import (
+            duplicated_spans,
+            substring_overlap_pairs,
+        )
 
-        with pytest.raises(ValueError):
-            char_kmer_sketch(F.col("text"), k=1)
-        with pytest.raises(ValueError):
-            char_kmer_sketch(F.col("text"), mod=0)
+        df = self._frame(spark, [(1, "tiny")])
+        for op in (substring_overlap_pairs, duplicated_spans):
+            with pytest.raises(ValueError, match="k must be"):
+                op(df, "text", "doc_id", k=1)
+            with pytest.raises(ValueError, match="mod must be"):
+                op(df, "text", "doc_id", mod=0)
 
 
 def test_hot_shingle_10k_df_dropped_before_any_list(spark):
@@ -352,13 +351,19 @@ class TestMinhashIncrementalIndex:
 
     def test_probe_uses_index_hash_family(self, spark, tmp_path):
         """Parameter drift between writer and prober is impossible:
-        the probe derives (k, bands, seed, shingle_n, portable) from
-        the index meta, so an index written with a non-default family
-        still matches a byte-identical shard doc at est 1.0."""
+        the probe derives (k, bands, seed, shingle_n) from the index
+        meta, so an index written with a non-default family still
+        matches a byte-identical shard doc at est 1.0; a meta recording
+        the removed xxhash64 shingle hash (portable=false) raises
+        instead of silently pairing nothing."""
         from tia_data_pipeline_spark.operators.dedup import (
             minhash_write_index,
         )
-        from tia_data_pipeline_spark.operators.index import MINHASH, index_probe
+        from tia_data_pipeline_spark.operators.index import (
+            MINHASH,
+            index_meta,
+            index_probe,
+        )
 
         text = " ".join(f"t{i}" for i in range(80))
         hist = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
@@ -371,6 +376,13 @@ class TestMinhashIncrementalIndex:
         assert [(r["new_id"], r["dup_id"], r["est_jaccard"]) for r in rows] == [
             (2, 1, 1.0)
         ]
+        meta = {**index_meta(MINHASH, spark, path), "portable": False}
+        names = [c.split()[0] for c in MINHASH.meta_ddl.split(",")]
+        spark.createDataFrame(
+            [tuple(meta[n] for n in names)], MINHASH.meta_ddl
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/{MINHASH.meta_dir}")
+        with pytest.raises(ValueError, match="removed xxhash64.*rebuild"):
+            index_probe(MINHASH, shard, [path], threshold=0.9)
 
     def test_multi_probe_equals_single_probes(self, spark, index, tmp_path):
         """The MinHash input of the multi ≡ single check (the SimHash
@@ -790,22 +802,23 @@ class TestDuplicatedSpans:
         assert sub_a == sub_b
 
     def test_portable_path_matches_default_structure(self, spark):
-        from tia_data_pipeline_spark.operators.dedup import duplicated_spans
+        """The default call IS the engine-portable path: on the planted
+        corpus its spans match the DuckDB oracle value for value."""
+        import duckdb
+
+        from tests.oracle import assert_parity
+        from tia_data_pipeline_spark.operators.dedup import (
+            duplicated_spans,
+            duplicated_spans_oracle_sql,
+        )
 
         docs, _ = self._corpus(spark)
-        a = {
-            (r["id_a"], r["id_b"])
-            for r in duplicated_spans(docs, "text", "doc_id", mod=8).collect()
-        }
-        b = {
-            (r["id_a"], r["id_b"])
-            for r in duplicated_spans(
-                docs, "text", "doc_id", mod=8, portable=True
-            ).collect()
-        }
-        # different hash families sample different anchors, but the
-        # PAIR set for a 220-char planted block must agree
-        assert a == b == {(1, 2)}
+        got = duplicated_spans(docs, "text", "doc_id", mod=8)
+        assert {(r["id_a"], r["id_b"]) for r in got.collect()} == {(1, 2)}
+        con = duckdb.connect()
+        con.register("docs", docs.toArrow())
+        want = con.sql(duplicated_spans_oracle_sql("docs", "doc_id", mod=8))
+        assert_parity(got, want, "duplicated_spans")
 
     def test_short_and_null_docs_no_spans(self, spark):
         from tia_data_pipeline_spark.operators.dedup import duplicated_spans
@@ -904,7 +917,7 @@ class TestCutDuplicatedSpans:
         from tia_data_pipeline_spark.operators.dedup import cut_duplicated_spans
 
         docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-        out = cut_duplicated_spans(docs, "text", "doc_id", portable=True)
+        out = cut_duplicated_spans(docs, "text", "doc_id")
         joined = out.join(docs.select("doc_id", "text"), "doc_id")
         bad = joined.filter(
             F.col("kept_len") + F.col("cut_chars") != F.length("text")

@@ -1,28 +1,37 @@
-"""Feature ops: the pandas grouped-map z-score must agree with the
-expression-form z-score (same integer-moment construction)."""
+"""Feature ops: the expression-form z-score must match its DuckDB
+oracle (same integer-moment construction) on the corpus and on dirty,
+degenerate and decimal-typed groups."""
 
 from __future__ import annotations
 
 from tests.conftest import SMOKE_SF
+from tests.oracle import assert_parity
 from tia_data_pipeline_spark.catalog import load_table
-from tia_data_pipeline_spark.operators.features import zscore, zscore_pandas
+from tia_data_pipeline_spark.operators.features import zscore, zscore_oracle_sql
 
 
-def test_pandas_zscore_equals_expression_zscore(spark):
+def _zscore_oracle_parity(df, key_col: str, value_col: str):
+    """``zscore`` over ``df`` next to its DuckDB oracle over the same
+    rows (Arrow keeps NULL, NaN and decimal types distinct); returns
+    the Spark z-scores by event id."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("t", df.toArrow())
+    got = zscore(df, key_col, value_col)
+    assert_parity(got, con.sql(zscore_oracle_sql("t", key_col, value_col)), "zscore")
+    return {r["event_id"]: r["zscore"] for r in got.collect()}
+
+
+def test_pandas_zscore_equals_expression_zscore(spark, duck):
+    """The corpus events, degenerate groups included: both engines emit
+    SQL NULL (not float NaN) for n=1/zero-var groups."""
     events = load_table(spark, SMOKE_SF, "events")
-    a = {
-        r["event_id"]: r["zscore"]
-        for r in zscore(events, "user_id", "value").collect()
-    }
-    b = {
-        r["event_id"]: r["zscore"]
-        for r in zscore_pandas(events, "user_id", "value").collect()
-    }
-    assert set(a) == set(b)
-    for k in a:
-        # identical VALUES, including the degenerate-group case: both
-        # forms must emit SQL NULL (not float NaN) for n=1/zero-var
-        assert a[k] == b[k] or (a[k] is None and b[k] is None), f"event {k}: {a[k]} vs {b[k]}"
+    assert_parity(
+        zscore(events, "user_id", "value"),
+        duck.sql(zscore_oracle_sql("events", "user_id", "value")),
+        "zscore",
+    )
 
 
 def test_zscore_basic_properties(spark):
@@ -62,12 +71,8 @@ def test_approx_distinct_error_bound(spark):
 
 
 def test_pandas_zscore_dirty_group_and_half_cents(spark):
-    """Review r5: the pandas twin must mirror the expression form on
-    (a) groups containing NULL/NaN values (previously a hard
-    IntCastingNaNError) and (b) exact half-cents (pandas .round is
-    half-to-even where Spark F.round is HALF-UP)."""
-    from tia_data_pipeline_spark.operators.features import zscore, zscore_pandas
-
+    """Groups containing NULL/NaN values, and exact half-cents (Spark
+    F.round and DuckDB round are both HALF-UP: 12.5 cents -> 13)."""
     df = spark.createDataFrame(
         [
             (1, 1, 0.125),   # 12.5 cents: HALF-UP -> 13
@@ -79,21 +84,15 @@ def test_pandas_zscore_dirty_group_and_half_cents(spark):
         ],
         "event_id bigint, user_id bigint, value double",
     )
-    expr = {r["event_id"]: r["zscore"] for r in zscore(df, "user_id", "value").collect()}
-    pnd = {r["event_id"]: r["zscore"] for r in zscore_pandas(df, "user_id", "value").collect()}
-    assert expr == pnd
+    expr = _zscore_oracle_parity(df, "user_id", "value")
     assert expr[3] is None and expr[4] is None  # dirty rows -> NULL z
     assert expr[1] is not None  # valid stats from the 2 clean rows
 
 
 def test_pandas_zscore_dirty_degenerate_group(spark):
-    """Round-6 review: a group that is BOTH degenerate (n <= 1 valid,
-    or zero variance) AND dirty (NULL/NaN rows) previously crashed the
-    pandas twin — the NULL output series was built with n valid values
-    against len(pdf) rows. Both forms must emit NULL for every row of
+    """A group that is BOTH degenerate (n <= 1 valid, or zero variance)
+    AND dirty (NULL/NaN rows): both engines emit NULL for every row of
     such groups, including the dirty rows."""
-    from tia_data_pipeline_spark.operators.features import zscore, zscore_pandas
-
     df = spark.createDataFrame(
         [
             (1, 1, 0.5),            # single valid row + a NULL: n=1, len=2
@@ -104,21 +103,15 @@ def test_pandas_zscore_dirty_degenerate_group(spark):
         ],
         "event_id bigint, user_id bigint, value double",
     )
-    expr = {r["event_id"]: r["zscore"] for r in zscore(df, "user_id", "value").collect()}
-    pnd = {r["event_id"]: r["zscore"] for r in zscore_pandas(df, "user_id", "value").collect()}
-    assert expr == pnd
+    expr = _zscore_oracle_parity(df, "user_id", "value")
     assert all(v is None for v in expr.values())
 
 
 def test_pandas_zscore_decimal_value_column(spark):
-    """Review r7: the pandas twin derives the VALUE column's output
-    type from the input schema (a decimal-typed money column used to
-    hit a hardcoded `double` field and fail the Arrow conversion) and
-    uses math.sqrt, not var**0.5, for the denominator (the 1-ulp
-    twin-parity hazard class)."""
+    """A decimal-typed money column and a string key: the value column
+    passes through with its input type and the z-scores match the
+    oracle's."""
     from decimal import Decimal
-
-    from tia_data_pipeline_spark.operators.features import zscore, zscore_pandas
 
     rows = [
         (1, "a", Decimal("10.00")),
@@ -130,14 +123,8 @@ def test_pandas_zscore_decimal_value_column(spark):
     df = spark.createDataFrame(
         rows, "event_id bigint, k string, v decimal(18,2)"
     )
-    expr_out = {
-        r["event_id"]: r["zscore"] for r in zscore(df, "k", "v").collect()
-    }
-    pd_out = {
-        r["event_id"]: r["zscore"] for r in zscore_pandas(df, "k", "v").collect()
-    }
-    assert expr_out == pd_out
-    assert zscore_pandas(df, "k", "v").schema["v"].dataType.simpleString() == "decimal(18,2)"
+    expr_out = _zscore_oracle_parity(df, "k", "v")
+    assert expr_out[4] is not None and expr_out[4] == -expr_out[5]
 
 
 def test_approx_quantiles_rank_bound(spark):

@@ -390,7 +390,7 @@ FAN_OUT_EXPECTED = {
     # scan serializes the sort (A/B at sf0.1: 1.23→0.86)
     "q_topk_per_group",
     # round-8: per-position md5 anchors are the same CPU-heavy map
-    # shape as q_substring_dedup's portable path (measured there:
+    # shape as q_substring_dedup (measured there:
     # md5-per-position dominates); both new queries fan the scan out
     "q_dup_spans",
     "q_dedup_incremental",
@@ -628,7 +628,7 @@ def test_mad_outliers_single_exchange(spark):
 
 
 def test_substring_dedup_no_self_join_single_scan(spark):
-    """The portable char-k-mer overlap query must generate candidate
+    """The char-k-mer overlap query must generate candidate
     pairs by in-expression bucket expansion, never a corpus self-join
     (the oracle's formulation): no sort-merge join, no cartesian, ONE
     corpus scan feeding the persisted (h, id) sample frame, and both

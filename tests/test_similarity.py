@@ -142,11 +142,49 @@ def test_ivf_partitioned_index_prunes_and_serves(spark, tmp_path):
 def test_projection_bits_scale_rule():
     from tia_data_pipeline_spark.operators.similarity import projection_bits_for
 
-    assert projection_bits_for(2_000, 1000) == 1
-    assert projection_bits_for(40_000, 1000) == 6    # the 8x stress corpus
-    assert projection_bits_for(1_000_000, 1000) == 10
-    assert projection_bits_for(10**9, 1000) == 20    # 100 TB-ish corpus
-    assert projection_bits_for(10, 1000) == 1        # floor at 1 bit
+    assert projection_bits_for(2_000) == 1
+    assert projection_bits_for(40_000) == 6    # the 8x stress corpus
+    assert projection_bits_for(1_000_000) == 10
+    assert projection_bits_for(10**9) == 20    # 100 TB-ish corpus
+    assert projection_bits_for(10) == 1        # floor at 1 bit
+
+
+def test_bucket_join_keys_on_both_sides_bucket(spark):
+    """The cell-equi self-join must compare each side's OWN bucket and
+    say so in the plan it builds: a predicate made of one attribute on
+    both sides makes Spark warn "Constructing trivially true equals
+    predicate" and leaves correctness to its self-join rewrite. The
+    warning is read from a log4j appender on the root logger while the
+    plan builds. One projection row splits the vectors by the sign of
+    x, and threshold -1 keeps every candidate pair, so only
+    same-bucket pairs come back."""
+    from tia_data_pipeline_spark.operators.similarity import embedding_near_duplicates
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.1]), (3, [-1.0, 0.0]), (4, [-1.0, 0.1])],
+        "vec_id bigint, embedding array<double>",
+    )
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    log = jvm.java.io.StringWriter()
+    layout = core.layout.PatternLayout.newBuilder().withPattern("%m%n").build()
+    app = (
+        core.appender.WriterAppender.newBuilder()
+        .setName("bucket_join_probe").setLayout(layout).setTarget(log).build()
+    )
+    app.start()
+    root.addAppender(app, None, None)
+    ctx.updateLoggers()
+    try:
+        out = embedding_near_duplicates(df, threshold=-1.0, proj=[[1.0, 0.0]])
+    finally:
+        root.removeAppender("bucket_join_probe")
+        ctx.updateLoggers()
+        app.stop()
+    assert "trivially true" not in log.toString(), log.toString()
+    assert {(r["id_a"], r["id_b"]) for r in out.collect()} == {(1, 2), (3, 4)}
 
 
 def test_semantic_dedup_planted_pairs_null_and_cap(spark):

@@ -19,7 +19,7 @@ from tia_data_pipeline_spark.operators.dedup import (
     substring_overlap_pairs,
     word_shingles,
 )
-from tia_data_pipeline_spark.operators.features import zscore, zscore_pandas
+from tia_data_pipeline_spark.operators.features import zscore
 from tia_data_pipeline_spark.operators.index import (
     EMBEDDING,
     IVF,
@@ -122,7 +122,6 @@ __all__ = [
     "simhash",
     "word_shingles",
     "zscore",
-    "zscore_pandas",
     "thread_closure",
     "incremental_append",
     "dedup_batch",

@@ -6,6 +6,12 @@ LLM-training pipelines. Everything is expression-level Spark — hashing,
 shingling, MinHash, SimHash all run inside whole-stage codegen; no
 Python UDFs.
 
+One hash path: every sketch hash (MinHash shingles, char k-mers,
+SimHash bits) is md5-digit, so the DuckDB oracles reproduce it value
+for value. xxhash64 stays only where no value reaches an oracle: the
+exact-overlap shingle ids (a recorded exception, see
+:func:`_shingle_overlap_frames`) and the MinHash index's ``bshard``.
+
 Scale posture (100 TB):
 - exact dedup shuffles 32-byte digests, never documents;
 - MinHash-LSH bounds candidate pairs via banding, and a document-
@@ -58,9 +64,12 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # Deterministic hash family h_i(x) = (a_i * x + b_i) mod P over
-# x = pmod(xxhash64(shingle), 2^31). a_i < 2^31 keeps products < 2^62
-# (no ANSI overflow); P is a Mersenne prime.
-_MINHASH_P = (1 << 61) - 1
+# x = md5_int(shingle) < 2^28. a_i < 2^31 keeps products < 2^59 (no
+# ANSI overflow); P is the Mersenne prime 2^31 - 1. P must sit far
+# below a_i * x: with P = 2^61 - 1 no product ever wrapped, every h_i
+# was increasing in x, and all k components took the same shingle's
+# value — the estimate could only read 0 or 1.
+_MINHASH_P = (1 << 31) - 1
 _X_MOD = 1 << 31
 
 
@@ -72,10 +81,10 @@ def _hash_family(k: int, seed: int = 42) -> list[tuple[int, int]]:
 def md5_int_sql(s: str, digits: int = 7) -> str:
     """SQL fragment valid in BOTH Spark SQL and DuckDB: the first
     ``digits`` hex digits of md5(s) as a BIGINT (< 16^digits = 2^28 at
-    the default) — the engine-portable shingle hash for the
-    oracle-checkable MinHash path (same instr-digit construction as the
-    SimHash bits below). 7 digits keeps a*x < 2^31 * 2^28 = 2^59, clear
-    of ANSI-mode bigint overflow in the affine hash family.
+    the default) — the engine-portable shingle and k-mer hash (same
+    instr-digit construction as the SimHash bits below). 7 digits keeps
+    a*x < 2^31 * 2^28 = 2^59, clear of ANSI-mode bigint overflow in the
+    affine hash family.
 
     The DuckDB oracles spell the hash with this fragment; the Spark
     plans use its column twin :func:`md5_int` (one ``conv`` per row
@@ -241,8 +250,6 @@ def minhash_signature_frame(
     k: int = 32,
     seed: int = 42,
     shingle_n: int = 3,
-    *,
-    portable: bool = False,
 ) -> DataFrame:
     """(id, sig) frame: shingle once, explode, then ONE grouped
     aggregate with k cheap `min((a·x+b) mod P)` aggregations — the
@@ -250,12 +257,9 @@ def minhash_signature_frame(
     whole thing stays in whole-stage codegen with map-side partial
     mins. Docs with zero shingles drop out (explode of empty array).
 
-    ``portable=True`` swaps the shingle hash xxhash64 → md5-digit
-    (:func:`md5_int`, twin of :func:`md5_int_sql`): identical pipeline
-    shape, but every value is reproducible in DuckDB, so the whole
-    MinHash estimate becomes
-    hash-checkable cross-engine (the declared `q_fuzzy_dedup` path);
-    xxhash64 stays the production default (faster, JVM-native)."""
+    The shingle hash is md5-digit (:func:`md5_int`, twin of
+    :func:`md5_int_sql`): every value is reproducible in DuckDB, so the
+    whole MinHash estimate is hash-checkable cross-engine."""
     # NULL ids are excluded at the source: groupBy would otherwise
     # MERGE every NULL-id document's shingles into one chimeric
     # signature, and the in-expression pair ordering downstream would
@@ -265,15 +269,10 @@ def minhash_signature_frame(
             F.col(id_col), F.col(text_col)
         )
     )
-    x = (
-        md5_int(F.col("_sh"))
-        if portable
-        else F.pmod(F.xxhash64("_sh"), F.lit(_X_MOD))
-    )
     ex = src.select(
         F.col(id_col).alias("_id"),
         F.explode(word_shingles(F.col(text_col), shingle_n)).alias("_sh"),
-    ).select("_id", x.alias("_x"))
+    ).select("_id", md5_int(F.col("_sh")).alias("_x"))
     aggs = [
         F.min((F.lit(a) * F.col("_x") + F.lit(b)) % F.lit(_MINHASH_P)).alias(f"_m{i}")
         for i, (a, b) in enumerate(_hash_family(k, seed))
@@ -292,36 +291,28 @@ def minhash_band_frame(
     bands: int = 8,
     seed: int = 42,
     shingle_n: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """Banded MinHash signatures: one ``(_id, _sig, band, bucket)`` row
     per (document, band) — the shared candidate-keying frame of both
     the batch LSH dedup (:func:`minhash_near_duplicates`) and the
     persisted signature index (:func:`minhash_write_index` /
     :func:`…operators.index.index_probe`). Two frames built with equal
-    (k, bands, seed, shingle_n, portable) collide on exactly the same
-    (band, bucket) keys, which is what makes an index written yesterday
-    probeable by today's shard.
-
-    ``portable=True`` keys buckets by the raw band slice (array of r
-    signature components — DuckDB-reproducible); default keys by
-    xxhash64 of the slice (8-byte keys, JVM-only)."""
+    (k, bands, seed, shingle_n) collide on exactly the same (band,
+    bucket) keys, which is what makes an index written yesterday
+    probeable by today's shard. A bucket is the raw band slice (array
+    of r signature components — DuckDB-reproducible)."""
     r = _band_width(k, bands, "k")
-    sig = minhash_signature_frame(
-        df, text_col, id_col, k, seed, shingle_n=shingle_n, portable=portable
-    )
-
-    def bucket_of(i: int):
-        sl = F.slice("_sig", i * r + 1, r)
-        return sl if portable else F.xxhash64(sl)
-
+    sig = minhash_signature_frame(df, text_col, id_col, k, seed, shingle_n=shingle_n)
     return sig.select(
         "_id",
         "_sig",
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(i).alias("band"), bucket_of(i).alias("bucket"))
+                    F.struct(
+                        F.lit(i).alias("band"),
+                        F.slice("_sig", i * r + 1, r).alias("bucket"),
+                    )
                     for i in range(bands)
                 ]
             )
@@ -338,7 +329,6 @@ def minhash_near_duplicates(
     bands: int = 8,
     threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH banding.
@@ -351,15 +341,11 @@ def minhash_near_duplicates(
     agreeing on a whole band collide, so the shuffle fan-out is bounded
     by the banding probability curve, not |docs|².
 
-    ``portable=True``: md5-digit shingle hash and the band's raw value
-    slice as the bucket key (instead of xxhash64 of it) — every
-    intermediate is DuckDB-reproducible, so the estimate hash-matches a
-    SQL oracle (`plans/llm.py::q_fuzzy_dedup`). Bucket keys grow from 8
-    bytes to r·8 bytes; production default stays xxhash64.
+    md5-digit shingle hash and the band's raw value slice as the bucket
+    key (r·8 bytes) — every intermediate is DuckDB-reproducible, so the
+    estimate hash-matches a SQL oracle (`plans/llm.py::q_fuzzy_dedup`).
     """
-    banded = minhash_band_frame(
-        df, text_col, id_col, k=k, bands=bands, seed=seed, portable=portable
-    )
+    banded = minhash_band_frame(df, text_col, id_col, k=k, bands=bands, seed=seed)
 
     # Candidate pairs WITHOUT a self-join (a self-join would execute the
     # whole signature lineage twice): group bucket members and expand
@@ -440,8 +426,8 @@ def minhash_oracle_sql(
     seed: int = 42,
     max_bucket: int = 1000,
 ) -> str:
-    """DuckDB SQL reproducing :func:`minhash_near_duplicates` with
-    ``portable=True`` value-for-value: same md5-digit shingle hash
+    """DuckDB SQL reproducing :func:`minhash_near_duplicates`
+    value-for-value: same md5-digit shingle hash
     (:func:`md5_int_sql`), same affine family (same seed), same band
     slices as join keys, same hot-bucket cap, same rounded estimate.
     The signature/banding fragments are single-sourced in
@@ -487,7 +473,6 @@ def minhash_write_index(
     bands: int = 8,
     seed: int = 42,
     shingle_n: int = 3,
-    portable: bool = False,
     n_shards: int | None = None,
 ) -> None:
     """Materialize the MinHash signature index: banded ``(_id, _sig,
@@ -496,12 +481,14 @@ def minhash_write_index(
     side table from which the probe reproduces the exact hash family.
     k·8 bytes of signature per document per band — the signature table
     the batch path materializes per run, made durable. ``n_shards``
-    defaults to a size from the source relation's bytes."""
+    defaults to a size from the source relation's bytes. The meta's
+    ``portable`` column is always true (the md5-digit hash); the probe
+    refuses an index whose meta says otherwise."""
     if n_shards is None:
         n_shards = adaptive_index_shards(df, bands=bands)
     meta = {
         "k": int(k), "bands": int(bands), "seed": int(seed),
-        "shingle_n": int(shingle_n), "portable": bool(portable),
+        "shingle_n": int(shingle_n), "portable": True,
         "n_shards": int(n_shards),
     }
     cols = {"text_col": text_col, "id_col": id_col}
@@ -521,8 +508,8 @@ def minhash_incremental_oracle_sql(
     seed: int = 42,
     max_bucket: int = 1000,
 ) -> str:
-    """DuckDB SQL reproducing the MinHash ``index_probe`` over a
-    portable-path index built from ``table WHERE history_pred`` and a
+    """DuckDB SQL reproducing the MinHash ``index_probe`` over an
+    index built from ``table WHERE history_pred`` and a
     shard ``table WHERE shard_pred`` — same md5-digit shingle hash,
     same affine family, same band slices as collision keys, same
     per-side hot-bucket caps, same rounded estimate. The persisted
@@ -971,9 +958,10 @@ def simhash_incremental_oracle_sql(
 # ---------------------------------------------------------------------------
 
 
-def char_kmer_sketch(col: Column, *, k: int = 32, mod: int = 16) -> Column:
-    """Sampled char k-mer hashes of a text column: hash EVERY k-char
-    window, keep the ~1/mod whose hash ≡ 0 (mod mod), distinct.
+def _kmer_hashes(df: DataFrame, text_col: str, id_col: str, k: int, mod: int) -> DataFrame:
+    """``(_id, _i, h)`` rows of the sampled char k-mers: every k-char
+    window at 1-based position ``_i``, hashed md5-digit
+    (:func:`md5_int`), kept when ``h ≡ 0 (mod mod)``.
 
     The mod-p selection is the load-bearing choice: a fixed stride
     would sample windows at positions ≡ 0 (mod s) *of each document*,
@@ -983,24 +971,28 @@ def char_kmer_sketch(col: Column, *, k: int = 32, mod: int = 16) -> Column:
     substring of length L contributes the same ~(L-k+1)/mod sampled
     k-mers to both documents no matter where it sits.
 
-    Per-row cost is O(len) window hashes (the lambda touches only its
-    index variable plus a raw attribute reference — no re-evaluated
-    computed chain), so callers fan the scan out first, same rule as
-    the word-shingle assemblies. Documents shorter than ``k`` sketch to
-    [].
-    """
+    Positions explode to rows BEFORE hashing (one md5 per k-mer row; a
+    higher-order lambda would re-evaluate its captured subexpressions
+    per element), and the 1/mod filter runs before anything shuffles.
+    Documents shorter than ``k`` (and NULL texts) yield no rows."""
     if k < 2:
         raise ValueError("k must be >= 2")
     if mod < 1:
         raise ValueError("mod must be >= 1")
-    n_pos = F.length(col) - (k - 1)
-    hashes = F.transform(
-        F.sequence(F.lit(1), n_pos), lambda i: F.xxhash64(col.substr(i, F.lit(k)))
+    src = fan_out(df.select(F.col(id_col), F.col(text_col)))
+    n_pos = F.length(F.col(text_col)) - (k - 1)
+    pos = src.select(
+        F.col(id_col).alias("_id"),
+        F.col(text_col).alias("_t"),
+        F.explode(
+            F.when(n_pos >= 1, F.sequence(F.lit(1), n_pos)).otherwise(
+                F.array().cast("array<int>")
+            )
+        ).alias("_i"),
     )
-    sampled = F.array_distinct(
-        F.filter(hashes, lambda h: F.pmod(h, F.lit(mod)) == 0)
-    )
-    return F.when(n_pos < 1, F.array().cast("array<bigint>")).otherwise(sampled)
+    return pos.select(
+        "_id", "_i", md5_int(F.substring(F.col("_t"), F.col("_i"), F.lit(k))).alias("h")
+    ).filter(F.pmod(F.col("h"), F.lit(mod)) == 0)
 
 
 def substring_overlap_pairs(
@@ -1012,7 +1004,6 @@ def substring_overlap_pairs(
     mod: int = 16,
     max_df: int = 20,
     min_shared: int = 2,
-    portable: bool = False,
 ) -> DataFrame:
     """Document pairs sharing long verbatim substrings — the
     substring-level contamination/boilerplate signal that word-shingle
@@ -1027,53 +1018,20 @@ def substring_overlap_pairs(
     the cheap digest pipeline), expand pairs in-expression, never a
     corpus self-join. Returns (id_a, id_b, shared).
 
-    ``portable=True`` swaps the k-mer hash xxhash64 → md5-digit
-    (:func:`md5_int`, the q_fuzzy_dedup discipline), making the
-    pair set reproducible in DuckDB for the oracle-checked contract
-    query. Pipeline shape differs mechanically: positions explode to
-    rows BEFORE hashing (one md5 per k-mer row; a higher-order lambda
-    would re-evaluate its captured subexpressions per element), the
-    1/mod sampling filter runs before anything shuffles, and
-    ``collect_set`` dedupes per-doc repeats inside the bucket aggregate
-    instead of a per-doc ``array_distinct``, so both paths reach the
-    wire with the same sampled-distinct volume. xxhash64 stays the production default
-    (JVM-native, no md5 per position)."""
-    src = fan_out(df.select(F.col(id_col), F.col(text_col)))
-    if portable:
-        n_pos = F.length(F.col(text_col)) - (k - 1)
-        pos = src.select(
-            F.col(id_col).alias("_id"),
-            F.col(text_col).alias("_t"),
-            F.explode(
-                F.when(n_pos >= 1, F.sequence(F.lit(1), n_pos)).otherwise(
-                    F.array().cast("array<int>")
-                )
-            ).alias("_i"),
-        )
-        hs = (
-            pos.select(
-                "_id", F.substring(F.col("_t"), F.col("_i"), F.lit(k)).alias("_km")
-            )
-            .select("_id", md5_int(F.col("_km")).alias("h"))
-            .filter(F.pmod(F.col("h"), F.lit(mod)) == 0)
-        )
-        # The two-pass cap consumes hs twice (count + collect legs), and
-        # the md5-per-position hash is the dominant cost of this path —
-        # persist the NARROW (h, _id) frame (16 bytes/sample, 1/mod of
-        # the k-mer stream) so the hash computes once; the q_triangles
-        # persist discipline. Cache lifecycle: CacheManager holds it
-        # until unpersist or session end (per-process driver/bench
-        # sessions discard at exit; MEMORY_AND_DISK evicts under
-        # pressure).
-        # Measured 3.0 s → recomputed vs persisted at sf0.1.
-        hs = hs.persist()
-        grouped = capped_bucket_members(hs, "h", "_id", max_size=max_df, distinct=True)
-    else:
-        km = src.select(
-            F.col(id_col).alias("_id"),
-            F.explode(char_kmer_sketch(F.col(text_col), k=k, mod=mod)).alias("h"),
-        )
-        grouped = capped_bucket_members(km, "h", "_id", max_size=max_df)
+    The k-mer hash is md5-digit (:func:`_kmer_hashes`), so the pair set
+    is reproducible in DuckDB for the oracle-checked contract query;
+    ``collect_set`` dedupes per-doc repeats inside the bucket
+    aggregate. ``k < 2`` or ``mod < 1`` raises ``ValueError``."""
+    # The two-pass cap consumes hs twice (count + collect legs), and
+    # the md5-per-position hash is the dominant cost — persist the
+    # NARROW (h, _id) frame (16 bytes/sample, 1/mod of the k-mer
+    # stream) so the hash computes once; the q_triangles persist
+    # discipline. Cache lifecycle: CacheManager holds it until
+    # unpersist or session end (per-process driver/bench sessions
+    # discard at exit; MEMORY_AND_DISK evicts under pressure).
+    # Measured 3.0 s → recomputed vs persisted at sf0.1.
+    hs = _kmer_hashes(df, text_col, id_col, k, mod).select("_id", "h").persist()
+    grouped = capped_bucket_members(hs, "h", "_id", max_size=max_df, distinct=True)
     pair_arr = bucket_pairs(F.col("mem"))
     return (
         grouped.select(F.explode(pair_arr).alias("p"))
@@ -1093,7 +1051,6 @@ def duplicated_spans(
     max_df: int = 20,
     max_gap: int | None = None,
     min_anchors: int = 2,
-    portable: bool = False,
 ) -> DataFrame:
     """WHERE the duplication lives, not just who pairs with whom: the
     span form of exact-substring dedup (Lee et al., "Deduplicating
@@ -1105,8 +1062,8 @@ def duplicated_spans(
     Construction (bounded, SQL-expressible — no suffix array needed):
 
     1. content-defined anchors: every position whose k-char window
-       hash ≡ 0 (mod ``mod``) — offset-invariant, the
-       :func:`char_kmer_sketch` argument, but POSITIONS are kept;
+       hash ≡ 0 (mod ``mod``) — offset-invariant (see
+       :func:`_kmer_hashes`), POSITIONS kept;
     2. hot-anchor cap, two-pass (a boilerplate k-mer in thousands of
        docs is the digest pipeline's job, and uncapped it is a
        quadratic bomb);
@@ -1125,31 +1082,15 @@ def duplicated_spans(
     — the only corpus-sized relation; the match stream is bounded by
     the banding cap exactly like :func:`substring_overlap_pairs`; the
     sessionize is ONE shuffle on (id_a, id_b, diag) serving both
-    window functions and the span aggregate. ``portable=True`` uses
-    the md5-digit hash so spans hash-match the DuckDB oracle
-    (plans/llm.py::q_dup_spans)."""
+    window functions and the span aggregate. The md5-digit hash makes
+    spans hash-match the DuckDB oracle (plans/llm.py::q_dup_spans).
+    ``k < 2`` or ``mod < 1`` raises ``ValueError``."""
     if max_gap is None:
         max_gap = 8 * mod
-    src = fan_out(df.select(F.col(id_col), F.col(text_col)))
-    n_pos = F.length(F.col(text_col)) - (k - 1)
-    pos = src.select(
-        F.col(id_col).alias("_id"),
-        F.col(text_col).alias("_t"),
-        F.explode(
-            F.when(n_pos >= 1, F.sequence(F.lit(1), n_pos)).otherwise(
-                F.array().cast("array<int>")
-            )
-        ).alias("_i"),
-    ).select("_id", "_i", F.substring(F.col("_t"), F.col("_i"), F.lit(k)).alias("_km"))
-    h = md5_int(F.col("_km")) if portable else F.xxhash64("_km")
-    anchors = (
-        pos.select("_id", "_i", h.alias("h"))
-        .filter(F.pmod(F.col("h"), F.lit(mod)) == 0)
-        # persist the NARROW anchor frame: the two-pass cap consumes it
-        # twice and the per-position hash dominates (the
-        # substring_overlap_pairs discipline — md5 3.0→0.79 s at sf0.1)
-        .persist()
-    )
+    # persist the NARROW anchor frame: the two-pass cap consumes it
+    # twice and the per-position hash dominates (the
+    # substring_overlap_pairs discipline — md5 3.0→0.79 s at sf0.1)
+    anchors = _kmer_hashes(df, text_col, id_col, k, mod).persist()
     members = capped_bucket_members(
         anchors, "h", F.struct("_id", "_i"), max_size=max_df
     )
@@ -1199,7 +1140,6 @@ def cut_duplicated_spans(
     max_df: int = 20,
     max_gap: int | None = None,
     min_anchors: int = 2,
-    portable: bool = False,
 ) -> DataFrame:
     """APPLY the duplicated spans: rebuild each affected document with
     its duplicated byte ranges removed — the surgery step of
@@ -1227,7 +1167,7 @@ def cut_duplicated_spans(
     them back if a full corpus rewrite is wanted)."""
     spans = duplicated_spans(
         df, text_col, id_col, k=k, mod=mod, max_df=max_df,
-        max_gap=max_gap, min_anchors=min_anchors, portable=portable,
+        max_gap=max_gap, min_anchors=min_anchors,
     )
     # DISTINCT before the merge windows: two pairs can contribute the
     # IDENTICAL (s, e) interval to one doc (e.g. the same duplicated
@@ -1311,8 +1251,8 @@ def span_cut_oracle_sql(
     max_gap: int | None = None,
     min_anchors: int = 2,
 ) -> str:
-    """DuckDB SQL reproducing :func:`cut_duplicated_spans` with
-    ``portable=True`` byte-for-byte: the span CTE is the shared
+    """DuckDB SQL reproducing :func:`cut_duplicated_spans`
+    byte-for-byte: the span CTE is the shared
     :func:`duplicated_spans_oracle_sql` text, then the same interval
     merge (running-max window), the same complement-piece assembly
     (``string_agg`` ordered by span start ≡ the sorted collect), and
@@ -1359,8 +1299,7 @@ def duplicated_spans_oracle_sql(
     max_gap: int | None = None,
     min_anchors: int = 2,
 ) -> str:
-    """DuckDB SQL reproducing :func:`duplicated_spans` with
-    ``portable=True`` value-for-value: same md5-digit window hash, same
+    """DuckDB SQL reproducing :func:`duplicated_spans` value-for-value: same md5-digit window hash, same
     mod sampling, same row-count bucket cap, same diagonal sessionize
     (lag/gap/sum windows), same span aggregation."""
     if max_gap is None:

@@ -1,22 +1,14 @@
 """Feature-engineering operators (training-data preparation).
 
-Per-group statistical normalization (z-score) in two forms:
-
-- :func:`zscore` — pure Catalyst window expressions. Moments are
-  accumulated as exact integer cent sums (``Σc``, ``Σc²``) so the
-  variance formula is a fixed IEEE op sequence over identical integers
-  on any engine — the DuckDB oracle matches bit-for-bit.
-- :func:`zscore_pandas` — the same semantics as an Arrow-batched
-  grouped-map ``applyInPandas``; exists to exercise the pandas-UDF
-  surface (SURVEY ext-udf-surface) and as the template for group-wise
-  logic that genuinely can't be expressed in SQL. Tests assert it
-  agrees with the expression form; the expression form is what the
-  contract declares (Python stays off the query path).
+Per-group statistical normalization: :func:`zscore` is pure Catalyst
+window expressions. Moments are accumulated as exact integer cent sums
+(``Σc``, ``Σc²``) so the variance formula is a fixed IEEE op sequence
+over identical integers on any engine — the DuckDB oracle
+(:func:`zscore_oracle_sql`) matches bit-for-bit.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -86,87 +78,4 @@ def zscore_oracle_sql(
         f"SELECT {ids}, {key_col}, {value_col}, "
         f"CASE WHEN n > 1 AND (s2 - s1 * s1 / n) / (n - 1) > 0 "
         f"THEN {portable_round_sql(z, decimals)} END AS zscore FROM m"
-    )
-
-
-def zscore_pandas(
-    df: DataFrame,
-    key_col: str,
-    value_col: str,
-    id_cols: tuple[str, ...] = ("event_id",),
-    decimals: int = 4,
-) -> DataFrame:
-    """Grouped-map form of :func:`zscore` (Arrow batches, one pandas
-    frame per key group). ~10-100× slower than the expression form for
-    this computable-in-SQL case — kept as the pattern for logic that
-    isn't."""
-    scale = float(10**decimals)
-    # derive id/key types from the input schema — hardcoding bigint
-    # would make any string/other-typed key fail at Arrow conversion,
-    # an undeclared precondition the expression form doesn't have
-    in_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    # value_col keeps its INPUT type too: per_group passes the original
-    # values through untouched, so declaring `double` would crash the
-    # Arrow conversion (or silently retype) for a decimal-typed money
-    # column the expression form handles — same undeclared-precondition
-    # class as hardcoded key types.
-    out_schema = ", ".join(
-        [f"{c} {in_types[c]}" for c in id_cols]
-        + [
-            f"{key_col} {in_types[key_col]}",
-            f"{value_col} {in_types[value_col]}",
-            "zscore double",
-        ]
-    )
-
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        # mirror the expression form exactly: non-finite measurements
-        # nullify (pandas .round().astype(int64) would CRASH on
-        # NaN/None), cents round HALF-UP like Spark's F.round (pandas
-        # .round is half-to-even: 12.5 -> 12 where Spark gives 13),
-        # and n counts VALID measurements only
-        vals = pd.to_numeric(pdf[value_col], errors="coerce").astype("float64")
-        vals = vals.where(np.isfinite(vals))
-        raw = vals * 100
-        cents = (np.sign(raw) * np.floor(np.abs(raw) + 0.5)).astype("float64")
-        valid = cents.dropna()
-        n = len(valid)
-        if n > 1:
-            # exact integer moments via Python ints (arbitrary
-            # precision), ONE rounding to double at the end — float64
-            # partial sums would drift by ulps from the expression
-            # form's decimal/HUGEINT accumulation once cents² passes
-            # 2^53, and the two forms must agree exactly
-            ints = [int(v) for v in valid]
-            s1 = float(sum(ints))
-            s2 = float(sum(v * v for v in ints))
-            var = (s2 - s1 * s1 / n) / (n - 1)
-        else:
-            var = 0.0
-        if n > 1 and var > 0:
-            import math
-
-            # math.sqrt (correctly rounded, = JVM Math.sqrt) — NOT
-            # var**0.5: libm pow(x, 0.5) isn't guaranteed correctly
-            # rounded everywhere, the 1-ulp twin-parity hazard class
-            z = (cents - s1 / n) / math.sqrt(var)
-            z = np.floor(z * scale + 0.5) / scale
-            z = pd.Series(z, index=pdf.index, dtype="object").where(cents.notna(), None)
-        else:
-            # SQL NULL, not float NaN: Spark distinguishes them (NaN is
-            # isNull=false and sorts above every number), and the
-            # expression form emits NULL for degenerate groups — the
-            # two forms must return the same value, not merely "both
-            # non-numbers". len(pdf), NOT n: a degenerate group that
-            # also holds NULL/non-finite rows has n < len(pdf), and a
-            # short values list crashes the Series constructor.
-            z = pd.Series([None] * len(pdf), index=pdf.index, dtype="object")
-        out = pdf[list(id_cols) + [key_col, value_col]].copy()
-        out["zscore"] = z
-        return out
-
-    return df.select(*id_cols, key_col, value_col).groupBy(key_col).applyInPandas(
-        per_group, schema=out_schema
     )

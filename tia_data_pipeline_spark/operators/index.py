@@ -124,13 +124,21 @@ class IndexFamily:
 def _minhash_band(df: DataFrame, meta: dict, o: dict) -> DataFrame:
     from tia_data_pipeline_spark.operators.dedup import minhash_band_frame
 
-    # bucket values are unbounded (xxhash64 or raw band slices); a
-    # stable shard of the bucket makes (band, bshard) a bounded
-    # partition key that still prunes
+    # md5-digit keys are the only hash; probing an index keyed by the
+    # removed xxhash64 family with them would silently pair nothing
+    if not meta["portable"]:
+        raise ValueError(
+            "this MinHash index was built with the removed xxhash64 shingle "
+            "hash (its meta portable flag is false); rebuild it with "
+            "minhash_write_index"
+        )
+    # bucket values (raw band slices) are unbounded; a stable shard of
+    # the bucket makes (band, bshard) a bounded partition key that
+    # still prunes
     return minhash_band_frame(
         df, o["text_col"], o["id_col"],
         k=meta["k"], bands=meta["bands"], seed=meta["seed"],
-        shingle_n=meta["shingle_n"], portable=meta["portable"],
+        shingle_n=meta["shingle_n"],
     ).withColumn("bshard", F.pmod(F.xxhash64("bucket"), F.lit(meta["n_shards"])))
 
 

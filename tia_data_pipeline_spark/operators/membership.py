@@ -207,7 +207,6 @@ def membership_mark(
     hit_col: str = "hit",
     strategy: str = "auto",
     est_member_source_bytes: int | None = None,
-    fp_rate: float = 0.01,
     members_distinct: bool = False,
 ) -> DataFrame:
     """Mark each ``stream`` row with ``hit_col`` = 1 when its key is in
@@ -259,7 +258,7 @@ def membership_mark(
         return stream.join(F.broadcast(member_keys), key_col, "left")
 
     n_keys = max(1, members.count())
-    m_bits, k_hashes = bloom_params(n_keys, fp_rate)
+    m_bits, k_hashes = bloom_params(n_keys)  # its default 1% false-positive rate
     # materialize: the probe references the word table k times and
     # exchange reuse does not collapse alias-projected copies of an
     # unmaterialized aggregate (see bloom_prefilter docstring). The

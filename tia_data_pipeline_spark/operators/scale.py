@@ -151,9 +151,10 @@ def adaptive_index_shards(
     return default
 
 
-def fan_out(df: DataFrame, *, target: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition a low-parallelism relation before CPU-heavy per-row
-    compute (regex scoring, shingling, per-token hashing).
+    compute (regex scoring, shingling, per-token hashing), to the
+    session's default parallelism.
 
     At cluster scale parquet scans arrive pre-split
     (``spark.sql.files.maxPartitionBytes``) and this is a no-op; on a
@@ -177,7 +178,7 @@ def fan_out(df: DataFrame, *, target: int | None = None) -> DataFrame:
       sizes can't be read falls back to the file-count heuristic.
     """
     spark = df.sparkSession
-    n = target or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     files = df.inputFiles()
     if files:
         est = _estimated_scan_splits(df, files)

@@ -53,18 +53,23 @@ def projection_matrix(bits: int = LSH_BITS, dim: int = EMBED_DIM, seed: int = LS
     return [[round(float(v), 6) for v in row] for row in rng.randn(bits, dim)]
 
 
-def projection_bits_for(n_vectors: int, target_bucket: int = 1000) -> int:
-    """Sign-projection bit count sizing a corpus to ~``target_bucket``
-    expected members per bucket: ``2^bits ≈ n/target``. This is the
-    scale rule from SCALE.md made executable — pair-expansion work in
-    the bucketed dedup/ANN operators grows with the SQUARE of bucket
-    size, so bits must rise with log2 of the corpus (the measured 8×
+# the expected bucket population projection_bits_for sizes a corpus to
+_TARGET_BUCKET = 1000
+
+
+def projection_bits_for(n_vectors: int) -> int:
+    """Sign-projection bit count sizing a corpus to ~1000
+    (``_TARGET_BUCKET``) expected members per bucket:
+    ``2^bits ≈ n/1000``. This is the scale rule from SCALE.md made
+    executable — pair-expansion work in the bucketed dedup/ANN
+    operators grows with the SQUARE of bucket size, so bits must rise
+    with log2 of the corpus (the measured 8×
     stress corpus went super-linear on a fixed 4-bit projection).
     Callers pass the result to :func:`projection_matrix`; the contract
     queries keep their fixed literals (the oracle embeds them)."""
     import math
 
-    return max(1, math.ceil(math.log2(max(2.0, n_vectors / max(1, target_bucket)))))
+    return max(1, math.ceil(math.log2(max(2.0, n_vectors / _TARGET_BUCKET))))
 
 
 def _sign_bits(vec: Column, proj: list[list[float]]) -> Column:
@@ -217,10 +222,12 @@ def _cell_equi_cosine_pairs(
         F.col("_vec").alias("_vec_b"),
         F.col("_norm").alias("_norm_b"),
     )
-    joined = a_side.join(
-        b_side,
-        on=[a_side["_bucket"] == b_side["_bucket"], F.col("id_a") < F.col("id_b")],
-    )
+    # join on the column NAME: both sides select the same frame, so
+    # a_side["_bucket"] == b_side["_bucket"] would compare one
+    # attribute with itself (a trivially true predicate that only
+    # Spark's resolution of each side's plan turns back into a bucket
+    # equi-join)
+    joined = a_side.join(b_side, "_bucket").filter(F.col("id_a") < F.col("id_b"))
     score = cosine_from_norms(
         F.col("_vec_a"), F.col("_vec_b"), F.col("_norm_a"), F.col("_norm_b")
     )

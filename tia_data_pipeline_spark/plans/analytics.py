@@ -91,8 +91,7 @@ def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user z-score of event values — the feature-scaling step of
     a training pipeline, deterministic via exact integer moments (see
-    operators/features.py; the applyInPandas twin is test-equivalent
-    but stays off the declared path)."""
+    operators/features.py)."""
     return zscore(load_table(spark, sf_dir, "events"), "user_id", "value")
 
 

@@ -878,16 +878,13 @@ _SHINGLES_SQL = (
 )
 def q_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(k=32, 8 bands)-LSH near-dup pairs at est-Jaccard ≥ 0.5,
-    on the PORTABLE hash path (md5-digit shingle hash, raw band slices
-    as bucket keys): every signature component is reproducible in
+    with the md5-digit shingle hash and raw band slices as bucket
+    keys: every signature component is reproducible in
     DuckDB, so the banding, the hot-bucket cap, and the matching-
     component estimate all hash-match the oracle — upgraded from the
-    rows-only check of rounds 1-3. Production default stays the
-    xxhash64 family (faster; structurally tested with planted
-    near-dups in tests/test_dedup.py)."""
+    rows-only check of rounds 1-3."""
     return DD.minhash_near_duplicates(
-        load_table(spark, sf_dir, "documents"), "text", "doc_id", threshold=0.5,
-        portable=True,
+        load_table(spark, sf_dir, "documents"), "text", "doc_id", threshold=0.5
     )
 
 
@@ -913,11 +910,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a band/bshard-partitioned MinHash index, then the remaining 20%
     (today's shard) probes it WITHOUT rescanning history — the index
     scan prunes to the shard's touched partitions (PartitionFilters
-    pinned in tests/test_dedup.py). Portable md5-digit hash path so
-    the banding, per-side hot-bucket caps, and matching-component
+    pinned in tests/test_dedup.py). The md5-digit hash makes the
+    banding, per-side hot-bucket caps, and matching-component
     estimate all hash-match the oracle, which states the plain
     two-relation form (the index is an execution strategy, not a
-    semantics change). Production default stays xxhash64 keys."""
+    semantics change)."""
     docs = load_table(spark, sf_dir, "documents")
     # Each build writes a fresh index (bench protocol: the write is the
     # one-off derivation at build time; timed runs measure the probe —
@@ -929,7 +926,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         "doc_id",
         f"{tmp}/idx",
-        portable=True,
         # shard count sized adaptively by the writer itself (guide §6,
         # ADVICE r12: the writer computes the default from its OWN
         # input frame and band count — bands dirs with one healthy file
@@ -1042,7 +1038,6 @@ def q_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         "doc_id",
         f"{tmp}/idx",
-        portable=True,
         # shard count sized adaptively by the writer itself (guide §6,
         # ADVICE r12)
     )
@@ -1300,11 +1295,8 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cut-not-drop form of substring dedup (q_substring_dedup finds
     the pairs; this finds WHICH bytes to cut). Content-defined sampled
     anchors merged along match diagonals; one shuffle sessionize;
-    portable md5 hash path so the spans hash-match the oracle.
-    Production default stays xxhash64."""
-    return DD.duplicated_spans(
-        load_table(spark, sf_dir, "documents"), "text", "doc_id", portable=True
-    )
+    md5-digit hash so the spans hash-match the oracle."""
+    return DD.duplicated_spans(load_table(spark, sf_dir, "documents"), "text", "doc_id")
 
 
 @contract_query(
@@ -1325,7 +1317,7 @@ def q_span_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-exact against the oracle, which assembles the identical
     complement pieces with a span-ordered string_agg."""
     return DD.cut_duplicated_spans(
-        load_table(spark, sf_dir, "documents"), "text", "doc_id", portable=True
+        load_table(spark, sf_dir, "documents"), "text", "doc_id"
     )
 
 
@@ -1364,11 +1356,9 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks, quoted passages, copy-pasted boilerplate). 32-char k-mers,
     content-defined 1/16 sampling (hash-mod, so a one-char insertion
     upstream cannot desynchronize the sample set), ≥2 shared samples
-    ≈ a ≥64-char verbatim run. PORTABLE md5-digit hash path so the
-    pair set hash-matches the DuckDB oracle (the q_fuzzy_dedup
-    discipline); production default stays xxhash64. The oracle states
-    the same inverted index as a self-join — the Spark side never
-    self-joins (bucket-capped in-expression pair expansion, pinned in
+    ≈ a ≥64-char verbatim run. The md5-digit k-mer hash makes the
+    pair set hash-match the DuckDB oracle, which states the same
+    inverted index as a self-join — the Spark side never self-joins (bucket-capped in-expression pair expansion, pinned in
     tests/test_plans.py)."""
     return DD.substring_overlap_pairs(
         load_table(spark, sf_dir, "documents"),
@@ -1378,7 +1368,6 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         mod=_SSD_MOD,
         max_df=_SSD_MAX_DF,
         min_shared=_SSD_MIN_SHARED,
-        portable=True,
     )
 
 

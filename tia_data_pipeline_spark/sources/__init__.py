@@ -13,7 +13,7 @@ from tia_data_pipeline_spark.sources.rest import (
     paginated_rest_source,
 )
 from tia_data_pipeline_spark.sources.files import read_json_records, write_json_records
-from tia_data_pipeline_spark.sources.jdbc import jdbc_read, jdbc_upsert_append
+from tia_data_pipeline_spark.sources.jdbc import jdbc_read
 from tia_data_pipeline_spark.sources.lakehouse import (
     delete_keys,
     delete_where,
@@ -26,7 +26,6 @@ __all__ = [
     "read_json_records",
     "write_json_records",
     "jdbc_read",
-    "jdbc_upsert_append",
     "delete_keys",
     "delete_where",
     "merge_upsert_table",

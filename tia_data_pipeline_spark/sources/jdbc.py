@@ -3,18 +3,16 @@
 The reference reads its driving keys from Postgres
 (``comments_pipeline.py:32-34``) and writes with per-row
 ``INSERT … ON CONFLICT DO NOTHING`` (``posts_pipeline.py:53-59``).
-Engine forms, strongest first:
+Engine forms:
 
-- :func:`jdbc_merge_upsert` — the transactional exactly-once path:
-  stage the batch, then one atomic ``MERGE … WHEN NOT MATCHED THEN
-  INSERT`` on the target (the set-based form of the reference's
-  per-row ``ON CONFLICT DO NOTHING``). Retried on lock/duplicate-key
+- :func:`jdbc_read` — pushdown query read, optionally range-partitioned;
+- :func:`jdbc_merge_upsert` — the one write path, exactly once: stage
+  the batch, then one atomic ``MERGE … WHEN NOT MATCHED THEN INSERT``
+  on the target (the set-based form of the reference's per-row
+  ``ON CONFLICT DO NOTHING``). Retried on lock/duplicate-key
   contention, so concurrent writers converge without duplicates
   (requires a primary key on the target, as the reference's DDL has —
   ``init_db_tables.sh:7``).
-- :func:`jdbc_upsert_append` — anti-join + batched append:
-  at-least-once with idempotent retry; one distributed write instead
-  of a round-trip per row.
 
 Integration-tested against Derby, the embedded JDBC database that
 ships inside Spark's own jar directory (``tests/test_jdbc_derby.py``);
@@ -31,8 +29,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from tia_data_pipeline_spark.operators.incremental import incremental_append
 
 
 def jdbc_read(
@@ -325,39 +321,3 @@ def jdbc_merge_upsert(
         st.executeUpdate(f"DROP TABLE {staging}")
     finally:
         conn.close()
-
-
-def jdbc_upsert_append(
-    incoming: DataFrame,
-    existing: DataFrame,
-    keys: Sequence[str],
-    url: str,
-    table: str,
-    *,
-    properties: dict[str, str] | None = None,
-    batchsize: int = 10_000,
-) -> None:
-    """`ON CONFLICT DO NOTHING` as a distributed plan: key-dedup the
-    batch, anti-join the target's key projection, append with JDBC
-    batch inserts. Exactly-once requires a transactional target
-    (Delta MERGE); this is the at-least-once-with-idempotent-retry
-    form the reference itself provides. NULL-key rows are excluded
-    before the append (the PK-merge rule — a NULL PK insert fails
-    non-retryably on every dialect)."""
-    if not keys:
-        raise ValueError("jdbc_upsert_append requires at least one key column")
-    key_ok = None
-    for k in keys:
-        c = F.col(k).isNotNull()
-        key_ok = c if key_ok is None else (key_ok & c)
-    to_insert = incremental_append(incoming.filter(key_ok), existing, keys)
-    writer = (
-        to_insert.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("batchsize", str(batchsize))
-        .mode("append")
-    )
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    writer.save()
